@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
+import graft.ops.State
+
 /** The iterative graph-coloring kernel — the rebuild of the reference's
   * per-k fixpoint (`coloring.py:73-132`, `coloring_optimized.py:70-146`) and
   * outer minimal-color search (`coloring.py:212-231`), re-expressed as a
@@ -38,8 +40,10 @@ import org.apache.spark.storage.StorageLevel
   *     shuffling each candidate's adjacency list.
   *
   * Driver-side control flow stays a plain Scala loop — same stance as GraphX
-  * `Pregel` (SURVEY.md §4): only counts cross to the driver. Lineage growth
-  * across rounds is truncated with `localCheckpoint` (SURVEY.md §7 risk 4).
+  * `Pregel` (SURVEY.md §4): only counts cross to the driver. Every round's
+  * state goes through [[State.loop]] (SURVEY.md §7 risk 4): the checkpoint
+  * truncates lineage, and its own action observes the counts the loop
+  * control reads.
   */
 object ColoringKernel {
 
@@ -62,15 +66,12 @@ object ColoringKernel {
     case object GraphX extends Strategy
   }
 
-  final case class Colored(colors: DataFrame, k: Int, rounds: Int)
-
-  /** Rounds between eager local checkpoints on the persist-backed fast path.
-    * Between checkpoints the state is only cached, so at cluster scale a
-    * lost cached partition recomputes through the uncached lineage — the
-    * cadence bounds that recompute depth to < CheckpointEvery rounds
-    * instead of all the way back to round 0. Deterministic strategies only:
-    * GreedyAgg checkpoints every round (see the loop comment). */
-  private val CheckpointEvery = 4
+  /** A k-coloring read off the checkpoint `state` holds; `release()` frees
+    * that checkpoint. */
+  final case class Colored(state: State, k: Int, rounds: Int) {
+    def colors: DataFrame = state.df.select(col("id"), col("color"))
+    def release(): Unit = state.release()
+  }
 
   /** Distinct vertices of a symmetric edge list. */
   private def verticesOf(edges: DataFrame): DataFrame =
@@ -140,7 +141,7 @@ object ColoringKernel {
         case None => GraphXKernel.tryColor(spark, edges, k, maxRounds)
       }
       return result.map(df => Colored(
-        materialize(spark, appendIsolated(df, extraVertices)), k, rounds = -1))
+        State.loop(appendIsolated(df, extraVertices)), k, rounds = -1))
     }
     // Greedy's serial-per-bucket merge bound: auto-route oversized runs to
     // the deterministic Jp strategy (resolveStrategy scaladoc) instead of
@@ -149,7 +150,7 @@ object ColoringKernel {
     if (effective == Strategy.GreedyRdd && k <= 64) {
       return GreedyRddKernel.tryColor(spark, edges, k, maxRounds)
         .map { case (df, rounds) => Colored(
-          materialize(spark, appendIsolated(df, extraVertices)), k, rounds) }
+          State.loop(appendIsolated(df, extraVertices)), k, rounds) }
     }
     // GreedyRdd past the mask limit = the GreedyAgg rounds (legacy regather).
     val strat = if (effective == Strategy.GreedyRdd) Strategy.GreedyAgg else effective
@@ -165,12 +166,19 @@ object ColoringKernel {
     // full regather with collect_set arrays.
     val useMask = k <= 64
 
+    // Every state's checkpoint observes progress and feasibility together
+    // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
+    // the round runs one job: its checkpoint.
+    def observed(df: DataFrame): State = State.loop(df,
+      sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
+      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"))
+
     // O6 init: isolated vertices → color 0, everything else -1
     // (changeColorFirstIteration, coloring.py:12-17).
     val connected = verticesOf(e).withColumn("color", lit(-1))
     val isolated = extraVertices
       .map(_.select(col("id")).except(verticesOf(e)).withColumn("color", lit(0)))
-    var state = materialize(spark, isolated.fold(connected)(connected.unionByName(_))
+    var state = observed(isolated.fold(connected)(connected.unionByName(_))
       .join(degree, col("id") === col("src"), "left_outer")
       .select(col("id"), col("color"), coalesce(col("deg"), lit(0)).as("deg"),
         lit(0L).as("used")))
@@ -184,10 +192,8 @@ object ColoringKernel {
     def adjacency(): DataFrame = { adjUsed = true; adjCached }
 
     var rounds = 0
-    var uncolored = state.filter(col("color") === -1).count()
+    var uncolored = state("uncolored")
     var failed = false
-    // Persisted handle backing `state` (the wrapper itself is not persisted).
-    var stateCache: DataFrame = null
 
     val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     while (uncolored > 0 && !failed) {
@@ -196,36 +202,26 @@ object ColoringKernel {
       if (rounds > maxRounds) { failed = true }
       else {
         val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+        val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
         val next = strat match {
           case Strategy.Jp =>
-            if (useMask) jpRoundMask(e, state, k, roundCaches, uncolored)
-            else jpRound(e, state, k)
+            if (useMask) jpRoundMask(e, state.df, k, roundCaches, uncolored)
+            else jpRound(e, state.df, k, roundStates)
           case Strategy.GreedyAgg =>
-            if (useMask) greedyRoundMask(spark, e, adjacency(), state, k,
+            if (useMask) greedyRoundMask(spark, e, adjacency(), state.df, k,
               roundCaches, uncolored)
-            else greedyRound(spark, e, adjacency(), state, k, roundCaches)
+            else greedyRound(spark, e, adjacency(), state.df, k, roundCaches)
           case Strategy.GraphX | Strategy.GreedyRdd =>
             sys.error("delegating strategies handled above")
         }
-        // The round's ONE aggregate action reads progress + feasibility
-        // together (-3 is the reference's infeasible sentinel,
-        // coloring.py:53-54) and doubles as the cache materialization: the
-        // next state is persisted (reference analog: the persist/unpersist
-        // dance at coloring.py:126,219) and then re-wrapped in a fresh
-        // LogicalRDD reading through the cache — that wrapper truncates the
-        // per-round lineage AND resets Catalyst stats (see materialize
-        // scaladoc) without the separate localCheckpoint job an eager
-        // checkpoint per round would cost.
-        val tStats = System.nanoTime()
-        val persisted = next.persist(StorageLevel.MEMORY_AND_DISK)
-        val stats = persisted.agg(
-          sum(when(col("color") === -1, 1).otherwise(0)),
-          sum(when(col("color") === -3, 1).otherwise(0))).head()
-        if (debug) println(f"[kernel]   stats ${(System.nanoTime() - tStats) / 1e9}%.2f s")
-        val nextUncolored = stats.getLong(0)
-        val infeasible = stats.getLong(1)
-        if (infeasible > 0) failed = true
-        else if (nextUncolored >= uncolored) {
+        // The next state lands before anything of this round is freed.
+        val landed = observed(next)
+        roundCaches.foreach(_.unpersist())
+        roundStates.foreach(_.release())
+        state.release()
+        state = landed
+        if (state("infeasible") > 0) failed = true
+        else if (state("uncolored") >= uncolored) {
           // No progress. Jp always colors the top-priority node of every
           // uncolored component; GreedyAgg admits at least the first-
           // arriving candidate of every nonempty bucket (GreedyIS scaladoc
@@ -235,30 +231,7 @@ object ColoringKernel {
           // the bounded-round backstop (risk 6).
           failed = rounds >= maxRounds
         }
-        roundCaches.foreach(_.unpersist())
-        if (stateCache != null) stateCache.unpersist()
-        state.unpersist()
-        // Checkpoint policy: GreedyAgg's admitted sets are partitioning-
-        // dependent (reference-faithful), so recomputing a lost cached
-        // partition could silently commit a coloring inconsistent with the
-        // stats already read — an eager local checkpoint EVERY round makes
-        // block loss fail loudly instead of diverge. The deterministic Jp
-        // rounds are recompute-safe, so they keep the cheap persist-backed
-        // wrapper and checkpoint only every CheckpointEvery rounds to bound
-        // the recompute depth.
-        if (strat == Strategy.GreedyAgg || rounds % CheckpointEvery == 0) {
-          state = materialize(spark, persisted)
-          persisted.unpersist()
-          stateCache = null
-        } else {
-          stateCache = persisted
-          // Stats-reset wrapper reading THROUGH the cache, internal rows
-          // end to end (r15 — see materialize).
-          state = org.apache.spark.sql.GraftInternalRows.fromInternal(spark,
-            org.apache.spark.sql.GraftInternalRows.internalRdd(persisted),
-            persisted.schema)
-        }
-        uncolored = nextUncolored
+        uncolored = state("uncolored")
         if (debug) println(f"[kernel] round=$rounds uncolored=$uncolored " +
           f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
@@ -266,18 +239,8 @@ object ColoringKernel {
 
     if (adjUsed) adjCached.unpersist()
     e.unpersist()
-    if (failed) {
-      state.unpersist()
-      if (stateCache != null) stateCache.unpersist()
-      None
-    } else {
-      // The returned coloring must outlive the per-round cache: checkpoint
-      // once at the end (lineage through `stateCache` would recompute the
-      // whole run after the unpersist below).
-      val out = materialize(spark, state.select(col("id"), col("color")))
-      if (stateCache != null) stateCache.unpersist()
-      Some(Colored(out, k, rounds))
-    }
+    if (failed) { state.release(); None }
+    else Some(Colored(state, k, rounds))
   }
 
   /** Isolated extra vertices never reach an edge-derived graph; append them
@@ -288,23 +251,6 @@ object ColoringKernel {
         .except(df.select(col("id")))
         .withColumn("color", lit(0)))
     }
-
-  /** Materialize an iteration state: localCheckpoint truncates lineage, and
-    * rebuilding the DataFrame from the checkpointed RDD RESETS Catalyst
-    * statistics. `Dataset.localCheckpoint` alone preserves the source plan's
-    * `sizeInBytes`, so in an iterative loop each round's estimate is a
-    * product over the previous round's — the BigInt bit-length grows
-    * exponentially with rounds until stats arithmetic dominates the driver
-    * (measured: 70 s/round of BigInteger.multiply by round 13; flat 1 s with
-    * the reset). */
-  private def materialize(spark: SparkSession, df: DataFrame): DataFrame = {
-    // Internal rows end to end (r15): the previous `.rdd` +
-    // createDataFrame reset paid an InternalRow→Row→InternalRow double
-    // conversion on every downstream scan of the state.
-    val ck = df.localCheckpoint(true)
-    org.apache.spark.sql.GraftInternalRows.fromInternal(
-      spark, org.apache.spark.sql.GraftInternalRows.internalRdd(ck), df.schema)
-  }
 
   /** Priority = (degree desc, id asc): a strict total order (ids unique)
     * as a lexicographically comparable struct — the optimized reference's
@@ -426,7 +372,8 @@ object ColoringKernel {
     * totally ordered, only the maximum keeps the color, so no conflict can
     * commit; every conflict component commits its top vertex, so progress
     * is guaranteed. No free color in [0,k) → the -3 infeasible sentinel. */
-  private def jpRound(e: DataFrame, state: DataFrame, k: Int): DataFrame = {
+  private def jpRound(e: DataFrame, state: DataFrame, k: Int,
+      roundStates: scala.collection.mutable.ArrayBuffer[State]): DataFrame = {
     // Pass A: first-fit candidate per uncolored vertex.
     val used = e
       .join(state.filter(col("color") >= 0)
@@ -437,14 +384,15 @@ object ColoringKernel {
     // Materialized: Pass B references the candidate set three times (both
     // join sides + the final apply); without this the edges pass behind it
     // re-runs per reference (measured 13 s vs 2 s per round at sf0.1).
-    // materialize() also resets stats — see its scaladoc.
     // Custom codegen expression (graft.functions.FirstFitColor): one
     // boolean[k] pass, no intermediate arrays; NULL used → 0, full → -3.
     val cand = state.filter(col("color") === -1)
       .join(used, col("id") === col("src"), "left_outer")
       .select(col("id"), col("deg"),
         call_function("graft_first_fit", col("used_arr"), lit(k)).as("cand"))
-    val candM = materialize(e.sparkSession, cand)
+    val candState = State.loop(cand)
+    roundStates += candState
+    val candM = candState.df
 
     // Pass B: highest rival priority per vertex among same-candidate
     // neighbors; keep the candidate iff we beat every rival.
@@ -487,12 +435,11 @@ object ColoringKernel {
       .agg(collect_set(col("ncolor")).as("used_arr"))
     // Lazily persisted, not eagerly checkpointed: `cand` is referenced by
     // both the admit path and the infeasible-null path, so the cache stops
-    // the used-join running twice — but the round's single stats action is
+    // the used-join running twice — but the round's checkpoint job is
     // what first populates it (an eager localCheckpoint here was a second
     // full action per round, ~25% of q_color_greedy's wall-clock). Stats
-    // blowup isn't a risk for this round-local plan (the per-round state
-    // wrapper in the main loop resets stats). Unpersisted by the caller
-    // after the stats action.
+    // blowup isn't a risk for this round-local plan (the per-round State
+    // resets stats). Unpersisted by the caller once the next state lands.
     val cand = state.filter(col("color") === -1)
       .join(used, col("id") === col("src"), "left_outer")
       .select(col("id"), col("deg"),
@@ -582,7 +529,7 @@ object ColoringKernel {
       case Some(base) =>
         GraphXKernel.tryColorOn(spark, base, k)
           .map(df => Colored(
-            materialize(spark, appendIsolated(df, extraVertices)), k, rounds = -1))
+            State.loop(appendIsolated(df, extraVertices)), k, rounds = -1))
       case None => tryColor(spark, edges, k, strategy, extraVertices)
     }
 
@@ -613,7 +560,7 @@ object ColoringKernel {
               val prev = best
               best = c
               k = usedColors(c.colors)
-              if (prev.colors ne best.colors) prev.colors.unpersist()
+              prev.release()
             case None => done = true
           }
         }

@@ -421,12 +421,12 @@ object Similarity {
   private def ivfModel(spark: SparkSession,
       d: String): (DataFrame, Array[(Int, Array[Long])]) =
     ivfModelCache.getOrElseUpdate(spark, d) {
-      val (e, n) = graft.ops.Layout.checkpointCompact(emb(spark, d)
+      val e = graft.ops.State.memo(emb(spark, d)
         .withColumn("s", transform(col("v"), x => round(x * 1e6).cast("long"))))
-      val sv = e.select(col("vec_id"), col("s"))
-      val cents = ivfTrain(spark, sv, n, ivfCellCount(n))
+      val sv = e.df.select(col("vec_id"), col("s"))
+      val cents = ivfTrain(spark, sv, e.rows, ivfCellCount(e.rows))
       val out = ivfAssign(spark, sv, cents).localCheckpoint(true)
-      e.unpersist(blocking = false)
+      e.release()
       (out, cents)
     }
 
@@ -575,11 +575,12 @@ object Similarity {
     val spark = e.sparkSession
     import spark.implicits._
     graft.functions.GraftFunctions.register(spark)
-    val (sv, n) = graft.ops.Layout.checkpointCompact(e
+    val svState = graft.ops.State.memo(e
       .withColumn("s", transform(col("v"), x => round(x * 1e6).cast("long")))
       .select(col("vec_id"), col("s")))
+    val sv = svState.df
     try {
-      val cents = pqTrain(spark, sv, n)
+      val cents = pqTrain(spark, sv, svState.rows)
       val centDf = broadcast(
         (for (m <- 0 until PQ_M; (cell, cs) <- cents(m)) yield (m, cell, cs))
           .toSeq.toDF("m", "cell", "cs"))
@@ -615,7 +616,7 @@ object Similarity {
         .orderBy(col("query_id"), col("rank"))
         .localCheckpoint(true)
       out
-    } finally sv.unpersist(blocking = false)
+    } finally svState.release()
   }
 
   /** DuckDB replay of [[qSimPq]]: the per-subspace Lloyd rounds run as ONE
@@ -1145,9 +1146,10 @@ object Similarity {
     // this frame once per iteration, and a 32-partition layout over a
     // few-thousand-row vector set pays the round plan's fixed per-task
     // cost (~0.1-0.25 s CPU/task measured) in near-empty tasks.
-    val sv = graft.ops.Layout.checkpointCompact(emb(spark, d)
+    val svState = graft.ops.State.memo(emb(spark, d)
       .select(col("vec_id"),
-        transform(col("v"), x => round(x * 1e6).cast("long")).as("s")))._1
+        transform(col("v"), x => round(x * 1e6).cast("long")).as("s")))
+    val sv = svState.df
     try {
       // Init: the k lowest-id vectors (cell id = raw vec_id, the IVF
       // stance — no positional renumbering).
@@ -1185,6 +1187,8 @@ object Similarity {
         }
       }
       val b = best(cents)
+      // Checkpointed (k rows) so the result does not read `sv`, which is
+      // released below.
       sv.select(b.getField("cell").as("cell"), b.getField("d2").as("d2"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("size"),
@@ -1194,7 +1198,8 @@ object Similarity {
           (col("inertia_d").cast("double") / col("size").cast("double") /
             lit(1e12)).as("mean_d2"))
         .orderBy(col("cell"))
-    } finally sv.unpersist(blocking = false)
+        .localCheckpoint(true)
+    } finally svState.release()
   }
 
   /** DuckDB replay of [[qClusterKmeans]]: the shared Lloyd CTE chain at
@@ -1284,11 +1289,12 @@ object Similarity {
     // Count-adaptive layout (r15): both passes below re-scan this frame
     // and the per-task plan cost dominates a few-thousand-row vector set
     // spread over the session default partitions.
-    val sv = graft.ops.Layout.checkpointCompact(
+    val svState = graft.ops.State.memo(
       Tables.spread(Tables.embeddings(spark, d))
         .select(col("vec_id"), col("label"),
           transform(col("embedding").cast("array<double>"),
-            x => round(x * 1e6).cast("long")).as("s")))._1
+            x => round(x * 1e6).cast("long")).as("s")))
+    val sv = svState.df
     try {
       val parts = sv.select(col("label"), posexplode(col("s")).as(Seq("j", "qj")))
         .groupBy(col("label"), col("j"))
@@ -1317,15 +1323,16 @@ object Similarity {
       val rivalBest = least(cents.map { case (lab, c) =>
         when(col("label") =!= lab, struct(d2(c).as("d2"), lit(lab).as("clabel")))
       }: _*)
-      // Compact checkpoint — feeds the cards AND the rival mode.
-      val scored = graft.ops.Layout.checkpointCompact(sv
+      // Compact checkpoint — feeds the cards AND the rival mode. Not
+      // released: the returned plan reads it.
+      val scored = graft.ops.State.memo(sv
         .select(col("vec_id"), col("label"), own.as("a2"),
           rivalBest.getField("d2").as("b2"),
           rivalBest.getField("clabel").as("b_label"))
         .withColumn("s2_x1e6",
           expr("""CAST((CAST(b2 - a2 AS DECIMAL(38,0)) * 1000000)
                  | div greatest(a2, b2, 1) AS BIGINT)"""
-            .stripMargin.replace("\n", " "))))._1
+            .stripMargin.replace("\n", " ")))).df
       val cards = scored.groupBy(col("label"))
         .agg(count(lit(1)).as("n"),
           count(when(col("s2_x1e6") > 0, 1)).as("n_pos"),
@@ -1344,7 +1351,7 @@ object Similarity {
           expr("sum_s2 div n").as("avg_s2_x1e6"),
           col("rival"))
         .orderBy(col("label"))
-    } finally sv.unpersist(blocking = false)
+    } finally svState.release()
   }
 
   /** q_mmr_select's selection depth (λ is fixed at 1/2 — the balanced
@@ -1377,12 +1384,12 @@ object Similarity {
   def qMmrSelect(spark: SparkSession, d: String): DataFrame = {
     graft.functions.GraftFunctions.register(spark)
     val e = emb(spark, d)
-    val base = graft.ops.Layout.checkpointCompact(
+    val baseState = graft.ops.State.memo(
       e.filter(col("vec_id") =!= 0)
         .crossJoin(broadcast(e.filter(col("vec_id") === 0)
           .select(col("v").as("qv"))))
         .select(col("vec_id"), col("v"), cosine(col("v"), col("qv")).as("rel")))
-      ._1
+    val base = baseState.df
     try {
       val picked = scala.collection.mutable.ArrayBuffer
         .empty[(Long, Double, Double, Seq[Double])]
@@ -1422,7 +1429,7 @@ object Similarity {
         .createDataFrame(base.sparkSession.sparkContext.parallelize(rows, 1),
           schema)
         .orderBy(col("round"))
-    } finally base.unpersist(blocking = false)
+    } finally baseState.release()
   }
 
   /** q_ann_recall: the eval harness for the ANN family — recall@5 of the

@@ -525,9 +525,8 @@ object GraphOps {
 
   private[graft] def triangleSupport(spark: SparkSession, sfDir: String): DataFrame =
     triSupportCache.getOrElseUpdate(spark, sfDir) {
-      materializeDf(spark,
-        triangleMemberEdges(triangleTriples(spark, sfDir))
-          .groupBy(col("a"), col("b")).agg(count(lit(1)).as("supp")))
+      State.loop(triangleMemberEdges(triangleTriples(spark, sfDir))
+        .groupBy(col("a"), col("b")).agg(count(lit(1)).as("supp"))).df
     }
 
   /** Canonical member edges (a, b) of a [[triangleTriples]] relation —
@@ -761,24 +760,29 @@ object GraphOps {
     // fall, so "supp0 − lostAcc ≥ K−2 at the fixpoint" is exactly the
     // truss edge set — removed edges need no separate exclusion.
     val supp0 = triangleSupport(spark, sfDir)
-    def currentSupp(lostAcc: DataFrame, nLost: Long): DataFrame =
+    def currentSupp(lostAcc: State): DataFrame =
       if (lostAcc == null) supp0
-      else supp0.join(Broadcasts.maybeBroadcast(lostAcc, nLost),
+      else supp0.join(Broadcasts.maybeBroadcast(lostAcc.df, lostAcc.rows),
           Seq("a", "b"), "left_outer")
         .select(col("a"), col("b"),
           (col("supp") - coalesce(col("lost"), lit(0L))).as("supp"))
-    var lostAcc: DataFrame = null
-    var nLost = 0L
-    var removedAll: DataFrame = null
-    var nAll = 0L
-    var (removedNew, nNew) = materializeDfCounted(spark,
+    var lostAcc: State = null
+    // removedAll stays a LAZY flat union of the per-round removedNew
+    // checkpoints (the q_random_walk accumulation pattern): its consumers
+    // only ever build broadcast hash relations from it, so re-
+    // checkpointing the growing union each round bought nothing.
+    val peeled = scala.collection.mutable.ArrayBuffer.empty[State]
+    def removedAll: DataFrame = peeled.map(_.df).reduce(_.union(_))
+    def nAll: Long = peeled.map(_.rows).sum
+    var removedNew = State.loop(
       supp0.filter(col("supp") < TRUSS_K - 2).select(col("a"), col("b")))
     var rounds = 0
-    while (nNew > 0 && rounds < 64) {
+    while (removedNew.rows > 0 && rounds < 64) {
       rounds += 1
       if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(s"[truss] round $rounds: removedNew=$nNew allRemoved=$nAll")
-      val remB = Broadcasts.maybeBroadcast(removedNew, nNew)
+        System.err.println(
+          s"[truss] round $rounds: removedNew=${removedNew.rows} allRemoved=$nAll")
+      val remB = Broadcasts.maybeBroadcast(removedNew.df, removedNew.rows)
       def onEdge(t: DataFrame, edges: DataFrame, x: Column, y: Column,
           joinType: String): DataFrame =
         t.join(edges, x === col("a") && y === col("b"), joinType)
@@ -793,13 +797,15 @@ object GraphOps {
       // GATED on nNew (r15; r14 verdict item 5): the filter is a driver
       // literal shipped with every task binary, so past the item cap the
       // round falls back to the exact semi joins over the full memo.
-      // Counted materialization (r15): the count rides the checkpoint job
-      // and sizes the coalesce — the candidate set is delta-sized after
-      // round 1, and the three semi-join branches below each re-scan it,
-      // so per-task plan-instantiation overhead (~85 ms CPU/task measured)
-      // multiplies across 3 × parent-partition-count tasks otherwise.
-      val (cand, _) = materializeDfCounted(spark,
-        trussRoundCandidates(tri, removedNew, nNew))
+      // Materialized (r15): the count sizes the coalesce — the candidate
+      // set is delta-sized after round 1, and the three semi-join branches
+      // below each re-scan it, so per-task plan-instantiation overhead
+      // (~85 ms CPU/task measured) multiplies across 3 × parent-partition-
+      // count tasks otherwise. Past the gate the candidates ARE the memo,
+      // which is read directly instead of copied.
+      val candidates = trussRoundCandidates(tri, removedNew.df, removedNew.rows)
+      val candState = if (candidates eq tri) None else Some(State.loop(candidates))
+      val cand = candState.fold(tri)(_.df)
       // Triangles touching a newly-removed edge (3 broadcast semi joins —
       // now over the bloom-filtered CANDIDATES, not the full memo; the
       // distinct on the (p,q,r) key collapses triangles matched via two
@@ -814,7 +820,7 @@ object GraphOps {
       // (r14: one fewer driver job per round; the peel's wall is
       // job-latency-bound once the scans are bloom-filtered).
       val dead =
-        if (removedAll == null) touch
+        if (peeled.isEmpty) touch
         else {
           val allB = Broadcasts.maybeBroadcast(removedAll, nAll)
           onEdge(onEdge(onEdge(touch, allB, col("p"), col("q"), "left_anti"),
@@ -823,34 +829,29 @@ object GraphOps {
         }
       val lostNew = memberEdges(dead).groupBy(col("a"), col("b"))
         .agg(count(lit(1)).as("lost"))
-      val lostRes = materializeDfCounted(spark,
+      val lostNext = State.loop(
         if (lostAcc == null) lostNew
-        else lostAcc.union(lostNew).groupBy(col("a"), col("b"))
+        else lostAcc.df.union(lostNew).groupBy(col("a"), col("b"))
           .agg(sum(col("lost")).as("lost")))
-      lostAcc = lostRes._1
-      nLost = lostRes._2
-      // removedAll stays a LAZY flat union of the per-round removedNew
-      // checkpoints (the q_random_walk accumulation pattern): its consumers
-      // only ever build broadcast hash relations from it, so re-
-      // checkpointing the growing union each round bought nothing.
-      removedAll =
-        if (removedAll == null) removedNew else removedAll.union(removedNew)
-      nAll += nNew
+      candState.foreach(_.release())
+      if (lostAcc != null) lostAcc.release()
+      lostAcc = lostNext
+      peeled += removedNew
       // Newly-below-threshold edges: map-side over supp0 with both small
       // tables build-side (an edge already removed stays below threshold,
       // so the anti join against removedAll isolates this round's drops).
-      val remRes = materializeDfCounted(spark,
-        currentSupp(lostAcc, nLost)
+      removedNew = State.loop(
+        currentSupp(lostAcc)
           .filter(col("supp") < TRUSS_K - 2)
           .join(Broadcasts.maybeBroadcast(removedAll, nAll),
             Seq("a", "b"), "left_anti")
           .select(col("a"), col("b")))
-      removedNew = remRes._1
-      nNew = remRes._2
     }
-    if (nNew > 0) sys.error(
+    if (removedNew.rows > 0) sys.error(
       "qTruss: peel did not reach a fixpoint within 64 rounds — not a k-truss")
-    currentSupp(lostAcc, nLost).filter(col("supp") >= TRUSS_K - 2)
+    // The result reads supp0 and lostAcc only; the peeled sets are done.
+    (peeled += removedNew).foreach(_.release())
+    currentSupp(lostAcc).filter(col("supp") >= TRUSS_K - 2)
       .orderBy(col("a"), col("b"))
   }
 
@@ -974,59 +975,6 @@ object GraphOps {
     * iteration, non-empty at every gate scale. */
   private[ops] val KCORE_K = 18
 
-  /** Iteration state materializer — localCheckpoint truncates lineage and
-    * the createDataFrame rebuild resets Catalyst stats (same rationale as
-    * ColoringKernel.materialize: without the reset, iterative stat products
-    * grow exponentially until BigInt math dominates the driver). Rides
-    * [[materializeDfCounted]] so every materialized state also gets the
-    * count-adaptive partition layout (the observation is free — it rides
-    * the checkpoint's own action). */
-  private def materializeDf(spark: SparkSession, df: DataFrame): DataFrame =
-    materializeDfCounted(spark, df)._1
-
-  /** Rows-per-partition target for COUNT-ADAPTIVE coalescing of
-    * checkpointed delta state ([[materializeDfCounted]]). Fixpoint deltas
-    * shrink by orders of magnitude across rounds but keep their parent's
-    * partition count (32-96 here, thousands on a cluster), and the fixed
-    * per-task cost of the big per-round plans (codegen instantiation,
-    * accumulators — measured ~85 ms CPU/task on the truss round stages at
-    * sf0.1) then dominates every downstream scan of a few-thousand-row
-    * frame. Coalescing the ALREADY-MATERIALIZED checkpoint RDD is a narrow
-    * dependency — no shuffle, no recompute — and the partition count is
-    * derived from the exact row count, so it stays scale-adaptive: a
-    * 10⁹-row round keeps full parallelism, a 100-row round runs 1 task. */
-  val MaterializeRowsPerPartitionKey = Layout.RowsPerPartitionKey
-  val DefaultMaterializeRowsPerPartition: Long = Layout.DefaultRowsPerPartition
-
-  /** [[materializeDf]] plus the materialized row count, read from an
-    * `Observation` riding the checkpoint's own action (the q_hits
-    * shift-metric pattern) — fixpoint loops need the count for loop
-    * control and broadcast bounds, and a separate `.count()` job per
-    * round is pure driver latency once the data is checkpointed (r14:
-    * 1-2 jobs/round across truss/sssp/closeness/kcore). The checkpointed
-    * RDD is coalesced to ceil(n / rowsPerPartition) partitions (capped at
-    * its parent count — never widened) so downstream per-round scans pay
-    * task overhead proportional to the DELTA, not to the parent layout. */
-  private def materializeDfCounted(
-      spark: SparkSession, df: DataFrame): (DataFrame, Long) = {
-    val obs = new org.apache.spark.sql.Observation()
-    val ck = df.observe(obs, count(lit(1)).as("n")).localCheckpoint(true)
-    val n = obs.get("n") match { case l: Long => l; case _ => 0L }
-    val per = spark.conf.get(MaterializeRowsPerPartitionKey,
-      DefaultMaterializeRowsPerPartition.toString).toLong
-    // INTERNAL rows end to end (r15): `ck.rdd` would deserialize every
-    // row to an external Row on each downstream scan and createDataFrame
-    // would re-encode it — two per-row conversions per scan of every
-    // fixpoint state. The shim rebuilds the stats-reset LogicalRDD over
-    // the checkpoint's internal rows directly (Dataset.checkpoint's own
-    // mechanics).
-    val rdd0 = org.apache.spark.sql.GraftInternalRows.internalRdd(ck)
-    val k = math.min(rdd0.getNumPartitions.toLong,
-      math.max(1L, (n + per - 1) / per)).toInt
-    val rdd = if (k < rdd0.getNumPartitions) rdd0.coalesce(k) else rdd0
-    (org.apache.spark.sql.GraftInternalRows.fromInternal(spark, rdd, df.schema), n)
-  }
-
   /** q_kcore: k-core decomposition by iterative peeling — repeatedly drop
     * vertices with in-subgraph degree < k until fixpoint; the surviving
     * (id, core_deg) rows are the k-core. The graph-quality primitive a
@@ -1064,41 +1012,35 @@ object GraphOps {
     // q_hits metric pattern): the next round's removal count is already
     // on the driver when the checkpoint lands, so the peel runs one job
     // per round instead of two (count + checkpoint).
-    def stateWithBelow(df: DataFrame): (DataFrame, Long) = {
-      val obs = new org.apache.spark.sql.Observation
-      val out = materializeDf(spark, df.observe(obs,
-        coalesce(sum(when(col("deg") < KCORE_K, 1L).otherwise(0L)), lit(0L))
-          .as("nb")))
-      (out, obs.get("nb") match { case l: Long => l; case _ => 0L })
-    }
-    var (cur, nRemoved) = stateWithBelow(
+    def stateWithBelow(df: DataFrame): State =
+      State.loop(df, sum(when(col("deg") < KCORE_K, 1L).otherwise(0L)).as("nb"))
+    var cur = stateWithBelow(
       adj.select(col("src").as("vid"), size(col("nbrs")).cast("long").as("deg")))
     var rounds = 0
-    while (nRemoved != 0L && rounds < 64) {
+    while (cur("nb") != 0L && rounds < 64) {
       rounds += 1
       // Lazy: evaluated inside the next checkpoint's broadcast build over
       // the already-checkpointed state — no standalone job.
-      val removed = cur.filter(col("deg") < KCORE_K).select(col("vid"))
+      val removed = cur.df.filter(col("deg") < KCORE_K).select(col("vid"))
       val delta = adj
         .join(Broadcasts.maybeBroadcast(
-          removed.select(col("vid").as("rv")), nRemoved),
+          removed.select(col("vid").as("rv")), cur("nb")),
           col("src") === col("rv"))
         .select(explode(col("nbrs")).as("src"))
         .groupBy(col("src")).agg(count(lit(1)).as("rem_n"))
-      val next = cur.filter(col("deg") >= KCORE_K)
+      val next = stateWithBelow(cur.df.filter(col("deg") >= KCORE_K)
         .join(delta, col("vid") === col("src"), "left")
         .select(col("vid"),
-          (col("deg") - coalesce(col("rem_n"), lit(0L))).as("deg"))
-      val res = stateWithBelow(next)
-      cur = res._1
-      nRemoved = res._2
+          (col("deg") - coalesce(col("rem_n"), lit(0L))).as("deg")))
+      cur.release()
+      cur = next
     }
     // Mirror the oracle's convergence-guard policy: the DuckDB replay errors
     // loudly when its unrolled rounds don't reach the fixpoint, so a
     // round-capped engine run must not silently return a non-fixpoint set.
-    if (nRemoved != 0L) sys.error(
+    if (cur("nb") != 0L) sys.error(
       "qKcore: peel did not reach a fixpoint within 64 rounds — not a k-core")
-    cur.select(col("vid").as("id"), col("deg").as("core_deg"))
+    cur.df.select(col("vid").as("id"), col("deg").as("core_deg"))
       .orderBy(col("id"))
   }
 
@@ -1154,10 +1096,6 @@ object GraphOps {
     * partial-aggregatable map-side, instead of a sort-window rank (the
     * argmax never materializes a per-vertex sorted neighborhood). Labels
     * are checkpointed per round (truncates the 4-round lineage; V rows).
-    * The edge stream itself uses [[edges]]' shared persist directly — NOT
-    * [[materializeDf]], whose RDD[Row] stats-reset round-trip would pay a
-    * generic-Row conversion over the E-sized table every round (measured
-    * ~3× the whole query; the reset only matters for small build sides).
     * DuckDB oracle: the same recurrence unrolled as chained CTEs with a
     * row_number tiebreak — readable SQL over the same edge set. */
   def qLabelProp(spark: SparkSession, sfDir: String): DataFrame =
@@ -1224,7 +1162,7 @@ object GraphOps {
     // cache paid an O(E) encode at build and an O(E) decode EVERY round
     // (measured: q_label_prop 47.4 -> 18.4 s CPU at sf0.1 on the swap,
     // re-exchange included). The upfront E-shuffle disappears too.
-    val eDst = Layout.checkpointCompact(e)._1
+    val eDst = State.memo(e)
     try {
       // Round 1 in closed form (r14): labels₀(v) = v is the identity, so
       // every neighbor label of dst is distinct — all candidate counts are
@@ -1235,13 +1173,16 @@ object GraphOps {
       // collapses yet (isolated sf0.1: round 1 was 28.8 s CPU vs 16.0 /
       // 2.8 / 1.3 s for rounds 2-4). Exact for the wide path too: the
       // argmax is over (c=1, label), packing never enters.
-      var labels = materializeDf(spark,
-        eDst.groupBy(col("dst")).agg(min(col("src")).as("label"))
+      var labels = State.loop(
+        eDst.df.groupBy(col("dst")).agg(min(col("src")).as("label"))
           .select(col("dst").as("id"), col("label")))
-      for (_ <- 2 to LP_ROUNDS)
-        labels = materializeDf(spark, labelPropRound(eDst, labels, vBound, wide))
-      labels
-    } finally eDst.unpersist(blocking = false)
+      for (_ <- 2 to LP_ROUNDS) {
+        val next = State.loop(labelPropRound(eDst.df, labels.df, vBound, wide))
+        labels.release()
+        labels = next
+      }
+      labels.df
+    } finally eDst.release()
   }
 
   /** q_modularity: Newman modularity of the q_label_prop communities —
@@ -1473,32 +1414,36 @@ object GraphOps {
       vBound: Long): DataFrame = {
     // Raw count-adaptive checkpoint (r15 — see the labelPropOver round
     // cache note: per-round exchanges carry partial-agg output only).
-    val eDst = Layout.checkpointCompact(e)._1
+    val eDst = State.memo(e)
     try {
-      var labels = materializeDf(spark,
+      var labels = State.loop(
         e.select(col("src").as("id")).distinct()
           .select(col("id"), col("id").as("lbl")))
       var changed = 1L
       while (changed > 0) {
-        val nbrMin = eDst.join(
+        val nbrMin = eDst.df.join(
             Broadcasts.maybeBroadcast(
-              labels.select(col("id").as("cid"), col("lbl").as("clbl")), vBound),
+              labels.df.select(col("id").as("cid"), col("lbl").as("clbl")), vBound),
             col("src") === col("cid"))
           .groupBy(col("dst")).agg(min(col("clbl")).as("nm"))
-        val hop = materializeDf(spark,
-          labels.join(nbrMin, col("id") === col("dst"), "left_outer")
+        val hop = State.loop(
+          labels.df.join(nbrMin, col("id") === col("dst"), "left_outer")
             .select(col("id"), col("lbl").as("old_lbl"),
               least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("hop_lbl")))
-        val parent = hop.select(col("id").as("pid"), col("hop_lbl").as("plbl"))
-        val next = materializeDf(spark,
-          hop.join(Broadcasts.maybeBroadcast(parent, vBound),
+        val parent = hop.df.select(col("id").as("pid"), col("hop_lbl").as("plbl"))
+        // The changed-label count rides the checkpoint: no count job.
+        val next = State.loop(
+          hop.df.join(Broadcasts.maybeBroadcast(parent, vBound),
               col("hop_lbl") === col("pid"))
-            .select(col("id"), col("old_lbl"), col("plbl").as("lbl")))
-        changed = next.filter(col("lbl") =!= col("old_lbl")).count()
-        labels = next.select(col("id"), col("lbl"))
+            .select(col("id"), col("old_lbl"), col("plbl").as("lbl")),
+          sum(when(col("lbl") =!= col("old_lbl"), 1L).otherwise(0L)).as("changed"))
+        changed = next("changed")
+        hop.release()
+        labels.release()
+        labels = next
       }
-      labels
-    } finally eDst.unpersist(blocking = false)
+      labels.df.select(col("id"), col("lbl"))
+    } finally eDst.release()
   }
 
   /** q_sssp: BFS hop distances from a deterministic seed (the minimum
@@ -1523,7 +1468,7 @@ object GraphOps {
     // list); broadcast bounds are the exact per-round frontier counts.
     val (adj, _) = kernelAdjacencyWithCount(spark, sfDir)
     val seed = adj.agg(min(col("src"))).head().getLong(0)
-    val first = materializeDf(spark,
+    val first = State.loop(
       spark.range(1).select(lit(seed).as("id"), lit(0L).as("dist")))
     // TWO-FRONTIER settled check (r14, guide §2.4 "remove shuffles/work
     // outright"): on an UNDIRECTED graph a neighbor of a distance-r
@@ -1536,22 +1481,23 @@ object GraphOps {
     // each layer is checkpointed once and flat-unioned at the end (the
     // q_random_walk accumulation pattern). Result rows are identical:
     // BFS layers don't depend on how the settled check is implemented.
-    val layers = scala.collection.mutable.ArrayBuffer(first)
-    var frontier = first
+    val layers = scala.collection.mutable.ArrayBuffer(first.df)
+    var frontier = first.df
     var prev: DataFrame = null
-    var reached = 1L
+    var reached = first.rows
     var prevReached = 0L
     while (reached > 0) {
       val check =
         if (prev == null) frontier.select(col("id"))
         else frontier.select(col("id")).union(prev.select(col("id")))
-      val (next, n) = materializeDfCounted(spark,
+      val next = State.loop(
         ssspRound(adj, frontier, reached, check, reached + prevReached))
-      if (n > 0) layers += next
+      // Layers are never released: the returned union reads them.
+      if (next.rows > 0) layers += next.df else next.release()
       prev = frontier
       prevReached = reached
-      frontier = next
-      reached = n
+      frontier = next.df
+      reached = next.rows
     }
     layers.reduce(_.union(_)).orderBy(col("id"))
   }
@@ -1615,7 +1561,7 @@ object GraphOps {
       .orderBy(col("src")).limit(CLOSENESS_SOURCES)
       .select(col("src").as("seed"), col("src").as("id"),
         lit(0L).as("dist"))
-    val first = materializeDf(spark, seeds)
+    val first = State.loop(seeds)
     // TWO-FRONTIER settled check, per seed (r14 — see [[qSssp]]): the
     // kernel graph is undirected, so a (seed, v) candidate generated in
     // round r can only be settled at per-seed distance r−1 or r — the
@@ -1623,17 +1569,17 @@ object GraphOps {
     // accumulated K·V distance table, and layers are flat-unioned once
     // at the end instead of re-checkpointing the growing union per
     // round. Identical output: per-seed BFS layers are unchanged.
-    val layers = scala.collection.mutable.ArrayBuffer(first)
-    var frontier = first
+    val layers = scala.collection.mutable.ArrayBuffer(first.df)
+    var frontier = first.df
     var prev: DataFrame = null
-    var reached = 1L
+    var reached = first.rows
     var prevReached = 0L
     while (reached > 0) {
       val check =
         if (prev == null) frontier.select(col("seed"), col("id"))
         else frontier.select(col("seed"), col("id"))
           .union(prev.select(col("seed"), col("id")))
-      val (next, n) = materializeDfCounted(spark,
+      val next = State.loop(
         adj.join(
             // Exact per-round frontier count as the broadcast bound (r15;
             // r14 verdict item 6) — not the K·|V| upper bound, which
@@ -1653,11 +1599,12 @@ object GraphOps {
             "left_anti")
           .select(col("fs").as("seed"), col("dst").as("id"),
             col("nd").as("dist")))
-      if (n > 0) layers += next
+      // Layers are never released: the returned aggregate reads them.
+      if (next.rows > 0) layers += next.df else next.release()
       prev = frontier
       prevReached = reached
-      frontier = next
-      reached = n
+      frontier = next.df
+      reached = next.rows
     }
     val dist = layers.reduce(_.union(_))
     // n_reached excludes the seed itself (dist 0 contributes nothing to
@@ -1795,31 +1742,33 @@ object GraphOps {
   private[graft] def pagerankDfRounds(spark: SparkSession, e: DataFrame,
       vBound: Long): DataFrame = {
     val SCALE = 1000000000000L
-    val eDst = Layout.checkpointCompact(e)._1
+    val eDst = State.memo(e)
     try {
-      var ranks = materializeDf(spark,
+      var ranks = State.loop(
         e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
           .select(col("src").as("id"), lit(SCALE).as("r"), col("deg")))
       for (_ <- 1 to 10) {
-        val contribs = eDst.join(
+        val contribs = eDst.df.join(
             Broadcasts.maybeBroadcast(
-              ranks.select(col("id").as("cid"), expr("r div deg").as("contrib")),
+              ranks.df.select(col("id").as("cid"), expr("r div deg").as("contrib")),
               vBound),
             col("src") === col("cid"))
           .groupBy(col("dst"))
           .agg(sum(col("contrib")).as("c"))
-        ranks = materializeDf(spark,
-          ranks.select(col("id"), col("deg"))
+        val next = State.loop(
+          ranks.df.select(col("id"), col("deg"))
             .join(contribs, col("id") === col("dst"), "left_outer")
             .select(col("id"),
               (lit(15L * SCALE / 100) +
                 expr("(85 * coalesce(c, 0)) div 100")).as("r"),
               col("deg")))
+        ranks.release()
+        ranks = next
       }
-      ranks.select(col("id"), col("r").as("rank_e12"))
+      ranks.df.select(col("id"), col("r").as("rank_e12"))
         .orderBy(col("rank_e12").desc, col("id").asc)
         .limit(10)
-    } finally eDst.unpersist(blocking = false)
+    } finally eDst.release()
   }
 
   /** [[qPpr]] seed-set size: teleportation is restricted to the
@@ -1857,36 +1806,38 @@ object GraphOps {
       vBound: Long): DataFrame = {
     val SCALE = 1000000000000L
     val tele = 15L * SCALE / 100 / PPR_SEEDS
-    val eDst = Layout.checkpointCompact(e)._1
+    val eDst = State.memo(e)
     try {
       val base = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       val seeds = base.select(col("src")).orderBy(col("src"))
         .limit(PPR_SEEDS).select(col("src").as("sid"))
-      var ranks = materializeDf(spark,
+      var ranks = State.loop(
         base.join(broadcast(seeds), col("src") === col("sid"), "left_outer")
           .select(col("src").as("id"),
             when(col("sid").isNotNull, lit(SCALE)).otherwise(lit(0L)).as("r"),
             col("deg"), col("sid").isNotNull.as("is_seed")))
       for (_ <- 1 to 10) {
-        val contribs = eDst.join(
+        val contribs = eDst.df.join(
             Broadcasts.maybeBroadcast(
-              ranks.select(col("id").as("cid"), expr("r div deg").as("contrib")),
+              ranks.df.select(col("id").as("cid"), expr("r div deg").as("contrib")),
               vBound),
             col("src") === col("cid"))
           .groupBy(col("dst"))
           .agg(sum(col("contrib")).as("c"))
-        ranks = materializeDf(spark,
-          ranks.select(col("id"), col("deg"), col("is_seed"))
+        val next = State.loop(
+          ranks.df.select(col("id"), col("deg"), col("is_seed"))
             .join(contribs, col("id") === col("dst"), "left_outer")
             .select(col("id"),
               (when(col("is_seed"), lit(tele)).otherwise(lit(0L)) +
                 expr("(85 * coalesce(c, 0)) div 100")).as("r"),
               col("deg"), col("is_seed")))
+        ranks.release()
+        ranks = next
       }
-      ranks.select(col("id"), col("r").as("rank_e12"))
+      ranks.df.select(col("id"), col("r").as("rank_e12"))
         .orderBy(col("rank_e12").desc, col("id").asc)
         .limit(10)
-    } finally eDst.unpersist(blocking = false)
+    } finally eDst.release()
   }
 
   /** DuckDB oracle for [[qPpr]]: the personalized integer recurrence
@@ -2004,21 +1955,21 @@ object GraphOps {
     // Only the FRONTIER materializes per round; the accumulated output is
     // a flat union of the already-materialized steps (re-materializing
     // the growing union each round would be O(rounds²) checkpoints).
-    val first = materializeDf(spark, starts)
-    val nStarts = first.count()
-    val steps = scala.collection.mutable.ArrayBuffer(first)
-    var cur: DataFrame = first
+    val first = State.loop(starts)
+    val nStarts = first.rows
+    val steps = scala.collection.mutable.ArrayBuffer(first.df)
+    var cur: DataFrame = first.df
     for (s <- 0 until WALK_STEPS) {
       val h = conv(substring(md5(concat(col("walk_id").cast("string"),
         lit(":"), lit(s).cast("string"))), 1, 15), 16, 10).cast("long")
-      val next = materializeDf(spark,
+      val next = State.loop(
         nbrs.join(
             Broadcasts.maybeBroadcast(
               cur.select(col("walk_id"), col("node")), nStarts),
             col("node") === col("src"))
           .select(col("walk_id"), lit(s + 1).as("step"),
             element_at(col("nbrs"),
-              (h % size(col("nbrs"))).cast("int") + 1).as("node")))
+              (h % size(col("nbrs"))).cast("int") + 1).as("node"))).df
       steps += next
       cur = next
     }
@@ -2084,10 +2035,6 @@ object GraphOps {
     * feeds the same downstream join. Integer headroom: values ≤ 2²¹
     * post-shift, so a gather sum stays < 2⁶³ for in/out-degree < 2⁴¹. */
   def qHits(spark: SparkSession, sfDir: String): DataFrame = {
-    // Only the two per-direction partitioned copies persist for the round
-    // loop — the raw distinct list feeds them once and is not cached
-    // (three E-sized residents would crowd the shared block cache at the
-    // big legs); verts derives from the already-persisted efDst.
     // r15: ONE raw count-adaptive checkpoint serves both gather
     // directions. The r14 shape kept a dst- and a src-partitioned
     // columnar copy so each direction's groupBy was exchange-free, but
@@ -2095,68 +2042,61 @@ object GraphOps {
     // it saved — the per-round agg exchange only carries map-side
     // PARTIAL-AGG output (see the labelPropOver round cache note). One
     // copy also drops the second E-sized cache build outright.
-    val (ef0, _) = graft.ops.Layout.checkpointCompact(
-      fwdPairs(spark, sfDir).distinct())
-    val efDst = ef0
-    val efSrc = ef0
+    val ef = State.memo(fwdPairs(spark, sfDir).distinct())
     try {
-      val verts = materializeDf(spark,
-        efDst.select(col("src").as("id"))
-          .union(efDst.select(col("dst").as("id"))).distinct())
-      val vBound = verts.count()
+      val verts = State.loop(
+        ef.df.select(col("src").as("id"))
+          .union(ef.df.select(col("dst").as("id"))).distinct())
+      val vBound = verts.rows
       // Shift of an observed pre-shift max; max over an empty gather
-      // arrives as None/null → 0 (matches the old coalesce(max, 0)).
-      def shiftFrom(obs: org.apache.spark.sql.Observation): Int = {
-        val m = obs.get.get("m") match {
-          case Some(l: Long) => l
-          case _             => 0L
-        }
-        math.max(java.lang.Long.toBinaryString(m).length - 21, 0)
-      }
-      var h = materializeDf(spark,
-        verts.select(col("id"), lit(1048576L).as("h")))
-      var a: DataFrame = null
+      // reads 0 (matches the old coalesce(max, 0)).
+      def shiftFrom(st: State): Int =
+        math.max(java.lang.Long.toBinaryString(st("m")).length - 21, 0)
+      var h = State.loop(verts.df.select(col("id"), lit(1048576L).as("h")))
+      var a: State = null
       // sa/sh: shifts PENDING on a/h — applied lazily where next consumed.
       var sa = 0
       var sh = 0
       for (_ <- 1 to HITS_ROUNDS) {
-        val obsA = new org.apache.spark.sql.Observation
-        a = materializeDf(spark,
-          efDst.join(
+        val aNext = State.loop(
+          ef.df.join(
               Broadcasts.maybeBroadcast(
-                h.select(col("id").as("hid"),
+                h.df.select(col("id").as("hid"),
                   call_function("shiftright", col("h"), lit(sh)).as("hv")),
                 vBound),
               col("src") === col("hid"))
             .groupBy(col("dst")).agg(sum(col("hv")).as("a"))
-            .select(col("dst").as("id"), col("a"))
-            .observe(obsA, max(col("a")).as("m")))
-        sa = shiftFrom(obsA)
-        val obsH = new org.apache.spark.sql.Observation
-        h = materializeDf(spark,
-          efSrc.join(
+            .select(col("dst").as("id"), col("a")),
+          max(col("a")).as("m"))
+        if (a != null) a.release()
+        a = aNext
+        sa = shiftFrom(a)
+        val hNext = State.loop(
+          ef.df.join(
               Broadcasts.maybeBroadcast(
-                a.select(col("id").as("aid"),
+                a.df.select(col("id").as("aid"),
                   call_function("shiftright", col("a"), lit(sa)).as("av")),
                 vBound),
               col("dst") === col("aid"))
             .groupBy(col("src")).agg(sum(col("av")).as("h"))
-            .select(col("src").as("id"), col("h"))
-            .observe(obsH, max(col("h")).as("m")))
-        sh = shiftFrom(obsH)
+            .select(col("src").as("id"), col("h")),
+          max(col("h")).as("m"))
+        h.release()
+        h = hNext
+        sh = shiftFrom(h)
       }
-      verts
-        .join(a.select(col("id").as("aid"),
+      verts.df
+        .join(a.df.select(col("id").as("aid"),
             call_function("shiftright", col("a"), lit(sa)).as("a")),
           col("id") === col("aid"), "left_outer")
-        .join(h.select(col("id").as("hid"),
+        .join(h.df.select(col("id").as("hid"),
             call_function("shiftright", col("h"), lit(sh)).as("h")),
           col("id") === col("hid"), "left_outer")
         .select(col("id"), coalesce(col("a"), lit(0L)).as("auth"),
           coalesce(col("h"), lit(0L)).as("hub"))
         .orderBy(col("auth").desc, col("id").asc)
         .limit(10)
-    } finally ef0.unpersist(blocking = false)
+    } finally ef.release()
   }
 
   /** DuckDB oracle for [[qHits]]: the same integer HITS recurrence

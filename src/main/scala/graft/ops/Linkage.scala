@@ -71,19 +71,19 @@ object Linkage {
     // aggs inside one plan (r15). Count-adaptive layout keeps the band
     // joins' task counts proportional to the table, not the session
     // shuffle-partition default.
-    val dirty = graft.ops.Layout.checkpointCompact(Tables.customer(spark, d)
+    val dirty = State.memo(Tables.customer(spark, d)
       .select(col("c_custkey").as("d_key"), col("c_name"),
         conv(substring(md5(col("c_custkey").cast("string")), 1, 15), 16, 10)
           .cast("long").as("hv"))
       .select(col("d_key"), dirtyName.as("d_name"))
       .select(col("d_key") :: col("d_name") ::
-        bands("d_name").map { case (n, c) => c.as("d" + n) }: _*))._1
-    val masters = graft.ops.Layout.checkpointCompact(Tables.customer(spark, d)
+        bands("d_name").map { case (n, c) => c.as("d" + n) }: _*)).df
+    val masters = State.memo(Tables.customer(spark, d)
       .groupBy(col("c_name").as("m_name"))
       .agg(min(col("c_custkey")).as("m_key"),
         count(lit(1)).as("m_replicas"))
       .select(col("m_key") :: col("m_name") :: col("m_replicas") ::
-        bands("m_name").map { case (n, c) => c.as("m" + n) }: _*))._1
+        bands("m_name").map { case (n, c) => c.as("m" + n) }: _*)).df
 
     def pass(eq1: String, eq2: String, fuzzy: String): DataFrame =
       dirty.join(masters,

@@ -1,0 +1,104 @@
+package graft.ops
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, GraftInternalRows, Observation}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.functions.{count, lit}
+
+/** A materialized frame: eagerly local-checkpointed, its row count (and
+  * any caller metrics) observed on the checkpoint's own action, and its
+  * partition count derived from that row count.
+  *
+  * The engine's one way to materialize iteration state (the reference's
+  * per-round persist/unpersist pair, `coloring.py:126,219`) and one-shot
+  * memos. Built by [[State.loop]] or [[State.memo]], which share one body:
+  *
+  *  - an `Observation` counts the rows, plus any extra metric columns the
+  *    caller passes, and rides the eager `localCheckpoint` job — loop
+  *    control reads its counts without a separate count job;
+  *  - the checkpoint is coalesced to `max(1, ceil(rows / 65536))`
+  *    partitions, capped at the parent's partition count (never widened).
+  *    Loop state shrinks by orders of magnitude across rounds but keeps
+  *    its parent's partition count, and the fixed per-task cost of a round
+  *    plan (~85 ms CPU/task measured on the truss round stages at sf0.1)
+  *    then dominates every scan of a few-thousand-row frame. Coalescing an
+  *    already-materialized checkpoint is a narrow dependency: no shuffle,
+  *    no recompute.
+  *
+  * Storage is freed on purpose by [[release]], which unpersists the
+  * checkpointed RDD. `DataFrame.unpersist` on a checkpointed frame is a
+  * no-op (the frame is not in the cache manager), so without it the
+  * blocks wait for the garbage collector. Release a loop state only after
+  * the next state has landed, and never release a frame that a returned
+  * plan still reads or that a [[SessionCache]] holds.
+  *
+  * Executor-loss posture: a local checkpoint has no lineage to recompute
+  * from, so a lost checkpoint block fails the job loudly instead of
+  * silently recomputing. This holds for every loop that materializes its
+  * state here.
+  */
+final class State private (
+    val df: DataFrame, val rows: Long,
+    observed: Map[String, Any], checkpoint: RDD[InternalRow]) {
+
+  /** The observed metric `name` (a caller column's alias) as a Long. A sum
+    * or max over no rows reads 0. */
+  def apply(name: String): Long = observed(name) match {
+    case n: java.lang.Number => n.longValue
+    case null => 0L
+  }
+
+  /** Unpersist the checkpointed blocks behind [[df]]. */
+  def release(): Unit = checkpoint.unpersist(blocking = false)
+}
+
+object State {
+
+  /** Rows-per-partition target. 64 Ki rows of state is far above the
+    * per-task fixed-cost crossover and far below any size where
+    * single-task row work matters. */
+  val RowsPerPartition = 65536L
+
+  private val RowsMetric = "graft_state_rows"
+
+  /** Loop state. The frame is rebuilt over the checkpoint's internal rows
+    * with RESET Catalyst statistics (its size estimate falls back to
+    * `spark.sql.defaultSizeInBytes`). `Dataset.localCheckpoint` alone keeps
+    * the source plan's estimate, so in a round loop each round's estimate
+    * is a product over the previous round's and the BigInt arithmetic
+    * grows until it dominates the driver (measured 70 s/round by round 13
+    * of the colouring loop; flat 1 s with the reset). */
+  def loop(df: DataFrame, metrics: Column*): State =
+    materialize(df, metrics) { (ck, rdd, parts) =>
+      GraftInternalRows.fromInternal(df.sparkSession,
+        if (parts < rdd.getNumPartitions) rdd.coalesce(parts) else rdd,
+        ck.schema)
+    }
+
+  /** One-shot memo. The frame KEEPS the source plan's statistics, so the
+    * planner can still broadcast it (q_fuzzy_join's band joins, the
+    * similarity memos); a memo is built once, so its estimate cannot
+    * compound. */
+  def memo(df: DataFrame): State =
+    materialize(df, Nil) { (ck, rdd, parts) =>
+      if (parts < rdd.getNumPartitions) ck.coalesce(parts) else ck
+    }
+
+  private def materialize(df: DataFrame, metrics: Seq[Column])(
+      layout: (DataFrame, RDD[InternalRow], Int) => DataFrame): State = {
+    val obs = new Observation()
+    val ck = df.observe(obs, count(lit(1)).as(RowsMetric), metrics: _*)
+      .localCheckpoint(true)
+    val observed = obs.get
+    val rows = observed(RowsMetric).asInstanceOf[Long]
+    val rdd = ck.queryExecution.logical match {
+      case l: LogicalRDD => l.rdd
+      case other => throw new IllegalStateException(
+        s"localCheckpoint planned ${other.getClass.getSimpleName}, not LogicalRDD")
+    }
+    val parts = math.min(rdd.getNumPartitions.toLong,
+      math.max(1L, (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
+    new State(layout(ck, rdd, parts), rows, observed, rdd)
+  }
+}

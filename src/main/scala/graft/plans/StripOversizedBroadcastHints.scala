@@ -28,7 +28,7 @@ import graft.ops.Broadcasts
   *  - a side whose estimate equals `spark.sql.defaultSizeInBytes` is left
   *    alone — that value is the NO-STATS sentinel (RDD-backed relations
   *    without propagated stats report it, e.g. `createDataFrame(rdd,
-  *    schema)` — the materializeDf shape; `localCheckpoint` itself
+  *    schema)` and [[graft.ops.State.loop]] frames; `localCheckpoint` itself
   *    PRESERVES stats in Spark 4), and those sides are exactly the ones
   *    [[Broadcasts.maybeBroadcast]] already sized by exact row count. The
   *    rule guards hints over stats-bearing relations; it never undoes a

@@ -4,29 +4,21 @@ import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types.StructType
 
-/** Internal-row bridge for iteration-state materializers (r15).
+/** Internal-row bridge for [[graft.ops.State.loop]].
   *
-  * The library's loop materializers need two things at once: a
-  * lineage-truncated frame (localCheckpoint) AND reset Catalyst stats
-  * (`Dataset.localCheckpoint` alone preserves the source plan's
-  * sizeInBytes, so iterative stat products grow exponentially until
-  * BigInt math dominates the driver — the ColoringKernel.materialize
-  * finding). The previous reset path
-  * `createDataFrame(ck.rdd, schema)` paid TWO per-row conversions on
-  * every downstream scan: `Dataset.rdd` deserializes InternalRow →
-  * external Row, and `createDataFrame` re-encodes Row → InternalRow.
+  * Loop state needs a lineage-truncated frame (localCheckpoint) with
+  * RESET Catalyst stats (`Dataset.localCheckpoint` alone preserves the
+  * source plan's sizeInBytes). The public reset path
+  * `createDataFrame(ck.rdd, schema)` pays two per-row conversions on every
+  * downstream scan: `Dataset.rdd` deserializes InternalRow → external Row,
+  * and `createDataFrame` re-encodes Row → InternalRow.
   *
-  * `SparkSession.internalCreateDataFrame` (private[sql] — hence this
+  * `SparkSession.internalCreateDataFrame` (private[sql], hence this
   * shim's package) builds the same stats-reset LogicalRDD directly over
   * the checkpointed INTERNAL rows, exactly the mechanics
   * `Dataset.checkpoint` itself uses, with no conversion on either side.
   */
 object GraftInternalRows {
-
-  /** The materialized internal-row RDD behind `df` (a checkpointed or
-    * cached frame) — no InternalRow→Row conversion. */
-  def internalRdd(df: DataFrame): RDD[InternalRow] =
-    df.queryExecution.toRdd
 
   /** Wrap an internal-row RDD as a DataFrame with RESET stats (a fresh
     * LogicalRDD — sizeInBytes falls back to the session default instead

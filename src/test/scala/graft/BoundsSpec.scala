@@ -117,7 +117,7 @@ class BoundsSpec extends AnyFunSuite {
     // REQUEST past the mask still colors via the DataFrame rounds.
     val r = ColoringKernel.tryColor(spark, e, 65, Strategy.GreedyRdd)
     assert(r.isDefined)
-    r.foreach(_.colors.unpersist())
+    r.foreach(_.release())
   }
 
   test("broadcast hint disappears past the row threshold") {

@@ -23,7 +23,8 @@ class CliSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("graft_cli")
     val out = dir.resolve("colors.json").toString
     val s = Coloring.run(spark, Map(
-      "input" -> "/root/reference/graph.json", "output-coloring" -> out))
+      "input" -> getClass.getResource("/graph.json").getPath,
+      "output-coloring" -> out))
     assert(s.uncolored === 0 && s.conflicts === 0)
     assert(s.k <= 4) // the 10-node fixture colors in <= 4 (SURVEY.md §5)
     // The sink is the reference's array-of-objects format: read it back as

@@ -24,7 +24,7 @@ class ColoringKernelSpec extends AnyFunSuite {
     assert(uncolored === 0, "all nodes colored")
     assert(conflicts === 0, "no adjacent equal colors")
     assert(ColoringKernel.usedColors(result.colors) <= maxDeg + 1)
-    result.colors.unpersist()
+    result.release()
   }
 
   for (n <- Seq(10L, 200L, 2000L);
@@ -89,7 +89,7 @@ class ColoringKernelSpec extends AnyFunSuite {
       val r = ColoringKernel
         .tryColor(spark, edges.repartition(parts), 7, Strategy.Jp).get
       val out = r.colors.orderBy("id").as[(Long, Int)].collect().toSeq
-      r.colors.unpersist()
+      r.release()
       out
     }
     assert(run(2) === run(11))
@@ -110,7 +110,7 @@ class ColoringKernelSpec extends AnyFunSuite {
     val m = r.colors.as[(Long, Int)].collect().toMap
     assert(m(2) === 0 && m(3) === 0)
     assert(m(0) !== m(1))
-    r.colors.unpersist()
+    r.release()
   }
 
   test("GreedyIS admits a maximal independent set within a bucket") {
@@ -140,7 +140,7 @@ class ColoringKernelSpec extends AnyFunSuite {
   }
 
   test("reference graph.json round-trip: read, color, valid, ≤ Δ+1 colors") {
-    val nodes = GraphIO.readNodes(spark, "/root/reference/graph.json")
+    val nodes = GraphIO.readNodes(spark, getClass.getResource("/graph.json").getPath)
     assert(nodes.count() === 10)
     val edges = GraphIO.edges(nodes)
     // Edge list symmetric by construction.

@@ -166,7 +166,7 @@ class PlanShapeSpec extends AnyFunSuite {
     val p = joined.queryExecution.executedPlan.toString
     assert(!p.contains("BroadcastHashJoin"), s"oversized hint not stripped:\n$p")
     assert(joined.orderBy(col("o_orderkey")).collect() === kept)
-    // A stats-less RDD-backed build side (the materializeDf shape —
+    // A stats-less RDD-backed build side (the State.loop shape —
     // localCheckpoint itself PRESERVES stats in Spark 4) reports the
     // defaultSizeInBytes sentinel — the rule must leave its hint alone even
     // under the 1-byte cap (those sides are sized by
