@@ -168,9 +168,9 @@ object Bench {
     // (4.41 → 7.51 s) was exactly this: 4 new keys moved it from position 1
     // (behind memo-warming q_triangle_count) to position 0, stone cold —
     // and q_triangle_count's same-round "win" was the same cost migrating
-    // (graft.tools.QueryOrder reconstructs both orders; bench/NOTES.md
-    // r11). Alphabetical order pins memo attribution to the stable
-    // first-in-family query regardless of surface growth.
+    // (bench/NOTES.md r11 records both orders). Alphabetical order pins
+    // memo attribution to the stable first-in-family query regardless of
+    // surface growth.
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => (only.isEmpty || only(name)) && !skip(name) }
       .map { case (name, fn) =>

@@ -18,7 +18,10 @@ import graft.model.{GraphIO, RandomGraph}
   *   --seed S                generate: RNG seed (default 42)
   *   --output-graph PATH     write the (generated) graph as JSON
   *   --output-coloring PATH  write the coloring as JSON
-  *   --strategy jp|greedy|graphx  kernel strategy (default jp)
+  *   --strategy jp|greedy|graphx  kernel strategy (default jp); greedy
+  *                           runs the GreedyRdd rounds while the palette
+  *                           fits the 64-bit mask and the bucket bound
+  *                           (`graft.greedy.maxBucketRows`), Jp otherwise
   */
 object Coloring {
 
@@ -51,14 +54,16 @@ object Coloring {
     }
 
     val strategy = opts.get("strategy") match {
-      case Some("greedy") => Strategy.GreedyAgg
+      case Some("greedy") => Strategy.GreedyRdd
       case Some("graphx") => Strategy.GraphX
       case _ => Strategy.Jp
     }
     val best = ColoringKernel.minimalColors(spark, edges, strategy, Some(vertices))
-    val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
-    opts.get("output-coloring").foreach(GraphIO.writeColoring(best.colors, _))
-    Summary(best.k, uncolored, conflicts)
+    try {
+      val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
+      opts.get("output-coloring").foreach(GraphIO.writeColoring(best.colors, _))
+      Summary(best.k, uncolored, conflicts)
+    } finally best.release()
   }
 
   def main(args: Array[String]): Unit = {

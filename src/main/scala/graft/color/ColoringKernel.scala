@@ -20,24 +20,20 @@ import graft.ops.State
   *      O13, `coloring_optimized.py:150-166`; -3 ⇒ infeasible ⇒ the
   *      k-attempt fails, `coloring.py:104-108`);
   *   3. same-color conflict resolution between adjacent candidates
-  *      (O15-O17) via one of two strategies below;
+  *      (O15-O17) by priority admit;
   *   4. apply the admitted colors — left join + `coalesce`
   *      (O20, `coloring.py:121-127`).
   *
   * Strategies:
-  *   - [[Strategy.Jp]] (default): Jones–Plassmann-style priority admit — a
-  *     node keeps its candidate iff no *adjacent* node competing for the
-  *     same candidate has higher (degree, id desc-asc) priority. Pure joins,
-  *     **deterministic under any partitioning**, guaranteed progress (every
-  *     conflict component admits its max-priority node), and the natural
-  *     100 TB formulation: one edges-shuffle per round, no per-node adjacency
-  *     arrays shuffled around.
-  *   - [[Strategy.GreedyAgg]]: the reference-shaped two-phase greedy
-  *     independent set as a custom [[GreedyIS]] `Aggregator` over color
-  *     buckets (`aggregateByKey`, `coloring_optimized.py:120-126`) —
-  *     capability parity with the reference's map-side-combine design;
-  *     admits more nodes per round on dense buckets, at the cost of
-  *     shuffling each candidate's adjacency list.
+  *   - [[Strategy.Jp]] (default, the DataFrame rounds here):
+  *     Jones–Plassmann-style priority admit — a node keeps its candidate iff
+  *     no *adjacent* node competing for the same candidate has higher
+  *     (degree, id desc-asc) priority. Pure joins, **deterministic under any
+  *     partitioning**, guaranteed progress (every conflict component admits
+  *     its max-priority node), and the natural 100 TB formulation: one
+  *     edges-shuffle per round, no per-node adjacency arrays shuffled around.
+  *   - [[Strategy.GreedyRdd]] and [[Strategy.GraphX]] delegate their rounds
+  *     to [[GreedyRddKernel]] and [[GraphXKernel]].
   *
   * Driver-side control flow stays a plain Scala loop — same stance as GraphX
   * `Pregel` (SURVEY.md §4): only counts cross to the driver. Every round's
@@ -50,13 +46,10 @@ object ColoringKernel {
   sealed trait Strategy
   object Strategy {
     case object Jp extends Strategy
-    case object GreedyAgg extends Strategy
-    /** Delegate rounds to [[GreedyRddKernel]] — the same GreedyIS admit
-      * semantics as GreedyAgg (shared partial/merge logic), executed as a
-      * raw `aggregateByKey` loop over co-partitioned RDDs: lowest per-round
-      * fixed cost for the reference-shaped strategy (~0.35 s vs ~1.5 s per
-      * round at sf0.1). Mask path only — k > 64 falls back to the
-      * GreedyAgg DataFrame rounds (legacy collect_set regather). */
+    /** Delegate rounds to [[GreedyRddKernel]] — the reference-shaped
+      * two-phase [[GreedyIS]] admit per color bucket, executed as a raw
+      * `aggregateByKey` loop over co-partitioned RDDs. A request runs here
+      * only when [[greedyFits]] holds; otherwise it runs on Jp. */
     case object GreedyRdd extends Strategy
     /** Delegate rounds to [[GraphXKernel]] (aggregateMessages message
       * passing). Same speculative first-fit + priority-admit semantics;
@@ -77,7 +70,7 @@ object ColoringKernel {
   private def verticesOf(edges: DataFrame): DataFrame =
     edges.select(col("src").as("id")).distinct()
 
-  /** Expected-rows-per-color-bucket bound for the greedy strategies. The
+  /** Expected-rows-per-color-bucket bound for greedy requests. The
     * GreedyIS admit reduces each color bucket in ONE reducer — the merge is
     * inherently serial per bucket (the reference's own aggregateByKey
     * shape), so the scale ceiling is ~V/k rows through a single task.
@@ -96,27 +89,34 @@ object ColoringKernel {
   val GreedyMaxBucketRowsKey = "graft.greedy.maxBucketRows"
   val DefaultGreedyMaxBucketRows: Long = 8192L
 
-  /** Route a greedy request to the deterministic Jp strategy when the
-    * expected per-bucket size V/k exceeds the configured bound — the
-    * documented skew ceiling of the ≤k-key reduce, enforced in code rather
-    * than by caller choice. Two-tier size signal: the free Catalyst
-    * estimate (E rows upper-bound V at ~24 B per (src,dst) UnsafeRow)
-    * decides when it can; only when it reads "too big" — including the
-    * unknown-stats Long.Max default of RDD-backed inputs — is an exact
-    * vertex count worth one job, negligible next to the run it guards. */
+  /** The one routing rule for a greedy request over V vertices with
+    * palette k: it runs on GreedyRdd iff k fits the 64-bit used-color mask
+    * and the expected per-bucket size V/k is within
+    * [[GreedyMaxBucketRowsKey]] — the documented skew ceiling of the ≤k-key
+    * reduce, enforced in code rather than by caller choice. Otherwise it
+    * runs on the deterministic Jp strategy. */
+  private[color] def greedyFits(spark: SparkSession, v: Long, k: Int): Boolean = {
+    val maxBucket = spark.conf
+      .get(GreedyMaxBucketRowsKey, DefaultGreedyMaxBucketRows.toString).toLong
+    k <= 64 && v / math.max(k, 1) <= maxBucket
+  }
+
+  /** Apply [[greedyFits]] to a GreedyRdd request; other strategies pass
+    * through. Two-tier size signal: the free Catalyst estimate (E rows
+    * upper-bound V at ~24 B per (src,dst) UnsafeRow) decides when it can;
+    * only when it reads "too big" — including the unknown-stats Long.Max
+    * default of RDD-backed inputs — is an exact vertex count worth one
+    * job, negligible next to the run it guards. */
   private[graft] def resolveStrategy(
       spark: SparkSession, edges: DataFrame, requested: Strategy, k: Int): Strategy =
-    requested match {
-      case Strategy.GreedyRdd | Strategy.GreedyAgg =>
-        val maxBucket = spark.conf
-          .get(GreedyMaxBucketRowsKey, DefaultGreedyMaxBucketRows.toString).toLong
-        val kk = math.max(k, 1).toLong
-        val sz = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-        val estRows =
-          if (sz > BigInt(Long.MaxValue)) Long.MaxValue else (sz / 24).toLong max 1L
-        val v = if (estRows / kk <= maxBucket) estRows else verticesOf(edges).count()
-        if (v / kk > maxBucket) Strategy.Jp else requested
-      case s => s
+    if (requested != Strategy.GreedyRdd) requested
+    else {
+      val sz = edges.queryExecution.optimizedPlan.stats.sizeInBytes
+      val estRows =
+        if (sz > BigInt(Long.MaxValue)) Long.MaxValue else (sz / 24).toLong max 1L
+      if (greedyFits(spark, estRows, k) ||
+        greedyFits(spark, verticesOf(edges).count(), k)) requested
+      else Strategy.Jp
     }
 
   /** Attempt a k-coloring of `edges` (symmetric, irreflexive `(src,dst)`).
@@ -135,25 +135,20 @@ object ColoringKernel {
       preparedBase: Option[org.apache.spark.graphx.Graph[Int, Unit]] = None)
       : Option[Colored] = {
 
+    // A delegating kernel hands its final colors to `land` and frees its
+    // last round once they are copied into a State.
+    def land(df: DataFrame): State = State.loop(appendIsolated(df, extraVertices))
+    def colored(result: Option[(State, Int)]): Option[Colored] =
+      result.map { case (st, rounds) => Colored(st, k, rounds) }
     if (strategy == Strategy.GraphX) {
-      val result = preparedBase match {
-        case Some(base) => GraphXKernel.tryColorOn(spark, base, k, maxRounds)
-        case None => GraphXKernel.tryColor(spark, edges, k, maxRounds)
-      }
-      return result.map(df => Colored(
-        State.loop(appendIsolated(df, extraVertices)), k, rounds = -1))
+      return colored(preparedBase match {
+        case Some(base) => GraphXKernel.tryColorOn(spark, base, k, maxRounds)(land)
+        case None => GraphXKernel.tryColor(spark, edges, k, maxRounds)(land)
+      })
     }
-    // Greedy's serial-per-bucket merge bound: auto-route oversized runs to
-    // the deterministic Jp strategy (resolveStrategy scaladoc) instead of
-    // leaving the scale ceiling to caller discipline.
-    val effective = resolveStrategy(spark, edges, strategy, k)
-    if (effective == Strategy.GreedyRdd && k <= 64) {
-      return GreedyRddKernel.tryColor(spark, edges, k, maxRounds)
-        .map { case (df, rounds) => Colored(
-          State.loop(appendIsolated(df, extraVertices)), k, rounds) }
+    if (resolveStrategy(spark, edges, strategy, k) == Strategy.GreedyRdd) {
+      return colored(GreedyRddKernel.tryColor(spark, edges, k, maxRounds)(land))
     }
-    // GreedyRdd past the mask limit = the GreedyAgg rounds (legacy regather).
-    val strat = if (effective == Strategy.GreedyRdd) Strategy.GreedyAgg else effective
 
     graft.functions.GraftFunctions.register(spark)
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
@@ -183,14 +178,6 @@ object ColoringKernel {
       .select(col("id"), col("color"), coalesce(col("deg"), lit(0)).as("deg"),
         lit(0L).as("used")))
 
-    // Adjacency lists (GreedyAgg only): static across rounds, materialized
-    // once on first use.
-    lazy val adjCached = e.groupBy(col("src"))
-      .agg(collect_list(col("dst")).as("nbrs"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    var adjUsed = false
-    def adjacency(): DataFrame = { adjUsed = true; adjCached }
-
     var rounds = 0
     var uncolored = state("uncolored")
     var failed = false
@@ -203,17 +190,9 @@ object ColoringKernel {
       else {
         val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
         val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
-        val next = strat match {
-          case Strategy.Jp =>
-            if (useMask) jpRoundMask(e, state.df, k, roundCaches, uncolored)
-            else jpRound(e, state.df, k, roundStates)
-          case Strategy.GreedyAgg =>
-            if (useMask) greedyRoundMask(spark, e, adjacency(), state.df, k,
-              roundCaches, uncolored)
-            else greedyRound(spark, e, adjacency(), state.df, k, roundCaches)
-          case Strategy.GraphX | Strategy.GreedyRdd =>
-            sys.error("delegating strategies handled above")
-        }
+        val next =
+          if (useMask) jpRoundMask(e, state.df, k, roundCaches, uncolored)
+          else jpRound(e, state.df, k, roundStates)
         // The next state lands before anything of this round is freed.
         val landed = observed(next)
         roundCaches.foreach(_.unpersist())
@@ -223,12 +202,9 @@ object ColoringKernel {
         if (state("infeasible") > 0) failed = true
         else if (state("uncolored") >= uncolored) {
           // No progress. Jp always colors the top-priority node of every
-          // uncolored component; GreedyAgg admits at least the first-
-          // arriving candidate of every nonempty bucket (GreedyIS scaladoc
-          // — its arrival-order partial phase can prune even the bucket's
-          // top node, but never all of them). Either way a round with
-          // uncolored candidates commits ≥1 color, so this only fires as
-          // the bounded-round backstop (risk 6).
+          // uncolored component, so a round with uncolored candidates
+          // commits ≥1 color and this only fires as the bounded-round
+          // backstop (risk 6).
           failed = rounds >= maxRounds
         }
         uncolored = state("uncolored")
@@ -237,7 +213,6 @@ object ColoringKernel {
       }
     }
 
-    if (adjUsed) adjCached.unpersist()
     e.unpersist()
     if (failed) { state.release(); None }
     else Some(Colored(state, k, rounds))
@@ -346,23 +321,7 @@ object ColoringKernel {
     applyWithMask(e, state, updates, uncolored)
   }
 
-  /** Mask-state greedy round (k ≤ 64): same GreedyIS Aggregator admit as
-    * [[greedyRound]], candidates and used-mask maintenance as in
-    * [[jpRoundMask]]. */
-  private def greedyRoundMask(spark: SparkSession, e: DataFrame, adj: DataFrame,
-      state: DataFrame, k: Int,
-      roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame],
-      uncolored: Long): DataFrame = {
-    val cand = state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand"))
-    val updates = admitGreedy(spark, adj, cand)
-      .select(col("id").as("uid"), col("cand").as("new_color"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    roundCaches += updates
-    applyWithMask(e, state, updates, uncolored)
-  }
-
-  /** One speculative-coloring round (the default strategy): every uncolored
+  /** One speculative-coloring round (k > 64): every uncolored
     * vertex picks its first-fit candidate (O13), then keeps it iff no
     * adjacent vertex chose the same candidate with higher (degree, id)
     * priority. Two edges passes — candidate gather + rival check — converge
@@ -420,68 +379,6 @@ object ColoringKernel {
         col("deg"), col("used"))
   }
 
-  /** One reference-shaped round: gather used neighbor colors (O11),
-    * first-fit candidates (O13), greedy-IS conflict resolution per color
-    * bucket via the custom [[GreedyIS]] Aggregator (O17), left-join apply
-    * (O20). */
-  private def greedyRound(spark: SparkSession, e: DataFrame, adj: DataFrame,
-      state: DataFrame, k: Int,
-      roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame]): DataFrame = {
-    val used = e
-      .join(state.filter(col("color") >= 0)
-        .select(col("id").as("nid"), col("color").as("ncolor")),
-        col("dst") === col("nid"))
-      .groupBy(col("src"))
-      .agg(collect_set(col("ncolor")).as("used_arr"))
-    // Lazily persisted, not eagerly checkpointed: `cand` is referenced by
-    // both the admit path and the infeasible-null path, so the cache stops
-    // the used-join running twice — but the round's checkpoint job is
-    // what first populates it (an eager localCheckpoint here was a second
-    // full action per round, ~25% of q_color_greedy's wall-clock). Stats
-    // blowup isn't a risk for this round-local plan (the per-round State
-    // resets stats). Unpersisted by the caller once the next state lands.
-    val cand = state.filter(col("color") === -1)
-      .join(used, col("id") === col("src"), "left_outer")
-      .select(col("id"), col("deg"),
-        call_function("graft_first_fit", col("used_arr"), lit(k)).as("cand"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    roundCaches += cand
-    val admitted = admitGreedy(spark, adj, cand.filter(col("cand").isNotNull))
-    val updates = admitted
-      .unionByName(cand.filter(col("cand").isNull)
-        .select(col("id"), lit(-3).as("cand")))
-    state
-      .join(updates.withColumnRenamed("id", "aid"), col("id") === col("aid"), "left_outer")
-      .select(col("id"),
-        coalesce(col("cand"), col("color")).cast("int").as("color"),
-        col("deg"), col("used"))
-  }
-
-  /** Bucket candidates by color and run the [[GreedyIS]] Aggregator
-    * (partial per-partition greedy + sorted-merge greedy — the
-    * `aggregateByKey` design, `coloring_optimized.py:120-126`). Requires
-    * each candidate's adjacency list in the bucket (the optimized reference
-    * ships the same projected record, `coloring_optimized.py:86-90`). */
-  private def admitGreedy(
-      spark: SparkSession, adj: DataFrame, cand: DataFrame): DataFrame = {
-    import spark.implicits._
-    // Encode (cand, CandNode) directly as a struct column — no extra typed
-    // map stage between the join and the aggregation.
-    val bucket = cand
-      .join(adj, col("id") === adj("src"), "left_outer").drop(adj("src"))
-      .select(col("cand"), struct(
-        col("id"),
-        col("deg").as("degree"),
-        coalesce(col("nbrs"), array().cast("array<long>")).as("nbrs")).as("node"))
-      .as[(Int, CandNode)]
-    bucket
-      .groupByKey(_._1)
-      .mapValues(_._2)
-      .agg(GreedyIS.toColumn.name("admitted"))
-      .flatMap { case (c, ids) => ids.map(id => (id, c)) }
-      .toDF("id", "cand")
-  }
-
   /** Outer minimal-color search (O25, `coloring.py:212-231`), with the
     * reference's failed-attempt-output bug fixed (SURVEY.md §5 bug 1): the
     * returned coloring is always the last *successful* attempt.
@@ -503,7 +400,7 @@ object ColoringKernel {
     * already witnesses the kernel's minimal k (measured: 40 s → 14 s for
     * q_minimal_colors at sf0.1 — the k−1 probe replayed all 13 rounds with
     * bit-identical uncolored counts before failing on the last one).
-    * GreedyAgg keeps the descending search: its admitted sets depend on
+    * GreedyRdd keeps the descending search: its admitted sets depend on
     * partitioning (reference-faithful), so no single trace is a proof.
     */
   def minimalColors(
@@ -525,13 +422,8 @@ object ColoringKernel {
       if (strategy == Strategy.GraphX)
         preparedBase.orElse(Some(GraphXKernel.prepare(spark, edges)))
       else None
-    def attempt(k: Int): Option[Colored] = graphxBase match {
-      case Some(base) =>
-        GraphXKernel.tryColorOn(spark, base, k)
-          .map(df => Colored(
-            State.loop(appendIsolated(df, extraVertices)), k, rounds = -1))
-      case None => tryColor(spark, edges, k, strategy, extraVertices)
-    }
+    def attempt(k: Int): Option[Colored] =
+      tryColor(spark, edges, k, strategy, extraVertices, preparedBase = graphxBase)
 
     try {
       val maxDeg = graphxBase.map(GraphXKernel.maxDegree).getOrElse {

@@ -68,12 +68,19 @@ object GraphXKernel {
     // (pagerank 39.8 → 2124 MB for 10× edges; bench/NOTES.md r9).
     // EdgePartition2D bounds replication at 2·√P, so per-edge message
     // traffic stays flat as partitions scale out with the corpus.
-    val g0 = Graph.fromEdges(edgeRdd, 0,
+    val loaded = Graph.fromEdges(edgeRdd, 0,
       StorageLevel.MEMORY_AND_DISK, StorageLevel.MEMORY_AND_DISK)
+    val g0 = loaded
       .partitionBy(org.apache.spark.graphx.PartitionStrategy.EdgePartition2D)
     val base = g0.outerJoinVertices(g0.outDegrees)((_, _, d) => d.getOrElse(0))
       .cache()
-    base.vertices.count() // materialize before attempts start mutating views
+    // One job materializes base's vertices and edges (the edge pass ships
+    // the vertices), before attempts start mutating views. From then on
+    // only base's own blocks are read, so the loaded and partitioned copies
+    // the build went through are freed.
+    base.edges.count()
+    loaded.unpersist(blocking = false)
+    g0.unpersist(blocking = false)
     if (debug) println(f"[graphx] prepare t=${(System.nanoTime() - t0) / 1e9}%.2f s")
     base
   }
@@ -83,24 +90,26 @@ object GraphXKernel {
     base.vertices.map(_._2).fold(0)(math.max)
 
   /** One-shot attempt: build, color, drop the base. */
-  def tryColor(
+  def tryColor[T](
       spark: SparkSession,
       edgesDf: DataFrame,
       k: Int,
-      maxRounds: Int = 200): Option[DataFrame] = {
+      maxRounds: Int = 200)(land: DataFrame => T): Option[(T, Int)] = {
     val base = prepare(spark, edgesDf)
-    try tryColorOn(spark, base, k, maxRounds)
+    try tryColorOn(spark, base, k, maxRounds)(land)
     finally base.unpersist(blocking = false)
   }
 
-  /** Attempt a k-coloring on a prepared base graph; returns the (id, color)
-    * DataFrame on success. The caller must materialize the result before
-    * unpersisting `base` (ColoringKernel does, via localCheckpoint). */
-  def tryColorOn(
+  /** Attempt a k-coloring on a prepared base graph. On success the (id,
+    * color) DataFrame is handed to `land`, and the result is
+    * `(land(colors), rounds)`. The last round's graph is unpersisted once
+    * `land` returns, so `land` must copy or fully consume the colors
+    * (ColoringKernel copies them into a `State`). */
+  def tryColorOn[T](
       spark: SparkSession,
       base: Graph[Int, Unit],
       k: Int,
-      maxRounds: Int = 200): Option[DataFrame] = {
+      maxRounds: Int = 200)(land: DataFrame => T): Option[(T, Int)] = {
     import spark.implicits._
 
     var graph = base.mapVertices((_, d) => V(-1, d)).cache()
@@ -169,7 +178,7 @@ object GraphXKernel {
           .fold((0L, 0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
         if (counts._2 > 0) failed = true
         else if (counts._1 >= uncolored) failed = rounds >= maxRounds
-        if (graph ne null) graph.unpersist(blocking = false)
+        free(graph)
         graph = next
         uncolored = counts._1
         uncoloredDeg = counts._3
@@ -235,8 +244,8 @@ object GraphXKernel {
           .fold((0L, 0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
         if (counts._2 > 0) failed = true
         else if (counts._1 >= uncolored) failed = rounds >= maxRounds
-        if (graph ne null) graph.unpersist(blocking = false)
-        withCand.unpersist(blocking = false)
+        free(graph)
+        free(withCand)
         graph = next
         uncolored = counts._1
         uncoloredDeg = counts._3
@@ -248,12 +257,23 @@ object GraphXKernel {
       }
     }
 
-    if (failed) { graph.unpersist(blocking = false); None }
-    else {
-      val out = graph.vertices.map { case (id, v) => (id, v.color) }
-        .toDF("id", "color")
-      Some(out)
-    }
+    try
+      if (failed) None
+      else {
+        val colors = graph.vertices.map { case (id, v) => (id, v.color) }.toDF("id", "color")
+        Some((land(colors), rounds))
+      }
+    finally free(graph)
+  }
+
+  /** Unpersist a round's graph. `Graph.unpersist` frees the vertices and
+    * the replicated view's CURRENT edges, but `aggregateMessages` swaps
+    * that view's edges for an uncached copy carrying shipped vertex
+    * attributes, so the cached edges the graph was built with (its
+    * `edges`) must be freed as well. */
+  private def free(g: Graph[_, _]): Unit = {
+    g.unpersist(blocking = false)
+    g.edges.unpersist(blocking = false)
   }
 
   /** Sequential replay of the synchronous Jp rounds over the collected

@@ -1,8 +1,5 @@
 package graft.color
 
-import org.apache.spark.sql.{Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
-
 /** One candidate row inside a color bucket: the node, its degree, and its
   * adjacency (by id). */
 case class CandNode(id: Long, degree: Int, nbrs: Array[Long])
@@ -12,13 +9,13 @@ case class CandNode(id: Long, degree: Int, nbrs: Array[Long])
   * partial greedy admit per partition (`resolve_conflicts_within_partition`,
   * `:168-184`) then cross-partition merge that re-runs the greedy admit on
   * the sorted concatenation (`resolve_conflicts_across_partitions`,
-  * `:186-200`). Catalyst splits an `Aggregator` into partial + final
-  * automatically, reproducing the reference's map-side-combine optimization
-  * (SURVEY.md §4).
+  * `:186-200`). [[GreedyRddKernel]] passes [[zero]], [[reduce]] and
+  * [[merge]] to `aggregateByKey`, which runs `reduce` map-side and `merge`
+  * after the shuffle: the reference's map-side-combine optimization.
   *
   * Phase orders differ by necessity: the MERGE admits in the
   * (degree desc, id asc) total order, but the PARTIAL phase admits in
-  * ARRIVAL order — an `Aggregator.reduce` streams one row at a time, so it
+  * ARRIVAL order — `reduce` streams one row at a time, so it
   * cannot sort-first like the reference's whole-partition buffer without
   * giving up the map-side size reduction (buffering every candidate). The
   * consequence (PropertySpec pins it): even the bucket's globally
@@ -35,7 +32,7 @@ case class CandNode(id: Long, degree: Int, nbrs: Array[Long])
   * output is a valid independent set regardless. The kernel's default
   * strategy ([[ColoringKernel]] `Jp`) is instead fully deterministic.
   */
-object GreedyIS extends Aggregator[CandNode, Seq[CandNode], Seq[Long]] {
+object GreedyIS {
 
   private val order: Ordering[CandNode] =
     Ordering.by((c: CandNode) => (-c.degree, c.id))
@@ -55,9 +52,9 @@ object GreedyIS extends Aggregator[CandNode, Seq[CandNode], Seq[Long]] {
     }
   }
 
-  override def zero: Seq[CandNode] = Vector.empty
+  def zero: Seq[CandNode] = Vector.empty
 
-  override def reduce(buf: Seq[CandNode], c: CandNode): Seq[CandNode] = admit(buf, c)
+  def reduce(buf: Seq[CandNode], c: CandNode): Seq[CandNode] = admit(buf, c)
 
   /** Re-run greedy admit over the merged candidates in total order
     * (`coloring_optimized.py:186-200`). One admitted-id hash set is carried
@@ -66,7 +63,7 @@ object GreedyIS extends Aggregator[CandNode, Seq[CandNode], Seq[Long]] {
     * the admitted list (as in [[admit]]) would be O(n²) hash probes on a
     * dense bucket: round 1 of the kernel puts EVERY vertex in bucket 0, and
     * the 20k-node bench graph spent ~30 s in exactly that scan. */
-  override def merge(a: Seq[CandNode], b: Seq[CandNode]): Seq[CandNode] = {
+  def merge(a: Seq[CandNode], b: Seq[CandNode]): Seq[CandNode] = {
     val all = (a ++ b).sorted(order)
     val admitted = scala.collection.mutable.ArrayBuffer.empty[CandNode]
     val ids = new java.util.HashSet[Long]()
@@ -76,10 +73,5 @@ object GreedyIS extends Aggregator[CandNode, Seq[CandNode], Seq[Long]] {
     admitted.toVector
   }
 
-  override def finish(buf: Seq[CandNode]): Seq[Long] = buf.map(_.id)
-
-  override def bufferEncoder: Encoder[Seq[CandNode]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[CandNode]]()
-  override def outputEncoder: Encoder[Seq[Long]] =
-    org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
+  def finish(buf: Seq[CandNode]): Seq[Long] = buf.map(_.id)
 }

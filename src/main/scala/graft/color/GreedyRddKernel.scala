@@ -11,7 +11,7 @@ import org.apache.spark.storage.StorageLevel
   * the uncolored candidates by their first-fit color and admit a greedy
   * independent set per bucket with map-side partial combine
   * (`aggregateByKey`, `coloring_optimized.py:120-126`; the partial/merge
-  * logic is shared with the Dataset path via [[GreedyIS]]).
+  * logic lives in [[GreedyIS]]).
   *
   * Why an RDD formulation exists next to [[ColoringKernel]]'s DataFrame
   * rounds: an iterative kernel's per-round cost at a fixed graph size is
@@ -22,8 +22,7 @@ import org.apache.spark.storage.StorageLevel
   * adjacency, updates ⋈ adjacency, state cogroup); the only shuffles left
   * per round are the color-bucket `aggregateByKey` (key space ≤ k) and the
   * two small delta repartitions — measured ~0.35 s/round vs ~1.5 s/round
-  * for the Catalyst-planned DataFrame rounds at sf0.1 (identical admitted
-  * sets given identical partitioning).
+  * for the same admit as Catalyst-planned DataFrame rounds at sf0.1.
   *
   * Honest scale bound, inherited from the reference's semantics: the
   * cross-partition merge of one color bucket is SERIAL (greedy admit is a
@@ -46,9 +45,13 @@ import org.apache.spark.storage.StorageLevel
   *
   * k ≤ 64 only (used colors ride a 64-bit mask updated from each round's
   * newly-colored delta — O(E) total gather across ALL rounds, see
-  * `ColoringKernel.applyWithMask`); larger palettes take the DF kernel's
-  * legacy collect_set path ([[ColoringKernel.tryColor]] delegates here only
-  * when the mask fits).
+  * `ColoringKernel.applyWithMask`). [[ColoringKernel.tryColor]] delegates
+  * here only when `ColoringKernel.greedyFits` holds and runs every other
+  * greedy request on Jp.
+  *
+  * Both entry points hand the final colors to a caller's `land` function
+  * and unpersist the last round's state once it returns, so `land` must
+  * copy or fully consume the colors it is given.
   */
 object GreedyRddKernel {
 
@@ -74,15 +77,14 @@ object GreedyRddKernel {
   val TailLocalSolveMaxEdges: Long = 1L << 20
 
   /** Attempt a k-coloring (k ≤ 64) of a symmetric, irreflexive, dedup'd
-    * `(src,dst)` edge list. Returns `(colors, rounds)` on success. */
-  def tryColor(
+    * `(src,dst)` edge list. Returns `(land(colors), rounds)` on success. */
+  def tryColor[T](
       spark: SparkSession,
       edgesDf: DataFrame,
       k: Int,
-      maxRounds: Int = 200): Option[(DataFrame, Int)] = {
+      maxRounds: Int = 200)(land: DataFrame => T): Option[(T, Int)] = {
     require(k <= 64, s"mask kernel supports k <= 64, got $k")
-    run(spark, edgesDf, knownEdges = None, fixedK = Some(k), maxRounds,
-      maxBucketRows = Long.MaxValue).map { case (df, r, _) => (df, r) }
+    run(spark, edgesDf, knownEdges = None, fixedK = Some(k), maxRounds, land)
   }
 
   /** Δ+1 entry for q_color_greedy: derive k = Δ+1 from the kernel's OWN
@@ -96,26 +98,24 @@ object GreedyRddKernel {
     * two dropped passes + the degree agg at ~1.3 s of q_color_greedy's
     * 12.5 s at sf0.1.
     *
-    * Returns None when the derived palette exceeds the 64-bit mask or the
-    * expected bucket size V/k exceeds `maxBucketRows` (the same serial-merge
-    * ceiling [[ColoringKernel.resolveStrategy]] guards — here checked with
-    * the EXACT V), or on a genuine stall past `maxRounds`; the caller falls
-    * back to the legacy route through the kernel's strategy auto-router. */
-  def colorDeltaPlusOne(
+    * Returns None when `ColoringKernel.greedyFits` rejects the derived
+    * palette for the EXACT V (the same rule the strategy router applies),
+    * or on a genuine stall past `maxRounds`; the caller then falls back to
+    * the strategy router. */
+  def colorDeltaPlusOne[T](
       spark: SparkSession,
       edgesDf: DataFrame,
       knownEdges: Long,
-      maxBucketRows: Long,
-      maxRounds: Int = 200): Option[(DataFrame, Int, Int)] =
-    run(spark, edgesDf, Some(knownEdges), fixedK = None, maxRounds, maxBucketRows)
+      maxRounds: Int = 200)(land: DataFrame => T): Option[(T, Int)] =
+    run(spark, edgesDf, Some(knownEdges), fixedK = None, maxRounds, land)
 
-  private def run(
+  private def run[T](
       spark: SparkSession,
       edgesDf: DataFrame,
       knownEdges: Option[Long],
       fixedK: Option[Int],
       maxRounds: Int,
-      maxBucketRows: Long): Option[(DataFrame, Int, Int)] = {
+      land: DataFrame => T): Option[(T, Int)] = {
     import spark.implicits._
 
     val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
@@ -159,7 +159,7 @@ object GreedyRddKernel {
       (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
     val k = fixedK.getOrElse(maxDeg + 1)
     if (debug) println(s"[greedy-rdd] nParts=$nParts v=$v k=$k")
-    if (fixedK.isEmpty && (k > 64 || v / math.max(k, 1) > maxBucketRows)) {
+    if (fixedK.isEmpty && !ColoringKernel.greedyFits(spark, v, k)) {
       // Palette wider than the mask, or the serial-merge bucket ceiling:
       // reject before any round so the caller reroutes.
       state.unpersist(blocking = false)
@@ -261,8 +261,8 @@ object GreedyRddKernel {
           .filter(_._2._1 >= 0)
           .join(adj)
           .map { case (id, ((c, deg), nbrs)) => (c, CandNode(id, deg, nbrs)) }
-          .aggregateByKey(Vector.empty[CandNode]: Seq[CandNode],
-            math.min(k, nParts))(GreedyIS.reduce, GreedyIS.merge)
+          .aggregateByKey(GreedyIS.zero, math.min(k, nParts))(
+            GreedyIS.reduce, GreedyIS.merge)
           .flatMap { case (c, seq) => seq.map(n => (n.id, c)) }
         val infeasible = cand.filter(_._2._1 == -3).map { case (id, _) => (id, -3) }
         val updates = (admitted ++ infeasible).partitionBy(part)
@@ -305,10 +305,12 @@ object GreedyRddKernel {
     }
 
     adj.unpersist(blocking = false)
-    if (failed) { state.unpersist(blocking = false); None }
-    else {
-      val out = state.map { case (id, v) => (id, v.color) }.toDF("id", "color")
-      Some((out, rounds, k))
-    }
+    try
+      if (failed) None
+      else {
+        val colors = state.map { case (id, v) => (id, v.color) }.toDF("id", "color")
+        Some((land(colors), rounds))
+      }
+    finally state.unpersist(blocking = false)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.ops.State
+
 /** Reference node record: id / adjacency-by-id / color (-1 = uncolored).
   * Mirrors the reference's wire format (`node.py:8-13`), never its in-memory
   * object-reference adjacency (`node.py:4`) — see SURVEY.md §1.4.
@@ -50,27 +52,25 @@ object GraphIO {
     * [[writeGraphDistributed]] automatically, like [[writeColoring]].
     */
   def writeGraph(nodes: DataFrame, path: String): Unit = {
-    // Persist for the routing decision: the count and the write are two
-    // actions over the same (possibly expensive, unpersisted) plan — e.g.
-    // the CLI's generate mode — and without the persist the generator
-    // would run twice.
-    val slim = nodes.select(col("id"), col("neighbors"), col("color"))
-      .localCheckpoint(false)
+    // Materialized for the routing decision: the row count and the write
+    // read the same (possibly expensive) plan — e.g. the CLI's generate
+    // mode — and without the memo the generator would run twice.
+    val slim = State.memo(nodes.select(col("id"), col("neighbors"), col("color")))
     try {
-      val n = slim.count()
+      val n = slim.rows
       val ceiling = maxCollectRows(nodes)
       if (n > ceiling) {
         logLayoutRouting("writeGraph", path, n, ceiling)
-        slim.write.mode("overwrite").json(path)
+        slim.df.write.mode("overwrite").json(path)
       } else {
-        val rows = slim.orderBy(col("id")).collect()
+        val rows = slim.df.orderBy(col("id")).collect()
         val body = rows.map { r =>
           val nbrs = r.getSeq[Long](1).mkString(", ")
           s"""    {\n        "id": ${r.getLong(0)},\n        "neighbors": [$nbrs],\n        "color": ${r.getInt(2)}\n    }"""
         }.mkString("[\n", ",\n", "\n]")
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path), body)
       }
-    } finally slim.unpersist(blocking = false)
+    } finally slim.release()
   }
 
   /** Scale path: distributed JSON-lines write of the full node records. */
@@ -106,28 +106,26 @@ object GraphIO {
     * for graphs within [[MaxCollectRowsKey]]; ABOVE the ceiling the write
     * routes to [[writeColoringDistributed]] instead of collecting V rows
     * onto the driver (the path then holds a directory of JSON-lines parts,
-    * same records). The count is one cheap aggregate over a plan that is
-    * about to be collected anyway. */
+    * same records). The row count rides the memo's own checkpoint job. */
   def writeColoring(colors: DataFrame, path: String): Unit = {
-    // Persisted for the same two-actions reason as [[writeGraph]] — the
+    // Materialized for the same two-reads reason as [[writeGraph]] — the
     // kernel happens to hand over checkpointed colors today, but this
     // routine must not rely on its callers' caching.
-    val slim = colors.select(col("id"), col("color"))
-      .localCheckpoint(false)
+    val slim = State.memo(colors.select(col("id"), col("color")))
     try {
-      val n = slim.count()
+      val n = slim.rows
       val ceiling = maxCollectRows(colors)
       if (n > ceiling) {
         logLayoutRouting("writeColoring", path, n, ceiling)
-        slim.write.mode("overwrite").json(path)
+        slim.df.write.mode("overwrite").json(path)
       } else {
-        val rows = slim.orderBy(col("id")).collect()
+        val rows = slim.df.orderBy(col("id")).collect()
         val body = rows.map { r =>
           s"""    {\n        "id": ${r.getLong(0)},\n        "color": ${r.getInt(1)}\n    }"""
         }.mkString("[\n", ",\n", "\n]")
         java.nio.file.Files.writeString(java.nio.file.Paths.get(path), body)
       }
-    } finally slim.unpersist(blocking = false)
+    } finally slim.release()
   }
 
   /** Scale path: distributed JSON-lines write of the same records. */

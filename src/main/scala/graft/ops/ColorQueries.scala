@@ -83,8 +83,7 @@ object ColorQueries {
   /** Reference-shaped variant: same kernel driven by the GreedyIS
     * partial/merge admit (the aggregateByKey design), executed as the
     * co-partitioned RDD round loop ([[graft.color.GreedyRddKernel]] — the
-    * literal `aggregateByKey` with map-side combine; the Dataset
-    * `Aggregator` path stays spec-covered under Strategy.GreedyAgg).
+    * literal `aggregateByKey` with map-side combine).
     * Output restricted to the validation invariants so the nondeterministic
     * admitted sets (reference-faithful) don't break result hashing. */
   def qColorGreedy(spark: SparkSession, d: String): DataFrame = {
@@ -96,25 +95,21 @@ object ColorQueries {
       r
     }
     val (edges, eCount) = timed("edges-memo")(GraphOps.kernelEdgesWithCount(spark, d))
-    val maxBucket = spark.conf.get(
-      ColoringKernel.GreedyMaxBucketRowsKey,
-      ColoringKernel.DefaultGreedyMaxBucketRows.toString).toLong
+    def validate(colors: DataFrame) = timed("validate")(ColoringKernel.validate(edges, colors))
     // Fast path: the kernel derives k = Δ+1 from its own adjacency (one
-    // aggregate; no separate degree pass) and checks the mask / serial-
-    // bucket guards with the exact V. None → legacy route through the
-    // strategy auto-router (Jp at scale, GreedyAgg past the mask).
-    val (colors, rounds) = timed("fast-path")(graft.color.GreedyRddKernel
-      .colorDeltaPlusOne(spark, edges, eCount, maxBucket)) match {
-      case Some((c, r, _)) => (c, r)
-      case None =>
-        val maxDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .agg(max(col("deg"))).head().getLong(0).toInt
-        val r = ColoringKernel
-          .tryColor(spark, edges, maxDeg + 1, Strategy.GreedyRdd)
-          .getOrElse(sys.error("Δ+1 coloring cannot fail"))
-        (r.colors, r.rounds)
+    // aggregate; no separate degree pass) and applies the greedy routing
+    // rule with the exact V. None → the strategy router (Jp past the mask
+    // or the bucket bound). Either way the colors are validated before
+    // their storage is freed.
+    val ((uncolored, conflicts), rounds) = timed("fast-path")(graft.color.GreedyRddKernel
+      .colorDeltaPlusOne(spark, edges, eCount)(validate)).getOrElse {
+      val maxDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .agg(max(col("deg"))).head().getLong(0).toInt
+      val r = ColoringKernel
+        .tryColor(spark, edges, maxDeg + 1, Strategy.GreedyRdd)
+        .getOrElse(sys.error("Δ+1 coloring cannot fail"))
+      try (validate(r.colors), r.rounds) finally r.release()
     }
-    val (uncolored, conflicts) = timed("validate")(ColoringKernel.validate(edges, colors))
     import spark.implicits._
     Seq((uncolored, conflicts, rounds.toLong > 0))
       .toDF("uncolored", "conflicts", "converged")

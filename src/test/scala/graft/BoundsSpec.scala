@@ -110,14 +110,17 @@ class BoundsSpec extends AnyFunSuite {
     import spark.implicits._
     val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     val ex = intercept[IllegalArgumentException] {
-      GreedyRddKernel.tryColor(spark, e, k = 65)
+      GreedyRddKernel.tryColor(spark, e, k = 65)(_.count())
     }
     assert(ex.getMessage.contains("64"))
     // The strategy router, not the caller, owns the fallback: a greedy
-    // REQUEST past the mask still colors via the DataFrame rounds.
+    // REQUEST past the mask still colors via the Jp rounds.
     val r = ColoringKernel.tryColor(spark, e, 65, Strategy.GreedyRdd)
     assert(r.isDefined)
-    r.foreach(_.release())
+    r.foreach { c =>
+      assert(ColoringKernel.validate(e, c.colors) === ((0L, 0L)))
+      c.release()
+    }
   }
 
   test("broadcast hint disappears past the row threshold") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.functions.{col, max, size}
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.model.GraphIO
@@ -59,6 +60,27 @@ class CliSpec extends AnyFunSuite {
       val nodes = spark.read.json(g)
       assert(nodes.count() === 50)
     } finally spark.conf.unset(GraphIO.MaxCollectRowsKey)
+  }
+
+  test("--strategy greedy colors the reference fixture end to end") {
+    val path = getClass.getResource("/graph.json").getPath
+    val maxDeg = GraphIO.readNodes(spark, path)
+      .agg(max(size(col("neighbors")))).head().getInt(0)
+    val s = Coloring.run(spark, Map("input" -> path, "strategy" -> "greedy"))
+    assert(s.uncolored === 0 && s.conflicts === 0)
+    assert(s.k <= maxDeg + 1)
+  }
+
+  test("a run with both sinks leaves no new persisted RDD") {
+    val dir = java.nio.file.Files.createTempDirectory("graft_cli_free")
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val before = persisted
+    val s = Coloring.run(spark, Map(
+      "node-count" -> "40", "max-degree" -> "4", "seed" -> "5",
+      "output-graph" -> dir.resolve("graph.json").toString,
+      "output-coloring" -> dir.resolve("colors.json").toString))
+    assert(s.uncolored === 0 && s.conflicts === 0)
+    assert((persisted -- before).isEmpty, s"left persisted: ${persisted -- before}")
   }
 
   test("generate mode writes a graph readable by the reference format reader") {

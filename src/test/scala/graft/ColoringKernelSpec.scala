@@ -11,7 +11,7 @@ import graft.model.{GraphIO, RandomGraph}
 /** Invariant-based tests for the iterative kernel (SURVEY.md §5): a valid
   * coloring has zero uncolored nodes, zero adjacent-equal-color pairs, and
   * uses ≤ Δ+1 colors; results are deterministic under a fixed seed. Plus
-  * GreedyIS Aggregator laws and format-parity IO on the reference fixture.
+  * GreedyIS partial/merge laws and format-parity IO on the reference fixture.
   */
 class ColoringKernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
@@ -28,7 +28,7 @@ class ColoringKernelSpec extends AnyFunSuite {
   }
 
   for (n <- Seq(10L, 200L, 2000L);
-       strat <- Seq(Strategy.Jp, Strategy.GreedyAgg, Strategy.GreedyRdd)) {
+       strat <- Seq(Strategy.Jp, Strategy.GreedyRdd)) {
     test(s"valid coloring: n=$n maxDeg=5 strategy=$strat") {
       check(RandomGraph.edges(spark, n, 5, seed = 42), 5, strat)
     }
@@ -37,9 +37,12 @@ class ColoringKernelSpec extends AnyFunSuite {
   test("legacy collect_set path (k > 64) still colors validly") {
     // k <= 64 rounds ride the 64-bit used mask; palettes past 64 fall back
     // to the per-round regather with collect_set arrays — keep it covered.
-    for (strat <- Seq(Strategy.Jp, Strategy.GreedyAgg)) {
-      check(RandomGraph.edges(spark, 500L, 6, seed = 11), 70, strat)
-    }
+    val edges = RandomGraph.edges(spark, 500L, 6, seed = 11)
+    check(edges, 70, Strategy.Jp)
+    // A greedy request past the mask runs on the same Jp rounds.
+    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 70)
+      === Strategy.Jp)
+    check(edges, 69, Strategy.GreedyRdd)
   }
 
   test("GreedyRdd distributed rounds stay valid with the tail-local solve off") {
@@ -66,13 +69,14 @@ class ColoringKernelSpec extends AnyFunSuite {
       === Strategy.GreedyRdd)
     assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.Jp, 6)
       === Strategy.Jp)
-    // ...an injected tiny bound flips both greedy shapes to Jp, and an
+    // ...a palette past the 64-bit mask routes to Jp under any bound...
+    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 65)
+      === Strategy.Jp)
+    // ...an injected tiny bound flips the greedy request to Jp, and an
     // end-to-end greedy request still yields a valid coloring via Jp rounds.
     spark.conf.set(ColoringKernel.GreedyMaxBucketRowsKey, "1")
     try {
       assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 6)
-        === Strategy.Jp)
-      assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyAgg, 6)
         === Strategy.Jp)
       check(edges, 5, Strategy.GreedyRdd)
     } finally spark.conf.unset(ColoringKernel.GreedyMaxBucketRowsKey)

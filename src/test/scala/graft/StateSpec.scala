@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.ColoringKernel
+import graft.color.{ColoringKernel, GreedyRddKernel}
 import graft.color.ColoringKernel.Strategy
 import graft.model.RandomGraph
 import graft.ops.State
@@ -69,16 +69,22 @@ class StateSpec extends AnyFunSuite {
     assert((persisted & added).isEmpty, "released checkpoint still persisted")
   }
 
-  test("a Jp minimalColors run frees every round's storage") {
-    val edges = RandomGraph.edges(spark, 300, 6, 5L)
-    val before = persisted
-    val r = ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
-    assert(r.rounds > 1)
-    // Only the returned colors' own checkpoint may remain.
-    val left = persisted -- before
-    assert(left.size <= 1, s"rounds left persisted RDDs: $left")
-    assert(ColoringKernel.validate(edges, r.colors) === ((0L, 0L)))
-    r.release()
-    assert((persisted -- before).isEmpty)
+  for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {
+    test(s"a $strat minimalColors run frees every round's storage") {
+      val edges = RandomGraph.edges(spark, 300, 6, 5L)
+      val before = persisted
+      // The delegating kernels would finish a graph this small in one
+      // tail-local round; switch that off so every round is a real one.
+      spark.conf.set(GreedyRddKernel.TailLocalSolveRowsKey, "0")
+      val r = try ColoringKernel.minimalColors(spark, edges, strat)
+      finally spark.conf.unset(GreedyRddKernel.TailLocalSolveRowsKey)
+      assert(r.rounds > 1)
+      // Only the returned colors' own checkpoint may remain.
+      val left = persisted -- before
+      assert(left.size <= 1, s"rounds left persisted RDDs: $left")
+      assert(ColoringKernel.validate(edges, r.colors) === ((0L, 0L)))
+      r.release()
+      assert((persisted -- before).isEmpty)
+    }
   }
 }
