@@ -12,17 +12,25 @@ import graft.ops.State
   * driver loop over declarative DataFrame rounds (SURVEY.md §3, §7 step 4).
   *
   * Per round (given palette size k):
-  *   1. gather used neighbor colors — `edges ⋈ colors` + `collect_set`
-  *      (the reference's broadcast color probe O10/O11, kept fully
-  *      distributed: no `collectAsMap` on the driver, SURVEY.md §7 risk 5);
-  *   2. first-fit candidate — the custom codegen expression
-  *      `graft_first_fit(used, k)` ([[graft.functions.FirstFitColor]];
-  *      O13, `coloring_optimized.py:150-166`; -3 ⇒ infeasible ⇒ the
-  *      k-attempt fails, `coloring.py:104-108`);
-  *   3. same-color conflict resolution between adjacent candidates
-  *      (O15-O17) by priority admit;
-  *   4. apply the admitted colors — left join + `coalesce`
-  *      (O20, `coloring.py:121-127`).
+  *   1. first-fit candidate per uncolored vertex (O13,
+  *      `coloring_optimized.py:150-166`; -3 ⇒ no free color ⇒ the
+  *      k-attempt fails, `coloring.py:104-108`). For k ≤ 64 it falls out
+  *      of the 64-bit used-color mask the state carries, map-side; past 64
+  *      the used neighbor colors are regathered — `edges ⋈ colors` +
+  *      `collect_set` (the reference's broadcast color probe O10/O11, kept
+  *      fully distributed: no `collectAsMap` on the driver, SURVEY.md §7
+  *      risk 5) — into the codegen expression `graft_first_fit(used, k)`
+  *      ([[graft.functions.FirstFitColor]]);
+  *   2. same-color conflict resolution between adjacent candidates
+  *      (O15-O17): a vertex is beaten when a same-candidate neighbor has
+  *      higher (degree, id) priority, tested per edge pair; every vertex
+  *      not among the beaten ids (one hash distinct) keeps its candidate;
+  *   3. apply the admitted colors — left join + `coalesce`
+  *      (O20, `coloring.py:121-127`), and for k ≤ 64 OR each new color
+  *      into the neighbors' masks.
+  *
+  * Round 0 builds the state from one degree aggregate over the edges and
+  * observes Δ on its checkpoint.
   *
   * Strategies:
   *   - [[Strategy.Jp]] (default, the DataFrame rounds here):
@@ -149,34 +157,48 @@ object ColoringKernel {
     if (resolveStrategy(spark, edges, strategy, k) == Strategy.GreedyRdd) {
       return colored(GreedyRddKernel.tryColor(spark, edges, k, maxRounds)(land))
     }
+    jp(spark, edges, _ => k, extraVertices, maxRounds)
+  }
 
+  /** The Jp DataFrame rounds. The palette is `palette(Δ)`, with Δ the max
+    * degree observed on round 0's checkpoint, so a Δ+1 run needs no
+    * separate degree job. */
+  private def jp(
+      spark: SparkSession,
+      edges: DataFrame,
+      palette: Int => Int,
+      extraVertices: Option[DataFrame],
+      maxRounds: Int = 200): Option[Colored] = {
     graft.functions.GraftFunctions.register(spark)
     val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
-    // Degree once, carried in the state so rounds don't re-join it (O8/O23).
-    val degree = e.groupBy(col("src")).agg(count(lit(1)).cast("int").as("deg"))
-
-    // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
-    // mask, updated incrementally from each round's newly-colored delta
-    // (see maskRound scaladoc); larger palettes fall back to the per-round
-    // full regather with collect_set arrays.
-    val useMask = k <= 64
 
     // Every state's checkpoint observes progress and feasibility together
     // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
     // the round runs one job: its checkpoint.
-    def observed(df: DataFrame): State = State.loop(df,
+    def observed(df: DataFrame, metrics: Column*): State = State.loop(df, Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
-      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"))
+      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible")) ++ metrics: _*)
 
     // O6 init: isolated vertices → color 0, everything else -1
-    // (changeColorFirstIteration, coloring.py:12-17).
-    val connected = verticesOf(e).withColumn("color", lit(-1))
-    val isolated = extraVertices
-      .map(_.select(col("id")).except(verticesOf(e)).withColumn("color", lit(0)))
-    var state = observed(isolated.fold(connected)(connected.unionByName(_))
-      .join(degree, col("id") === col("src"), "left_outer")
-      .select(col("id"), col("color"), coalesce(col("deg"), lit(0)).as("deg"),
-        lit(0L).as("used")))
+    // (changeColorFirstIteration, coloring.py:12-17). Degree once, carried
+    // in the state so rounds don't re-join it (O8/O23). On a symmetric
+    // edge list the degree table's ids are exactly the connected vertices,
+    // and an extra id it lacks is isolated, so this one aggregate is round
+    // 0's only pass over E.
+    val degree = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
+    val vertices = extraVertices.fold(degree)(vs =>
+      degree.join(vs.select(col("id")).distinct(), Seq("id"), "full_outer"))
+    var state = observed(vertices.select(col("id"),
+      when(col("deg").isNull, 0).otherwise(-1).as("color"),
+      coalesce(col("deg"), lit(0)).as("deg"), lit(0L).as("used")),
+      max(col("deg")).as("maxDeg"))
+    val k = palette(state("maxDeg").toInt)
+
+    // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
+    // mask, updated incrementally from each round's newly-colored delta
+    // (see applyWithMask); larger palettes fall back to the per-round
+    // full regather with collect_set arrays.
+    val useMask = k <= 64
 
     var rounds = 0
     var uncolored = state("uncolored")
@@ -227,12 +249,36 @@ object ColoringKernel {
         .withColumn("color", lit(0)))
     }
 
-  /** Priority = (degree desc, id asc): a strict total order (ids unique)
-    * as a lexicographically comparable struct — the optimized reference's
-    * resolution order (coloring_optimized.py:170-172) with the id tiebreak
-    * that makes results partitioning-independent (SURVEY.md §7 risk 1). */
-  private def prio(idCol: Column, degCol: Column): Column =
-    struct(degCol.as("d"), (-idCol).as("ni"))
+  /** The uncolored vertices that lose their candidate this round: a
+    * vertex a is beaten iff an adjacent vertex b chose the same candidate
+    * and b has higher priority, (degree desc, id asc) — the optimized
+    * reference's resolution order (coloring_optimized.py:170-172) with the
+    * id tiebreak that makes results partitioning-independent (SURVEY.md §7
+    * risk 1). Ids are unique, so this is a strict total order, and "no
+    * beating neighbor" is exactly "a beats the max-priority rival". The
+    * test runs per edge pair, so the aggregate is a distinct over a's long
+    * id: a HashAggregate, where `max(struct(deg, -id))` plans a sorting
+    * SortAggregate (no hash buffer for a struct). `cand` is (id, deg,
+    * cand); `side` wraps each of its two join sides (a broadcast hint). */
+  private def beaten(e: DataFrame, cand: DataFrame,
+      side: DataFrame => DataFrame = identity): DataFrame = {
+    def as(p: String): DataFrame = side(cand.select(col("id").as(s"${p}_id"),
+      col("cand").as(s"${p}_cand"), col("deg").as(s"${p}_deg")))
+    e.join(as("a"), col("src") === col("a_id"))
+      .join(as("b"), col("dst") === col("b_id"))
+      .filter(col("a_cand") >= 0 && col("a_cand") === col("b_cand") &&
+        (col("b_deg") > col("a_deg") ||
+          (col("b_deg") === col("a_deg") && col("b_id") < col("a_id"))))
+      .select(col("a_id"))
+      .distinct()
+  }
+
+  /** The admitted updates `(uid, new_color)`: every candidate vertex that
+    * is not [[beaten]] keeps its candidate — a color, or -3 when its
+    * palette is exhausted (a -3 vertex is never beaten). */
+  private def admit(cand: DataFrame, beaten: DataFrame): DataFrame =
+    cand.join(beaten, col("id") === col("a_id"), "left_anti")
+      .select(col("id").as("uid"), col("cand").as("new_color"))
 
   /** First-fit over a 64-bit used-color mask, entirely from codegen'd
     * builtins: lowbit(~m) isolates the smallest free color,
@@ -286,7 +332,7 @@ object ColoringKernel {
     * list, and the used-mask update is delta-driven ([[applyWithMask]]).
     * Semantics identical to [[jpRound]] — colors are permanent, so the
     * incrementally-grown mask always equals the regathered set. */
-  private def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
+  private[graft] def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
       roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame],
       uncolored: Long): DataFrame = {
     val cand = state.filter(col("color") === -1)
@@ -296,26 +342,8 @@ object ColoringKernel {
     // Candidate sides carry exactly `uncolored` rows — row-bound broadcast
     // hints keep the rival probe exchange-free on the E side past AQE's
     // byte threshold (see applyWithMask's note; same ×42 shuffle signal).
-    val candA = graft.ops.Broadcasts.maybeBroadcast(
-      cand.select(col("id").as("a_id"), col("cand").as("a_cand"),
-        col("deg").as("a_deg")), uncolored)
-    val candB = graft.ops.Broadcasts.maybeBroadcast(
-      cand.select(col("id").as("b_id"), col("cand").as("b_cand"),
-        col("deg").as("b_deg")), uncolored)
-    val rival = e
-      .join(candA, col("src") === col("a_id"))
-      .join(candB, col("dst") === col("b_id"))
-      .filter(col("a_cand") >= 0 && col("a_cand") === col("b_cand"))
-      .groupBy(col("a_id"))
-      .agg(max(prio(col("b_id"), col("b_deg"))).as("rival"))
-    val updates = cand
-      .join(rival, col("id") === col("a_id"), "left_outer")
-      .select(col("id").as("uid"),
-        when(col("cand") === -3, lit(-3))
-          .when(col("rival").isNull || prio(col("id"), col("deg")) > col("rival"),
-            col("cand"))
-          .otherwise(lit(-1)).as("new_color"))
-      .filter(col("new_color") =!= -1)
+    val updates = admit(cand,
+      beaten(e, cand, graft.ops.Broadcasts.maybeBroadcast(_, uncolored)))
       .persist(StorageLevel.MEMORY_AND_DISK)
     roundCaches += updates
     applyWithMask(e, state, updates, uncolored)
@@ -331,7 +359,7 @@ object ColoringKernel {
     * totally ordered, only the maximum keeps the color, so no conflict can
     * commit; every conflict component commits its top vertex, so progress
     * is guaranteed. No free color in [0,k) → the -3 infeasible sentinel. */
-  private def jpRound(e: DataFrame, state: DataFrame, k: Int,
+  private[graft] def jpRound(e: DataFrame, state: DataFrame, k: Int,
       roundStates: scala.collection.mutable.ArrayBuffer[State]): DataFrame = {
     // Pass A: first-fit candidate per uncolored vertex.
     val used = e
@@ -353,25 +381,8 @@ object ColoringKernel {
     roundStates += candState
     val candM = candState.df
 
-    // Pass B: highest rival priority per vertex among same-candidate
-    // neighbors; keep the candidate iff we beat every rival.
-    val candA = candM.select(col("id").as("a_id"), col("cand").as("a_cand"),
-      col("deg").as("a_deg"))
-    val candB = candM.select(col("id").as("b_id"), col("cand").as("b_cand"),
-      col("deg").as("b_deg"))
-    val rival = e
-      .join(candA, col("src") === col("a_id"))
-      .join(candB, col("dst") === col("b_id"))
-      .filter(col("a_cand") >= 0 && col("a_cand") === col("b_cand"))
-      .groupBy(col("a_id"))
-      .agg(max(prio(col("b_id"), col("b_deg"))).as("rival"))
-    val updates = candM
-      .join(rival, col("id") === col("a_id"), "left_outer")
-      .select(col("id").as("uid"),
-        when(col("cand") === -3, lit(-3))
-          .when(col("rival").isNull || prio(col("id"), col("deg")) > col("rival"),
-            col("cand"))
-          .otherwise(lit(-1)).as("new_color"))
+    // Pass B: keep the candidate iff no same-candidate neighbor beats it.
+    val updates = admit(candM, beaten(e, candM))
 
     state.join(updates, col("id") === col("uid"), "left_outer")
       .select(col("id"),
@@ -402,6 +413,11 @@ object ColoringKernel {
     * bit-identical uncolored counts before failing on the last one).
     * GreedyRdd keeps the descending search: its admitted sets depend on
     * partitioning (reference-faithful), so no single trace is a proof.
+    *
+    * Δ comes from the GraphX base for GraphX and from one degree aggregate
+    * for GreedyRdd (0 on an edge-free input). Jp reads it off its own
+    * round-0 checkpoint, so its degree aggregate is the only pass over the
+    * edges before round 1.
     */
   def minimalColors(
       spark: SparkSession,
@@ -426,12 +442,14 @@ object ColoringKernel {
       tryColor(spark, edges, k, strategy, extraVertices, preparedBase = graphxBase)
 
     try {
-      val maxDeg = graphxBase.map(GraphXKernel.maxDegree).getOrElse {
-        edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .agg(max(col("d"))).head().getLong(0).toInt
-      }
-      val first = attempt(maxDeg + 1)
-        .getOrElse(sys.error(s"k=Δ+1=${maxDeg + 1} must be colorable"))
+      // Jp reads Δ off its own round-0 checkpoint; the others need it first.
+      val first = (graphxBase match {
+        case Some(base) => attempt(GraphXKernel.maxDegree(base) + 1)
+        case None if strategy == Strategy.Jp =>
+          jp(spark, edges, _ + 1, extraVertices)
+        case None => attempt(edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+          .agg(coalesce(max(col("d")), lit(0L))).head().getLong(0).toInt + 1)
+      }).getOrElse(sys.error("k = Δ+1 must be colorable"))
 
       // The Δ+1 run's coloring already witnesses k = colors-actually-used —
       // no revalidation run needed, just relabel (first-fit never exceeds

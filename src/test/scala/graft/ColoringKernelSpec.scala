@@ -99,6 +99,39 @@ class ColoringKernelSpec extends AnyFunSuite {
     assert(run(2) === run(11))
   }
 
+  test("Jp mask rounds, Jp regather rounds and GraphX give the same coloring") {
+    // All three run the same first-fit + (degree, id) priority admit, so
+    // the labels must match exactly. The tail-local solve is off so GraphX
+    // runs its real rounds; k = 70 puts Jp on the collect_set regather.
+    spark.conf.set(graft.color.GreedyRddKernel.TailLocalSolveRowsKey, "0")
+    try for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L))) {
+      val edges = RandomGraph.edges(spark, n, d, seed)
+      val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0).toInt
+      def labels(k: Int, strategy: Strategy): Set[(Long, Int)] = {
+        val r = ColoringKernel.tryColor(spark, edges, k, strategy)
+          .getOrElse(fail(s"k = $k must be colorable"))
+        try r.colors.as[(Long, Int)].collect().toSet finally r.release()
+      }
+      val mask = labels(maxDeg + 1, Strategy.Jp)
+      assert(mask.size === edges.select("src").distinct().count())
+      assert(labels(70, Strategy.Jp) === mask, s"n=$n: regather rounds differ")
+      assert(labels(maxDeg + 1, Strategy.GraphX) === mask, s"n=$n: GraphX differs")
+    } finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
+  }
+
+  test("an edge-free input colors every vertex 0 with k = 1 on every strategy") {
+    val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
+    val vertices = spark.range(10).toDF("id")
+    for (strategy <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {
+      val best = ColoringKernel.minimalColors(spark, edges, strategy, Some(vertices))
+      try {
+        assert(best.k === 1, s"$strategy")
+        assert(best.colors.as[(Long, Int)].collect().toSet ===
+          (0L until 10L).map(_ -> 0).toSet, s"$strategy")
+      } finally best.release()
+    }
+  }
+
   test("minimalColors returns a valid coloring no worse than first-fit") {
     val edges = RandomGraph.edges(spark, 300, 5, seed = 3)
     val best = ColoringKernel.minimalColors(spark, edges, Strategy.Jp, maxAttempts = 3)

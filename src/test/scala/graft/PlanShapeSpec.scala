@@ -601,4 +601,33 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"),
       s"marginals not broadcast at test scale:\n$p")
   }
+
+  test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, count, lit}
+    import scala.collection.mutable.ArrayBuffer
+    import graft.color.ColoringKernel
+    graft.functions.GraftFunctions.register(spark)
+    val e = graft.model.RandomGraph.edges(spark, 200, 5, seed = 42)
+    val state = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
+      .select(col("id"), lit(-1).as("color"), col("deg"), lit(0L).as("used"))
+    val caches = ArrayBuffer.empty[DataFrame]
+    val states = ArrayBuffer.empty[graft.ops.State]
+    try {
+      // One mask round (k ≤ 64) and one regather round (k > 64). A
+      // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
+      // (no hash buffer for a struct); the beaten-id distinct must not.
+      for ((name, round) <- Seq(
+        "mask" -> ColoringKernel.jpRoundMask(e, state, 6, caches, 200),
+        "regather" -> ColoringKernel.jpRound(e, state, 70, states))) {
+        val p = plan(round)
+        assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
+          s"$name round: beaten ids not hash-aggregated:\n$p")
+        assert(!p.contains("SortAggregate"), s"$name round sorts to aggregate:\n$p")
+      }
+    } finally {
+      caches.foreach(_.unpersist())
+      states.foreach(_.release())
+    }
+  }
 }
