@@ -204,9 +204,7 @@ object ColoringKernel {
     var uncolored = state("uncolored")
     var failed = false
 
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     while (uncolored > 0 && !failed) {
-      val tRound = System.nanoTime()
       rounds += 1
       if (rounds > maxRounds) { failed = true }
       else {
@@ -230,8 +228,6 @@ object ColoringKernel {
           failed = rounds >= maxRounds
         }
         uncolored = state("uncolored")
-        if (debug) println(f"[kernel] round=$rounds uncolored=$uncolored " +
-          f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
     }
 

@@ -44,8 +44,6 @@ object GraphXKernel {
     * minimal-color search — the DF→RDD conversion, `Graph.fromEdges`
     * shuffle, and degree join all happen once instead of per attempt. */
   def prepare(spark: SparkSession, edgesDf: DataFrame): Graph[Int, Unit] = {
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
-    val t0 = System.nanoTime()
     // InternalRow extraction (same as GreedyRddKernel.run): the kernel only
     // needs two primitive longs per row, skipping the tuple encoder's
     // deserializer projection.
@@ -81,7 +79,6 @@ object GraphXKernel {
     base.edges.count()
     loaded.unpersist(blocking = false)
     g0.unpersist(blocking = false)
-    if (debug) println(f"[graphx] prepare t=${(System.nanoTime() - t0) / 1e9}%.2f s")
     base
   }
 
@@ -130,7 +127,6 @@ object GraphXKernel {
         if (v.color == -1) v.deg.toLong else 0L) }
       .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
     var failed = false
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
 
     while (uncolored > 0 && !failed) {
       rounds += 1
@@ -151,7 +147,6 @@ object GraphXKernel {
         // aggregateMessages stages of mostly scheduling latency (r7 at
         // sf0.1: rounds 5-13, each ~0.33 s). An executor task, not a
         // driver collect; payload bounded by the degree-sum guard.
-        val tRound = System.nanoTime()
         val used = graph.aggregateMessages[Long](
           t => if (t.srcAttr.color == -1 && t.dstAttr.color >= 0 &&
             t.dstAttr.color < 64) t.sendToSrc(1L << t.dstAttr.color),
@@ -182,12 +177,8 @@ object GraphXKernel {
         graph = next
         uncolored = counts._1
         uncoloredDeg = counts._3
-        if (debug) println(f"[graphx] k=$k round=$rounds (tail-local) " +
-          f"uncolored=$uncolored infeasible=${counts._2} " +
-          f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
       else {
-        val tRound = System.nanoTime()
         // Pass A: gather used neighbor colors, pick first-fit candidate
         // (O11 + O13). Bitmask fast path for k ≤ 64.
         val withCand =
@@ -249,8 +240,6 @@ object GraphXKernel {
         graph = next
         uncolored = counts._1
         uncoloredDeg = counts._3
-        if (debug) println(f"[graphx] k=$k round=$rounds uncolored=$uncolored " +
-          f"infeasible=${counts._2} t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
         // GraphX checkpointing analog: lineage stays bounded because each
         // round's vertices RDD is cached and the previous is dropped; edge
         // RDDs are reused (same partitioning) across rounds.

@@ -118,7 +118,6 @@ object GreedyRddKernel {
       land: DataFrame => T): Option[(T, Int)] = {
     import spark.implicits._
 
-    val debug = sys.env.contains("GRAFT_DEBUG_ROUNDS")
     // InternalRow extraction instead of the Dataset tuple encoder: the
     // kernel only needs two primitive longs per row, and the encoder's
     // deserializer projection was measurable against a 32-thread local
@@ -150,6 +149,7 @@ object GreedyRddKernel {
 
     var state: RDD[(Long, GState)] =
       adj.mapValues(nbrs => GState(-1, nbrs.length, 0L))
+    // RDD round state: outside State, which materializes DataFrames.
     state.persist(StorageLevel.MEMORY_AND_DISK).localCheckpoint()
 
     // One aggregate gives V (= initial uncolored: every vertex of an edge
@@ -158,7 +158,6 @@ object GreedyRddKernel {
       (a, kv) => (a._1 + 1L, math.max(a._2, kv._2.length)),
       (a, b) => (a._1 + b._1, math.max(a._2, b._2)))
     val k = fixedK.getOrElse(maxDeg + 1)
-    if (debug) println(s"[greedy-rdd] nParts=$nParts v=$v k=$k")
     if (fixedK.isEmpty && !ColoringKernel.greedyFits(spark, v, k)) {
       // Palette wider than the mask, or the serial-merge bucket ceiling:
       // reject before any round so the caller reroutes.
@@ -195,7 +194,6 @@ object GreedyRddKernel {
         // contract; every output remains a valid coloring, infeasible
         // vertices still surface as −3). An executor task, NOT a driver
         // collect — memory is bounded by Σ deg(tail) ≤ tailRows · Δ.
-        val tRound = System.nanoTime()
         val solved: RDD[(Long, Int)] = state
           .filter(_._2.color == -1)
           .join(adj)
@@ -242,11 +240,8 @@ object GreedyRddKernel {
         state = next
         if (inf > 0) failed = true
         uncolored = nextUncolored
-        if (debug) println(f"[greedy-rdd] k=$k round=$rounds (tail-local) " +
-          f"uncolored=$uncolored t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
       else {
-        val tRound = System.nanoTime()
         // First-fit candidate map-side from the carried mask (O13).
         val cand = state
           .filter(_._2.color == -1)
@@ -299,8 +294,6 @@ object GreedyRddKernel {
         else if (nextUncolored >= uncolored) failed = rounds >= maxRounds
         uncolored = nextUncolored
         uncoloredDeg = nextDeg
-        if (debug) println(f"[greedy-rdd] k=$k round=$rounds uncolored=$uncolored " +
-          f"t=${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
     }
 

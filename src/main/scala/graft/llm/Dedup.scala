@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.State
 import graft.tables.Tables
 
 /** Deduplication operators over `documents` (north-star LLM-pipeline
@@ -125,7 +126,7 @@ object Dedup {
   private def shingleIndexOf(docs: DataFrame, n: Int): DataFrame = {
     graft.functions.GraftFunctions.register(docs.sparkSession)
     // Tables.spread BEFORE the shingle explode: a single-file documents
-    // scan pins ONE partition, and because callers localCheckpoint the
+    // scan pins ONE partition, and because callers materialize the
     // index (freezing the layout), the inverted-index SELF-JOIN then runs
     // as one serial task. This was the r9 "q_dedup_ngram 30× stall" —
     // wall 1560 s / cpu 7 s was a lone straggler computing the entire
@@ -268,9 +269,10 @@ object Dedup {
     * measure tag — see the d-level entry points). Two memo levels:
     *
     *  - `ngramBaseCache`: the per-doc shingle-set checkpoint plus its
-    *    class census — shared by every engine invocation at the same
-    *    (corpus, n) regardless of measure (q_dedup_ngram,
-    *    q_dedup_ngram_pairs both run n=3).
+    *    class census, keyed on the full `memoKey` plus n — so shared only
+    *    by invocations with the same (corpus, measure tag, threshold, n):
+    *    q_dedup_ngram and q_dedup_ngram_pairs (`jaccard@0.2`, n=3) share
+    *    it, while q_dedup_containment (`containment@0.5`) builds its own.
     *  - `ngramPairsCache`: the THRESHOLD-VERIFIED pair table (doc-level
     *    or rep-level, pre-expansion) — the quadratic inverted-index
     *    self-join itself, shared when two queries ask the identical
@@ -299,7 +301,7 @@ object Dedup {
     // from this one checkpoint: explode for the index, xxhash64 of the
     // array for the rep path's injective set keys.
     def buildBase() = {
-      val b = Tables.spread(docs)
+      val b = State.memo(Tables.spread(docs)
         .select(col("doc_id"),
           call_function("graft_shingle_hashes", toks(col("text")), lit(n))
             .as("sh"))
@@ -308,8 +310,7 @@ object Dedup {
           size(col("sh")).cast("long").as("n_sh"),
           call_function("graft_xor_probe", col("sh")).as("p"))
         .select(col("doc_id"), col("sh"), col("n_sh"),
-          col("p.p1").as("p1"), col("p.p2").as("p2"))
-        .localCheckpoint(true)
+          col("p.p1").as("p1"), col("p.p2").as("p2"))).df
       // Class census with MULTIPLICITY moments, not just the distinct count:
       // the global dup FRACTION alone misroutes a corpus whose dup mass sits
       // just under the threshold but concentrated in one huge identical-set
@@ -357,7 +358,7 @@ object Dedup {
         val parts = Seq.newBuilder[DataFrame]
         var i = 0
         while (i < passes) {
-          // The previous pass's localCheckpoint truncated its lineage; a GC
+          // The previous pass's memo truncated its lineage; a GC
           // lets ContextCleaner reclaim that pass's join/agg shuffle files
           // before this one writes its own — bounded PEAK disk is the whole
           // point of staging (the default periodic-GC interval is far
@@ -365,7 +366,7 @@ object Dedup {
           if (i > 0) System.gc()
           val s = pairIdx.filter(
             pmod(xxhash64(col(idCol)), lit(passes.toLong)) === lit(i.toLong))
-          parts += slice(s).localCheckpoint(true)
+          parts += State.memo(slice(s)).df
           i += 1
         }
         parts.result().reduce(_.unionByName(_))
@@ -379,7 +380,7 @@ object Dedup {
     def memoPairs(path: String)(build: => DataFrame): DataFrame =
       memoKey match {
         case Some(k) => ngramPairsCache
-          .getOrElseUpdate(spark, s"$k#n=$n#$path")(build.localCheckpoint(true))
+          .getOrElseUpdate(spark, s"$k#n=$n#$path")(State.memo(build).df)
         case None => build
       }
 
@@ -424,14 +425,12 @@ object Dedup {
       val keyed = base.select(col("doc_id"), col("sh"),
         xxhash64(col("sh")).as("sk1"),
         xxhash64(lit(0x9e3779b97f4a7c15L), col("sh")).as("sk2"))
-      val members = keyed.select(col("sk1"), col("sk2"), col("doc_id"))
-        .localCheckpoint(true)
-      val reps = keyed
+      val members = State.memo(keyed.select(col("sk1"), col("sk2"), col("doc_id"))).df
+      val reps = State.memo(keyed
         .groupBy(col("sk1"), col("sk2"))
         .agg(min(struct(col("doc_id"), col("sh"))).as("r"))
         .select(col("sk1"), col("sk2"), col("r.doc_id").as("rep_id"),
-          col("r.sh").as("sh"))
-        .localCheckpoint(true)
+          col("r.sh").as("sh"))).df
       val ridx = reps.select(col("rep_id"), explode(col("sh")).as("shingle"))
       // Per-rep set sizes are ≤ |docs| rows — broadcast both verification
       // joins conditionally (degrades to shuffle joins past the threshold).
@@ -719,7 +718,7 @@ object Dedup {
     * every shingle with a copy scores 1.0; a unique doc scores 0.0; a
     * short doc reports 0 shingles and NULL). */
   private[graft] def dupFraction(docs: DataFrame): DataFrame = {
-    val idx = shingleIndexOf(docs, n = 5).localCheckpoint(true)
+    val idx = State.memo(shingleIndexOf(docs, n = 5)).df
     // Document frequency per shingle; index rows are distinct (doc,
     // shingle) pairs, so count(*) IS the distinct-doc count.
     val df = idx.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
@@ -758,7 +757,7 @@ object Dedup {
   def qDecontaminate(spark: SparkSession, d: String): DataFrame = {
     // One materialized index serves the eval and train branches (else the
     // shingle hashing + explode runs twice).
-    val idx = shingleIndex(spark, d, n = 5).localCheckpoint(true)
+    val idx = State.memo(shingleIndex(spark, d, n = 5)).df
     val isEval = pmod(
       conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long"),
       lit(100L)) < 10
@@ -809,13 +808,12 @@ object Dedup {
     // One materialized signature table for both probes (normalized content
     // key + shingle hash set + MinHash signature + side flag) — the same
     // single-scan stance as minhashVerifiedPairs.
-    val base = Tables.spread(Tables.documents(spark, d))
+    val base = State.memo(Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"),
         md5(regexp_replace(lower(trim(col("text"))), "\\s+", " ")).as("content_key"),
         call_function("graft_shingle_hashes", toks(col("text")), lit(3)).as("sh"),
         call_function("graft_minhash_sig", toks(col("text")), lit(3), lit(k)).as("sig"),
-        isBatch.as("is_batch"))
-      .localCheckpoint(true)
+        isBatch.as("is_batch"))).df
     val banded = base
       .filter(size(col("sh")) > 0)
       .select(col("doc_id"), col("is_batch"),
@@ -926,7 +924,7 @@ object Dedup {
     * table (doc_a < doc_b, jaccard ≥ 0.2) unordered. */
   def minhashVerifiedPairs(spark: SparkSession, d: String): DataFrame =
     pairsCache.getOrElseUpdate(spark, d)(
-      minhashVerifiedPairsUncached(spark, d).localCheckpoint(true))
+      State.memo(minhashVerifiedPairsUncached(spark, d)).df)
 
   private def minhashVerifiedPairsUncached(spark: SparkSession, d: String): DataFrame = {
     val k = 32
@@ -945,12 +943,11 @@ object Dedup {
     graft.functions.GraftFunctions.register(spark)
     // spread: signature computation is the heavy map stage and the
     // checkpoint freezes the layout — see shingleIndexOf.
-    val docs = Tables.spread(Tables.documents(spark, d))
+    val docs = State.memo(Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"),
         call_function("graft_shingle_hashes", toks(col("text")), lit(3)).as("sh"),
         call_function("graft_minhash_sig", toks(col("text")), lit(3), lit(k)).as("sig"))
-      .filter(size(col("sh")) > 0)
-      .localCheckpoint(true)
+      .filter(size(col("sh")) > 0)).df
     // (band_id, band_hash) buckets; join within buckets for candidates.
     // Band buckets carry only (doc_id, band) — signatures and shingle sets
     // are re-attached per side AFTER candidate dedup, so the quadratic part
@@ -1025,31 +1022,34 @@ object Dedup {
     * rounds above (at heavy dup density GraphX's vertex-cut replication
     * becomes the dominant shuffle term). */
   private[graft] def ccClusters(spark: SparkSession, edges: DataFrame): DataFrame = {
-    val pairs = edges
-      .select(col("doc_a"), col("doc_b"))
-      .localCheckpoint(false)
+    val pairsState = State.memo(edges.select(col("doc_a"), col("doc_b")))
+    val (pairs, nPairs) = (pairsState.df, pairsState.rows)
     try {
-      val nPairs = pairs.count()
       val graphxMax = spark.conf.get(graft.ops.ColorQueries.GraphxMaxEdgesKey,
         graft.ops.ColorQueries.DefaultGraphxMaxEdges.toString).toLong
       if (nPairs <= graphxMax) {
         import org.apache.spark.graphx.{Edge, Graph}
         import spark.implicits._
         val es = pairs.as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) }
-        Graph.fromEdges(es, ()).connectedComponents().vertices
-          .toDF("doc_id", "cluster_rep")
-          .localCheckpoint(true)
+        val g = Graph.fromEdges(es, ())
+        val cc = g.connectedComponents()
+        try State.memo(cc.vertices.toDF("doc_id", "cluster_rep")).df
+        finally Seq(g, cc).foreach { x =>
+          x.unpersist(blocking = false)
+          x.edges.unpersist(blocking = false)
+        }
       } else {
         // Pairs carry doc_a < doc_b and are distinct, so the symmetric
         // union is duplicate-free — exactly the edge-list contract
         // ccLabelsDf requires.
         val sym = pairs.select(col("doc_a").as("src"), col("doc_b").as("dst"))
           .union(pairs.select(col("doc_b").as("src"), col("doc_a").as("dst")))
-        graft.ops.GraphOps.ccLabelsDf(spark, sym, 2L * nPairs)
-          .select(col("id").as("doc_id"), col("lbl").as("cluster_rep"))
-          .localCheckpoint(true)
+        val labels = graft.ops.GraphOps.ccLabelsDf(spark, sym, 2L * nPairs)
+        try State.memo(labels.df
+          .select(col("id").as("doc_id"), col("lbl").as("cluster_rep"))).df
+        finally labels.release()
       }
-    } finally pairs.unpersist(blocking = false)
+    } finally pairsState.release() // both branches checkpoint before this
   }
 
   /** q_dedup_canonical: the dedup DECISION — which copy survives. Min-id
@@ -1315,10 +1315,9 @@ object Dedup {
     graft.functions.GraftFunctions.register(spark)
     // Materialized for the same multi-reference reason as qDedupMinhash;
     // spread for the same single-file-scan reason as shingleIndexOf.
-    val docs = Tables.spread(Tables.documents(spark, d))
+    val docs = State.memo(Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"),
-        call_function("graft_simhash", toks(col("text"))).as("sh"))
-      .localCheckpoint(true)
+        call_function("graft_simhash", toks(col("text"))).as("sh"))).df
     val banded = docs.select(col("doc_id"), col("sh"),
       explode(transform(sequence(lit(0), lit(3)),
         b => struct(b.as("chunk_id"),

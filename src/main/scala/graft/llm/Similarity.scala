@@ -133,7 +133,7 @@ object Similarity {
 
   private def simTopkTruth(spark: SparkSession, d: String): DataFrame =
     topkTruthCache.getOrElseUpdate(spark, d) {
-      simTopkPlan(spark, d).localCheckpoint(true)
+      graft.ops.State.memo(simTopkPlan(spark, d)).df
     }
 
   /** q_sim_topk: exact top-5 neighbors for the first 10 vectors. Scores are
@@ -425,7 +425,7 @@ object Similarity {
         .withColumn("s", transform(col("v"), x => round(x * 1e6).cast("long"))))
       val sv = e.df.select(col("vec_id"), col("s"))
       val cents = ivfTrain(spark, sv, e.rows, ivfCellCount(e.rows))
-      val out = ivfAssign(spark, sv, cents).localCheckpoint(true)
+      val out = graft.ops.State.memo(ivfAssign(spark, sv, cents)).df
       e.release()
       (out, cents)
     }
@@ -605,7 +605,7 @@ object Similarity {
           call_function("graft_sqdist_long", col("ss"), col("cs")).as("pd2"))
       val w = Window.partitionBy(col("query_id"))
         .orderBy(col("adist"), col("cand_id"))
-      val out = codes.join(broadcast(lut), Seq("m", "cell"))
+      val out = graft.ops.State.memo(codes.join(broadcast(lut), Seq("m", "cell"))
         .filter(col("vec_id") =!= col("query_id"))
         .groupBy(col("query_id"), col("vec_id"))
         .agg(sum(col("pd2")).as("adist"))
@@ -613,8 +613,7 @@ object Similarity {
         .withColumn("rank", row_number().over(w).cast("int"))
         .filter(col("rank") <= 5)
         .select(col("query_id"), col("cand_id"), col("rank"), col("adist"))
-        .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint(true)
+        .orderBy(col("query_id"), col("rank"))).df
       out
     } finally svState.release()
   }
@@ -1189,7 +1188,8 @@ object Similarity {
       val b = best(cents)
       // Checkpointed (k rows) so the result does not read `sv`, which is
       // released below.
-      sv.select(b.getField("cell").as("cell"), b.getField("d2").as("d2"))
+      graft.ops.State.memo(sv
+        .select(b.getField("cell").as("cell"), b.getField("d2").as("d2"))
         .groupBy(col("cell"))
         .agg(count(lit(1)).as("size"),
           sum(col("d2").cast("decimal(38,0)")).as("inertia_d"))
@@ -1197,8 +1197,7 @@ object Similarity {
           col("inertia_d").cast("string").as("inertia"),
           (col("inertia_d").cast("double") / col("size").cast("double") /
             lit(1e12)).as("mean_d2"))
-        .orderBy(col("cell"))
-        .localCheckpoint(true)
+        .orderBy(col("cell"))).df
     } finally svState.release()
   }
 

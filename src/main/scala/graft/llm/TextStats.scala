@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.ops.State
 import graft.tables.Tables
 
 /** Text-analysis operators over `documents` (north-star LLM-pipeline surface,
@@ -551,11 +552,10 @@ object TextStats {
     // tf feeds BOTH the document-frequency agg and the scoring join —
     // materialize it once or the explode+hash-agg runs twice (the whole
     // cost of this query at bench scale).
-    val tf = docs
+    val tf = State.memo(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("tf"))).df
     // df table is vocabulary-sized (≪ tf) — broadcast the scoring join.
     // Vocabulary GROWS with the corpus (web-scale text → 10⁸+ terms), so
     // the hint is conditional: past the size threshold it degrades to a
@@ -621,10 +621,9 @@ object TextStats {
     * (qBm25 itself keeps only the top 10). */
   private[graft] def bm25Scored(spark: SparkSession, d: String): DataFrame = {
     val docs = Tables.spread(Tables.documents(spark, d))
-    val tf = bm25Hits(docs)
+    val tf = State.memo(bm25Hits(docs)
       .groupBy(col("doc_id"), col("dl"), col("term"))
-      .agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true) // feeds both the df agg and the scoring join
+      .agg(count(lit(1)).as("tf"))).df // feeds both the df agg and the scoring join
     val dfreq = graft.ops.Broadcasts.maybeBroadcast(
       tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
     // The documented fixed-point headroom (scaladoc above: idf·tf·2200
@@ -775,8 +774,7 @@ object TextStats {
         .otherwise(array().cast("array<struct<w1:string,w2:string>>")))
         .as("b"))
       .select(col("b.w1"), col("b.w2"))
-    val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))
-      .localCheckpoint(true)
+    val c2 = State.memo(bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c"))).df
     val c1 = c2.groupBy(col("w1")).agg(sum(col("c")).as("n"))
     val vocabDf = c2.agg(countDistinct(col("w2")).as("vocab"))
     val w = Window.partitionBy(col("w1")).orderBy(col("c").desc, col("w2").asc)
@@ -864,12 +862,11 @@ object TextStats {
     val bucket = pmod(
       conv(substring(md5(col("tok")), 1, 8), 16, 10).cast("long"),
       lit(DsirBuckets.toLong))
-    val db = Tables.spread(Tables.documents(spark, d))
+    val db = State.memo(Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"), col("lang"), explode(toks).as("tok"))
       .select(col("doc_id"), col("lang"), bucket.as("b"))
       .groupBy(col("doc_id"), col("lang"), col("b"))
-      .agg(count(lit(1)).as("n"))
-      .localCheckpoint(true) // feeds the bucket models AND the scoring join
+      .agg(count(lit(1)).as("n"))).df // feeds the bucket models AND the scoring join
     val model = db.groupBy(col("b"))
       .agg(sum(col("n")).as("cr"),
         sum(when(col("lang") === "en", col("n")).otherwise(lit(0L))).as("ct"))
@@ -966,8 +963,8 @@ object TextStats {
         .otherwise(array().cast("array<struct<w1:string,w2:string>>")))
         .as("b"))
       .select(col("b.w1"), col("b.w2"))
-    val c2 = bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-      .localCheckpoint(true) // feeds both marginals and the scoring join
+    // c2 feeds both marginals and the scoring join.
+    val c2 = State.memo(bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))).df
     val left = graft.ops.Broadcasts.maybeBroadcast(
       c2.groupBy(col("w1")).agg(sum(col("c12")).as("c1")))
     val right = graft.ops.Broadcasts.maybeBroadcast(
@@ -1017,14 +1014,13 @@ object TextStats {
     // array_sort(collect_list) reassembly agg that pushed cpu/row
     // superlinear at the 100× leg (NOTES r11 cont. 5-6). chunk_id is the
     // split position — identical to the old running boundary count.
-    val chunks = Tables.spread(Tables.documents(spark, d))
+    val chunks = State.memo(Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"),
         posexplode(call_function("graft_cdc_chunks", tokens(col("text"))))
           .as(Seq("chunk_id", "c")))
       .select(col("doc_id"), col("chunk_id").cast("long").as("chunk_id"),
         md5(col("c.chunk")).as("chunk_hash"),
-        col("c.n").as("n_chunk_tokens"))
-      .localCheckpoint(true) // feeds the occurrence agg AND the final join
+        col("c.n").as("n_chunk_tokens"))).df // feeds the occurrence agg AND the final join
     val occ = chunks.groupBy(col("chunk_hash"))
       .agg(count(lit(1)).as("n_occurrences"))
     chunks.join(occ, "chunk_hash")
@@ -1151,11 +1147,10 @@ object TextStats {
   def qTokenBudget(spark: SparkSession, d: String): DataFrame = {
     val tok = Tables.spread(Tables.documents(spark, d))
       .select(col("source"), explode(tokens(lower(col("text")))).as("tok"))
-    val src = tok.groupBy(col("source"))
+    val src = State.memo(tok.groupBy(col("source")) // feeds the totals AND the plan
       .agg(count(lit(1)).as("tokens"),
         countDistinct(col("tok")).as("distinct_tokens"))
-      .withColumn("ttr_x1e6", expr("distinct_tokens * 1000000 div tokens"))
-      .localCheckpoint(true) // feeds the totals AND the plan
+      .withColumn("ttr_x1e6", expr("distinct_tokens * 1000000 div tokens"))).df
     val tot = src.agg(sum(col("tokens")).as("tok_total"),
       sum(col("ttr_x1e6").cast("decimal(38,0)") * col("tokens"))
         .as("wt_total"))

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.ops.State
 import graft.tables.Tables
 
 /** Tokenizer-training operators — the step a training-data pipeline runs
@@ -56,7 +57,8 @@ object Tokenizer {
     * asc).limit(1)` collect for the winning pair (deterministic
     * tie-break, so the merge table is a pure function of the corpus), and
     * a map-only string replace applying the merge. The frequency frame is
-    * `localCheckpoint`ed once and the ≤ 8 replaces chain lazily on top
+    * materialized once (a `State` memo, freed after the last round) and
+    * the ≤ 8 replaces chain lazily on top
     * (one driver job per round). At 100 TB the vocabulary is millions of rows, not
     * corpus-sized — rounds stay cheap and fully distributed; nothing ever
     * collects more than one row per round.
@@ -98,7 +100,8 @@ object Tokenizer {
     * of paying a second (checkpoint) job per round. The chain is bounded
     * at [[BpeMerges]] = 8 replaces, so lineage stays trivial. */
   private def trainLoop(wf0: DataFrame): Seq[(Int, String, String, Long)] = {
-    var wf = wf0.localCheckpoint(true)
+    val memo = State.memo(wf0)
+    var wf = memo.df
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
     while (rank <= BpeMerges) {
@@ -126,6 +129,7 @@ object Tokenizer {
         rank += 1
       }
     }
+    memo.release()
     merges.result()
   }
 
@@ -150,13 +154,12 @@ object Tokenizer {
     * of the encoded lengths back onto it. The token stream itself never
     * materializes row-per-token anywhere. */
   def qBpeEncode(spark: SparkSession, d: String): DataFrame = {
-    val dw = Tables.spread(Tables.documents(spark, d))
+    val dw = State.memo(Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"), explode(
         regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
         .as("word"))
       .groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("m"))
-      .localCheckpoint(true) // feeds the vocab build AND the length join
+      .agg(count(lit(1)).as("m"))).df // feeds the vocab build AND the length join
     // Memo-cold training trains off THIS frame's word frequencies (r15):
     // Σ per-doc multiplicities per word IS the corpus word count, so the
     // rendering below is the identical (seq, f) relation [[wordFreq]]

@@ -487,7 +487,7 @@ object EventAnalytics {
     // Distinct basket classes: 128-bit set key (two salted xxhash64 passes
     // over the sorted array — the classPairsOf stance: key equality must
     // imply set equality at 10⁹-basket scale) + multiplicity.
-    val cls = Tables.lineitem(spark, d)
+    val cls = State.memo(Tables.lineitem(spark, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .groupBy(col("ok"))
       .agg(sort_array(collect_set(col("pk"))).as("pks"))
@@ -495,8 +495,7 @@ object EventAnalytics {
         xxhash64(lit(0x9e3779b97f4a7c15L), col("pks")).as("bk2"))
       .groupBy(col("bk1"), col("bk2"))
       .agg(count(lit(1)).as("m"), min(col("pks")).as("pks"))
-      .select(col("m"), col("pks"))
-      .localCheckpoint(true) // feeds N, the marginals AND the pair explode
+      .select(col("m"), col("pks"))).df // feeds N, the marginals AND the pair explode
     val nB = cls.agg(sum(col("m")).as("n_baskets"))
     val c1 = cls.select(col("m"), explode(col("pks")).as("pk"))
       .groupBy(col("pk")).agg(sum(col("m")).as("c"))

@@ -76,18 +76,16 @@ object GraphOps {
       // sf0.1 A/B on the memo build: 16.5 → 11.5 s CPU). Same distinct
       // canonical pair set, bit-identical downstream.
       graft.functions.GraftFunctions.register(spark)
-      val ordered = li.groupBy(col("l_orderkey"))
+      val ordered = State.memo(li.groupBy(col("l_orderkey"))
         .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
           .as("parts"))
         .select(explode(call_function("graft_ordered_pairs", col("parts")))
           .as("p"))
         .select(col("p.a").as("src"), col("p.b").as("dst"))
-        .distinct()
-        .localCheckpoint(false)
-      val nOrdered = ordered.count()
-      val sym = ordered.union(
-        ordered.select(col("dst").as("src"), col("src").as("dst")))
-      (sym, 2L * nOrdered)
+        .distinct())
+      val sym = ordered.df.union(
+        ordered.df.select(col("dst").as("src"), col("src").as("dst")))
+      (sym, 2L * ordered.rows)
     }
 
   /** Sparser derived graph for the iterative coloring kernel: only pairs of
@@ -137,19 +135,16 @@ object GraphOps {
   def kernelEdgesWithCount(spark: SparkSession, sfDir: String): (DataFrame, Long) =
     kernelEdgeCache.getOrElseUpdate(spark, sfDir) {
     val fwd = fwdPairs(spark, sfDir)
-    // Persisted for the same CacheManager-substitution reason as `edges`,
-    // and with the same half-size layout: normalize each consecutive pair
-    // to (least, greatest), dedup THAT half (the distinct's shuffle carries
-    // half the rows), persist it, and mirror map-side at read time — the
-    // symmetric closure of fwd, byte-for-byte the old result set.
-    val ordered = fwd
+    // Memoized with the same half-size layout as `edges`: normalize each
+    // consecutive pair to (least, greatest), dedup THAT half (the
+    // distinct's shuffle carries half the rows), materialize it, and
+    // mirror map-side at read time — the symmetric closure of fwd.
+    val ordered = State.memo(fwd
       .select(least(col("src"), col("dst")).as("src"),
         greatest(col("src"), col("dst")).as("dst"))
-      .distinct()
-      .localCheckpoint(false)
-    val nOrdered = ordered.count()
-    (ordered.union(ordered.select(col("dst").as("src"), col("src").as("dst"))),
-      2L * nOrdered)
+      .distinct())
+    (ordered.df.union(ordered.df.select(col("dst").as("src"), col("src").as("dst"))),
+      2L * ordered.rows)
   }
 
   /** Session-lifetime degree memo over the co-purchase graph: the V-sized
@@ -172,10 +167,9 @@ object GraphOps {
 
   def degreesWithCount(spark: SparkSession, sfDir: String): (DataFrame, Long) =
     degCache.getOrElseUpdate(spark, sfDir) {
-      val deg = edges(spark, sfDir)
-        .groupBy(col("src")).agg(count(lit(1)).as("degree"))
-        .localCheckpoint(false)
-      (deg, deg.count())
+      val deg = State.memo(edges(spark, sfDir)
+        .groupBy(col("src")).agg(count(lit(1)).as("degree")))
+      (deg.df, deg.rows)
     }
 
   /** Session-lifetime EXACT vertex count of the kernel graph — the honest
@@ -216,11 +210,10 @@ object GraphOps {
   private[graft] def kernelAdjacencyWithCount(
       spark: SparkSession, sfDir: String): (DataFrame, Long) =
     kernelAdjCache.getOrElseUpdate(spark, sfDir) {
-      val adj = kernelEdges(spark, sfDir)
+      val adj = State.memo(kernelEdges(spark, sfDir)
         .groupBy(col("src"))
-        .agg(array_sort(collect_list(col("dst"))).as("nbrs"))
-        .localCheckpoint(false)
-      (adj, adj.count())
+        .agg(array_sort(collect_list(col("dst"))).as("nbrs")))
+      (adj.df, adj.rows)
     }
 
   /** O(23)/q_degree: vertex degree from the edge list (the session memo —
@@ -471,11 +464,10 @@ object GraphOps {
       val (e, eCount) = edgesWithCount(spark, sfDir)
       val (_, vCount) = degreesWithCount(spark, sfDir)
       val adj = triangleAdjacency(e, vCount).persist(MEMORY_AND_DISK)
-      val tri = triangleTriplesPlan(adj, vCount, eCount / 2 * 8L)
-        .localCheckpoint(false)
-      val n = tri.count() // materialize now so the adjacency build can be freed
+      // Materialized now so the adjacency build can be freed.
+      val tri = State.memo(triangleTriplesPlan(adj, vCount, eCount / 2 * 8L))
       adj.unpersist(blocking = false)
-      (tri, n)
+      (tri.df, tri.rows)
     }
 
   /** The lazy triple plan over a (degree-ordered) adjacency — split from
@@ -779,9 +771,6 @@ object GraphOps {
     var rounds = 0
     while (removedNew.rows > 0 && rounds < 64) {
       rounds += 1
-      if (sys.env.contains("GRAFT_DEBUG_ROUNDS"))
-        System.err.println(
-          s"[truss] round $rounds: removedNew=${removedNew.rows} allRemoved=$nAll")
       val remB = Broadcasts.maybeBroadcast(removedNew.df, removedNew.rows)
       def onEdge(t: DataFrame, edges: DataFrame, x: Column, y: Column,
           joinType: String): DataFrame =
@@ -1398,20 +1387,21 @@ object GraphOps {
     * against one static cached E-scan. */
   private[graft] def ccDfRounds(spark: SparkSession, e: DataFrame,
       vBound: Long): DataFrame = {
-    val labels = ccLabelsDf(spark, e, vBound)
+    val labels = ccLabelsDf(spark, e, vBound).df
     val sizes = labels.groupBy(col("lbl")).agg(count(lit(1)).as("sz"))
     sizes.agg(count(lit(1)).as("n_components"),
       max(col("sz")).as("largest_component"),
       sum(col("sz")).as("n_vertices"))
   }
 
-  /** The fixpoint labeling behind [[ccDfRounds]]: `(id, lbl)` with `lbl` =
-    * the minimum vertex id of `id`'s component. `e` must be a symmetric
-    * edge list. Reusable by any consumer that needs component membership
-    * rather than the summary (the dedup cluster graph is the other CC
-    * call site in the library). */
+  /** The fixpoint labeling behind [[ccDfRounds]]: the final round's state,
+    * whose `(id, lbl)` columns give `lbl` = the minimum vertex id of `id`'s
+    * component. `e` must be a symmetric edge list. Reusable by any
+    * consumer that needs component membership rather than the summary
+    * (the dedup cluster graph is the other CC call site in the library);
+    * a caller that copies the labels out releases the state. */
   private[graft] def ccLabelsDf(spark: SparkSession, e: DataFrame,
-      vBound: Long): DataFrame = {
+      vBound: Long): State = {
     // Raw count-adaptive checkpoint (r15 — see the labelPropOver round
     // cache note: per-round exchanges carry partial-agg output only).
     val eDst = State.memo(e)
@@ -1442,7 +1432,7 @@ object GraphOps {
         labels.release()
         labels = next
       }
-      labels.df.select(col("id"), col("lbl"))
+      labels
     } finally eDst.release()
   }
 
@@ -1721,10 +1711,10 @@ object GraphOps {
     // and rejected: GraphX's columnar partitions are compact already and a
     // serialized level would charge per-round deserialization CPU for no
     // additional spill safety.
-    val out = g.vertices.map { case (id, (_, r)) => (id, r) }.toDF("id", "rank_e12")
+    val out = State.memo(g.vertices.map { case (id, (_, r)) => (id, r) }
+      .toDF("id", "rank_e12")
       .orderBy(col("rank_e12").desc, col("id").asc)
-      .limit(10)
-      .localCheckpoint(true)
+      .limit(10)).df
     intermediates.foreach(_.unpersist(blocking = false))
     out
   }

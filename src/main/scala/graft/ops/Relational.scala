@@ -831,15 +831,13 @@ object Relational {
     * QI-domain-sized union — the level-1/2 inputs are GROUP tables,
     * bounded by the QI domain, never the corpus. */
   def qKAnonymity(spark: SparkSession, d: String): DataFrame = {
-    val rows = Tables.customer(spark, d)
+    val rows = State.memo(Tables.customer(spark, d)
       .select(col("c_nationkey").cast("long").as("nation"),
         col("c_mktsegment").as("segment"),
         floor(col("c_acctbal") / 1000).cast("long").as("bal_band"),
-        col("c_acctbal").as("bal"))
-      .localCheckpoint(true) // feeds level 0 AND both residue re-joins
-    val g0 = rows.groupBy(col("nation"), col("segment"), col("bal_band"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))
-      .localCheckpoint(true)
+        col("c_acctbal").as("bal"))).df // feeds level 0 AND both residue re-joins
+    val g0 = State.memo(rows.groupBy(col("nation"), col("segment"), col("bal_band"))
+      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))).df
     val pub0 = g0.filter(col("n") >= KAnonK)
       .select(lit(0).as("level"), col("nation"), col("segment"),
         col("bal_band"), col("n"), col("l_div"))
@@ -849,10 +847,9 @@ object Relational {
     // nothing on the generalization path.
     val small0 = Broadcasts.maybeBroadcast(g0.filter(col("n") < KAnonK)
       .select(col("nation"), col("segment"), col("bal_band")))
-    val g1 = rows.join(small0, Seq("nation", "segment", "bal_band"), "left_semi")
+    val g1 = State.memo(rows.join(small0, Seq("nation", "segment", "bal_band"), "left_semi")
       .groupBy(col("nation"), col("segment"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))
-      .localCheckpoint(true)
+      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))).df
     val pub1 = g1.filter(col("n") >= KAnonK)
       .select(lit(1).as("level"), col("nation"), col("segment"),
         lit(-1L).as("bal_band"), col("n"), col("l_div"))

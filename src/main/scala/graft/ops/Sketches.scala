@@ -149,7 +149,7 @@ object Sketches {
       Tables.spread(Tables.documents(spark, d).select(col("text")))
         .select(explode(TextStats.tokens(col("text"))).as("tok"))
         .groupBy(col("tok")).agg(count(lit(1)).as("n_exact"))
-        .localCheckpoint(false)
+        .localCheckpoint(false) // lazy, so not a State: no construction-time job
     }
     val (ta, tb) = cmsSlices(col("tok"))
     val cms = toks

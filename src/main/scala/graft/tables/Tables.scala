@@ -1,6 +1,7 @@
 package graft.tables
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, RepartitionOperation}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
@@ -73,20 +74,25 @@ object Tables {
     * on file-packing boundaries (openCostInBytes), where the decision
     * is a wash: a scan near `defaultParallelism` splits doesn't need
     * spreading either way.
-    * Constraint (enforced by the fallback below, not just convention):
+    * Constraint (enforced by the fallbacks below, not just convention):
     * spread must wrap raw table scans / narrow projections only — a plan
-    * whose leaves are not file relations is returned UNCHANGED, because
-    * repartitioning an already-shuffled relation is never the intent of
-    * this helper. */
+    * that aggregates, joins or repartitions, or whose leaves are not file
+    * relations, is returned UNCHANGED, because repartitioning an
+    * already-shuffled relation is never the intent of this helper. */
   def spread(df: DataFrame): DataFrame = {
     val spark = df.sparkSession
     val par = spark.sparkContext.defaultParallelism
     val maxSplit = spark.sessionState.conf.filesMaxPartitionBytes
-    val scanBytes = df.queryExecution.analyzed.collect {
+    val plan = df.queryExecution.analyzed
+    val shuffled = plan.exists {
+      case _: Aggregate | _: Join | _: RepartitionOperation => true
+      case _ => false
+    }
+    val scanBytes = plan.collect {
       case l: org.apache.spark.sql.execution.datasources.LogicalRelation =>
         l.relation.sizeInBytes
     }
     val estParts = scanBytes.map(b => math.max(1L, (b + maxSplit - 1) / maxSplit))
-    if (estParts.nonEmpty && estParts.sum < par) df.repartition(par) else df
+    if (!shuffled && estParts.nonEmpty && estParts.sum < par) df.repartition(par) else df
   }
 }

@@ -48,6 +48,30 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
+  test("a memo of a hash-partitioned frame keeps its partitions") {
+    val rows = 3 * State.RowsPerPartition + 1
+    def hashed = frame(rows, 8).withColumn("key", col("id") % 1000)
+      .repartition(8, col("key"))
+    // Under the session's adaptive execution the checkpoint keeps 8
+    // partitions, not the 4 the row count alone would give.
+    val st = State.memo(hashed)
+    try {
+      assert(st.df.rdd.getNumPartitions === 8)
+      assert(st.rows === rows)
+    } finally st.release()
+    // With adaptive execution off the checkpoint also records the hash
+    // layout, so an aggregate on the key plans no Exchange over it.
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plain = State.memo(hashed)
+      try {
+        assert(plain.df.rdd.getNumPartitions === 8)
+        val plan = plain.df.groupBy(col("key")).count().queryExecution.executedPlan
+        assert(!plan.toString.contains("Exchange"), plan)
+      } finally plain.release()
+    } finally spark.conf.unset("spark.sql.adaptive.enabled")
+  }
+
   test("loop state resets statistics; a memo keeps the source estimate") {
     def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val src = frame(1000, 4)
@@ -67,6 +91,40 @@ class StateSpec extends AnyFunSuite {
     assert(added.size === 1, s"expected one checkpointed RDD, got $added")
     st.release()
     assert((persisted & added).isEmpty, "released checkpoint still persisted")
+  }
+
+  for (graphx <- Seq(true, false)) {
+    test(s"ccClusters leaves only its returned checkpoint persisted (graphx=$graphx)") {
+      import spark.implicits._
+      val edges = Seq((1L, 2L), (2L, 3L), (5L, 6L), (7L, 8L), (8L, 9L), (1L, 9L))
+        .toDF("doc_a", "doc_b")
+      val before = persisted
+      // 0 routes every pair graph to the DataFrame label rounds.
+      if (!graphx) spark.conf.set(graft.ops.ColorQueries.GraphxMaxEdgesKey, "0")
+      val cc = try graft.llm.Dedup.ccClusters(spark, edges)
+      finally spark.conf.unset(graft.ops.ColorQueries.GraphxMaxEdgesKey)
+      val left = persisted -- before
+      assert(left.size <= 1, s"ccClusters left persisted RDDs: $left")
+      assert(cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
+        Set((1L, 1L), (2L, 1L), (3L, 1L), (7L, 1L), (8L, 1L), (9L, 1L), (5L, 5L), (6L, 5L)))
+    }
+  }
+
+  test("localCheckpoint is called in src/main only by State and its two named exceptions") {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
+      .filter(_.toString.endsWith(".scala")).toSeq
+    assert(files.nonEmpty)
+    val callers = files.filter { f =>
+      java.nio.file.Files.readAllLines(f).asScala.exists { l =>
+        val code = l.trim
+        !code.startsWith("*") && !code.startsWith("/*") &&
+          code.split("//", 2)(0).contains("localCheckpoint(")
+      }
+    }.map(_.getFileName.toString).toSet
+    // Sketches: a lazy memo (no construction-time job); GreedyRddKernel:
+    // RDD round state.
+    assert(callers === Set("State.scala", "Sketches.scala", "GreedyRddKernel.scala"))
   }
 
   for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {

@@ -37,4 +37,20 @@ class TablesSpec extends AnyFunSuite {
     // nanos div 1000 — the same truncation DuckDB applies.
     assert(got === nanos / 1000L)
   }
+
+  test("spread repartitions a small scan and leaves shuffling plans unchanged") {
+    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val par = spark.sparkContext.defaultParallelism
+    assert(par > 1, "the test session must have more than one core")
+    // A one-file scan and a narrow projection of it are spread.
+    for (scan <- Seq(docs, docs.select(col("doc_id"), col("text"))))
+      assert(Tables.spread(scan).rdd.getNumPartitions === par)
+    // Aggregates, joins and repartitions over the scan are returned as is.
+    val shuffling = Seq(
+      docs.groupBy(col("lang")).count(),
+      docs.join(docs.select(col("doc_id")), "doc_id"),
+      docs.repartition(3),
+      Tables.spread(docs))
+    for (df <- shuffling) assert(Tables.spread(df) eq df, df.queryExecution.analyzed)
+  }
 }
