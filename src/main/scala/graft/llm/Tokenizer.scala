@@ -104,7 +104,7 @@ object Tokenizer {
     var wf = memo.df
     val merges = Seq.newBuilder[(Int, String, String, Long)]
     var rank = 1
-    while (rank <= BpeMerges) {
+    try while (rank <= BpeMerges) {
       val best = wf
         .select(explode(adjacentPairs(col("seq"))).as("pair"), col("f"))
         .groupBy(col("pair"))
@@ -128,8 +128,7 @@ object Tokenizer {
           col("f"))
         rank += 1
       }
-    }
-    memo.release()
+    } finally memo.release()
     merges.result()
   }
 

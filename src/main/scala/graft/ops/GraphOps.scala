@@ -195,9 +195,10 @@ object GraphOps {
     * the V-row array table as the stream side, a round scans |V| rows and
     * explodes ONLY the matched frontier neighborhoods — the exchange then
     * carries Σ deg(frontier) candidate rows, which telescopes to K·E
-    * across ALL rounds. groupBy(src) leaves the table hash-partitioned by
-    * src already; no extra repartition (q_random_walk's previous private
-    * copy paid one). */
+    * across ALL rounds. The memo is one row per src from a single
+    * groupBy(src) shuffle. Under adaptive execution (on in every engine
+    * session) its checkpoint records no partitioning, so a consumer that
+    * groups or joins it on src re-shuffles it. */
   private val kernelAdjCache = new SessionCache[(DataFrame, Long)]
 
   private[graft] def kernelAdjacency(spark: SparkSession, sfDir: String): DataFrame =
@@ -1925,18 +1926,17 @@ object GraphOps {
     * Output: (walk_id, step, node) for steps 0..[[WALK_STEPS]].
     *
     * Scale shape: the neighbor-array table is built with ONE shuffle and
-    * persisted src-hash-partitioned; each round joins the (walk_id, node)
-    * frontier — never larger than the start sample — against it, broadcast
-    * below the row bound and a frontier-only exchange past it (the big
-    * side never re-shuffles). Rounds are fixed at [[WALK_STEPS]], not
-    * data-dependent. Determinism: next-hop is position-indexed into a
-    * sorted array by an exact integer hash; no floats anywhere. */
+    * memoized; each round joins the (walk_id, node) frontier — never
+    * larger than the start sample — against it, broadcast below the row
+    * bound and a shuffle join past it (the checkpoint records no
+    * partitioning, so both sides shuffle). Rounds are fixed at
+    * [[WALK_STEPS]], not data-dependent. Determinism: next-hop is
+    * position-indexed into a sorted array by an exact integer hash; no
+    * floats anywhere. */
   def qRandomWalk(spark: SparkSession, sfDir: String): DataFrame = {
     // The sorted V-row neighbor table is the shared session memo (r14):
     // q_sssp/q_closeness read the same relation, so the E-sized
-    // collect_list shuffle runs once per session — and the private copy's
-    // extra repartition(src) after groupBy(src) was a no-op exchange
-    // (groupBy already leaves the table src-hash-partitioned).
+    // collect_list shuffle runs once per session.
     val nbrs = kernelAdjacency(spark, sfDir)
     val starts = nbrs.select(col("src"))
       .filter(pmod(col("src"), lit(WALK_START_MOD)) === 0L)

@@ -3,10 +3,7 @@ package graft.ops
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftInternalRows, Observation}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.plans.physical.{
-  HashPartitioningLike, Partitioning, PartitioningCollection}
 import org.apache.spark.sql.execution.LogicalRDD
-import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 import org.apache.spark.sql.functions.{count, lit}
 
 /** A materialized frame: eagerly local-checkpointed, its row count (and
@@ -28,15 +25,7 @@ import org.apache.spark.sql.functions.{count, lit}
   *    plan (~85 ms CPU/task measured on the truss round stages at sf0.1)
   *    then dominates every scan of a few-thousand-row frame. Coalescing an
   *    already-materialized checkpoint is a narrow dependency: no shuffle,
-  *    no recompute;
-  *  - a memo whose source plan is hash-partitioned is not coalesced, so it
-  *    keeps the layout a bare `localCheckpoint` gives. With adaptive
-  *    execution off the checkpoint records that partitioning, and an
-  *    aggregate or join on the same keys downstream plans no Exchange;
-  *    coalescing to 1 < n < parent partitions would throw it away. Under
-  *    adaptive execution (the Spark default) the checkpoint records
-  *    `UnknownPartitioning` either way, and the rule keeps the partition
-  *    count.
+  *    no recompute.
   *
   * Storage is freed on purpose by [[release]], which unpersists the
   * checkpointed RDD. `DataFrame.unpersist` on a checkpointed frame is a
@@ -82,7 +71,7 @@ object State {
     * grows until it dominates the driver (measured 70 s/round by round 13
     * of the colouring loop; flat 1 s with the reset). */
   def loop(df: DataFrame, metrics: Column*): State =
-    materialize(df, metrics) { (ck, rdd, parts, _) =>
+    materialize(df, metrics) { (ck, rdd, parts) =>
       GraftInternalRows.fromInternal(df.sparkSession,
         if (parts < rdd.getNumPartitions) rdd.coalesce(parts) else rdd,
         ck.schema)
@@ -91,24 +80,17 @@ object State {
   /** One-shot memo. The frame KEEPS the source plan's statistics, so the
     * planner can still broadcast it (q_fuzzy_join's band joins, the
     * similarity memos); a memo is built once, so its estimate cannot
-    * compound. A hash-partitioned source keeps its partitions (see the
-    * class doc). */
+    * compound. */
   def memo(df: DataFrame): State =
-    materialize(df, Nil) { (ck, rdd, parts, source) =>
-      if (parts < rdd.getNumPartitions && !hashed(source)) ck.coalesce(parts) else ck
+    materialize(df, Nil) { (ck, rdd, parts) =>
+      if (parts < rdd.getNumPartitions) ck.coalesce(parts) else ck
     }
 
-  private def hashed(p: Partitioning): Boolean = p match {
-    case _: HashPartitioningLike => true
-    case c: PartitioningCollection => c.partitionings.exists(hashed)
-    case _ => false
-  }
-
   private def materialize(df: DataFrame, metrics: Seq[Column])(
-      layout: (DataFrame, RDD[InternalRow], Int, Partitioning) => DataFrame): State = {
+      layout: (DataFrame, RDD[InternalRow], Int) => DataFrame): State = {
     val obs = new Observation()
-    val observing = df.observe(obs, count(lit(1)).as(RowsMetric), metrics: _*)
-    val ck = observing.localCheckpoint(true)
+    val ck = df.observe(obs, count(lit(1)).as(RowsMetric), metrics: _*)
+      .localCheckpoint(true)
     val observed = obs.get
     val rows = observed(RowsMetric).asInstanceOf[Long]
     val rdd = ck.queryExecution.logical match {
@@ -118,12 +100,6 @@ object State {
     }
     val parts = math.min(rdd.getNumPartitions.toLong,
       math.max(1L, (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
-    // The layout of the plan that wrote the checkpoint: under AQE, its final
-    // plan (the checkpoint itself then records UnknownPartitioning).
-    val source = observing.queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan.outputPartitioning
-      case p => p.outputPartitioning
-    }
-    new State(layout(ck, rdd, parts, source), rows, observed, rdd)
+    new State(layout(ck, rdd, parts), rows, observed, rdd)
   }
 }

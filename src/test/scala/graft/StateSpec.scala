@@ -48,30 +48,6 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
-  test("a memo of a hash-partitioned frame keeps its partitions") {
-    val rows = 3 * State.RowsPerPartition + 1
-    def hashed = frame(rows, 8).withColumn("key", col("id") % 1000)
-      .repartition(8, col("key"))
-    // Under the session's adaptive execution the checkpoint keeps 8
-    // partitions, not the 4 the row count alone would give.
-    val st = State.memo(hashed)
-    try {
-      assert(st.df.rdd.getNumPartitions === 8)
-      assert(st.rows === rows)
-    } finally st.release()
-    // With adaptive execution off the checkpoint also records the hash
-    // layout, so an aggregate on the key plans no Exchange over it.
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try {
-      val plain = State.memo(hashed)
-      try {
-        assert(plain.df.rdd.getNumPartitions === 8)
-        val plan = plain.df.groupBy(col("key")).count().queryExecution.executedPlan
-        assert(!plan.toString.contains("Exchange"), plan)
-      } finally plain.release()
-    } finally spark.conf.unset("spark.sql.adaptive.enabled")
-  }
-
   test("loop state resets statistics; a memo keeps the source estimate") {
     def size(df: DataFrame): BigInt = df.queryExecution.optimizedPlan.stats.sizeInBytes
     val src = frame(1000, 4)
