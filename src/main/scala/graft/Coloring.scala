@@ -5,6 +5,7 @@ import org.apache.spark.sql.SparkSession
 import graft.color.ColoringKernel
 import graft.color.ColoringKernel.Strategy
 import graft.model.{GraphIO, RandomGraph}
+import graft.ops.State
 
 /** CLI entry point — the reference's surface (O26, `coloring.py:165-187`;
   * README.md:60-66): load a JSON graph or generate a random one, run the
@@ -58,12 +59,17 @@ object Coloring {
       case Some("graphx") => Strategy.GraphX
       case _ => Strategy.Jp
     }
-    val best = ColoringKernel.minimalColors(spark, edges, strategy, Some(vertices))
+    // One edge memo serves the search and the validation, so neither
+    // re-runs the generator or the JSON read.
+    val e = State.memo(edges)
     try {
-      val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
-      opts.get("output-coloring").foreach(GraphIO.writeColoring(best.colors, _))
-      Summary(best.k, uncolored, conflicts)
-    } finally best.release()
+      val best = ColoringKernel.minimalColors(spark, e.df, strategy, Some(vertices))
+      try {
+        val (uncolored, conflicts) = ColoringKernel.validate(e.df, best.colors)
+        opts.get("output-coloring").foreach(GraphIO.writeColoring(best.colors, _))
+        Summary(best.k, uncolored, conflicts)
+      } finally best.release()
+    } finally e.release()
   }
 
   def main(args: Array[String]): Unit = {

@@ -1,9 +1,12 @@
 package graft.color
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Union}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
+import graft.ops.Broadcasts.maybeBroadcast
 import graft.ops.State
 
 /** The iterative graph-coloring kernel — the rebuild of the reference's
@@ -27,10 +30,11 @@ import graft.ops.State
   *      not among the beaten ids (one hash distinct) keeps its candidate;
   *   3. apply the admitted colors — left join + `coalesce`
   *      (O20, `coloring.py:121-127`), and for k ≤ 64 OR each new color
-  *      into the neighbors' masks.
+  *      into the neighbors' masks; the color changes and mask gains merge
+  *      in one union-aggregate first.
   *
-  * Round 0 builds the state from one degree aggregate over the edges and
-  * observes Δ on its checkpoint.
+  * Round 0 builds the state from one union-aggregate — the edges' degree
+  * counts plus the extra vertices — and observes Δ on its checkpoint.
   *
   * Strategies:
   *   - [[Strategy.Jp]] (default, the DataFrame rounds here):
@@ -38,16 +42,19 @@ import graft.ops.State
   *     no *adjacent* node competing for the same candidate has higher
   *     (degree, id desc-asc) priority. Pure joins, **deterministic under any
   *     partitioning**, guaranteed progress (every conflict component admits
-  *     its max-priority node), and the natural 100 TB formulation: one
-  *     edges-shuffle per round, no per-node adjacency arrays shuffled around.
+  *     its max-priority node), and the natural 100 TB formulation: the
+  *     edge stream is only probed against broadcast candidate and delta
+  *     tables, never shuffled; a k ≤ 64 round shuffles only the beaten
+  *     ids and the per-vertex changes, and no per-node adjacency arrays
+  *     move.
   *   - [[Strategy.GreedyRdd]] and [[Strategy.GraphX]] delegate their rounds
   *     to [[GreedyRddKernel]] and [[GraphXKernel]].
   *
   * Driver-side control flow stays a plain Scala loop — same stance as GraphX
   * `Pregel` (SURVEY.md §4): only counts cross to the driver. Every round's
-  * state goes through [[State.loop]] (SURVEY.md §7 risk 4): the checkpoint
-  * truncates lineage, and its own action observes the counts the loop
-  * control reads.
+  * state and every frame a round re-reads goes through [[State.loop]]
+  * (SURVEY.md §7 risk 4): the checkpoint truncates lineage, and its own
+  * action observes the counts the loop control reads.
   */
 object ColoringKernel {
 
@@ -170,70 +177,95 @@ object ColoringKernel {
       extraVertices: Option[DataFrame],
       maxRounds: Int = 200): Option[Colored] = {
     graft.functions.GraftFunctions.register(spark)
-    val e = edges.persist(StorageLevel.MEMORY_AND_DISK)
+    // Every round re-reads the edges. A caller's checkpoint is read in
+    // place; any other plan is materialized once here and freed at the end.
+    val edgeMemo = if (readsOnlyCheckpoints(edges)) None else Some(State.memo(edges))
+    val e = edgeMemo.fold(edges)(_.df)
 
     // Every state's checkpoint observes progress and feasibility together
     // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
-    // the round runs one job: its checkpoint.
+    // the loop control runs no job of its own.
     def observed(df: DataFrame, metrics: Column*): State = State.loop(df, Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
       sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible")) ++ metrics: _*)
 
-    // O6 init: isolated vertices → color 0, everything else -1
-    // (changeColorFirstIteration, coloring.py:12-17). Degree once, carried
-    // in the state so rounds don't re-join it (O8/O23). On a symmetric
-    // edge list the degree table's ids are exactly the connected vertices,
-    // and an extra id it lacks is isolated, so this one aggregate is round
-    // 0's only pass over E.
-    val degree = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
-    val vertices = extraVertices.fold(degree)(vs =>
-      degree.join(vs.select(col("id")).distinct(), Seq("id"), "full_outer"))
-    var state = observed(vertices.select(col("id"),
-      when(col("deg").isNull, 0).otherwise(-1).as("color"),
-      coalesce(col("deg"), lit(0)).as("deg"), lit(0L).as("used")),
-      max(col("deg")).as("maxDeg"))
-    val k = palette(state("maxDeg").toInt)
+    try {
+      var state = observed(roundZero(e, extraVertices), max(col("deg")).as("maxDeg"))
+      val k = palette(state("maxDeg").toInt)
 
-    // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
-    // mask, updated incrementally from each round's newly-colored delta
-    // (see applyWithMask); larger palettes fall back to the per-round
-    // full regather with collect_set arrays.
-    val useMask = k <= 64
+      // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
+      // mask, updated incrementally from each round's newly-colored delta
+      // (see applyWithMask); larger palettes fall back to the per-round
+      // full regather with collect_set arrays.
+      val useMask = k <= 64
 
-    var rounds = 0
-    var uncolored = state("uncolored")
-    var failed = false
+      var rounds = 0
+      var uncolored = state("uncolored")
+      var failed = false
 
-    while (uncolored > 0 && !failed) {
-      rounds += 1
-      if (rounds > maxRounds) { failed = true }
-      else {
-        val roundCaches = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-        val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
-        val next =
-          if (useMask) jpRoundMask(e, state.df, k, roundCaches, uncolored)
-          else jpRound(e, state.df, k, roundStates)
-        // The next state lands before anything of this round is freed.
-        val landed = observed(next)
-        roundCaches.foreach(_.unpersist())
-        roundStates.foreach(_.release())
-        state.release()
-        state = landed
-        if (state("infeasible") > 0) failed = true
-        else if (state("uncolored") >= uncolored) {
-          // No progress. Jp always colors the top-priority node of every
-          // uncolored component, so a round with uncolored candidates
-          // commits ≥1 color and this only fires as the bounded-round
-          // backstop (risk 6).
-          failed = rounds >= maxRounds
+      while (uncolored > 0 && !failed) {
+        rounds += 1
+        if (rounds > maxRounds) { failed = true }
+        else {
+          val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
+          val next =
+            if (useMask) jpRoundMask(e, state.df, k, roundStates, uncolored)
+            else jpRound(e, state.df, k, roundStates)
+          // The next state lands before anything of this round is freed.
+          val landed = observed(next)
+          roundStates.foreach(_.release())
+          state.release()
+          state = landed
+          if (state("infeasible") > 0) failed = true
+          else if (state("uncolored") >= uncolored) {
+            // No progress. Jp always colors the top-priority node of every
+            // uncolored component, so a round with uncolored candidates
+            // commits ≥1 color and this only fires as the bounded-round
+            // backstop (risk 6).
+            failed = rounds >= maxRounds
+          }
+          uncolored = state("uncolored")
         }
-        uncolored = state("uncolored")
       }
-    }
 
-    e.unpersist()
-    if (failed) { state.release(); None }
-    else Some(Colored(state, k, rounds))
+      if (failed) { state.release(); None }
+      else Some(Colored(state, k, rounds))
+    } finally edgeMemo.foreach(_.release())
+  }
+
+  /** True when `df` only re-reads local checkpoints: its analyzed plan is
+    * a checkpoint's `LogicalRDD`, reached through nothing but column
+    * renames, unions and narrow coalesces (a [[State.memo]] frame, or the
+    * symmetric union of one that `GraphOps.kernelEdges` builds). Reading
+    * such a plan again costs a scan, so it needs no copy of its own. */
+  private def readsOnlyCheckpoints(df: DataFrame): Boolean = {
+    def renames(p: Project): Boolean = p.projectList.forall {
+      case _: Attribute | Alias(_: Attribute, _) => true
+      case _ => false
+    }
+    def narrow(plan: LogicalPlan): Boolean = plan match {
+      case _: LogicalRDD => true
+      case Repartition(_, false, child) => narrow(child)
+      case p: Project => renames(p) && narrow(p.child)
+      case u: Union => u.children.forall(narrow)
+      case _ => false
+    }
+    narrow(df.queryExecution.analyzed)
+  }
+
+  /** Round 0's state `(id, color, deg, used)` from ONE aggregate over a
+    * union: each edge counts 1 toward its src and each extra vertex 0, so
+    * on a symmetric edge list `deg = 0` is exactly an isolated vertex. O6
+    * init: isolated vertices → color 0, everything else -1
+    * (changeColorFirstIteration, coloring.py:12-17). Degree is carried in
+    * the state so rounds don't re-join it (O8/O23); this is round 0's only
+    * pass over E, with no distinct and no join. */
+  private[graft] def roundZero(e: DataFrame, extraVertices: Option[DataFrame]): DataFrame = {
+    val ends = e.select(col("src").as("id"), lit(1).as("one"))
+    extraVertices.fold(ends)(vs => ends.unionByName(vs.select(col("id"), lit(0).as("one"))))
+      .groupBy(col("id")).agg(sum(col("one")).cast("int").as("deg"))
+      .select(col("id"), when(col("deg") === 0, 0).otherwise(-1).as("color"),
+        col("deg"), lit(0L).as("used"))
   }
 
   /** Isolated extra vertices never reach an edge-derived graph; append them
@@ -256,7 +288,7 @@ object ColoringKernel {
     * id: a HashAggregate, where `max(struct(deg, -id))` plans a sorting
     * SortAggregate (no hash buffer for a struct). `cand` is (id, deg,
     * cand); `side` wraps each of its two join sides (a broadcast hint). */
-  private def beaten(e: DataFrame, cand: DataFrame,
+  private[graft] def beaten(e: DataFrame, cand: DataFrame,
       side: DataFrame => DataFrame = identity): DataFrame = {
     def as(p: String): DataFrame = side(cand.select(col("id").as(s"${p}_id"),
       col("cand").as(s"${p}_cand"), col("deg").as(s"${p}_deg")))
@@ -271,9 +303,11 @@ object ColoringKernel {
 
   /** The admitted updates `(uid, new_color)`: every candidate vertex that
     * is not [[beaten]] keeps its candidate — a color, or -3 when its
-    * palette is exhausted (a -3 vertex is never beaten). */
-  private def admit(cand: DataFrame, beaten: DataFrame): DataFrame =
-    cand.join(beaten, col("id") === col("a_id"), "left_anti")
+    * palette is exhausted (a -3 vertex is never beaten). `side` wraps the
+    * beaten ids (a broadcast hint: they are a subset of `cand`). */
+  private[graft] def admit(cand: DataFrame, beaten: DataFrame,
+      side: DataFrame => DataFrame = identity): DataFrame =
+    cand.join(side(beaten), col("id") === col("a_id"), "left_anti")
       .select(col("id").as("uid"), col("cand").as("new_color"))
 
   /** First-fit over a 64-bit used-color mask, entirely from codegen'd
@@ -294,8 +328,7 @@ object ColoringKernel {
     * total gather work is O(E) summed over ALL rounds. The full regather it
     * replaces joined every edge against the entire colored state every
     * round — measured flat ~1 s/round at sf0.1 even with 3 uncolored
-    * vertices left. `updates` is (uid, new_color) and must be persisted by
-    * the caller (referenced by both the apply join and the delta). */
+    * vertices left. `updates` is (uid, new_color). */
   private def applyWithMask(e: DataFrame, state: DataFrame, updates: DataFrame,
       updBound: Long): DataFrame = {
     val delta = updates.filter(col("new_color") >= 0)
@@ -306,17 +339,18 @@ object ColoringKernel {
     // grew ×42 for ×10 edges); the explicit hint keeps every round's edge
     // probe map-side until the row policy says stop (oversized hints are
     // stripped by StripOversizedBroadcastHints).
-    val gained = e.join(graft.ops.Broadcasts.maybeBroadcast(delta, updBound),
-        col("dst") === col("nid"))
-      .groupBy(col("src"))
-      .agg(bit_or(call_function("shiftleft", lit(1L), col("ncolor"))).as("gained"))
+    val gains = e.join(maybeBroadcast(delta, updBound), col("dst") === col("nid"))
+      .select(col("src").as("cid"), lit(null).cast("int").as("new_color"),
+        call_function("shiftleft", lit(1L), col("ncolor")).as("g"))
     // Color changes and mask gains are both tiny relative to the state —
-    // merge them first (small ⟗ small) so the V-sized state is shuffled
-    // through ONE join per round, not two.
-    val chg = updates.select(col("uid").as("cid"), col("new_color"))
-      .join(gained.select(col("src").as("cid"), col("gained")), Seq("cid"), "full_outer")
-    state.join(graft.ops.Broadcasts.maybeBroadcast(chg, 2L * updBound),
-        col("id") === col("cid"), "left_outer")
+    // merge them first, in one union-aggregate (one exchange, combined
+    // map-side), so the V-sized state meets ONE probe per round. `max`
+    // skips the gain rows' nulls, so an admitted -3 survives.
+    val chg = updates.select(col("uid").as("cid"), col("new_color"), lit(0L).as("g"))
+      .unionByName(gains)
+      .groupBy(col("cid"))
+      .agg(max(col("new_color")).as("new_color"), bit_or(col("g")).as("gained"))
+    state.join(maybeBroadcast(chg, 2L * updBound), col("id") === col("cid"), "left_outer")
       .select(col("id"),
         coalesce(col("new_color"), col("color")).cast("int").as("color"),
         col("deg"),
@@ -329,20 +363,20 @@ object ColoringKernel {
     * Semantics identical to [[jpRound]] — colors are permanent, so the
     * incrementally-grown mask always equals the regathered set. */
   private[graft] def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
-      roundCaches: scala.collection.mutable.ArrayBuffer[DataFrame],
+      roundStates: scala.collection.mutable.ArrayBuffer[State],
       uncolored: Long): DataFrame = {
-    val cand = state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    roundCaches += cand
-    // Candidate sides carry exactly `uncolored` rows — row-bound broadcast
-    // hints keep the rival probe exchange-free on the E side past AQE's
-    // byte threshold (see applyWithMask's note; same ×42 shuffle signal).
-    val updates = admit(cand,
-      beaten(e, cand, graft.ops.Broadcasts.maybeBroadcast(_, uncolored)))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    roundCaches += updates
-    applyWithMask(e, state, updates, uncolored)
+    // Candidate sides carry exactly `uncolored` rows, and the beaten ids
+    // are a subset of them — row-bound broadcast hints keep the rival probe
+    // exchange-free on the E side past AQE's byte threshold (see
+    // applyWithMask's note; same ×42 shuffle signal) and the admit's
+    // candidate side unshuffled.
+    val side = maybeBroadcast(_: DataFrame, uncolored)
+    val cand = State.loop(state.filter(col("color") === -1)
+      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand")))
+    roundStates += cand
+    val updates = State.loop(admit(cand.df, beaten(e, cand.df, side), side))
+    roundStates += updates
+    applyWithMask(e, state, updates.df, uncolored)
   }
 
   /** One speculative-coloring round (k > 64): every uncolored

@@ -602,32 +602,74 @@ class PlanShapeSpec extends AnyFunSuite {
       s"marginals not broadcast at test scale:\n$p")
   }
 
-  test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
-    import org.apache.spark.sql.DataFrame
+  /** A 200-vertex random graph's edges and an all-uncolored round state. */
+  private def jpInput() = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    import scala.collection.mutable.ArrayBuffer
-    import graft.color.ColoringKernel
     graft.functions.GraftFunctions.register(spark)
     val e = graft.model.RandomGraph.edges(spark, 200, 5, seed = 42)
     val state = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
       .select(col("id"), lit(-1).as("color"), col("deg"), lit(0L).as("used"))
-    val caches = ArrayBuffer.empty[DataFrame]
+    (e, state)
+  }
+
+  test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
+    import scala.collection.mutable.ArrayBuffer
+    import graft.color.ColoringKernel
+    val (e, state) = jpInput()
     val states = ArrayBuffer.empty[graft.ops.State]
     try {
-      // One mask round (k ≤ 64) and one regather round (k > 64). A
+      // A mask round runs its admit inside the job that lands its updates,
+      // so the admit is planned here on the candidates that round landed.
+      ColoringKernel.jpRoundMask(e, state, 6, states, 200)
+      val cand = states.head.df
+      // The mask round's admit (k ≤ 64) and one regather round (k > 64). A
       // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
       // (no hash buffer for a struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
-        "mask" -> ColoringKernel.jpRoundMask(e, state, 6, caches, 200),
+        "mask" -> ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand)),
         "regather" -> ColoringKernel.jpRound(e, state, 70, states))) {
         val p = plan(round)
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
           s"$name round: beaten ids not hash-aggregated:\n$p")
         assert(!p.contains("SortAggregate"), s"$name round sorts to aggregate:\n$p")
       }
-    } finally {
-      caches.foreach(_.unpersist())
-      states.foreach(_.release())
-    }
+    } finally states.foreach(_.release())
+  }
+
+  test("a Jp mask round plans no InMemoryRelation and no SortMergeJoin") {
+    import scala.collection.mutable.ArrayBuffer
+    import graft.color.ColoringKernel
+    import graft.ops.Broadcasts.maybeBroadcast
+    val (e, state) = jpInput()
+    val states = ArrayBuffer.empty[graft.ops.State]
+    try {
+      val round = ColoringKernel.jpRoundMask(e, state, 6, states, 200)
+      // The round's own admit, rebuilt on the candidate frame it landed.
+      val cand = states.head.df
+      val side = maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
+      val admit = ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side)
+      for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
+        val p = plan(df)
+        assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+          s"$name reads a columnar cache:\n$p")
+        assert(!p.contains("SortMergeJoin"), s"$name plans a sort-merge join:\n$p")
+      }
+    } finally states.foreach(_.release())
+  }
+
+  test("Jp round 0 plans no join and one aggregate, with and without extra vertices") {
+    import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+    import graft.color.ColoringKernel
+    val e = graft.ops.State.memo(graft.model.RandomGraph.edges(spark, 200, 5, seed = 42))
+    try {
+      for (extra <- Seq(None, Some(spark.range(0, 250).toDF("id")))) {
+        val round0 = ColoringKernel.roundZero(e.df, extra)
+        val opt = round0.queryExecution.optimizedPlan
+        assert(opt.collect { case j: Join => j }.isEmpty, s"extra=$extra joins:\n$opt")
+        assert(opt.collect { case a: Aggregate => a }.size === 1,
+          s"extra=$extra: not one aggregate:\n$opt")
+        assert(!plan(round0).contains("Join"), s"extra=$extra joins:\n${plan(round0)}")
+      }
+    } finally e.release()
   }
 }

@@ -86,21 +86,33 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
-  test("localCheckpoint is called in src/main only by State and its two named exceptions") {
+  /** The src/main files whose code (comments skipped) contains `token`. */
+  private def callers(token: String): Set[String] = {
     import scala.jdk.CollectionConverters._
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
       .filter(_.toString.endsWith(".scala")).toSeq
     assert(files.nonEmpty)
-    val callers = files.filter { f =>
+    files.filter { f =>
       java.nio.file.Files.readAllLines(f).asScala.exists { l =>
         val code = l.trim
         !code.startsWith("*") && !code.startsWith("/*") &&
-          code.split("//", 2)(0).contains("localCheckpoint(")
+          code.split("//", 2)(0).contains(token)
       }
     }.map(_.getFileName.toString).toSet
+  }
+
+  test("localCheckpoint is called in src/main only by State and its two named exceptions") {
     // Sketches: a lazy memo (no construction-time job); GreedyRddKernel:
     // RDD round state.
-    assert(callers === Set("State.scala", "Sketches.scala", "GreedyRddKernel.scala"))
+    assert(callers("localCheckpoint(") === Set("State.scala", "Sketches.scala", "GreedyRddKernel.scala"))
+  }
+
+  test("persist and cache are called in src/main only by the named RDD and graph sites") {
+    // GraphOps: the triangle adjacency and the PageRank graphs; Similarity's
+    // one persisted frame; the GraphX and GreedyRdd kernels' RDD rounds.
+    val expected = Set("GraphOps.scala", "Similarity.scala", "GraphXKernel.scala",
+      "GreedyRddKernel.scala")
+    assert(callers(".persist(") ++ callers(".cache()") === expected)
   }
 
   for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {
@@ -120,5 +132,28 @@ class StateSpec extends AnyFunSuite {
       r.release()
       assert((persisted -- before).isEmpty)
     }
+  }
+
+  test("a Jp run reads a caller's checkpointed edges in place and frees only its own storage") {
+    import org.apache.spark.sql.functions.col
+    val base = persisted
+    val full = RandomGraph.edges(spark, 300, 6, 5L).localCheckpoint()
+    val half = RandomGraph.edges(spark, 300, 6, 5L).filter(col("src") < col("dst"))
+      .localCheckpoint()
+    val callers = persisted -- base
+    assert(callers.size === 2)
+    try {
+      // A plain checkpoint, and the symmetric union of a half checkpoint
+      // (the kernel-edge shape): both are read in place, not copied.
+      for (edges <- Seq(full,
+        half.union(half.select(col("dst").as("src"), col("src").as("dst"))))) {
+        val r = ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
+        assert(r.rounds > 1)
+        // Only the returned colors' own checkpoint may remain.
+        assert((persisted -- base -- callers).size <= 1)
+        r.release()
+        assert(persisted -- base === callers, "the caller's checkpoints must stay persisted")
+      }
+    } finally callers.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
   }
 }
