@@ -1,9 +1,6 @@
 package graft.color
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, Repartition, Union}
-import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions._
 
 import graft.ops.Broadcasts.maybeBroadcast
@@ -52,9 +49,9 @@ import graft.ops.State
   *
   * Driver-side control flow stays a plain Scala loop — same stance as GraphX
   * `Pregel` (SURVEY.md §4): only counts cross to the driver. Every round's
-  * state and every frame a round re-reads goes through [[State.loop]]
-  * (SURVEY.md §7 risk 4): the checkpoint truncates lineage, and its own
-  * action observes the counts the loop control reads.
+  * state and every frame a round builds and re-reads goes through
+  * [[State.loop]] (SURVEY.md §7 risk 4): the checkpoint truncates lineage,
+  * and its own action observes the counts the loop control reads.
   */
 object ColoringKernel {
 
@@ -139,6 +136,12 @@ object ColoringKernel {
     * in an edge list). Returns None when k colors are infeasible for the
     * first-fit rule or progress stalls past `maxRounds` (SURVEY.md §7
     * risk 6).
+    *
+    * Jp re-reads `edges` as given, twice a round, and keeps no copy: pass a
+    * materialized edge list (a [[State.memo]] frame or a local checkpoint,
+    * as every engine caller does). A lazy plan is recomputed on every read,
+    * and one whose rows are not deterministic would give each read a
+    * different edge set.
     */
   def tryColor(
       spark: SparkSession,
@@ -177,10 +180,6 @@ object ColoringKernel {
       extraVertices: Option[DataFrame],
       maxRounds: Int = 200): Option[Colored] = {
     graft.functions.GraftFunctions.register(spark)
-    // Every round re-reads the edges. A caller's checkpoint is read in
-    // place; any other plan is materialized once here and freed at the end.
-    val edgeMemo = if (readsOnlyCheckpoints(edges)) None else Some(State.memo(edges))
-    val e = edgeMemo.fold(edges)(_.df)
 
     // Every state's checkpoint observes progress and feasibility together
     // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
@@ -189,68 +188,46 @@ object ColoringKernel {
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
       sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible")) ++ metrics: _*)
 
-    try {
-      var state = observed(roundZero(e, extraVertices), max(col("deg")).as("maxDeg"))
-      val k = palette(state("maxDeg").toInt)
+    var state = observed(roundZero(edges, extraVertices), max(col("deg")).as("maxDeg"))
+    val k = palette(state("maxDeg").toInt)
 
-      // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
-      // mask, updated incrementally from each round's newly-colored delta
-      // (see applyWithMask); larger palettes fall back to the per-round
-      // full regather with collect_set arrays.
-      val useMask = k <= 64
+    // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
+    // mask, updated incrementally from each round's newly-colored delta
+    // (see applyWithMask); larger palettes fall back to the per-round
+    // full regather with collect_set arrays.
+    val useMask = k <= 64
 
-      var rounds = 0
-      var uncolored = state("uncolored")
-      var failed = false
+    var rounds = 0
+    var uncolored = state("uncolored")
+    var failed = false
 
-      while (uncolored > 0 && !failed) {
-        rounds += 1
-        if (rounds > maxRounds) { failed = true }
-        else {
-          val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
-          val next =
-            if (useMask) jpRoundMask(e, state.df, k, roundStates, uncolored)
-            else jpRound(e, state.df, k, roundStates)
-          // The next state lands before anything of this round is freed.
-          val landed = observed(next)
-          roundStates.foreach(_.release())
-          state.release()
-          state = landed
-          if (state("infeasible") > 0) failed = true
-          else if (state("uncolored") >= uncolored) {
-            // No progress. Jp always colors the top-priority node of every
-            // uncolored component, so a round with uncolored candidates
-            // commits ≥1 color and this only fires as the bounded-round
-            // backstop (risk 6).
-            failed = rounds >= maxRounds
-          }
-          uncolored = state("uncolored")
+    while (uncolored > 0 && !failed) {
+      rounds += 1
+      if (rounds > maxRounds) { failed = true }
+      else {
+        val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
+        val next =
+          if (useMask) jpRoundMask(edges, state.df, k, roundStates, uncolored)
+          else jpRound(edges, state.df, k, roundStates)
+        // The next state lands before anything of this round is freed.
+        val landed = observed(next)
+        roundStates.foreach(_.release())
+        state.release()
+        state = landed
+        if (state("infeasible") > 0) failed = true
+        else if (state("uncolored") >= uncolored) {
+          // No progress. Jp always colors the top-priority node of every
+          // uncolored component, so a round with uncolored candidates
+          // commits ≥1 color and this only fires as the bounded-round
+          // backstop (risk 6).
+          failed = rounds >= maxRounds
         }
+        uncolored = state("uncolored")
       }
-
-      if (failed) { state.release(); None }
-      else Some(Colored(state, k, rounds))
-    } finally edgeMemo.foreach(_.release())
-  }
-
-  /** True when `df` only re-reads local checkpoints: its analyzed plan is
-    * a checkpoint's `LogicalRDD`, reached through nothing but column
-    * renames, unions and narrow coalesces (a [[State.memo]] frame, or the
-    * symmetric union of one that `GraphOps.kernelEdges` builds). Reading
-    * such a plan again costs a scan, so it needs no copy of its own. */
-  private def readsOnlyCheckpoints(df: DataFrame): Boolean = {
-    def renames(p: Project): Boolean = p.projectList.forall {
-      case _: Attribute | Alias(_: Attribute, _) => true
-      case _ => false
     }
-    def narrow(plan: LogicalPlan): Boolean = plan match {
-      case _: LogicalRDD => true
-      case Repartition(_, false, child) => narrow(child)
-      case p: Project => renames(p) && narrow(p.child)
-      case u: Union => u.children.forall(narrow)
-      case _ => false
-    }
-    narrow(df.queryExecution.analyzed)
+
+    if (failed) { state.release(); None }
+    else Some(Colored(state, k, rounds))
   }
 
   /** Round 0's state `(id, color, deg, used)` from ONE aggregate over a
@@ -447,7 +424,8 @@ object ColoringKernel {
     * Δ comes from the GraphX base for GraphX and from one degree aggregate
     * for GreedyRdd (0 on an edge-free input). Jp reads it off its own
     * round-0 checkpoint, so its degree aggregate is the only pass over the
-    * edges before round 1.
+    * edges before round 1. `edges` is read as [[tryColor]] reads it: pass
+    * it materialized.
     */
   def minimalColors(
       spark: SparkSession,

@@ -612,21 +612,31 @@ class PlanShapeSpec extends AnyFunSuite {
     (e, state)
   }
 
+  /** One Jp mask round (k = 6) over `jpInput`, and its admit. A mask round
+    * runs its admit inside the job that lands its updates, so the admit is
+    * rebuilt here, with the round's broadcast side, on the candidates that
+    * round landed (the first frame it adds to `states`). */
+  private def jpMaskRound(e: org.apache.spark.sql.DataFrame,
+      state: org.apache.spark.sql.DataFrame,
+      states: scala.collection.mutable.ArrayBuffer[graft.ops.State]) = {
+    import graft.color.ColoringKernel
+    val round = ColoringKernel.jpRoundMask(e, state, 6, states, 200)
+    val cand = states.head.df
+    val side = graft.ops.Broadcasts.maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
+    (round, ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side))
+  }
+
   test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
     import scala.collection.mutable.ArrayBuffer
     import graft.color.ColoringKernel
     val (e, state) = jpInput()
     val states = ArrayBuffer.empty[graft.ops.State]
     try {
-      // A mask round runs its admit inside the job that lands its updates,
-      // so the admit is planned here on the candidates that round landed.
-      ColoringKernel.jpRoundMask(e, state, 6, states, 200)
-      val cand = states.head.df
       // The mask round's admit (k ≤ 64) and one regather round (k > 64). A
       // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
       // (no hash buffer for a struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
-        "mask" -> ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand)),
+        "mask" -> jpMaskRound(e, state, states)._2,
         "regather" -> ColoringKernel.jpRound(e, state, 70, states))) {
         val p = plan(round)
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
@@ -638,16 +648,10 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("a Jp mask round plans no InMemoryRelation and no SortMergeJoin") {
     import scala.collection.mutable.ArrayBuffer
-    import graft.color.ColoringKernel
-    import graft.ops.Broadcasts.maybeBroadcast
     val (e, state) = jpInput()
     val states = ArrayBuffer.empty[graft.ops.State]
     try {
-      val round = ColoringKernel.jpRoundMask(e, state, 6, states, 200)
-      // The round's own admit, rebuilt on the candidate frame it landed.
-      val cand = states.head.df
-      val side = maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
-      val admit = ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side)
+      val (round, admit) = jpMaskRound(e, state, states)
       for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
         val p = plan(df)
         assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),

@@ -134,26 +134,18 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
-  test("a Jp run reads a caller's checkpointed edges in place and frees only its own storage") {
-    import org.apache.spark.sql.functions.col
+  test("a Jp run leaves a caller's checkpointed edges persisted and frees only its own storage") {
     val base = persisted
-    val full = RandomGraph.edges(spark, 300, 6, 5L).localCheckpoint()
-    val half = RandomGraph.edges(spark, 300, 6, 5L).filter(col("src") < col("dst"))
-      .localCheckpoint()
-    val callers = persisted -- base
-    assert(callers.size === 2)
+    val edges = RandomGraph.edges(spark, 300, 6, 5L).localCheckpoint()
+    val caller = persisted -- base
+    assert(caller.size === 1)
     try {
-      // A plain checkpoint, and the symmetric union of a half checkpoint
-      // (the kernel-edge shape): both are read in place, not copied.
-      for (edges <- Seq(full,
-        half.union(half.select(col("dst").as("src"), col("src").as("dst"))))) {
-        val r = ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
-        assert(r.rounds > 1)
-        // Only the returned colors' own checkpoint may remain.
-        assert((persisted -- base -- callers).size <= 1)
-        r.release()
-        assert(persisted -- base === callers, "the caller's checkpoints must stay persisted")
-      }
-    } finally callers.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+      val r = ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
+      assert(r.rounds > 1)
+      // Only the returned colors' own checkpoint may remain.
+      assert((persisted -- base -- caller).size <= 1)
+      r.release()
+      assert(persisted -- base === caller, "the caller's checkpoint must stay persisted")
+    } finally caller.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
   }
 }
