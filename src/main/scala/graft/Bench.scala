@@ -1,6 +1,5 @@
 package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
 
 import java.util.concurrent.atomic.AtomicLong
 import scala.collection.concurrent.TrieMap
@@ -100,29 +99,13 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Shuffle/IO codec knob (GRAFT_IO_CODEC, default zstd): on the 30×
-    // q_dedup_ngram A/B (back-to-back solo runs, bench/NOTES.md r11) zstd
-    // wrote 0.31× lz4's shuffle bytes and 0.33× its peak shuffle disk
-    // (15.8 → 5.2 GB) at +1.3% wall / +0.2% CPU — the production posture
-    // for shuffle-heavy clusters. Even under zstd the 100× ngram join does
-    // NOT fit this box: the r11 solo attempt had 63 GB of shuffle on disk
-    // mid-join (watchdog kill at 93% of the 67 GB free) — the ~57 GB
-    // linear projection undershot because the join's spill is quadratic in
-    // the per-class replica count, not linear in rows (bench/NOTES.md r11).
-    val codec = sys.env.getOrElse("GRAFT_IO_CODEC", "zstd")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.io.compression.codec", codec)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     // Heap is part of a reading's identity: a 16 g default-heap run OOMs
     // the 100× leg at q_label_prop where the committed 96 g artifact
     // passes (SPARK_DRIVER_MEM, build.sbt) — print it so artifacts are
     // attributable to the heap they ran with.
-    println(f"[bench] heap=${Runtime.getRuntime.maxMemory / (1L << 30)}g cpus=$cpus codec=$codec")
+    println(f"[bench] heap=${Runtime.getRuntime.maxMemory / (1L << 30)}g cpus=$cpus codec=${Session.Codec}")
     // ScaleUp corpora carry a manifest — prove this regeneration IS the
     // corpus the committed artifacts measured (no-op on driver testdata).
     // Runs pre-listener, so the scan never pollutes query attribution.

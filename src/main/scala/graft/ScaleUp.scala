@@ -2,7 +2,7 @@ package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Deterministic corpus scale-up for the past-sf0.1 validation leg (r8
@@ -54,14 +54,7 @@ object ScaleUp {
   def main(args: Array[String]): Unit = {
     val (src, out, k) = (args(0), args(1), args(2).toInt)
     require(k >= 1 && k <= 100, s"k must be in [1,100], got $k")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // Splittable output: many 2 MB row groups per (single) file.
     spark.sparkContext.hadoopConfiguration.setInt("parquet.block.size", 2 * 1024 * 1024)
     new java.io.File(out).mkdirs()

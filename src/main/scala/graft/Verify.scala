@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -33,16 +32,7 @@ object Verify {
     val skip = sys.env.get("GRAFT_BENCH_SKIP")
       .map(_.split(",").toSet).getOrElse(Set.empty[String])
     skip.toSeq.sorted.foreach(q => System.err.println(s"[verify] SKIPPED $q (GRAFT_BENCH_SKIP)"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("GRAFT_IO_CODEC", "zstd"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.local()
     // ScaleUp corpora carry a manifest — prove this regeneration IS the
     // corpus the committed artifacts measured (no-op on driver testdata).
     graft.tables.Manifest.verifyIfPresent(spark, sfDir)

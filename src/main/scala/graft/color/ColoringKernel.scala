@@ -179,6 +179,8 @@ object ColoringKernel {
       palette: Int => Int,
       extraVertices: Option[DataFrame],
       maxRounds: Int = 200): Option[Colored] = {
+    // The caller's edges need not come through Tables, which registers
+    // graft_first_fit for every corpus query.
     graft.functions.GraftFunctions.register(spark)
 
     // Every state's checkpoint observes progress and feasibility together
@@ -314,8 +316,7 @@ object ColoringKernel {
     // threshold flips this probe to an E-shuffling SMJ right around the
     // 10× leg's state size (measured: the minimal-colors run's shuffle
     // grew ×42 for ×10 edges); the explicit hint keeps every round's edge
-    // probe map-side until the row policy says stop (oversized hints are
-    // stripped by StripOversizedBroadcastHints).
+    // probe map-side until the row policy says stop.
     val gains = e.join(maybeBroadcast(delta, updBound), col("dst") === col("nid"))
       .select(col("src").as("cid"), lit(null).cast("int").as("new_color"),
         call_function("shiftleft", lit(1L), col("ncolor")).as("g"))

@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
@@ -9,7 +8,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 
 /** `graft_first_fit(used, k)` — smallest color in `[0, k)` not present in
   * `used`; `-3` (the reference's infeasible sentinel, coloring.py:53-54)
@@ -20,8 +18,8 @@ import org.apache.spark.sql.SparkSessionExtensions
   * as a native Catalyst expression WITH whole-stage codegen: one boolean[k]
   * scratch pass instead of the `array_min(array_except(sequence(0,k-1),
   * used))` composition, which allocates two intermediate arrays per row.
-  * Register via [[GraftExtensions]] (`withExtensions`) or
-  * [[GraftFunctions.register]] on an existing session.
+  * Registered on every session by [[graft.Session.local]],
+  * [[graft.tables.Tables.table]] and the colouring kernel.
   */
 case class FirstFitColor(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -95,13 +93,15 @@ case class FirstFitColor(left: Expression, right: Expression)
   override def prettyName: String = "graft_first_fit"
 }
 
-/** Imperative registration for sessions built elsewhere (the driver hands
-  * the library an existing SparkSession). Idempotent. */
+/** Registers the graft expression library on a session. Idempotent; run
+  * by [[graft.Session.local]], [[graft.tables.Tables.table]] and the Jp
+  * colouring kernel, so a session the driver hands the library needs no
+  * set-up of its own. */
 object GraftFunctions {
   val name: FunctionIdentifier = FunctionIdentifier("graft_first_fit")
 
   /** Every graft.* custom expression: (identifier, info, builder). */
-  val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+  private val all: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (name,
       new ExpressionInfo(classOf[FirstFitColor].getName, "graft_first_fit"),
       (children: Seq[Expression]) => FirstFitColor(children(0), children(1))),
@@ -150,16 +150,5 @@ object GraftFunctions {
     all.foreach { case (id, info, builder) =>
       if (!registry.functionExists(id)) registry.registerFunction(id, info, builder)
     }
-  }
-}
-
-/** `SparkSessionExtensions` hook: `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.functions.GraftExtensions`. Injects the
-  * expression library plus the oversized-broadcast-hint guard
-  * ([[graft.plans.StripOversizedBroadcastHints]]). */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    GraftFunctions.all.foreach(ext.injectFunction)
-    ext.injectOptimizerRule(s => graft.plans.StripOversizedBroadcastHints(s))
   }
 }

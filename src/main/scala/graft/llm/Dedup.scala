@@ -124,7 +124,6 @@ object Dedup {
     shingleIndexOf(Tables.documents(spark, d), n)
 
   private def shingleIndexOf(docs: DataFrame, n: Int): DataFrame = {
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     // Tables.spread BEFORE the shingle explode: a single-file documents
     // scan pins ONE partition, and because callers materialize the
     // index (freezing the layout), the inverted-index SELF-JOIN then runs
@@ -291,7 +290,6 @@ object Dedup {
       score: DataFrame => DataFrame, edgesOnly: Boolean = false,
       memoKey: Option[String] = None): DataFrame = {
     val spark = docs.sparkSession
-    graft.functions.GraftFunctions.register(spark)
     // One scan, NO shuffle: per-doc distinct shingle-hash ARRAY (already
     // sorted by the expression) + the census key folded IN-ROW. XOR folds,
     // not sums: shingle hashes span the full 64-bit range, so sums
@@ -801,7 +799,6 @@ object Dedup {
     val k = 32
     val bands = 4
     val rowsPerBand = k / bands
-    graft.functions.GraftFunctions.register(spark)
     val isBatch = pmod(
       conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long"),
       lit(100L)) < 20
@@ -901,10 +898,11 @@ object Dedup {
     * expressions [[minhashVerifiedPairs]] uses (so batch and the streaming
     * [[graft.streaming.StreamPipelines.neardupStream]] state machine see
     * identical buckets). Shingle hash sets ride along for the exact-Jaccard
-    * verify step. Docs with no shingles (< 3 tokens) produce no rows. */
+    * verify step. Docs with no shingles (< 3 tokens) produce no rows.
+    * `docs`' session must have the graft functions ([[graft.Session.local]]
+    * and every [[graft.tables.Tables]] read register them). */
   def bandRows(docs: DataFrame, k: Int = 32, bands: Int = 4): DataFrame = {
     val rowsPerBand = k / bands
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     docs
       .select(col("doc_id"),
         call_function("graft_shingle_hashes", toks(col("text")), lit(3)).as("shingles"),
@@ -940,7 +938,6 @@ object Dedup {
     // LSH pipeline builds first. Exact-jaccard verification runs on the
     // hash sets (order-insensitive; same values as string sets absent
     // 64-bit collisions).
-    graft.functions.GraftFunctions.register(spark)
     // spread: signature computation is the heavy map stage and the
     // checkpoint freezes the layout — see shingleIndexOf.
     val docs = State.memo(Tables.spread(Tables.documents(spark, d))
@@ -1312,7 +1309,6 @@ object Dedup {
     * `md5_number_lower` bit votes, never materializing a 64-bit integer —
     * it compares per-chunk values and sums per-chunk popcounts. */
   def qDedupSimhash(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Materialized for the same multi-reference reason as qDedupMinhash;
     // spread for the same single-file-scan reason as shingleIndexOf.
     val docs = State.memo(Tables.spread(Tables.documents(spark, d))
@@ -1349,7 +1345,6 @@ object Dedup {
     * a production near-dup filter would use ≥ 0.95.) Brute-force equivalent
     * is Similarity.bruteForceTopK; LlmSpec cross-checks against it. */
   def qDedupEmbed(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val emb = Tables.spread(Tables.embeddings(spark, d))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"))
     val bucketed = emb.withColumn("bucket", Similarity.hyperplaneBucket(col("v"), bits = 8))

@@ -32,8 +32,9 @@ object Similarity {
     * three `aggregate(zip_with(...))` folds (each of which materializes a
     * products array per row). Bit-identical to the composed
     * `dot / (norm·norm)` form — same left-to-right IEEE accumulation
-    * order (CosineSim scaladoc). Callers must have run
-    * `GraftFunctions.register` (every q* entry point here does). */
+    * order (CosineSim scaladoc). The frame's session must have the graft
+    * functions: [[graft.Session.local]] and every [[graft.tables.Tables]]
+    * read register them. */
   def cosine(a: Column, b: Column): Column =
     call_function("graft_cosine", a, b)
 
@@ -104,7 +105,6 @@ object Similarity {
   }
 
   private def emb(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Tables.spread: a single-file embeddings scan would otherwise run
     // every downstream dot-product/bucketing map stage as one task.
     Tables.spread(Tables.embeddings(spark, d))
@@ -161,7 +161,6 @@ object Similarity {
     * id asc); ties on the rounded score cannot flip the output because
     * ranking happens before rounding in both engines. */
   def qHardNegatives(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val base = Tables.spread(Tables.embeddings(spark, d))
       .select(col("vec_id"), col("embedding").cast("array<double>").as("v"),
         col("label"))
@@ -574,7 +573,6 @@ object Similarity {
   private[graft] def pqOver(e: DataFrame): DataFrame = {
     val spark = e.sparkSession
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val svState = graft.ops.State.memo(e
       .withColumn("s", transform(col("v"), x => round(x * 1e6).cast("long")))
       .select(col("vec_id"), col("s")))
@@ -1284,7 +1282,6 @@ object Similarity {
   val SilhouetteMaxLabels = 64
 
   def qSilhouette(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Count-adaptive layout (r15): both passes below re-scan this frame
     // and the per-task plan cost dominates a few-thousand-row vector set
     // spread over the session default partitions.
@@ -1381,7 +1378,6 @@ object Similarity {
     * the [[qSimLsh]]/[[qSimIvf]] bucketing pre-filters the candidate
     * stream the same way it does for brute-force top-k. */
   def qMmrSelect(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val e = emb(spark, d)
     val baseState = graft.ops.State.memo(
       e.filter(col("vec_id") =!= 0)

@@ -906,7 +906,6 @@ object TextStats {
     * (map-side combine collapses repeats before the exchange) → one
     * per-doc agg. Nothing wider than the corpus char stream, no window. */
   def qCharEntropy(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // The char stream never leaves the row: graft_char_counts walks the
     // code points once and emits one row per char CLASS (alphabet-bounded
     // per doc). The old composed form (transform(sequence) → explode →
@@ -1006,7 +1005,6 @@ object TextStats {
     * group; the occurrence count is a chunk-table-sized agg shuffled on
     * the 128-bit digest (uniform — no skew). */
   def qCdcChunk(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     // Tokens never leave the row: graft_cdc_chunks splits the token array
     // at the md5 boundaries in one fused pass, so the plan explodes one
     // row per CHUNK (≈ 1/16th of the tokens) instead of one per token,

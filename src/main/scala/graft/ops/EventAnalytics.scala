@@ -504,7 +504,6 @@ object EventAnalytics {
     // allocation (the composed transform/slice/flatten form spent more CPU
     // allocating intermediates than the whole rest of the query —
     // bench/NOTES r12).
-    graft.functions.GraftFunctions.register(spark)
     val pairs = cls
       .select(col("m"),
         explode(call_function("graft_ordered_pairs", col("pks"))).as("p"))

@@ -75,7 +75,6 @@ object GraphOps {
       // sort is trivial next to the k² explode it replaces; isolated
       // sf0.1 A/B on the memo build: 16.5 → 11.5 s CPU). Same distinct
       // canonical pair set, bit-identical downstream.
-      graft.functions.GraftFunctions.register(spark)
       val ordered = State.memo(li.groupBy(col("l_orderkey"))
         .agg(array_sort(array_distinct(collect_list(col("l_partkey"))))
           .as("parts"))
@@ -491,7 +490,6 @@ object GraphOps {
     * hard cap (r13 ADVICE). */
   private[graft] def triangleTriplesPlan(adj: DataFrame, vCount: Long,
       adjPayloadBytes: Long): DataFrame = {
-    graft.functions.GraftFunctions.register(adj.sparkSession)
     val lo = least(col("u"), col("v"), col("w"))
     val hi = greatest(col("u"), col("v"), col("w"))
     adj
@@ -721,7 +719,6 @@ object GraphOps {
   }
 
   def qTruss(spark: SparkSession, sfDir: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark) // graft_bloom_contains
     // The memo is already id-canonical (p < q < r) — member edges are the
     // shared [[triangleMemberEdges]] explode the support agg groups by.
     val tri = triangleTriples(spark, sfDir)

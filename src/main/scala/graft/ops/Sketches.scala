@@ -201,7 +201,6 @@ object Sketches {
     * Determinism: k smallest distinct values of a set — partitioning- and
     * order-independent; the estimate divides doubles in pinned order. */
   def qKmvDistinct(spark: SparkSession, d: String): DataFrame = {
-    graft.functions.GraftFunctions.register(spark)
     val h = conv(substring(md5(col("user_id").cast("string")), 1, 15), 16, 10)
       .cast("long")
     val per = Tables.events(spark, d)

@@ -5,16 +5,23 @@ import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join, Repartition
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
 
+import graft.functions.GraftFunctions
+
 /** Loaders for the driver's Parquet corpus (`/root/testdata/sf*`).
   *
   * Every query in the library takes `(SparkSession, sfDir)` and resolves its
   * inputs here, so the scan always goes through `spark.read.parquet` — filters
   * and projections placed on top are pushed into the vectorized Parquet reader
   * by Catalyst (visible as `PushedFilters`/`ReadSchema` in `.explain`).
+  * The read also registers the graft expression library
+  * ([[graft.functions.GraftFunctions]]) on the session, so any session —
+  * a fresh `newSession()` included — can run every query.
   */
 object Tables {
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    GraftFunctions.register(spark)
     spark.read.parquet(s"$sfDir/$name.parquet")
+  }
 
   def region(spark: SparkSession, d: String): DataFrame    = table(spark, d, "region")
   def nation(spark: SparkSession, d: String): DataFrame    = table(spark, d, "nation")

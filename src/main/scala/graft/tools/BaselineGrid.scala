@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import graft.color.ColoringKernel
 import graft.color.ColoringKernel.Strategy
 import graft.model.RandomGraph
@@ -14,13 +12,7 @@ import graft.ops.State
   * Prints one line per config for BASELINE comparison. */
 object BaselineGrid {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Session.local()
     val grid = Seq((10, 3), (10, 5), (20, 3), (20, 5), (50, 3), (50, 5),
       (100, 5), (100, 10), (200, 5), (200, 10))
     grid.foreach { case (n, d) =>

@@ -47,16 +47,7 @@ object GraphCensus {
 
   def main(args: Array[String]): Unit = {
     require(args.nonEmpty, "usage: GraphCensus <sfDir> [<sfDir> ...]")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", sys.env.getOrElse("GRAFT_DRIVER_MEM", "24g"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = graft.Session.local()
     for (dir <- args) {
       val json = censusJson(spark, dir)
       println(s"[census] $json")

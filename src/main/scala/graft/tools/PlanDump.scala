@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 import java.nio.file.{Files, Paths}
 
 /** Plan-evidence dumper (optimization-round deliverable): writes
@@ -23,11 +21,7 @@ object PlanDump {
     val outDir = Paths.get(args.head)
     Files.createDirectories(outDir)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     args.tail.foreach { name =>
       val fn = graft.SparkEntry.queries(name)
       val plan = fn(spark, sfDir).queryExecution.explainString(

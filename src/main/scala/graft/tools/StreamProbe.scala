@@ -2,7 +2,6 @@ package graft.tools
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, StreamingQuery}
@@ -46,14 +45,7 @@ object StreamProbe {
     val cap = opt("--cap", 1000000L)
     val batch = opt("--batch", 100000L).toInt
     val sfDir = argv.headOption.getOrElse("/tmp/graft-sf1.0")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.local()
     import spark.implicits._
 
     // Arrival order = event-time order: the watermark advances monotonically
@@ -66,7 +58,7 @@ object StreamProbe {
       .as[Event].collect()
     val maxTs = events.map(_.ts.getTime).max
     println(s"[probe] corpus=$sfDir events=${events.length} " +
-      s"batch=$batch cpus=$cpus")
+      s"batch=$batch cpus=${graft.Session.cpus}")
 
     def run(name: String)(start: MemoryStream[Event] => StreamingQuery): Unit = {
       implicit val sqlCtx = spark.sqlContext

@@ -167,7 +167,6 @@ class BoundsSpec extends AnyFunSuite {
 
   test("semantic dedup sub-buckets a degenerate all-one-cell corpus") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // Adversarial corpus: 64 IDENTICAL unit vectors in ONE cell — the
     // uncapped compare is 64²/2 pairs; with cap=8 the cell splits into 8
     // md5 sub-buckets and each vector only compares within its own.

@@ -18,7 +18,6 @@ class ExpressionGuardSpec extends AnyFunSuite {
       .map(e => Option(e.getMessage).getOrElse("")).mkString(" | ")
 
   test("graft_cosine throws on length mismatch instead of truncating") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Array(1.0, 2.0), Array(1.0, 2.0, 3.0))).toDF("a", "b")
     val ex = intercept[Throwable] {
       df.select(call_function("graft_cosine", col("a"), col("b"))).collect()
@@ -31,7 +30,6 @@ class ExpressionGuardSpec extends AnyFunSuite {
   }
 
   test("graft_sqdist_long throws on length mismatch instead of truncating") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Array(1L, 2L, 3L), Array(1L))).toDF("a", "b")
     val ex = intercept[Throwable] {
       df.select(call_function("graft_sqdist_long", col("a"), col("b"))).collect()
@@ -40,7 +38,6 @@ class ExpressionGuardSpec extends AnyFunSuite {
   }
 
   test("graft_srp_bucket rejects a sign matrix shorter than bits*dims") {
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Array(1L, 2L, 3L), Array(1L, -1L))).toDF("sv", "signs")
     val ex = intercept[Throwable] {
       df.select(call_function("graft_srp_bucket", col("sv"), col("signs"), lit(8)))

@@ -10,11 +10,8 @@ import graft.functions.GraftFunctions
 class FirstFitColorSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
-  private def registered = { GraftFunctions.register(spark); spark }
-
   test("scalar semantics via SQL (codegen path)") {
-    val s = registered
-    val rows = s.sql(
+    val rows = spark.sql(
       """SELECT graft_first_fit(array(0, 1, 3), 5) AS a,
         |       graft_first_fit(CAST(array() AS ARRAY<INT>), 3) AS b,
         |       graft_first_fit(CAST(NULL AS ARRAY<INT>), 3) AS c,
@@ -29,10 +26,9 @@ class FirstFitColorSpec extends AnyFunSuite {
   }
 
   test("agrees with the composed built-in expression on corpus data") {
-    val s = registered
-    import s.implicits._
+    import spark.implicits._
     val k = 8
-    val used = graft.ops.GraphOps.neighborColors(s, "/root/testdata/sf0.001")
+    val used = graft.ops.GraphOps.neighborColors(spark, "/root/testdata/sf0.001")
     val both = used.select(
       col("src"),
       call_function("graft_first_fit", col("neighbor_colors"), lit(k)).as("custom"),
@@ -42,9 +38,10 @@ class FirstFitColorSpec extends AnyFunSuite {
     assert(both.filter($"custom" =!= $"composed").isEmpty)
   }
 
-  test("registration is idempotent and works via withExtensions") {
-    GraftFunctions.register(spark)
-    GraftFunctions.register(spark)
-    assert(spark.sql("SELECT graft_first_fit(array(1), 2)").head().getInt(0) === 0)
+  test("registration is idempotent") {
+    val s = spark.newSession()
+    GraftFunctions.register(s)
+    GraftFunctions.register(s)
+    assert(s.sql("SELECT graft_first_fit(array(1), 2)").head().getInt(0) === 0)
   }
 }

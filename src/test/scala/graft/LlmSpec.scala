@@ -155,7 +155,6 @@ class LlmSpec extends AnyFunSuite {
       "the quick brown fox jumps over the lazy dog near the old mill",
       "completely different content with no overlap at all whatsoever here",
       "unicode tokens räv Über ☃ snowman mixed in with ascii words too")
-    graft.functions.GraftFunctions.register(spark)
     val engine = texts.toDF("text")
       .select(call_function("graft_minhash_sig",
         TextStats.tokens(col("text")), lit(3), lit(32)).as("sig"))
@@ -187,7 +186,6 @@ class LlmSpec extends AnyFunSuite {
 
   test("cosine: exact values on unit vectors; fused expr == composed HOF form") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val df = Seq((Array(1.0, 0.0), Array(0.0, 1.0)), (Array(1.0, 1.0), Array(1.0, 1.0)))
       .toDF("a", "b")
     val cs = df.select(Similarity.cosine(col("a"), col("b")).as("c"))

@@ -144,41 +144,6 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(row === base)
   }
 
-  test("extension rule strips an oversized broadcast hint; no-stats sides are untouched") {
-    import org.apache.spark.sql.functions._
-    val s2 = spark.newSession()
-    s2.experimental.extraOptimizations =
-      Seq(graft.plans.StripOversizedBroadcastHints(s2))
-    // Only the hint may cause a broadcast in this session.
-    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    s2.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
-    val orders = graft.tables.Tables.orders(s2, "/root/testdata/sf0.001")
-      .select(col("o_orderkey"), col("o_custkey"))
-    val cust = graft.tables.Tables.customer(s2, "/root/testdata/sf0.001")
-      .select(col("c_custkey"), col("c_mktsegment"))
-    def joined = orders.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-    // Default threshold (2 GB): the hint stands — BroadcastHashJoin.
-    assert(joined.queryExecution.executedPlan.toString.contains("BroadcastHashJoin"))
-    val kept = joined.orderBy(col("o_orderkey")).collect()
-    // 1-byte cap: the rule strips the hint and the join re-plans as a
-    // shuffle strategy, same results.
-    s2.conf.set(graft.ops.Broadcasts.MaxBytesKey, "1")
-    val p = joined.queryExecution.executedPlan.toString
-    assert(!p.contains("BroadcastHashJoin"), s"oversized hint not stripped:\n$p")
-    assert(joined.orderBy(col("o_orderkey")).collect() === kept)
-    // A stats-less RDD-backed build side (the State.loop shape —
-    // localCheckpoint itself PRESERVES stats in Spark 4) reports the
-    // defaultSizeInBytes sentinel — the rule must leave its hint alone even
-    // under the 1-byte cap (those sides are sized by
-    // Broadcasts.maybeBroadcast's exact row counts, which the optimizer
-    // can't see).
-    val ck = s2.createDataFrame(cust.rdd, cust.schema)
-    val p2 = orders.join(broadcast(ck), col("o_custkey") === col("c_custkey"))
-      .queryExecution.executedPlan.toString
-    assert(p2.contains("BroadcastHashJoin"), s"no-stats hint wrongly stripped:\n$p2")
-    s2.conf.unset(graft.ops.Broadcasts.MaxBytesKey)
-  }
-
   test("salted join plans a shuffled hash join on the (key, salt) pair") {
     val p = plan(graft.ops.Skew.qJoinSalted(spark, "/root/testdata/sf0.001"))
     assert(p.contains("ShuffledHashJoin"), s"expected shuffled hash join:\n$p")
@@ -423,7 +388,6 @@ class PlanShapeSpec extends AnyFunSuite {
     // back to the exact semi joins over the full memo instead of shipping
     // a multi-GB literal with every task binary (r14 verdict item 5).
     import org.apache.spark.sql.functions.col
-    graft.functions.GraftFunctions.register(spark)
     val tri = graft.ops.GraphOps.triangleTriples(spark, sf)
     val removed = tri.select(col("p").as("a"), col("q").as("b")).limit(4)
     val below = graft.ops.GraphOps.trussRoundCandidates(tri, removed, 4L)
@@ -536,7 +500,6 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("custom hash expressions run inside WholeStageCodegen") {
     import org.apache.spark.sql.functions._
-    graft.functions.GraftFunctions.register(spark)
     val df = graft.tables.Tables.documents(spark, sf)
       .select(col("doc_id"),
         call_function("graft_minhash_sig",
@@ -605,7 +568,6 @@ class PlanShapeSpec extends AnyFunSuite {
   /** A 200-vertex random graph's edges and an all-uncolored round state. */
   private def jpInput() = {
     import org.apache.spark.sql.functions.{col, count, lit}
-    graft.functions.GraftFunctions.register(spark)
     val e = graft.model.RandomGraph.edges(spark, 200, 5, seed = 42)
     val state = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
       .select(col("id"), lit(-1).as("color"), col("deg"), lit(0L).as("used"))

@@ -1,0 +1,51 @@
+package graft
+
+import org.apache.spark.sql.catalyst.FunctionIdentifier
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.color.ColoringKernel
+import graft.color.ColoringKernel.Strategy
+import graft.ops.Sketches
+
+/** One session builder, and the graft functions registered where queries
+  * start: a session that never called `GraftFunctions.register` still runs
+  * the corpus queries and the colouring kernel. */
+class SessionSpec extends AnyFunSuite {
+  private lazy val spark = SparkTestSession.get
+
+  private def has(s: org.apache.spark.sql.SparkSession, fn: String): Boolean =
+    s.sessionState.functionRegistry.functionExists(FunctionIdentifier(fn))
+
+  test("SparkSession.builder appears in src/main only in Session") {
+    assert(SourceScan.callers("SparkSession.builder") === Set("Session.scala"))
+  }
+
+  test("GraftFunctions.register is called in src/main only where sessions and queries start") {
+    assert(SourceScan.callers("GraftFunctions.register(") ===
+      Set("Session.scala", "Tables.scala", "ColoringKernel.scala"))
+  }
+
+  test("a fresh session runs q_kmv_distinct (graft_kmv_kmin) with no register call") {
+    val s2 = spark.newSession()
+    assert(!has(s2, "graft_kmv_kmin"))
+    val got = Sketches.qKmvDistinct(s2, "/root/testdata/sf0.001").collect()
+    assert(got.nonEmpty)
+    assert(got === Sketches.qKmvDistinct(spark, "/root/testdata/sf0.001").collect())
+  }
+
+  test("a fresh session runs a Jp search past the 64-color mask (graft_first_fit)") {
+    import org.apache.spark.sql.functions.{col, lit}
+    val s2 = spark.newSession()
+    assert(!has(s2, "graft_first_fit"))
+    // A 70-leaf star: Δ + 1 = 71 colors, so the rounds regather with
+    // graft_first_fit instead of the 64-bit mask.
+    val leaves = s2.range(1, 71).select(lit(0L).as("a"), col("id").as("b"))
+    val edges = leaves.select(col("a").as("src"), col("b").as("dst"))
+      .union(leaves.select(col("b").as("src"), col("a").as("dst")))
+    val best = ColoringKernel.minimalColors(s2, edges, Strategy.Jp)
+    try {
+      assert(best.k === 2)
+      assert(ColoringKernel.validate(edges, best.colors) === ((0L, 0L)))
+    } finally best.release()
+  }
+}

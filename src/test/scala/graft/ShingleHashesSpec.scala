@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.GraftFunctions
 import graft.llm.TextStats
 
 /** The custom `graft_shingle_hashes` expression (eval + codegen paths)
@@ -13,7 +12,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   test("scalar semantics via SQL (codegen path)") {
-    GraftFunctions.register(spark)
     val r = spark.sql(
       """SELECT graft_shingle_hashes(array('a','b','c','a','b'), 3) AS h3,
         |       graft_shingle_hashes(array('a','b'), 3) AS short,
@@ -27,7 +25,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("agrees with the composed HOF formulation on corpus documents") {
-    GraftFunctions.register(spark)
     val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
     val toks = TextStats.tokens(col("text"))
     val composed = array_sort(array_distinct(
@@ -40,7 +37,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("graft_simhash agrees with the composed HOF simhash on corpus documents") {
-    GraftFunctions.register(spark)
     val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
     val toks = TextStats.tokens(col("text"))
     val both = docs.select(
@@ -60,7 +56,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("graft_minhash_sig matches the per-shingle md5 double-hash family") {
-    GraftFunctions.register(spark)
     // Direct Scala reference: shingles of ("x","y","z","x") with n=2 are
     // "x y", "y z", "z x"; h1/h2 = 28-bit hex substrings of md5.
     def h12(s: String): (Long, Long) = {
@@ -82,7 +77,6 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("graft_sorted_intersect equals array_intersect on sorted arrays") {
-    GraftFunctions.register(spark)
     val df = spark.sql(
       """SELECT graft_sorted_intersect(array(1L,3L,5L,7L), array(3L,4L,5L,9L)) AS a,
         |       graft_sorted_intersect(array(1L,2L), CAST(array() AS ARRAY<LONG>)) AS b,

@@ -104,7 +104,6 @@ class SketchesSpec extends AnyFunSuite {
 
   test("kmv kmin: k smallest distinct values, partitioning-independent, exact below k") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val rnd = new scala.util.Random(11)
     // Duplicates on purpose: the sketch is over the distinct set.
     val vals = Seq.fill(5000)(rnd.nextLong().abs % 100000L)
@@ -124,7 +123,6 @@ class SketchesSpec extends AnyFunSuite {
 
   test("kmv rejects a BIGINT-range k at analysis (no silent Int truncation)") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     // 2^32 + 64 would silently wrap to 64 under intValue(); 2^32 would
     // wrap to 0 and crash tasks. Both must fail ANALYSIS, not runtime.
     for (bad <- Seq(1L << 32, (1L << 32) + 64L, 0L, -5L)) {
@@ -139,7 +137,6 @@ class SketchesSpec extends AnyFunSuite {
 
   test("kmv estimator: within 4/sqrt(k) of the true cardinality on a seeded corpus") {
     import spark.implicits._
-    graft.functions.GraftFunctions.register(spark)
     val k = 64
     val n = 20000
     // Hash a synthetic id space through the SAME md5-slice family as the
@@ -155,7 +152,6 @@ class SketchesSpec extends AnyFunSuite {
 
   test("kmv aggregate plans map-side partials (ObjectHashAggregate partial + final)") {
     import org.apache.spark.sql.functions.{col, lit}
-    graft.functions.GraftFunctions.register(spark)
     val plan = Tables.events(spark, sf)
       .groupBy(col("event_type"))
       .agg(call_function("graft_kmv_kmin",
@@ -172,7 +168,6 @@ class SketchesSpec extends AnyFunSuite {
 
   test("q_kmv_distinct: ALL row equals the sketch of the full event stream (merge exactness)") {
     import org.apache.spark.sql.functions.{col, lit}
-    graft.functions.GraftFunctions.register(spark)
     val rows = Sketches.qKmvDistinct(spark, sf).collect()
     val all = rows.find(_.getString(0) == "ALL").get
     // Re-sketch the ungrouped stream directly: merging per-type sketches

@@ -3,17 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (Spark startup is ~5s; suites
-  * reuse it via getOrCreate). */
+  * reuse it). Eight cores: the plan-shape specs assume 8 shuffle
+  * partitions. */
 object SparkTestSession {
-  lazy val get: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[8]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val get: SparkSession = Session.local(8)
 }

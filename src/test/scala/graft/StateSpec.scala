@@ -86,25 +86,10 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
-  /** The src/main files whose code (comments skipped) contains `token`. */
-  private def callers(token: String): Set[String] = {
-    import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator.asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
-    assert(files.nonEmpty)
-    files.filter { f =>
-      java.nio.file.Files.readAllLines(f).asScala.exists { l =>
-        val code = l.trim
-        !code.startsWith("*") && !code.startsWith("/*") &&
-          code.split("//", 2)(0).contains(token)
-      }
-    }.map(_.getFileName.toString).toSet
-  }
-
   test("localCheckpoint is called in src/main only by State and its two named exceptions") {
     // Sketches: a lazy memo (no construction-time job); GreedyRddKernel:
     // RDD round state.
-    assert(callers("localCheckpoint(") === Set("State.scala", "Sketches.scala", "GreedyRddKernel.scala"))
+    assert(SourceScan.callers("localCheckpoint(") === Set("State.scala", "Sketches.scala", "GreedyRddKernel.scala"))
   }
 
   test("persist and cache are called in src/main only by the named RDD and graph sites") {
@@ -112,7 +97,7 @@ class StateSpec extends AnyFunSuite {
     // one persisted frame; the GraphX and GreedyRdd kernels' RDD rounds.
     val expected = Set("GraphOps.scala", "Similarity.scala", "GraphXKernel.scala",
       "GreedyRddKernel.scala")
-    assert(callers(".persist(") ++ callers(".cache()") === expected)
+    assert(SourceScan.callers(".persist(") ++ SourceScan.callers(".cache()") === expected)
   }
 
   for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {

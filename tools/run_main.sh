@@ -20,5 +20,4 @@ for p in sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
 done
 MAIN="$1"; shift
 exec java -cp "$CP" $OPENS \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   -Xmx"${SPARK_DRIVER_MEM:-16g}" "$MAIN" "$@"
