@@ -47,11 +47,11 @@ import graft.ops.State
   *   - [[Strategy.GreedyRdd]] and [[Strategy.GraphX]] delegate their rounds
   *     to [[GreedyRddKernel]] and [[GraphXKernel]].
   *
-  * Driver-side control flow stays a plain Scala loop — same stance as GraphX
-  * `Pregel` (SURVEY.md §4): only counts cross to the driver. Every round's
-  * state and every frame a round builds and re-reads goes through
-  * [[State.loop]] (SURVEY.md §7 risk 4): the checkpoint truncates lineage,
-  * and its own action observes the counts the loop control reads.
+  * The Jp rounds run on [[State.iterate]], the engine's one round loop —
+  * same stance as GraphX `Pregel` (SURVEY.md §4): only counts cross to the
+  * driver. Every round's state and every frame a round re-reads lands as a
+  * [[State]] (SURVEY.md §7 risk 4): the checkpoint truncates lineage, and
+  * its own action observes the counts the loop control reads.
   */
 object ColoringKernel {
 
@@ -154,7 +154,8 @@ object ColoringKernel {
       : Option[Colored] = {
 
     // A delegating kernel hands its final colors to `land` and frees its
-    // last round once they are copied into a State.
+    // last round once they are copied into a State. A one-shot land: the
+    // delegated rounds are RDD rounds, not State rounds.
     def land(df: DataFrame): State = State.loop(appendIsolated(df, extraVertices))
     def colored(result: Option[(State, Int)]): Option[Colored] =
       result.map { case (st, rounds) => Colored(st, k, rounds) }
@@ -186,12 +187,13 @@ object ColoringKernel {
     // Every state's checkpoint observes progress and feasibility together
     // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
     // the loop control runs no job of its own.
-    def observed(df: DataFrame, metrics: Column*): State = State.loop(df, Seq(
+    val progress = Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
-      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible")) ++ metrics: _*)
-
-    var state = observed(roundZero(edges, extraVertices), max(col("deg")).as("maxDeg"))
-    val k = palette(state("maxDeg").toInt)
+      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"))
+    // Round 0 lands once, with Δ for the palette.
+    val zero = State.loop(roundZero(edges, extraVertices),
+      progress :+ max(col("deg")).as("maxDeg"): _*)
+    val k = palette(zero("maxDeg").toInt)
 
     // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
     // mask, updated incrementally from each round's newly-colored delta
@@ -199,36 +201,15 @@ object ColoringKernel {
     // full regather with collect_set arrays.
     val useMask = k <= 64
 
-    var rounds = 0
-    var uncolored = state("uncolored")
-    var failed = false
-
-    while (uncolored > 0 && !failed) {
-      rounds += 1
-      if (rounds > maxRounds) { failed = true }
-      else {
-        val roundStates = scala.collection.mutable.ArrayBuffer.empty[State]
-        val next =
-          if (useMask) jpRoundMask(edges, state.df, k, roundStates, uncolored)
-          else jpRound(edges, state.df, k, roundStates)
-        // The next state lands before anything of this round is freed.
-        val landed = observed(next)
-        roundStates.foreach(_.release())
-        state.release()
-        state = landed
-        if (state("infeasible") > 0) failed = true
-        else if (state("uncolored") >= uncolored) {
-          // No progress. Jp always colors the top-priority node of every
-          // uncolored component, so a round with uncolored candidates
-          // commits ≥1 color and this only fires as the bounded-round
-          // backstop (risk 6).
-          failed = rounds >= maxRounds
-        }
-        uncolored = state("uncolored")
-      }
+    // Jp colors the top-priority vertex of every uncolored component each
+    // round, so only an infeasible palette or the round cap (SURVEY.md §7
+    // risk 6) leaves vertices uncolored.
+    val (state, rounds) = State.iterate(zero, maxRounds, progress: _*)(
+        (st, _) => st("uncolored") == 0 || st("infeasible") > 0) { (st, _, round) =>
+      if (useMask) jpRoundMask(edges, st.df, k, round, st("uncolored"))
+      else jpRound(edges, st.df, k, round)
     }
-
-    if (failed) { state.release(); None }
+    if (state("uncolored") > 0 || state("infeasible") > 0) { state.release(); None }
     else Some(Colored(state, k, rounds))
   }
 
@@ -341,19 +322,16 @@ object ColoringKernel {
     * Semantics identical to [[jpRound]] — colors are permanent, so the
     * incrementally-grown mask always equals the regathered set. */
   private[graft] def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
-      roundStates: scala.collection.mutable.ArrayBuffer[State],
-      uncolored: Long): DataFrame = {
+      round: State.Round, uncolored: Long): DataFrame = {
     // Candidate sides carry exactly `uncolored` rows, and the beaten ids
     // are a subset of them — row-bound broadcast hints keep the rival probe
     // exchange-free on the E side past AQE's byte threshold (see
     // applyWithMask's note; same ×42 shuffle signal) and the admit's
     // candidate side unshuffled.
     val side = maybeBroadcast(_: DataFrame, uncolored)
-    val cand = State.loop(state.filter(col("color") === -1)
+    val cand = round.land(state.filter(col("color") === -1)
       .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand")))
-    roundStates += cand
-    val updates = State.loop(admit(cand.df, beaten(e, cand.df, side), side))
-    roundStates += updates
+    val updates = round.land(admit(cand.df, beaten(e, cand.df, side), side))
     applyWithMask(e, state, updates.df, uncolored)
   }
 
@@ -368,7 +346,7 @@ object ColoringKernel {
     * commit; every conflict component commits its top vertex, so progress
     * is guaranteed. No free color in [0,k) → the -3 infeasible sentinel. */
   private[graft] def jpRound(e: DataFrame, state: DataFrame, k: Int,
-      roundStates: scala.collection.mutable.ArrayBuffer[State]): DataFrame = {
+      round: State.Round): DataFrame = {
     // Pass A: first-fit candidate per uncolored vertex.
     val used = e
       .join(state.filter(col("color") >= 0)
@@ -385,9 +363,7 @@ object ColoringKernel {
       .join(used, col("id") === col("src"), "left_outer")
       .select(col("id"), col("deg"),
         call_function("graft_first_fit", col("used_arr"), lit(k)).as("cand"))
-    val candState = State.loop(cand)
-    roundStates += candState
-    val candM = candState.df
+    val candM = round.land(cand).df
 
     // Pass B: keep the candidate iff no same-candidate neighbor beats it.
     val updates = admit(candM, beaten(e, candM))

@@ -723,29 +723,20 @@ object GraphOps {
     // shared [[triangleMemberEdges]] explode the support agg groups by.
     val tri = triangleTriples(spark, sfDir)
     def memberEdges(t: DataFrame): DataFrame = triangleMemberEdges(t)
-    // DELTA peel over an IMMUTABLE worklist (r9 rework; the original loop
-    // re-aggregated all 3T member edges, semi-joined the whole worklist
-    // and re-MATERIALIZED all T triples EVERY round — ~266 s CPU / 488 MB
-    // shuffle at sf0.1, on a graph whose peel only removes ~0.05% of
-    // edges): supports are aggregated once, then maintained incrementally.
-    // The triple table is never rewritten — it stays the persisted session
-    // memo, and each round's work is (a) three MAP-SIDE broadcast semi
-    // joins to find triangles touching this round's removed edges, (b)
-    // three broadcast anti joins against the ACCUMULATED removed set so a
-    // triangle killed in an earlier round isn't subtracted twice, and (c)
-    // a small-side aggregate of the freshly-dead triangles' member edges
-    // subtracted from the support table. Per-round shuffle is proportional
-    // to the DELTA (dead triangles + the E-sized support update), never to
-    // T; the T-row scan in (a) is map-side over the cached memo.
-    // The E-sized base support table is aggregated and materialized ONCE
-    // per SESSION (the [[triangleSupport]] memo — q_edge_jaccard reads the
-    // same table, so the 3T-row groupBy never runs twice); rounds touch
-    // only DELTA-sized state: lostAcc (edges that lost ≥ 1 triangle so
-    // far, ≤ 3·cumulative-dead rows) and removedAll (peeled edges).
-    // Current supports are always the lazy map-side expression
-    // supp0 − lostAcc (lostAcc rides build-side), so no round rewrites or
-    // re-shuffles the E-row table — the earlier formulations paid either a
-    // 3T re-aggregation (full rescan) or an E-row checkpoint per round.
+    // DELTA peel over an IMMUTABLE worklist: supports are aggregated once,
+    // then maintained incrementally. The triple table is never rewritten —
+    // it stays the session memo, and each round's work is (a) three
+    // broadcast semi joins to find triangles touching this round's removed
+    // edges, (b) three broadcast anti joins against the ACCUMULATED removed
+    // set so a triangle killed in an earlier round isn't subtracted twice,
+    // and (c) a small-side aggregate of the freshly-dead triangles' member
+    // edges. Per-round shuffle is proportional to the DELTA, never to T.
+    // The E-sized base support table is the session's [[triangleSupport]]
+    // memo (q_edge_jaccard reads the same table); rounds touch only
+    // DELTA-sized state: lostAcc (edges that lost ≥ 1 triangle so far,
+    // ≤ 3·cumulative-dead rows) and removedAll (peeled edges). Current
+    // supports are always the lazy map-side expression supp0 − lostAcc
+    // (lostAcc rides build-side), so no round rewrites the E-row table.
     // Monotonicity makes the final filter self-contained: supports only
     // fall, so "supp0 − lostAcc ≥ K−2 at the fixpoint" is exactly the
     // truss edge set — removed edges need no separate exclusion.
@@ -756,88 +747,83 @@ object GraphOps {
           Seq("a", "b"), "left_outer")
         .select(col("a"), col("b"),
           (col("supp") - coalesce(col("lost"), lit(0L))).as("supp"))
+    // Its own loop, not State.iterate: a round carries lostAcc and the
+    // peeled set beside its frontier. The result reads supp0 and lostAcc
+    // only, so the peeled sets are released at the end, and lostAcc too
+    // if the peel fails.
     var lostAcc: State = null
     // removedAll stays a LAZY flat union of the per-round removedNew
-    // checkpoints (the q_random_walk accumulation pattern): its consumers
-    // only ever build broadcast hash relations from it, so re-
-    // checkpointing the growing union each round bought nothing.
+    // checkpoints: its consumers only ever build broadcast hash relations
+    // from it, so re-checkpointing the growing union bought nothing.
     val peeled = scala.collection.mutable.ArrayBuffer.empty[State]
     def removedAll: DataFrame = peeled.map(_.df).reduce(_.union(_))
     def nAll: Long = peeled.map(_.rows).sum
     var removedNew = State.loop(
       supp0.filter(col("supp") < TRUSS_K - 2).select(col("a"), col("b")))
-    var rounds = 0
-    while (removedNew.rows > 0 && rounds < 64) {
-      rounds += 1
-      val remB = Broadcasts.maybeBroadcast(removedNew.df, removedNew.rows)
-      def onEdge(t: DataFrame, edges: DataFrame, x: Column, y: Column,
-          joinType: String): DataFrame =
-        t.join(edges, x === col("a") && y === col("b"), joinType)
-      // Bloom pre-filter over this round's removed edges (r14, guide §3.2):
-      // ONE scan of the memo with three codegen bloom probes replaces the
-      // previous THREE full-scan broadcast semi joins (each of which also
-      // carried the pushed-down anti joins — 4 hash probes × 3T rows per
-      // round regardless of delta size; measured 7–35 s CPU per round at
-      // sf0.1). False positives only add rows to the small candidate set;
-      // the EXACT semi joins below re-verify every candidate, so `touch`
-      // is bit-identical to the join-only formulation. The prefilter is
-      // GATED on nNew (r15; r14 verdict item 5): the filter is a driver
-      // literal shipped with every task binary, so past the item cap the
-      // round falls back to the exact semi joins over the full memo.
-      // Materialized (r15): the count sizes the coalesce — the candidate
-      // set is delta-sized after round 1, and the three semi-join branches
-      // below each re-scan it, so per-task plan-instantiation overhead
-      // (~85 ms CPU/task measured) multiplies across 3 × parent-partition-
-      // count tasks otherwise. Past the gate the candidates ARE the memo,
-      // which is read directly instead of copied.
-      val candidates = trussRoundCandidates(tri, removedNew.df, removedNew.rows)
-      val candState = if (candidates eq tri) None else Some(State.loop(candidates))
-      val cand = candState.fold(tri)(_.df)
-      // Triangles touching a newly-removed edge (3 broadcast semi joins —
-      // now over the bloom-filtered CANDIDATES, not the full memo; the
-      // distinct on the (p,q,r) key collapses triangles matched via two
-      // removed edges), minus those already dead from an earlier round's
-      // removal.
-      val touch = onEdge(cand, remB, col("p"), col("q"), "left_semi")
-        .union(onEdge(cand, remB, col("p"), col("r"), "left_semi"))
-        .union(onEdge(cand, remB, col("q"), col("r"), "left_semi"))
-        .distinct()
-      // `dead` has exactly one consumer (the lostNew aggregate), so it is
-      // NOT checkpointed separately — it rides inside lostAcc's one job
-      // (r14: one fewer driver job per round; the peel's wall is
-      // job-latency-bound once the scans are bloom-filtered).
-      val dead =
-        if (peeled.isEmpty) touch
-        else {
-          val allB = Broadcasts.maybeBroadcast(removedAll, nAll)
-          onEdge(onEdge(onEdge(touch, allB, col("p"), col("q"), "left_anti"),
-            allB, col("p"), col("r"), "left_anti"),
-            allB, col("q"), col("r"), "left_anti")
-        }
-      val lostNew = memberEdges(dead).groupBy(col("a"), col("b"))
-        .agg(count(lit(1)).as("lost"))
-      val lostNext = State.loop(
-        if (lostAcc == null) lostNew
-        else lostAcc.df.union(lostNew).groupBy(col("a"), col("b"))
-          .agg(sum(col("lost")).as("lost")))
-      candState.foreach(_.release())
-      if (lostAcc != null) lostAcc.release()
-      lostAcc = lostNext
-      peeled += removedNew
-      // Newly-below-threshold edges: map-side over supp0 with both small
-      // tables build-side (an edge already removed stays below threshold,
-      // so the anti join against removedAll isolates this round's drops).
-      removedNew = State.loop(
-        currentSupp(lostAcc)
-          .filter(col("supp") < TRUSS_K - 2)
-          .join(Broadcasts.maybeBroadcast(removedAll, nAll),
-            Seq("a", "b"), "left_anti")
-          .select(col("a"), col("b")))
-    }
-    if (removedNew.rows > 0) sys.error(
-      "qTruss: peel did not reach a fixpoint within 64 rounds — not a k-truss")
-    // The result reads supp0 and lostAcc only; the peeled sets are done.
-    (peeled += removedNew).foreach(_.release())
+    var candState: Option[State] = None
+    try State.releaseOnFailure(Option(lostAcc) ++ candState) {
+      var rounds = 0
+      while (removedNew.rows > 0 && rounds < 64) {
+        rounds += 1
+        val remB = Broadcasts.maybeBroadcast(removedNew.df, removedNew.rows)
+        def onEdge(t: DataFrame, edges: DataFrame, x: Column, y: Column,
+            joinType: String): DataFrame =
+          t.join(edges, x === col("a") && y === col("b"), joinType)
+        // Bloom pre-filter over this round's removed edges:
+        // ONE scan of the memo with three codegen bloom probes instead of
+        // three full-scan broadcast semi joins. False positives only add
+        // rows to the small candidate set; the EXACT semi joins below
+        // re-verify every candidate, so `touch` is bit-identical to the
+        // join-only formulation. The prefilter is GATED on nNew: the
+        // filter is a driver literal shipped with every task binary, so
+        // past the item cap the round reads the memo directly. The
+        // candidates are landed because the three semi-join branches
+        // below each re-scan them, and the count sizes their layout.
+        val candidates = trussRoundCandidates(tri, removedNew.df, removedNew.rows)
+        candState = if (candidates eq tri) None else Some(State.loop(candidates))
+        val cand = candState.fold(tri)(_.df)
+        // Triangles touching a newly-removed edge (the distinct on the
+        // (p,q,r) key collapses triangles matched via two removed edges),
+        // minus those already dead from an earlier round's removal.
+        val touch = onEdge(cand, remB, col("p"), col("q"), "left_semi")
+          .union(onEdge(cand, remB, col("p"), col("r"), "left_semi"))
+          .union(onEdge(cand, remB, col("q"), col("r"), "left_semi"))
+          .distinct()
+        // `dead` has exactly one consumer (the lostNew aggregate), so it
+        // rides inside lostAcc's one job.
+        val dead =
+          if (peeled.isEmpty) touch
+          else {
+            val allB = Broadcasts.maybeBroadcast(removedAll, nAll)
+            onEdge(onEdge(onEdge(touch, allB, col("p"), col("q"), "left_anti"),
+              allB, col("p"), col("r"), "left_anti"),
+              allB, col("q"), col("r"), "left_anti")
+          }
+        val lostNew = memberEdges(dead).groupBy(col("a"), col("b"))
+          .agg(count(lit(1)).as("lost"))
+        val lostNext = State.loop(
+          if (lostAcc == null) lostNew
+          else lostAcc.df.union(lostNew).groupBy(col("a"), col("b"))
+            .agg(sum(col("lost")).as("lost")))
+        candState.foreach(_.release())
+        candState = None
+        if (lostAcc != null) lostAcc.release()
+        lostAcc = lostNext
+        peeled += removedNew
+        // Newly-below-threshold edges: map-side over supp0 with both small
+        // tables build-side (an edge already removed stays below
+        // threshold, so the anti join against removedAll isolates this
+        // round's drops).
+        removedNew = State.loop(
+          currentSupp(lostAcc)
+            .filter(col("supp") < TRUSS_K - 2)
+            .join(Broadcasts.maybeBroadcast(removedAll, nAll),
+              Seq("a", "b"), "left_anti")
+            .select(col("a"), col("b")))
+      }
+      if (removedNew.rows > 0) sys.error(
+        "qTruss: peel did not reach a fixpoint within 64 rounds — not a k-truss")
+    } finally (peeled += removedNew).foreach(_.release())
     currentSupp(lostAcc).filter(col("supp") >= TRUSS_K - 2)
       .orderBy(col("a"), col("b"))
   }
@@ -968,44 +954,37 @@ object GraphOps {
     * web-scale data pipeline uses to isolate densely-connected regions
     * (link-spam cores, community seeds) before expensive per-node work.
     *
-    * Scale shape (round-7 delta peel): degrees are aggregated ONCE, then
-    * MAINTAINED by subtraction — each round the static cached edge list is
-    * probed through a single just-removed membership join (selective:
-    * output is only the edges INTO this round's removals, which shrinks
-    * fast after round 1) and the V-sized (vid, deg) state absorbs the
-    * per-neighbor removal counts. That replaces the previous shape's two
-    * survivor membership joins + full re-aggregation of every surviving
-    * edge per round, and the fixpoint needs NO final pass: the maintained
-    * degree IS the in-subgraph degree (each removed vertex is subtracted
-    * from each neighbor exactly once, in the round after it drops, so
+    * Scale shape (delta peel): degrees are aggregated ONCE, then
+    * MAINTAINED by subtraction — each round probes the V-row adjacency
+    * memo with this round's removed vertices only, and the V-sized
+    * (vid, deg) state absorbs the per-neighbor removal counts. The
+    * fixpoint needs NO final pass: the maintained degree IS the
+    * in-subgraph degree (each removed vertex is subtracted from each
+    * neighbor exactly once, in the round after it drops, so
     * deg(v) = |N(v) ∩ active| is an invariant). The removal set's exact
     * count is already on the driver (it drives the fixpoint test), so it
     * doubles as the broadcast-size signal: a huge round-1 removal set
-    * degrades to a shuffle join on dst, later rounds broadcast a shrinking
-    * set. State localCheckpointed per round (V rows). DuckDB oracle: the
+    * degrades to a shuffle join, later rounds broadcast a shrinking set.
+    * The rounds run on [[State.iterate]] (V-row state). DuckDB oracle: the
     * peel unrolled as chained CTEs with a convergence-guard (fixpoint must
     * be reached within the unrolled rounds or the oracle errors loudly —
     * the round count is measured at a scale, not a semantic constant). */
   def qKcore(spark: SparkSession, sfDir: String): DataFrame = {
-    // r14: initial degrees and the per-round removal probe both ride the
-    // shared V-row [[kernelAdjacency]] memo. A round's delta is the
-    // neighbor multiset of THIS round's removed vertices — joining the
-    // broadcast removed set into the array table scans |V| rows and
-    // explodes only matched neighborhoods (Σ deg(removed) ≤ E telescoped
-    // across ALL rounds, symmetric graph), where the previous shape
-    // re-scanned the E-row pair list once per round.
+    // Initial degrees and the per-round removal probe both ride the shared
+    // V-row [[kernelAdjacency]] memo. A round's delta is the neighbor
+    // multiset of THIS round's removed vertices — joining the broadcast
+    // removed set into the array table scans |V| rows and explodes only
+    // matched neighborhoods (Σ deg(removed) ≤ E telescoped across ALL
+    // rounds, symmetric graph).
     val (adj, _) = kernelAdjacencyWithCount(spark, sfDir)
-    // Each state checkpoint OBSERVES its own below-threshold count (the
-    // q_hits metric pattern): the next round's removal count is already
-    // on the driver when the checkpoint lands, so the peel runs one job
-    // per round instead of two (count + checkpoint).
-    def stateWithBelow(df: DataFrame): State =
-      State.loop(df, sum(when(col("deg") < KCORE_K, 1L).otherwise(0L)).as("nb"))
-    var cur = stateWithBelow(
-      adj.select(col("src").as("vid"), size(col("nbrs")).cast("long").as("deg")))
-    var rounds = 0
-    while (cur("nb") != 0L && rounds < 64) {
-      rounds += 1
+    // Each state checkpoint OBSERVES its own below-threshold count, so the
+    // next round's removal count is known when the checkpoint lands: one
+    // job per round.
+    val below = sum(when(col("deg") < KCORE_K, 1L).otherwise(0L)).as("nb")
+    val (core, _) = State.iterate(
+        State.loop(adj.select(col("src").as("vid"),
+          size(col("nbrs")).cast("long").as("deg")), below),
+        64, below)((cur, _) => cur("nb") == 0L) { (cur, _, _) =>
       // Lazy: evaluated inside the next checkpoint's broadcast build over
       // the already-checkpointed state — no standalone job.
       val removed = cur.df.filter(col("deg") < KCORE_K).select(col("vid"))
@@ -1015,19 +994,19 @@ object GraphOps {
           col("src") === col("rv"))
         .select(explode(col("nbrs")).as("src"))
         .groupBy(col("src")).agg(count(lit(1)).as("rem_n"))
-      val next = stateWithBelow(cur.df.filter(col("deg") >= KCORE_K)
+      cur.df.filter(col("deg") >= KCORE_K)
         .join(delta, col("vid") === col("src"), "left")
         .select(col("vid"),
-          (col("deg") - coalesce(col("rem_n"), lit(0L))).as("deg")))
-      cur.release()
-      cur = next
+          (col("deg") - coalesce(col("rem_n"), lit(0L))).as("deg"))
     }
     // Mirror the oracle's convergence-guard policy: the DuckDB replay errors
     // loudly when its unrolled rounds don't reach the fixpoint, so a
     // round-capped engine run must not silently return a non-fixpoint set.
-    if (cur("nb") != 0L) sys.error(
-      "qKcore: peel did not reach a fixpoint within 64 rounds — not a k-core")
-    cur.df.select(col("vid").as("id"), col("deg").as("core_deg"))
+    if (core("nb") != 0L) {
+      core.release()
+      sys.error("qKcore: peel did not reach a fixpoint within 64 rounds — not a k-core")
+    }
+    core.df.select(col("vid").as("id"), col("deg").as("core_deg"))
       .orderBy(col("id"))
   }
 
@@ -1133,43 +1112,27 @@ object GraphOps {
       e.agg(coalesce(max(greatest(col("src"), col("dst"))), lit(0L)))
         .head().getLong(0))
     val wide = maxId > LP_MAX_L || vBound >= (1L << 31)
-    // One dst-hash repartition up front makes ALL [[LP_ROUNDS]] rounds
-    // exchange-free: hashpartitioning(dst) satisfies both per-round aggs
-    // (ClusteredDistribution(dst,label) and (dst)), and the label join
-    // streams the edge side, so after this single E-shuffle the rounds
-    // move nothing across partitions but 64-ish-byte label broadcasts
-    // (r7: the previous shape shuffled E-sized (dst,label) partials
-    // EVERY round — ~56 MB/round at sf0.1, the top CPU line). The copy
-    // is persisted only for the loop: each round's labels are eagerly
-    // materialized, so nothing references it afterwards.
-    // r15: the round cache is a RAW checkpoint with a count-adaptive
-    // layout, not a dst-partitioned columnar persist. Each round's agg
-    // then pays one exchange — but ONLY of its map-side PARTIAL-AGG
-    // output (the combine runs before the shuffle), while the columnar
-    // cache paid an O(E) encode at build and an O(E) decode EVERY round
-    // (measured: q_label_prop 47.4 -> 18.4 s CPU at sf0.1 on the swap,
-    // re-exchange included). The upfront E-shuffle disappears too.
-    val eDst = State.memo(e)
+    // The rounds re-read the edges through one State.memo with the
+    // row-count layout. The checkpoint records no hash layout, so each
+    // round's aggregate exchanges its map-side partial-aggregate output
+    // only.
+    val edgeMemo = State.memo(e)
     try {
-      // Round 1 in closed form (r14): labels₀(v) = v is the identity, so
-      // every neighbor label of dst is distinct — all candidate counts are
+      // Round 1 in closed form: labels₀(v) = v is the identity, so every
+      // neighbor label of dst is distinct — all candidate counts are
       // exactly 1 and the (count, smallest-label) argmax degenerates to
-      // min(neighbor id). One exchange-free E-scan agg replaces the
-      // join + double-agg round over an all-distinct (dst,label) table,
-      // the most expensive round of the loop precisely because nothing
-      // collapses yet (isolated sf0.1: round 1 was 28.8 s CPU vs 16.0 /
-      // 2.8 / 1.3 s for rounds 2-4). Exact for the wide path too: the
-      // argmax is over (c=1, label), packing never enters.
-      var labels = State.loop(
-        eDst.df.groupBy(col("dst")).agg(min(col("src")).as("label"))
+      // min(neighbor id). One E-scan agg replaces the join + double-agg
+      // round over an all-distinct (dst,label) table, the most expensive
+      // round of the loop precisely because nothing collapses yet. Exact
+      // for the wide path too: the argmax is over (c=1, label), packing
+      // never enters.
+      val first = State.loop(
+        edgeMemo.df.groupBy(col("dst")).agg(min(col("src")).as("label"))
           .select(col("dst").as("id"), col("label")))
-      for (_ <- 2 to LP_ROUNDS) {
-        val next = State.loop(labelPropRound(eDst.df, labels.df, vBound, wide))
-        labels.release()
-        labels = next
-      }
-      labels.df
-    } finally eDst.release()
+      State.iterate(first, LP_ROUNDS - 1)((_, _) => false) { (labels, _, _) =>
+        labelPropRound(edgeMemo.df, labels.df, vBound, wide)
+      }._1.df
+    } finally edgeMemo.release()
   }
 
   /** q_modularity: Newman modularity of the q_label_prop communities —
@@ -1231,14 +1194,13 @@ object GraphOps {
     // The modal-label argmax packs (count, smallest-label tiebreak) into
     // ONE BIGINT: max(struct) has no mutable hash buffer, so Spark plans
     // it as a SortAggregate that SORTS the candidate table every round —
-    // a plain long max keeps both aggs HashAggregates (r7; with the
-    // dst-partitioned edge stream the whole round is then one in-stage
-    // pass: no exchange, no sort). Packing is exact: packed =
-    // c·2³² + (2³²−1 − label), monotone in (c asc, label desc-negated),
-    // so max(packed) ≡ max(struct(c, −label)). Headroom c < 2³¹ and
-    // label < 2³² is PROVEN plan-time by [[labelPropOver]] (labels ⊆
-    // initial ids, c ≤ vBound); past it the rounds run `wide` — the same
-    // monotone packing in DECIMAL(38,0) 64-bit lanes, still a
+    // a plain long max keeps both aggs HashAggregates: each exchanges
+    // only its map-side partial output, and nothing sorts. Packing is
+    // exact: packed = c·2³² + (2³²−1 − label), monotone in (c asc, label
+    // desc-negated), so max(packed) ≡ max(struct(c, −label)). Headroom
+    // c < 2³¹ and label < 2³² is PROVEN plan-time by [[labelPropOver]]
+    // (labels ⊆ initial ids, c ≤ vBound); past it the rounds run `wide` —
+    // the same monotone packing in DECIMAL(38,0) 64-bit lanes, still a
     // HashAggregate (fixed-width decimal has a mutable hash buffer),
     // trading ~2× agg-buffer width for unbounded-id correctness. The
     // in-plan asserts stay as defense-in-depth on each path's own bound.
@@ -1367,10 +1329,10 @@ object GraphOps {
 
   /** Past-crossover execution of [[qConnectedComponents]]: declarative
     * min-label rounds with a pointer-doubling shortcut, run to a detected
-    * fixpoint. Each round is (1) a neighbor-min gather — the dst-hash
-    * pre-partitioned edge stream joins the (conditionally broadcast)
-    * label table on src and aggregates `min(label)` per dst exchange-free,
-    * exactly the [[pagerankDfRounds]] round shape — then (2) one
+    * fixpoint. Each round is (1) a neighbor-min gather — the edge memo
+    * (one [[State.memo]] with the row-count layout) joins the
+    * (conditionally broadcast) label table on src and aggregates
+    * `min(label)` per dst, the [[rankRounds]] round shape — then (2) one
     * pointer-doubling hop `l(v) ← l(l(v))` (a V-sized self-join; labels
     * are always vertex ids, so the parent lookup always hits), which cuts
     * convergence from diameter rounds to O(log d) on high-diameter
@@ -1382,7 +1344,7 @@ object GraphOps {
     * (the shortcut can never undo a propagation step: both are
     * non-increasing). The fixpoint test rides the round's already-
     * materialized V-sized table, so each round is two V-bounded jobs
-    * against one static cached E-scan. */
+    * over the edge memo. */
   private[graft] def ccDfRounds(spark: SparkSession, e: DataFrame,
       vBound: Long): DataFrame = {
     val labels = ccLabelsDf(spark, e, vBound).df
@@ -1400,117 +1362,103 @@ object GraphOps {
     * a caller that copies the labels out releases the state. */
   private[graft] def ccLabelsDf(spark: SparkSession, e: DataFrame,
       vBound: Long): State = {
-    // Raw count-adaptive checkpoint (r15 — see the labelPropOver round
-    // cache note: per-round exchanges carry partial-agg output only).
-    val eDst = State.memo(e)
+    val edgeMemo = State.memo(e)
     try {
-      var labels = State.loop(
+      val first = State.loop(
         e.select(col("src").as("id")).distinct()
           .select(col("id"), col("id").as("lbl")))
-      var changed = 1L
-      while (changed > 0) {
-        val nbrMin = eDst.df.join(
+      // No cap: labels only fall, bounded below by each component's min id.
+      State.iterate(first, Int.MaxValue,
+          sum(when(col("lbl") =!= col("old_lbl"), 1L).otherwise(0L)).as("changed"))(
+          (labels, rounds) => rounds > 0 && labels("changed") == 0) { (labels, _, round) =>
+        val nbrMin = edgeMemo.df.join(
             Broadcasts.maybeBroadcast(
               labels.df.select(col("id").as("cid"), col("lbl").as("clbl")), vBound),
             col("src") === col("cid"))
           .groupBy(col("dst")).agg(min(col("clbl")).as("nm"))
-        val hop = State.loop(
+        val hop = round.land(
           labels.df.join(nbrMin, col("id") === col("dst"), "left_outer")
             .select(col("id"), col("lbl").as("old_lbl"),
               least(col("lbl"), coalesce(col("nm"), col("lbl"))).as("hop_lbl")))
         val parent = hop.df.select(col("id").as("pid"), col("hop_lbl").as("plbl"))
-        // The changed-label count rides the checkpoint: no count job.
-        val next = State.loop(
-          hop.df.join(Broadcasts.maybeBroadcast(parent, vBound),
-              col("hop_lbl") === col("pid"))
-            .select(col("id"), col("old_lbl"), col("plbl").as("lbl")),
-          sum(when(col("lbl") =!= col("old_lbl"), 1L).otherwise(0L)).as("changed"))
-        changed = next("changed")
-        hop.release()
-        labels.release()
-        labels = next
-      }
-      labels
-    } finally eDst.release()
+        hop.df.join(Broadcasts.maybeBroadcast(parent, vBound),
+            col("hop_lbl") === col("pid"))
+          .select(col("id"), col("old_lbl"), col("plbl").as("lbl"))
+      }._1
+    } finally edgeMemo.release()
   }
 
   /** q_sssp: BFS hop distances from a deterministic seed (the minimum
     * vertex id) over the kernel graph — the classic single-source
     * shortest-path analytic in its unweighted form, completing the
     * standard graph-analytics set alongside pagerank/CC/triangles/k-core.
-    * Level-synchronous frontier rounds over the shared V-row
-    * [[kernelAdjacency]] memo: each round joins the (conditionally
-    * broadcast) frontier into the array table, explodes ONLY the matched
-    * neighborhoods, aggregates the next layer, and anti-joins the last
-    * two layers (undirected two-frontier settled check). BFS settles each
-    * vertex once, so TOTAL candidate volume across all rounds is O(E) —
-    * the frontier sweeps the graph once — and per-round scan work is
-    * O(V) array rows, not O(E) pair rows. Output: (id, dist) for every
+    * The one-seed run of [[bfsLayers]]. Output: (id, dist) for every
     * vertex reachable from the seed, ordered by id. */
   def qSssp(spark: SparkSession, sfDir: String): DataFrame = {
-    // Frontier-driven rounds over the V-row adjacency memo (r14, guide
-    // §2.4): the stream side is |V| array rows — only frontier-matched
-    // neighborhoods explode — instead of re-scanning the E-row pair list
-    // every round (Θ(diameter·E) scans for Θ(E) useful output). The memo
-    // also supplies the min-id seed (a V-row scan, never the E-row pair
-    // list); broadcast bounds are the exact per-round frontier counts.
+    // The adjacency memo also supplies the min-id seed: a V-row scan,
+    // never the E-row pair list.
     val (adj, _) = kernelAdjacencyWithCount(spark, sfDir)
     val seed = adj.agg(min(col("src"))).head().getLong(0)
-    val first = State.loop(
-      spark.range(1).select(lit(seed).as("id"), lit(0L).as("dist")))
-    // TWO-FRONTIER settled check (r14, guide §2.4 "remove shuffles/work
-    // outright"): on an UNDIRECTED graph a neighbor of a distance-r
-    // vertex has distance in {r−1, r, r+1}, so a candidate generated
-    // from frontier r is already settled iff it sits in frontier r or
-    // r−1 — the anti join's build side is two layer tables, not the
-    // whole accumulated distance table. The previous shape rebuilt a
-    // GROWING O(V)-row broadcast every round AND re-checkpointed the
-    // accumulated union per round (O(rounds·V) checkpoint writes); now
-    // each layer is checkpointed once and flat-unioned at the end (the
-    // q_random_walk accumulation pattern). Result rows are identical:
-    // BFS layers don't depend on how the settled check is implemented.
-    val layers = scala.collection.mutable.ArrayBuffer(first.df)
-    var frontier = first.df
-    var prev: DataFrame = null
-    var reached = first.rows
-    var prevReached = 0L
-    while (reached > 0) {
-      val check =
-        if (prev == null) frontier.select(col("id"))
-        else frontier.select(col("id")).union(prev.select(col("id")))
-      val next = State.loop(
-        ssspRound(adj, frontier, reached, check, reached + prevReached))
-      // Layers are never released: the returned union reads them.
-      if (next.rows > 0) layers += next.df else next.release()
-      prev = frontier
-      prevReached = reached
-      frontier = next.df
-      reached = next.rows
-    }
-    layers.reduce(_.union(_)).orderBy(col("id"))
+    bfsLayers(adj, spark.range(1)
+        .select(lit(seed).as("seed"), lit(seed).as("id"), lit(0L).as("dist")))
+      .select(col("id"), col("dist"))
+      .orderBy(col("id"))
   }
 
-  /** One BFS round of [[qSssp]]: explode the frontier-matched
-    * neighborhoods of the V-row adjacency, min-reduce per candidate,
-    * anti-join the last two layers (two-frontier settled check).
-    * Broadcast bounds are the EXACT per-round counts the loop already
-    * holds on the driver (r15; r14 verdict item 6) — the previous |V|
-    * proxy was conservative-correct but degraded every round to a
-    * shuffle join at |V| past the row cap even when the frontier itself
-    * was a handful of rows. Factored out so BroadcastBounds tests can
-    * pin hint survival at a tiny row cap with a small frontier. */
-  private[graft] def ssspRound(adj: DataFrame, frontier: DataFrame,
+  /** Keyed BFS: hop distances `(seed, id, dist)` from every row of `seeds`
+    * (`(seed, id = seed, dist = 0)`) over the V-row adjacency `adj`
+    * `(src, nbrs)`, as the union of its layers. Level-synchronous frontier
+    * rounds ([[bfsRound]]): only frontier-matched neighborhoods explode,
+    * so per-round scan work is O(V) array rows, and BFS settles each
+    * (seed, vertex) once, so TOTAL candidate volume across all rounds is
+    * O(seeds·E). Each layer is landed once and the layers are
+    * flat-unioned at the end.
+    *
+    * Its own loop, not [[State.iterate]]: every layer is kept, because the
+    * layers are the output. They are released only if a round fails. */
+  private def bfsLayers(adj: DataFrame, seeds: DataFrame): DataFrame = {
+    val layers = scala.collection.mutable.ArrayBuffer.empty[State]
+    State.releaseOnFailure(layers) {
+      var frontier = State.loop(seeds)
+      layers += frontier
+      var prev: State = null
+      while (frontier.rows > 0) {
+        val check =
+          if (prev == null) frontier.df.select(col("seed"), col("id"))
+          else frontier.df.select(col("seed"), col("id"))
+            .union(prev.df.select(col("seed"), col("id")))
+        val next = State.loop(bfsRound(adj, frontier.df, frontier.rows, check,
+          frontier.rows + (if (prev == null) 0L else prev.rows)))
+        if (next.rows > 0) layers += next else next.release()
+        prev = frontier
+        frontier = next
+      }
+    }
+    layers.map(_.df).reduce(_.union(_))
+  }
+
+  /** One [[bfsLayers]] round: explode the frontier-matched neighborhoods
+    * of the V-row adjacency, min-reduce per (seed, candidate), and
+    * anti-join `check`, the last two layers' `(seed, id)` keys. On an
+    * undirected graph a neighbor of a distance-r vertex has distance in
+    * {r−1, r, r+1}, so a candidate is already settled iff it sits in one
+    * of those two layers. Broadcast bounds are the exact counts the loop
+    * already holds: `reached` (the frontier) and `checkCount`, so a small
+    * frontier stays broadcast at any |V|. */
+  private[graft] def bfsRound(adj: DataFrame, frontier: DataFrame,
       reached: Long, check: DataFrame, checkCount: Long): DataFrame =
     adj.join(
         Broadcasts.maybeBroadcast(
-          frontier.select(col("id").as("fid"), col("dist").as("fd")),
+          frontier.select(col("seed").as("fs"), col("id").as("fid"),
+            col("dist").as("fd")),
           reached),
         col("src") === col("fid"))
-      .select(explode(col("nbrs")).as("dst"), col("fd"))
-      .groupBy(col("dst")).agg((min(col("fd")) + lit(1L)).as("nd"))
+      .select(col("fs"), explode(col("nbrs")).as("dst"), col("fd"))
+      .groupBy(col("fs"), col("dst"))
+      .agg((min(col("fd")) + lit(1L)).as("nd"))
       .join(Broadcasts.maybeBroadcast(check, checkCount),
-        col("dst") === col("id"), "left_anti")
-      .select(col("dst").as("id"), col("nd").as("dist"))
+        col("fs") === col("seed") && col("dst") === col("id"), "left_anti")
+      .select(col("fs").as("seed"), col("dst").as("id"), col("nd").as("dist"))
 
   /** Number of BFS sources for [[qCloseness]] — fixed, deterministic (the
     * K lowest vertex ids), so the oracle can name the same seed set. */
@@ -1524,77 +1472,19 @@ object GraphOps {
     * landmark set (or estimate via sampled seeds — same machinery, more
     * seeds).
     *
-    * Scale shape: the multi-source run is the [[qSssp]] frontier template
-    * with a composite (seed, id) state key — the shared V-row
-    * [[kernelAdjacency]] memo serves every seed's rounds (only matched
-    * neighborhoods explode), and the per-(seed, vertex) settle-once
-    * contract bounds TOTAL candidate volume at O(K·E) across all rounds
-    * (not per round). The settled check anti-joins the last two layers
-    * (two-frontier rule), broadcast on their exact counts.
+    * Scale shape: one [[bfsLayers]] run with all K seeds, keyed by
+    * (seed, id), over the shared V-row [[kernelAdjacency]] memo.
     * Determinism: closeness divides two exact BIGINTs in pinned order —
     * bit-identical on both engines, no rounding needed. */
   def qCloseness(spark: SparkSession, sfDir: String): DataFrame = {
-    // Frontier-driven rounds over the V-row adjacency memo (r14 — see
-    // [[qSssp]]): per round the stream side is |V| array rows and only
-    // frontier-matched neighborhoods explode, so candidate volume
-    // telescopes to K·E across all rounds instead of re-scanning the
-    // E-row pair list once per (diameter) round. The memo also supplies
-    // the seed set: adj has one row per distinct vertex, so the K lowest
-    // ids read off a V-row scan, not an E-row distinct (r14: 7.7 s CPU
-    // at sf0.1). Broadcast bounds are the exact per-round frontier
-    // counts (the K·|E| proxy crossed the broadcast row cap at the r12
-    // 100× leg; the K·|V| bound still degraded every round at huge |V|).
+    // adj has one row per distinct vertex, so the K lowest ids read off a
+    // V-row scan, not an E-row distinct.
     val (adj, _) = kernelAdjacencyWithCount(spark, sfDir)
     val seeds = adj.select(col("src"))
       .orderBy(col("src")).limit(CLOSENESS_SOURCES)
       .select(col("src").as("seed"), col("src").as("id"),
         lit(0L).as("dist"))
-    val first = State.loop(seeds)
-    // TWO-FRONTIER settled check, per seed (r14 — see [[qSssp]]): the
-    // kernel graph is undirected, so a (seed, v) candidate generated in
-    // round r can only be settled at per-seed distance r−1 or r — the
-    // anti join builds over the last two LAYERS instead of the whole
-    // accumulated K·V distance table, and layers are flat-unioned once
-    // at the end instead of re-checkpointing the growing union per
-    // round. Identical output: per-seed BFS layers are unchanged.
-    val layers = scala.collection.mutable.ArrayBuffer(first.df)
-    var frontier = first.df
-    var prev: DataFrame = null
-    var reached = first.rows
-    var prevReached = 0L
-    while (reached > 0) {
-      val check =
-        if (prev == null) frontier.select(col("seed"), col("id"))
-        else frontier.select(col("seed"), col("id"))
-          .union(prev.select(col("seed"), col("id")))
-      val next = State.loop(
-        adj.join(
-            // Exact per-round frontier count as the broadcast bound (r15;
-            // r14 verdict item 6) — not the K·|V| upper bound, which
-            // degrades every round to a shuffle join at |V| past the row
-            // cap even when the frontier is tiny.
-            Broadcasts.maybeBroadcast(
-              frontier.select(col("seed").as("fs"), col("id").as("fid"),
-                col("dist").as("fd")),
-              reached),
-            col("src") === col("fid"))
-          .select(col("fs"), explode(col("nbrs")).as("dst"), col("fd"))
-          .groupBy(col("fs"), col("dst"))
-          .agg((min(col("fd")) + lit(1L)).as("nd"))
-          .join(
-            Broadcasts.maybeBroadcast(check, reached + prevReached),
-            col("fs") === col("seed") && col("dst") === col("id"),
-            "left_anti")
-          .select(col("fs").as("seed"), col("dst").as("id"),
-            col("nd").as("dist")))
-      // Layers are never released: the returned aggregate reads them.
-      if (next.rows > 0) layers += next.df else next.release()
-      prev = frontier
-      prevReached = reached
-      frontier = next.df
-      reached = next.rows
-    }
-    val dist = layers.reduce(_.union(_))
+    val dist = bfsLayers(adj, seeds)
     // n_reached excludes the seed itself (dist 0 contributes nothing to
     // the sum); seeds come from the edge stream, so total_dist ≥ 1 and
     // the division is total.
@@ -1646,6 +1536,9 @@ object GraphOps {
     sb.toString
   }
 
+  /** Fixed-point rank scale of [[qPagerank]] and [[qPpr]]. */
+  private val RANK_SCALE = 1000000000000L
+
   /** q_pagerank: 10 PageRank iterations over the kernel graph via GraphX
     * `aggregateMessages`, in INTEGER arithmetic — ranks are scaled by 1e12
     * and contributions use truncating division, so every round is exact and
@@ -1678,18 +1571,17 @@ object GraphOps {
     * per-round fixed cost — no Catalyst planning per round). */
   private def pagerankGraphX(spark: SparkSession, sfDir: String): DataFrame = {
     import spark.implicits._
-    val SCALE = 1000000000000L
     val base = graft.color.GraphXKernel
       .prepareCached(spark, sfDir, kernelEdges(spark, sfDir))
     var g = base.outerJoinVertices(base.outDegrees)((_, _, d) =>
-      (d.getOrElse(0), SCALE)).cache()
+      (d.getOrElse(0), RANK_SCALE)).cache()
     val intermediates = scala.collection.mutable.ArrayBuffer(g)
     var i = 0
     while (i < 10) {
       val contribs = g.aggregateMessages[Long](
         t => t.sendToDst(t.srcAttr._2 / t.srcAttr._1), _ + _)
       g = g.outerJoinVertices(contribs)((_, attr, c) =>
-        (attr._1, 15L * SCALE / 100 + 85L * c.getOrElse(0L) / 100)).cache()
+        (attr._1, 15L * RANK_SCALE / 100 + 85L * c.getOrElse(0L) / 100)).cache()
       intermediates += g
       i += 1
     }
@@ -1718,45 +1610,45 @@ object GraphOps {
   }
 
   /** The SAME 10-round integer recurrence as declarative DataFrame rounds —
-    * the past-crossover execution of [[qPagerank]], on the [[labelPropOver]]
-    * template: one dst-hash partition of the edge stream up front makes
-    * every round's contribution aggregate exchange-free on the E side (the
-    * rank table rides in as a row-bound broadcast), so per-round traffic
-    * has NO vertex-cut replication term — the 30× probe measured GraphX
-    * message bytes growing ~2√P with edge partitions while this shape's
-    * stays flat. Arithmetic is the identical fixed-point recurrence
-    * (truncating `div`, Long sums — order-independent), so ranks are
+    * the past-crossover execution of [[qPagerank]]: [[rankRounds]] with
+    * r₀ = SCALE and teleport 15·SCALE/100 on every vertex. Ranks are
     * BIT-IDENTICAL to the GraphX path and the oracle replay. */
   private[graft] def pagerankDfRounds(spark: SparkSession, e: DataFrame,
-      vBound: Long): DataFrame = {
-    val SCALE = 1000000000000L
-    val eDst = State.memo(e)
+      vBound: Long): DataFrame =
+    rankRounds(e, e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .select(col("src").as("id"), lit(RANK_SCALE).as("r"), col("deg"),
+        lit(15L * RANK_SCALE / 100).as("tele")), vBound)
+
+  /** The 10 integer rank rounds shared by [[pagerankDfRounds]] and
+    * [[pprOver]]: r'(v) = tele(v) + (85·Σ r(u) div deg(u)) div 100, from an
+    * initial `(id, r, deg, tele)` frame. Each round joins the V-sized rank
+    * table into the edge memo (one [[State.memo]] with the row-count
+    * layout) as a row-bound broadcast and aggregates the contributions per
+    * dst, so per-round traffic has NO vertex-cut replication term — the
+    * 30× probe measured GraphX message bytes growing ~2√P with edge
+    * partitions while this shape's stays flat. Truncating `div` and Long
+    * sums are order-independent, so every round is exact. Top-10 by
+    * (rank desc, id). */
+  private def rankRounds(e: DataFrame, init: DataFrame, vBound: Long): DataFrame = {
+    val edgeMemo = State.memo(e)
     try {
-      var ranks = State.loop(
-        e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .select(col("src").as("id"), lit(SCALE).as("r"), col("deg")))
-      for (_ <- 1 to 10) {
-        val contribs = eDst.df.join(
+      State.iterate(State.loop(init), 10)((_, _) => false) { (ranks, _, _) =>
+        val contribs = edgeMemo.df.join(
             Broadcasts.maybeBroadcast(
               ranks.df.select(col("id").as("cid"), expr("r div deg").as("contrib")),
               vBound),
             col("src") === col("cid"))
           .groupBy(col("dst"))
           .agg(sum(col("contrib")).as("c"))
-        val next = State.loop(
-          ranks.df.select(col("id"), col("deg"))
-            .join(contribs, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              (lit(15L * SCALE / 100) +
-                expr("(85 * coalesce(c, 0)) div 100")).as("r"),
-              col("deg")))
-        ranks.release()
-        ranks = next
-      }
-      ranks.df.select(col("id"), col("r").as("rank_e12"))
+        ranks.df.select(col("id"), col("deg"), col("tele"))
+          .join(contribs, col("id") === col("dst"), "left_outer")
+          .select(col("id"),
+            (col("tele") + expr("(85 * coalesce(c, 0)) div 100")).as("r"),
+            col("deg"), col("tele"))
+      }._1.df.select(col("id"), col("r").as("rank_e12"))
         .orderBy(col("rank_e12").desc, col("id").asc)
         .limit(10)
-    } finally eDst.release()
+    } finally edgeMemo.release()
   }
 
   /** [[qPpr]] seed-set size: teleportation is restricted to the
@@ -1772,10 +1664,8 @@ object GraphOps {
     * relevance analytic (co-purchase neighborhoods around the seed parts
     * here). Top-10 by (rank desc, id).
     *
-    * Scale shape: identical to the proven [[pagerankDfRounds]] template —
-    * one dst-hash partition of the edge stream up front, per-round
-    * contribution aggregates exchange-free on the E side, the V-sized rank
-    * table riding in as a conditional broadcast. Integer arithmetic keeps
+    * Scale shape: the [[rankRounds]] that [[pagerankDfRounds]] runs, with
+    * r₀ and the teleport term on the seeds only. Integer arithmetic keeps
     * every round exact and order-independent (the determinism that makes
     * the query oracle-checkable); headroom: total mass is bounded by
     * ~(|S|+1)·SCALE — tighter than global PageRank's V·SCALE, so the
@@ -1792,48 +1682,24 @@ object GraphOps {
     * integer recurrence. */
   private[graft] def pprOver(spark: SparkSession, e: DataFrame,
       vBound: Long): DataFrame = {
-    val SCALE = 1000000000000L
-    val tele = 15L * SCALE / 100 / PPR_SEEDS
-    val eDst = State.memo(e)
-    try {
-      val base = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-      val seeds = base.select(col("src")).orderBy(col("src"))
-        .limit(PPR_SEEDS).select(col("src").as("sid"))
-      var ranks = State.loop(
-        base.join(broadcast(seeds), col("src") === col("sid"), "left_outer")
-          .select(col("src").as("id"),
-            when(col("sid").isNotNull, lit(SCALE)).otherwise(lit(0L)).as("r"),
-            col("deg"), col("sid").isNotNull.as("is_seed")))
-      for (_ <- 1 to 10) {
-        val contribs = eDst.df.join(
-            Broadcasts.maybeBroadcast(
-              ranks.df.select(col("id").as("cid"), expr("r div deg").as("contrib")),
-              vBound),
-            col("src") === col("cid"))
-          .groupBy(col("dst"))
-          .agg(sum(col("contrib")).as("c"))
-        val next = State.loop(
-          ranks.df.select(col("id"), col("deg"), col("is_seed"))
-            .join(contribs, col("id") === col("dst"), "left_outer")
-            .select(col("id"),
-              (when(col("is_seed"), lit(tele)).otherwise(lit(0L)) +
-                expr("(85 * coalesce(c, 0)) div 100")).as("r"),
-              col("deg"), col("is_seed")))
-        ranks.release()
-        ranks = next
-      }
-      ranks.df.select(col("id"), col("r").as("rank_e12"))
-        .orderBy(col("rank_e12").desc, col("id").asc)
-        .limit(10)
-    } finally eDst.release()
+    val base = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+    val seeds = base.select(col("src")).orderBy(col("src"))
+      .limit(PPR_SEEDS).select(col("src").as("sid"))
+    val seeded = col("sid").isNotNull
+    rankRounds(e,
+      base.join(broadcast(seeds), col("src") === col("sid"), "left_outer")
+        .select(col("src").as("id"),
+          when(seeded, lit(RANK_SCALE)).otherwise(lit(0L)).as("r"), col("deg"),
+          when(seeded, lit(15L * RANK_SCALE / 100 / PPR_SEEDS)).otherwise(lit(0L))
+            .as("tele")),
+      vBound)
   }
 
   /** DuckDB oracle for [[qPpr]]: the personalized integer recurrence
     * unrolled as 10 chained CTEs (`//` = truncating division on
     * non-negative BIGINTs, matching Scala `Long./` and Spark `div`). */
   def pprOracleSql(iters: Int = 10): String = {
-    val SCALE = 1000000000000L
-    val tele = 15L * SCALE / 100 / PPR_SEEDS
+    val tele = 15L * RANK_SCALE / 100 / PPR_SEEDS
     val sb = new StringBuilder
     sb.append(s"WITH $kernelEdgesCtes,\n")
     sb.append("verts AS MATERIALIZED (SELECT DISTINCT src AS id FROM e),\n")
@@ -1841,7 +1707,7 @@ object GraphOps {
     sb.append(s"seeds AS MATERIALIZED (SELECT id FROM verts ORDER BY id LIMIT $PPR_SEEDS),\n")
     sb.append(
       s"""r0 AS MATERIALIZED (
-         |  SELECT v.id, CAST(CASE WHEN s.id IS NOT NULL THEN $SCALE ELSE 0 END
+         |  SELECT v.id, CAST(CASE WHEN s.id IS NOT NULL THEN $RANK_SCALE ELSE 0 END
          |    AS BIGINT) AS r
          |  FROM verts v LEFT JOIN seeds s ON s.id = v.id)""".stripMargin)
     for (i <- 1 to iters) sb.append(
@@ -1931,7 +1797,7 @@ object GraphOps {
     * position-indexed into a sorted array by an exact integer hash; no
     * floats anywhere. */
   def qRandomWalk(spark: SparkSession, sfDir: String): DataFrame = {
-    // The sorted V-row neighbor table is the shared session memo (r14):
+    // The sorted V-row neighbor table is the shared session memo:
     // q_sssp/q_closeness read the same relation, so the E-sized
     // collect_list shuffle runs once per session.
     val nbrs = kernelAdjacency(spark, sfDir)
@@ -1939,28 +1805,27 @@ object GraphOps {
       .filter(pmod(col("src"), lit(WALK_START_MOD)) === 0L)
       .select(col("src").as("walk_id"), lit(0).as("step"),
         col("src").as("node"))
-    // Only the FRONTIER materializes per round; the accumulated output is
-    // a flat union of the already-materialized steps (re-materializing
-    // the growing union each round would be O(rounds²) checkpoints).
-    val first = State.loop(starts)
-    val nStarts = first.rows
-    val steps = scala.collection.mutable.ArrayBuffer(first.df)
-    var cur: DataFrame = first.df
-    for (s <- 0 until WALK_STEPS) {
-      val h = conv(substring(md5(concat(col("walk_id").cast("string"),
-        lit(":"), lit(s).cast("string"))), 1, 15), 16, 10).cast("long")
-      val next = State.loop(
-        nbrs.join(
-            Broadcasts.maybeBroadcast(
-              cur.select(col("walk_id"), col("node")), nStarts),
-            col("node") === col("src"))
-          .select(col("walk_id"), lit(s + 1).as("step"),
-            element_at(col("nbrs"),
-              (h % size(col("nbrs"))).cast("int") + 1).as("node"))).df
-      steps += next
-      cur = next
+    // Its own loop, not State.iterate: every step is kept, because the
+    // steps are the output (a flat union of the landed steps). They are
+    // released only if a round fails.
+    val steps = scala.collection.mutable.ArrayBuffer.empty[State]
+    State.releaseOnFailure(steps) {
+      steps += State.loop(starts)
+      val nStarts = steps.head.rows
+      for (s <- 0 until WALK_STEPS) {
+        val h = conv(substring(md5(concat(col("walk_id").cast("string"),
+          lit(":"), lit(s).cast("string"))), 1, 15), 16, 10).cast("long")
+        steps += State.loop(
+          nbrs.join(
+              Broadcasts.maybeBroadcast(
+                steps.last.df.select(col("walk_id"), col("node")), nStarts),
+              col("node") === col("src"))
+            .select(col("walk_id"), lit(s + 1).as("step"),
+              element_at(col("nbrs"),
+                (h % size(col("nbrs"))).cast("int") + 1).as("node")))
+      }
     }
-    steps.reduce(_.union(_)).orderBy(col("walk_id"), col("step"))
+    steps.map(_.df).reduce(_.union(_)).orderBy(col("walk_id"), col("step"))
   }
 
   /** DuckDB oracle for [[qRandomWalk]]: the same walk recurrence unrolled
@@ -2006,32 +1871,26 @@ object GraphOps {
     * ranking is preserved; both engines' `>>` agree). Top-10 by
     * (authority desc, id).
     *
-    * Scale shape: the directed edge list is partitioned ONCE per join side
-    * (dst-hash for the authority gather, src-hash for the hub gather) and
-    * persisted; each of the [[HITS_ROUNDS]] rounds joins the V-sized score
-    * table in as a conditional broadcast and aggregates exchange-free on
-    * the E side — the [[pagerankDfRounds]] template with two alternating
+    * Scale shape: the directed edge list is one [[State.memo]] with the
+    * row-count layout, read by both gather directions; each of the
+    * [[HITS_ROUNDS]] rounds joins the V-sized score table in as a
+    * conditional broadcast and aggregates per dst (authorities) and per
+    * src (hubs) — the [[rankRounds]] shape with two alternating
     * directions. Per-round shift maxima ride on the gather's OWN
-    * materializing action as an `Observation` metric (a CollectMetrics
-    * node over the aggregated frame — map-side max, no extra job), and the
-    * shift itself is a lazy projection applied where the scores are next
-    * consumed, so each half-round is exactly ONE job: 2 jobs/round vs the
-    * r10 shape's 6 (2 gathers + 2 shiftOf driver aggs + 2 shifted
-    * re-materializes). Values are bit-identical — the observed max is the
-    * same pre-shift max the driver agg read, and the shifted projection
-    * feeds the same downstream join. Integer headroom: values ≤ 2²¹
-    * post-shift, so a gather sum stays < 2⁶³ for in/out-degree < 2⁴¹. */
+    * materializing action as an `Observation` metric (map-side max, no
+    * extra job), and the shift itself is a lazy projection applied where
+    * the scores are next consumed, so each half-round is exactly ONE job.
+    * Integer headroom: values ≤ 2²¹ post-shift, so a gather sum stays
+    * < 2⁶³ for in/out-degree < 2⁴¹. */
   def qHits(spark: SparkSession, sfDir: String): DataFrame = {
-    // r15: ONE raw count-adaptive checkpoint serves both gather
-    // directions. The r14 shape kept a dst- and a src-partitioned
-    // columnar copy so each direction's groupBy was exchange-free, but
-    // the columnar cache's O(E) decode EVERY round dwarfed the exchange
-    // it saved — the per-round agg exchange only carries map-side
-    // PARTIAL-AGG output (see the labelPropOver round cache note). One
-    // copy also drops the second E-sized cache build outright.
     val ef = State.memo(fwdPairs(spark, sfDir).distinct())
-    try {
-      val verts = State.loop(
+    // Its own loop, not State.iterate: a round lands the a/h pair, and the
+    // output reads both. They are released only if a round fails.
+    var verts: State = null
+    var h: State = null
+    var a: State = null
+    try State.releaseOnFailure(Seq(verts, h, a).filter(_ != null)) {
+      verts = State.loop(
         ef.df.select(col("src").as("id"))
           .union(ef.df.select(col("dst").as("id"))).distinct())
       val vBound = verts.rows
@@ -2039,8 +1898,7 @@ object GraphOps {
       // reads 0 (matches the old coalesce(max, 0)).
       def shiftFrom(st: State): Int =
         math.max(java.lang.Long.toBinaryString(st("m")).length - 21, 0)
-      var h = State.loop(verts.df.select(col("id"), lit(1048576L).as("h")))
-      var a: State = null
+      h = State.loop(verts.df.select(col("id"), lit(1048576L).as("h")))
       // sa/sh: shifts PENDING on a/h — applied lazily where next consumed.
       var sa = 0
       var sh = 0
@@ -2085,6 +1943,7 @@ object GraphOps {
         .limit(10)
     } finally ef.release()
   }
+
 
   /** DuckDB oracle for [[qHits]]: the same integer HITS recurrence
     * unrolled, with the [[pcaPowerOracleSql]] shift equivalence

@@ -1,5 +1,7 @@
 package graft.ops
 
+import scala.collection.mutable.ArrayBuffer
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, GraftInternalRows, Observation}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -13,7 +15,8 @@ import org.apache.spark.sql.functions.{count, lit}
   * The engine's one way to materialize iteration state (the reference's
   * per-round persist/unpersist pair, `coloring.py:126,219`) and every eager
   * one-shot memo, [[SessionCache]] entries included. Built by
-  * [[State.loop]] or [[State.memo]], which share one body:
+  * [[State.loop]] or [[State.memo]], which share one body; round loops
+  * land their states through [[State.iterate]]:
   *
   *  - an `Observation` counts the rows, plus any extra metric columns the
   *    caller passes, and rides the eager `localCheckpoint` job — loop
@@ -84,6 +87,62 @@ object State {
   def memo(df: DataFrame): State =
     materialize(df, Nil) { (ck, rdd, parts) =>
       if (parts < rdd.getNumPartitions) ck.coalesce(parts) else ck
+    }
+
+  /** The frames one round of [[iterate]] lands besides its next state.
+    * Each lives until that next state has landed. */
+  final class Round private[graft] () {
+    private val held = ArrayBuffer.empty[State]
+
+    /** Land `df` through [[loop]] for the rest of this round. */
+    def land(df: DataFrame, metrics: Column*): State = {
+      val st = loop(df, metrics: _*)
+      held += st
+      st
+    }
+
+    private[graft] def landed: Seq[State] = held.toSeq
+
+    private[graft] def release(): Unit = held.foreach(_.release())
+  }
+
+  /** The one round loop (the reference's per-round persist/unpersist
+    * loop, `coloring.py:126,219`; the GraphX `Pregel` stance that only
+    * observed counts leave the cluster). Before every round, the first
+    * included, `done(state, rounds)` reads the current state's observed
+    * metrics; the loop also stops after `cap` rounds. A round lands `step(state, rounds,
+    * round)` through [[loop]] with `metrics`, then releases the frames it
+    * landed through `round`, then the previous state. `init` is the
+    * caller's one-shot land (it may observe metrics of its own, such as
+    * Jp's Δ) and is owned from the call on: if `done`, a step or a landing
+    * throws, everything held is released and the failure rethrown. Returns
+    * the final state, which the caller owns, and the number of rounds run. */
+  def iterate(init: State, cap: Int, metrics: Column*)(done: (State, Int) => Boolean)(
+      step: (State, Int, Round) => DataFrame): (State, Int) = {
+    var cur = init
+    var rounds = 0
+    releaseOnFailure(Seq(cur)) {
+      while (!done(cur, rounds) && rounds < cap) {
+        val round = new Round
+        val next = try loop(step(cur, rounds, round), metrics: _*)
+          finally round.release()
+        cur.release()
+        cur = next
+        rounds += 1
+      }
+      (cur, rounds)
+    }
+  }
+
+  /** `body`; if it throws, the states in `held` (read at the throw) are
+    * released and the failure rethrown. For loops that keep several states
+    * of their own. */
+  def releaseOnFailure[A](held: => Iterable[State])(body: => A): A =
+    try body
+    catch {
+      case t: Throwable =>
+        held.foreach(_.release())
+        throw t
     }
 
   private def materialize(df: DataFrame, metrics: Seq[Column])(

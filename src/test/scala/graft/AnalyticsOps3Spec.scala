@@ -12,7 +12,7 @@ import graft.ops.{EventAnalytics, Relational}
   * fixed-point truncation and the IEEE fold order of the cosine path. */
 class AnalyticsOps3Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   private def wsTokens(text: String): Array[String] =
     text.split("\\s+").filter(_.nonEmpty)

@@ -29,7 +29,7 @@ import graft.ops.{Broadcasts, GraphOps}
   */
 class BoundsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   /** assert_true failures surface as a SparkException (or runtime subclass)
     * whose message chain carries the assert text — walk the causes. */
@@ -148,18 +148,18 @@ class BoundsSpec extends AnyFunSuite {
     val adj = Seq((0L, Array(1L, 2L)), (1L, Array(0L)), (2L, Array(0L)),
       (3L, Array(4L)), (4L, Array(3L)), (5L, Array(6L)), (6L, Array(5L)))
       .toDF("src", "nbrs")
-    val frontier = Seq((0L, 0L)).toDF("id", "dist")
-    val check = frontier.select(col("id"))
+    val frontier = Seq((0L, 0L, 0L)).toDF("seed", "id", "dist")
+    val check = frontier.select(col("seed"), col("id"))
     def nHints(d: org.apache.spark.sql.DataFrame): Int =
       d.queryExecution.analyzed.collect {
         case h: org.apache.spark.sql.catalyst.plans.logical.ResolvedHint => h
       }.size
     spark.conf.set(Broadcasts.MaxRowsKey, "3") // < |V| = 7, > frontier = 1
     try {
-      val round = graft.ops.GraphOps.ssspRound(adj, frontier, 1L, check, 1L)
+      val round = graft.ops.GraphOps.bfsRound(adj, frontier, 1L, check, 1L)
       assert(nHints(round) == 2,
         s"frontier + settled-check hints must survive a small frontier at |V| over the cap, got ${nHints(round)}")
-      val over = graft.ops.GraphOps.ssspRound(adj, frontier, 4L, check, 4L)
+      val over = graft.ops.GraphOps.bfsRound(adj, frontier, 4L, check, 4L)
       assert(nHints(over) == 0,
         s"hints must drop for a frontier past the cap, got ${nHints(over)}")
     } finally spark.conf.unset(Broadcasts.MaxRowsKey)

@@ -11,7 +11,7 @@ import graft.llm.{Similarity, TextStats}
   * re-computation exactly, including every fixed-point truncation. */
 class CurationOps2Spec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -13,7 +13,7 @@ import graft.ops.Linkage
   * verifying qBpeTrain's two-pass-replace rendering of it. */
 class CurationOpsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

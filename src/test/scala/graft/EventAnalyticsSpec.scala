@@ -14,7 +14,7 @@ import graft.tables.Tables
   */
 class EventAnalyticsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   private def eventRows() =
     Tables.events(spark, sf)

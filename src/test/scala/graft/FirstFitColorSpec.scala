@@ -28,7 +28,7 @@ class FirstFitColorSpec extends AnyFunSuite {
   test("agrees with the composed built-in expression on corpus data") {
     import spark.implicits._
     val k = 8
-    val used = graft.ops.GraphOps.neighborColors(spark, "/root/testdata/sf0.001")
+    val used = graft.ops.GraphOps.neighborColors(spark, Corpus.dir("sf0.001"))
     val both = used.select(
       col("src"),
       call_function("graft_first_fit", col("neighbor_colors"), lit(k)).as("custom"),

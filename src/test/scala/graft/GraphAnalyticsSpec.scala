@@ -8,7 +8,7 @@ import graft.ops.GraphOps
   * oracle: iterative). */
 class GraphAnalyticsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   test("label propagation: vertex-complete, labels are vertex ids, collapses communities, deterministic") {
     import org.apache.spark.sql.functions._
@@ -119,7 +119,7 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     // long-lived session mixing scales reads the right scalar for each.
     val t1 = GraphOps.qTriangleCount(spark, sf).head().getLong(0)
     val entriesAfterFirst = GraphOps.triCacheEntries
-    val sfBig = "/root/testdata/sf0.01"
+    val sfBig = Corpus.dir("sf0.01")
     val t2 = GraphOps.qTriangleCount(spark, sfBig).head().getLong(0)
     assert(GraphOps.triCacheEntries === entriesAfterFirst + 1,
       "second sfDir must occupy its own cache slot")

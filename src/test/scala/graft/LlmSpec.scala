@@ -10,7 +10,7 @@ import graft.llm.{Dedup, Multimodal, Similarity, TextStats}
   * hand-computed examples, multimodal plumbing invariants. */
 class LlmSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   test("ann_recall_ivf: recall is monotone in nprobe and every variant is graded") {
     // r13 verdict item 6: the IVF probe sets are NESTED in nprobe (cells

@@ -113,7 +113,7 @@ class MultimodalCodecSpec extends AnyFunSuite {
     spark.conf.set(MediaCodec.CodecKey, "fffmpeg")
     try {
       val ex = intercept[IllegalArgumentException](
-        Multimodal.qMultimodal(spark, "/root/testdata/sf0.001"))
+        Multimodal.qMultimodal(spark, Corpus.dir("sf0.001")))
       assert(ex.getMessage.contains("fffmpeg"))
     } finally spark.conf.unset(MediaCodec.CodecKey)
   }

@@ -24,7 +24,7 @@ class OracleTypeSpec extends AnyFunSuite {
     java.nio.file.Files.writeString(json, Verify.oracleSqlJson)
     val out = new StringBuilder
     val code = Seq("python3", "tools/check_types.py",
-      "/root/testdata/sf0.001", json.toString)
+      Corpus.dir("sf0.001"), json.toString)
       .!(ProcessLogger(l => out.append(l).append('\n')))
     assert(code == 0, s"type sweep reported violations:\n$out")
     assert(out.toString.contains(s"${SparkEntry.oracleSql.size} oracles swept"),

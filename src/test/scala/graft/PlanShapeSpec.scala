@@ -10,7 +10,7 @@ import graft.ops.Relational
   * no-cartesian guarantees for the candidate-generation joins. */
 class PlanShapeSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   private def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
@@ -101,7 +101,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // Spread the source over many map tasks first: AQE splits a skewed
     // reduce partition at MAPPER boundaries, so a single-map-task scan
     // (one small parquet file) leaves nothing to split at.
-    val li = graft.tables.Tables.lineitem(s2, "/root/testdata/sf0.01")
+    val li = graft.tables.Tables.lineitem(s2, Corpus.dir("sf0.01"))
       .select(col("l_returnflag"), col("l_quantity"), col("l_orderkey"))
       .repartition(16, col("l_orderkey"))
       .drop("l_orderkey")
@@ -129,7 +129,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // the map parallelism a 100 TB scan has naturally (the gate corpus is
     // one single-row-group file = one map task = no mapper boundaries for
     // AQE to split a skewed reduce partition at).
-    val fact = graft.tables.Tables.lineitem(s2, "/root/testdata/sf0.01")
+    val fact = graft.tables.Tables.lineitem(s2, Corpus.dir("sf0.01"))
       .select(col("l_returnflag"), col("l_quantity"), col("l_orderkey"))
       .repartition(16, col("l_orderkey"))
       .drop("l_orderkey")
@@ -140,18 +140,18 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("SortMergeJoin"), s"merge hint did not pin SMJ:\n$p")
     // Threshold-invariance: identical result through the default session
     // (whatever join strategy AQE picks there).
-    val Array(base) = graft.ops.Skew.qSkewAqe(spark, "/root/testdata/sf0.01").collect()
+    val Array(base) = graft.ops.Skew.qSkewAqe(spark, Corpus.dir("sf0.01")).collect()
     assert(row === base)
   }
 
   test("salted join plans a shuffled hash join on the (key, salt) pair") {
-    val p = plan(graft.ops.Skew.qJoinSalted(spark, "/root/testdata/sf0.001"))
+    val p = plan(graft.ops.Skew.qJoinSalted(spark, Corpus.dir("sf0.001")))
     assert(p.contains("ShuffledHashJoin"), s"expected shuffled hash join:\n$p")
     assert(p.contains("_salt"), s"salt column missing from join keys:\n$p")
   }
 
   test("partitioned sink read-back prunes to the filtered partition") {
-    val df = graft.sources.SinkQueries.qWritePartitioned(spark, "/root/testdata/sf0.001")
+    val df = graft.sources.SinkQueries.qWritePartitioned(spark, Corpus.dir("sf0.001"))
     df.collect()
     val p = plan(df)
     // The parquet scan of the read-back must carry the partition filter —
@@ -163,7 +163,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("hist-quantile estimate brackets the exact median") {
     import org.apache.spark.sql.functions.{col, expr}
-    val d = "/root/testdata/sf0.001"
+    val d = Corpus.dir("sf0.001")
     val approx = graft.ops.Relational.qHistQuantile(spark, d).collect()
       .map(r => r.getString(0) -> r.getDouble(1)).toMap
     val exact = graft.tables.Tables.lineitem(spark, d)
@@ -178,7 +178,7 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("deterministic moments agree with native stddev/corr to float tolerance") {
     import org.apache.spark.sql.functions.{col, corr, stddev_samp}
-    val d = "/root/testdata/sf0.001"
+    val d = Corpus.dir("sf0.001")
     val ours = graft.ops.Relational.qStatsMoments(spark, d).collect()
       .map(r => r.getString(0) -> (r.getDouble(3), r.getDouble(4))).toMap
     val native = graft.tables.Tables.lineitem(spark, d)
@@ -197,7 +197,7 @@ class PlanShapeSpec extends AnyFunSuite {
     // per-group bounded limits (the heap-based top-k a custom physical
     // operator would otherwise provide) — the declarative plan already IS
     // the scale-correct one; this pins it against regression.
-    val d = "/root/testdata/sf0.001"
+    val d = Corpus.dir("sf0.001")
     // simTopkPlan: qSimTopk's executed plan is a memoised localCheckpoint
     // (an RDD scan) — the window shape lives in the pre-checkpoint plan.
     for (df <- Seq(graft.llm.Similarity.simTopkPlan(spark, d),
@@ -577,50 +577,47 @@ class PlanShapeSpec extends AnyFunSuite {
   /** One Jp mask round (k = 6) over `jpInput`, and its admit. A mask round
     * runs its admit inside the job that lands its updates, so the admit is
     * rebuilt here, with the round's broadcast side, on the candidates that
-    * round landed (the first frame it adds to `states`). */
+    * round landed (the first frame it lands through `round`). */
   private def jpMaskRound(e: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame,
-      states: scala.collection.mutable.ArrayBuffer[graft.ops.State]) = {
+      state: org.apache.spark.sql.DataFrame, frames: graft.ops.State.Round) = {
     import graft.color.ColoringKernel
-    val round = ColoringKernel.jpRoundMask(e, state, 6, states, 200)
-    val cand = states.head.df
+    val round = ColoringKernel.jpRoundMask(e, state, 6, frames, 200)
+    val cand = frames.landed.head.df
     val side = graft.ops.Broadcasts.maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
     (round, ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side))
   }
 
   test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
-    import scala.collection.mutable.ArrayBuffer
     import graft.color.ColoringKernel
     val (e, state) = jpInput()
-    val states = ArrayBuffer.empty[graft.ops.State]
+    val frames = new graft.ops.State.Round
     try {
       // The mask round's admit (k ≤ 64) and one regather round (k > 64). A
       // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
       // (no hash buffer for a struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
-        "mask" -> jpMaskRound(e, state, states)._2,
-        "regather" -> ColoringKernel.jpRound(e, state, 70, states))) {
+        "mask" -> jpMaskRound(e, state, frames)._2,
+        "regather" -> ColoringKernel.jpRound(e, state, 70, frames))) {
         val p = plan(round)
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
           s"$name round: beaten ids not hash-aggregated:\n$p")
         assert(!p.contains("SortAggregate"), s"$name round sorts to aggregate:\n$p")
       }
-    } finally states.foreach(_.release())
+    } finally frames.release()
   }
 
   test("a Jp mask round plans no InMemoryRelation and no SortMergeJoin") {
-    import scala.collection.mutable.ArrayBuffer
     val (e, state) = jpInput()
-    val states = ArrayBuffer.empty[graft.ops.State]
+    val frames = new graft.ops.State.Round
     try {
-      val (round, admit) = jpMaskRound(e, state, states)
+      val (round, admit) = jpMaskRound(e, state, frames)
       for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
         val p = plan(df)
         assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
           s"$name reads a columnar cache:\n$p")
         assert(!p.contains("SortMergeJoin"), s"$name plans a sort-merge join:\n$p")
       }
-    } finally states.foreach(_.release())
+    } finally frames.release()
   }
 
   test("Jp round 0 plans no join and one aggregate, with and without extra vertices") {

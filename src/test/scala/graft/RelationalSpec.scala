@@ -13,7 +13,7 @@ import graft.ops.{GraphOps, Relational}
   */
 class RelationalSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestSession.get
-  val sf = "/root/testdata/sf0.001"
+  val sf = Corpus.dir("sf0.001")
 
   private def executedPlan(df: org.apache.spark.sql.DataFrame): SparkPlan =
     df.queryExecution.executedPlan

@@ -28,9 +28,9 @@ class SessionSpec extends AnyFunSuite {
   test("a fresh session runs q_kmv_distinct (graft_kmv_kmin) with no register call") {
     val s2 = spark.newSession()
     assert(!has(s2, "graft_kmv_kmin"))
-    val got = Sketches.qKmvDistinct(s2, "/root/testdata/sf0.001").collect()
+    val got = Sketches.qKmvDistinct(s2, Corpus.dir("sf0.001")).collect()
     assert(got.nonEmpty)
-    assert(got === Sketches.qKmvDistinct(spark, "/root/testdata/sf0.001").collect())
+    assert(got === Sketches.qKmvDistinct(spark, Corpus.dir("sf0.001")).collect())
   }
 
   test("a fresh session runs a Jp search past the 64-color mask (graft_first_fit)") {

@@ -25,7 +25,7 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("agrees with the composed HOF formulation on corpus documents") {
-    val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = graft.tables.Tables.documents(spark, Corpus.dir("sf0.001"))
     val toks = TextStats.tokens(col("text"))
     val composed = array_sort(array_distinct(
       transform(TextStats.shingles(toks, 3), s => xxhash64(s))))
@@ -37,7 +37,7 @@ class ShingleHashesSpec extends AnyFunSuite {
   }
 
   test("graft_simhash agrees with the composed HOF simhash on corpus documents") {
-    val docs = graft.tables.Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = graft.tables.Tables.documents(spark, Corpus.dir("sf0.001"))
     val toks = TextStats.tokens(col("text"))
     val both = docs.select(
       call_function("graft_simhash", toks).as("custom"),

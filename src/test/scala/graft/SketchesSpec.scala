@@ -14,7 +14,7 @@ import graft.tables.Tables
   */
 class SketchesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   test("bloom join never yields false negatives and does prune") {
     val rows = Sketches.qBloomJoin(spark, sf).collect()

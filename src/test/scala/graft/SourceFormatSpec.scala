@@ -13,7 +13,7 @@ import graft.tables.Tables
   * path). */
 class SourceFormatSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
-  private val sf = "/root/testdata/sf0.001"
+  private val sf = Corpus.dir("sf0.001")
 
   private def roundTrip(format: String): Unit = {
     val dir = Files.createTempDirectory(s"graft_$format").toString

@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
@@ -86,6 +88,98 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
+  test("iterate releases a round's frames, then the previous state, only after the next state lands") {
+    import org.apache.spark.sql.functions.udf
+    val base = persisted
+    // Evaluated inside each landing job, on this JVM (local mode): the
+    // RDDs still persisted while the next state lands.
+    val probe = udf { (id: Long) =>
+      StateSpec.atLanding.add(
+        org.apache.spark.SparkContext.getOrCreate().getPersistentRDDs.keySet.toSet)
+      id
+    }
+    var read = Set.empty[Int]
+    val (last, rounds) = State.iterate(State.loop(frame(8, 1)), 3)({ (_, r) =>
+      val live = persisted -- base
+      assert(live.size === 1, s"after round $r only the new state may be live: $live")
+      assert((live & read).isEmpty)
+      assert(r == 0 || !StateSpec.atLanding.isEmpty, "the probe ran in no landing")
+      assert(StateSpec.atLanding.asScala.forall(read.subsetOf(_)),
+        s"round $r released what its landing read")
+      StateSpec.atLanding.clear()
+      false
+    }) { (st, _, round) =>
+      val stIds = persisted -- base
+      val extra = round.land(st.df.select(col("id")))
+      read = stIds ++ (persisted -- base -- stIds)
+      assert(read.size === 2)
+      st.df.join(extra.df, "id").select(probe(col("id")).as("id"))
+    }
+    try {
+      assert(rounds === 3)
+      assert(last.df.count() === 8L)
+      assert((persisted -- base).size === 1)
+    } finally last.release()
+    assert((persisted -- base).isEmpty)
+  }
+
+  test("iterate tests done before round 1 and stops at the cap") {
+    val init = State.loop(frame(10, 1))
+    var steps = 0
+    val (same, none) = State.iterate(init, 5)((_, _) => true) { (st, _, _) =>
+      steps += 1
+      st.df
+    }
+    assert(none === 0 && steps === 0 && (same eq init))
+    var tested = Vector.empty[Int]
+    val (last, rounds) = State.iterate(same, 2)({ (_, r) => tested :+= r; false }) {
+      (st, _, _) => steps += 1; st.df
+    }
+    try assert(rounds === 2 && steps === 2 && tested === Vector(0, 1, 2))
+    finally last.release()
+  }
+
+  test("a step that throws in round 2 leaves nothing persisted") {
+    val before = persisted
+    val err = intercept[IllegalStateException] {
+      State.iterate(State.loop(frame(10, 1)), 5)((_, _) => false) { (st, r, round) =>
+        round.land(st.df)
+        if (r == 1) throw new IllegalStateException("boom")
+        st.df
+      }
+    }
+    assert(err.getMessage === "boom")
+    assert((persisted -- before).isEmpty, s"left persisted: ${persisted -- before}")
+  }
+
+  test("a landing that throws in round 2 leaves the states iterate held released") {
+    import org.apache.spark.sql.functions.udf
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("boom")
+      id
+    }
+    val before = persisted
+    var held = Set.empty[Int]
+    intercept[Exception] {
+      State.iterate(State.loop(frame(10, 1)), 5)((_, _) => false) { (st, r, round) =>
+        round.land(st.df)
+        held ++= persisted -- before
+        if (r == 1) st.df.select(boom(col("id")).as("id")) else st.df
+      }
+    }
+    assert(held.size === 4, s"two states and two round frames: $held")
+    assert((persisted & held).isEmpty, s"left persisted: ${persisted & held}")
+  }
+
+  test("State.loop is called only by the one-shot lands and the named loops") {
+    // GraphOps: the triangle support memo, the initial states of the
+    // k-core, label-prop, CC and rank loops, and the loops that keep their
+    // own states (truss 4, BFS 2, random walk 2, HITS 4). ColoringKernel:
+    // the delegating kernels' final land and Jp's round 0.
+    assert(SourceScan.counts("State.loop(") ===
+      Map("GraphOps.scala" -> 17, "ColoringKernel.scala" -> 2))
+  }
+
   test("localCheckpoint is called in src/main only by State and its two named exceptions") {
     // Sketches: a lazy memo (no construction-time job); GreedyRddKernel:
     // RDD round state.
@@ -133,4 +227,9 @@ class StateSpec extends AnyFunSuite {
       assert(persisted -- base === caller, "the caller's checkpoint must stay persisted")
     } finally caller.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
   }
+}
+
+object StateSpec {
+  /** What [[StateSpec]]'s landing probe saw persisted, one set per row. */
+  val atLanding = new java.util.concurrent.ConcurrentLinkedQueue[Set[Int]]()
 }

@@ -17,7 +17,7 @@ class TablesSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
   test("events absorbs the micros-timestamp writer schema (driver corpus)") {
-    val df = Tables.events(spark, "/root/testdata/sf0.001")
+    val df = Tables.events(spark, Corpus.dir("sf0.001"))
     assert(df.schema("ts").dataType === TimestampType)
     assert(df.limit(1).count() === 1L)
   }
@@ -39,7 +39,7 @@ class TablesSpec extends AnyFunSuite {
   }
 
   test("spread repartitions a small scan and leaves shuffling plans unchanged") {
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001")
+    val docs = Tables.documents(spark, Corpus.dir("sf0.001"))
     val par = spark.sparkContext.defaultParallelism
     assert(par > 1, "the test session must have more than one core")
     // A one-file scan and a narrow projection of it are spread.
