@@ -22,9 +22,11 @@ import graft.ops.State
   *      risk 5) — into the codegen expression `graft_first_fit(used, k)`
   *      ([[graft.functions.FirstFitColor]]);
   *   2. same-color conflict resolution between adjacent candidates
-  *      (O15-O17): a vertex is beaten when a same-candidate neighbor has
-  *      higher (degree, id) priority, tested per edge pair; every vertex
-  *      not among the beaten ids (one hash distinct) keeps its candidate;
+  *      (O15-O17): of two same-candidate neighbors the one with lower
+  *      (degree, id) priority is beaten, settled once per undirected edge
+  *      (`src < dst`) on one broadcast of the live candidates keyed by id;
+  *      every vertex not among the beaten ids (one hash distinct) keeps its
+  *      candidate;
   *   3. apply the admitted colors — left join + `coalesce`
   *      (O20, `coloring.py:121-127`), and for k ≤ 64 OR each new color
   *      into the neighbors' masks; the color changes and mask gains merge
@@ -49,9 +51,12 @@ import graft.ops.State
   *
   * The Jp rounds run on [[State.iterate]], the engine's one round loop —
   * same stance as GraphX `Pregel` (SURVEY.md §4): only counts cross to the
-  * driver. Every round's state and every frame a round re-reads lands as a
-  * [[State]] (SURVEY.md §7 risk 4): the checkpoint truncates lineage, and
-  * its own action observes the counts the loop control reads.
+  * driver. Every round's state lands as a [[State]] (SURVEY.md §7 risk 4):
+  * the checkpoint truncates lineage, and its own action observes the
+  * counts the loop control reads. A k ≤ 64 round lands nothing else: its
+  * candidates are a projection of that checkpoint and its updates are read
+  * inside the plan that lands the next state. A regather round (k > 64)
+  * also lands its candidates, which sit behind an edges pass.
   */
 object ColoringKernel {
 
@@ -65,9 +70,9 @@ object ColoringKernel {
     case object GreedyRdd extends Strategy
     /** Delegate rounds to [[GraphXKernel]] (aggregateMessages message
       * passing). Same speculative first-fit + priority-admit semantics;
-      * lowest per-round fixed cost (no Catalyst planning per round) —
-      * bench-selected default for the corpus kernel queries (7 s vs 18 s
-      * for the DataFrame rounds at sf0.1). */
+      * lowest per-round fixed cost (no Catalyst planning per round) — the
+      * corpus kernel queries take it below
+      * [[graft.ops.ColorQueries.GraphxMaxEdgesKey]]. */
     case object GraphX extends Strategy
   }
 
@@ -171,6 +176,12 @@ object ColoringKernel {
     jp(spark, edges, _ => k, extraVertices, maxRounds)
   }
 
+  /** The metric every Jp state observes: `max(color) + 1`, 0 on no rows.
+    * First-fit gives a vertex color c only when colors 0..c-1 are all
+    * taken by its neighbors, so on a complete coloring the colors used
+    * are exactly {0..max} and this is their number. */
+  private val ColorsUsed = "colors_used"
+
   /** The Jp DataFrame rounds. The palette is `palette(Δ)`, with Δ the max
     * degree observed on round 0's checkpoint, so a Δ+1 run needs no
     * separate degree job. */
@@ -186,10 +197,12 @@ object ColoringKernel {
 
     // Every state's checkpoint observes progress and feasibility together
     // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
-    // the loop control runs no job of its own.
+    // the loop control runs no job of its own, and the color count
+    // minimalColors reads (ColorsUsed).
     val progress = Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
-      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"))
+      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"),
+      (max(col("color")) + 1).as(ColorsUsed))
     // Round 0 lands once, with Δ for the palette.
     val zero = State.loop(roundZero(edges, extraVertices),
       progress :+ max(col("deg")).as("maxDeg"): _*)
@@ -206,7 +219,7 @@ object ColoringKernel {
     // risk 6) leaves vertices uncolored.
     val (state, rounds) = State.iterate(zero, maxRounds, progress: _*)(
         (st, _) => st("uncolored") == 0 || st("infeasible") > 0) { (st, _, round) =>
-      if (useMask) jpRoundMask(edges, st.df, k, round, st("uncolored"))
+      if (useMask) jpRoundMask(edges, st.df, k, st("uncolored"))
       else jpRound(edges, st.df, k, round)
     }
     if (state("uncolored") > 0 || state("infeasible") > 0) { state.release(); None }
@@ -237,27 +250,37 @@ object ColoringKernel {
         .withColumn("color", lit(0)))
     }
 
-  /** The uncolored vertices that lose their candidate this round: a
-    * vertex a is beaten iff an adjacent vertex b chose the same candidate
-    * and b has higher priority, (degree desc, id asc) — the optimized
-    * reference's resolution order (coloring_optimized.py:170-172) with the
-    * id tiebreak that makes results partitioning-independent (SURVEY.md §7
-    * risk 1). Ids are unique, so this is a strict total order, and "no
-    * beating neighbor" is exactly "a beats the max-priority rival". The
-    * test runs per edge pair, so the aggregate is a distinct over a's long
-    * id: a HashAggregate, where `max(struct(deg, -id))` plans a sorting
-    * SortAggregate (no hash buffer for a struct). `cand` is (id, deg,
-    * cand); `side` wraps each of its two join sides (a broadcast hint). */
+  /** The uncolored vertices that lose their candidate this round, as
+    * `a_id`: of two adjacent vertices with the same candidate, the one with
+    * lower priority, (degree desc, id asc) — the optimized reference's
+    * resolution order (coloring_optimized.py:150-172) with the id tiebreak
+    * that makes results partitioning-independent (SURVEY.md §7 risk 1).
+    * Ids are unique, so this is a strict total order and every
+    * same-candidate pair has exactly one loser.
+    *
+    * The edge list is symmetric, so the pass reads only `src < dst` and
+    * settles each undirected edge once. Both endpoints probe ONE frame,
+    * the live candidates (`cand >= 0`; a -3 vertex is never beaten), keyed
+    * by id alone, so a broadcast `side` is built once and reused. The
+    * same-candidate test runs after the probe, as `a_cand ^ b_cand = 0`:
+    * written as an equality, Catalyst lifts it into the second join's key
+    * and hashes (cand, id) on a build side of its own. The losers go
+    * through a distinct over one long id, a HashAggregate, where
+    * `max(struct(deg, -id))` plans a sorting SortAggregate (no hash buffer
+    * for a struct). `cand` is (id, deg, cand); `side` wraps the probed
+    * frame (a broadcast hint). */
   private[graft] def beaten(e: DataFrame, cand: DataFrame,
       side: DataFrame => DataFrame = identity): DataFrame = {
-    def as(p: String): DataFrame = side(cand.select(col("id").as(s"${p}_id"),
-      col("cand").as(s"${p}_cand"), col("deg").as(s"${p}_deg")))
-    e.join(as("a"), col("src") === col("a_id"))
-      .join(as("b"), col("dst") === col("b_id"))
-      .filter(col("a_cand") >= 0 && col("a_cand") === col("b_cand") &&
-        (col("b_deg") > col("a_deg") ||
-          (col("b_deg") === col("a_deg") && col("b_id") < col("a_id"))))
-      .select(col("a_id"))
+    val live = side(cand.filter(col("cand") >= 0))
+    def end(p: String): DataFrame = live.select(col("id").as(s"${p}_id"),
+      col("deg").as(s"${p}_deg"), col("cand").as(s"${p}_cand"))
+    val aBeatsB = col("a_deg") > col("b_deg") ||
+      (col("a_deg") === col("b_deg") && col("a_id") < col("b_id"))
+    e.filter(col("src") < col("dst"))
+      .join(end("a"), col("src") === col("a_id"))
+      .join(end("b"), col("dst") === col("b_id"))
+      .filter(col("a_cand").bitwiseXOR(col("b_cand")) === 0)
+      .select(when(aBeatsB, col("b_id")).otherwise(col("a_id")).as("a_id"))
       .distinct()
   }
 
@@ -316,23 +339,30 @@ object ColoringKernel {
         col("used").bitwiseOR(coalesce(col("gained"), lit(0L))).as("used"))
   }
 
+  /** The mask round's candidates `(id, deg, cand)`: a narrow projection of
+    * the state checkpoint, so a round re-reads them without landing them. */
+  private[graft] def maskCandidates(state: DataFrame, k: Int): DataFrame =
+    state.filter(col("color") === -1)
+      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand"))
+
   /** Mask-state speculative round (k ≤ 64): candidates fall out of the
-    * carried mask map-side; only the rival check still touches the edge
-    * list, and the used-mask update is delta-driven ([[applyWithMask]]).
+    * carried mask map-side ([[maskCandidates]]); only the rival check
+    * still touches the edge list, and the used-mask update is
+    * delta-driven ([[applyWithMask]]). The round lands nothing but its
+    * next state: the updates are read twice inside that one plan, where
+    * adaptive execution reuses the beaten-id shuffle and broadcast.
     * Semantics identical to [[jpRound]] — colors are permanent, so the
     * incrementally-grown mask always equals the regathered set. */
   private[graft] def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
-      round: State.Round, uncolored: Long): DataFrame = {
-    // Candidate sides carry exactly `uncolored` rows, and the beaten ids
-    // are a subset of them — row-bound broadcast hints keep the rival probe
-    // exchange-free on the E side past AQE's byte threshold (see
+      uncolored: Long): DataFrame = {
+    // The candidate frame carries exactly `uncolored` rows, and the beaten
+    // ids are a subset of it — row-bound broadcast hints keep the rival
+    // probe exchange-free on the E side past AQE's byte threshold (see
     // applyWithMask's note; same ×42 shuffle signal) and the admit's
     // candidate side unshuffled.
     val side = maybeBroadcast(_: DataFrame, uncolored)
-    val cand = round.land(state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand")))
-    val updates = round.land(admit(cand.df, beaten(e, cand.df, side), side))
-    applyWithMask(e, state, updates.df, uncolored)
+    val cand = maskCandidates(state, k)
+    applyWithMask(e, state, admit(cand, beaten(e, cand, side), side), uncolored)
   }
 
   /** One speculative-coloring round (k > 64): every uncolored
@@ -401,8 +431,9 @@ object ColoringKernel {
     * Δ comes from the GraphX base for GraphX and from one degree aggregate
     * for GreedyRdd (0 on an edge-free input). Jp reads it off its own
     * round-0 checkpoint, so its degree aggregate is the only pass over the
-    * edges before round 1. `edges` is read as [[tryColor]] reads it: pass
-    * it materialized.
+    * edges before round 1, and it reads the colors used off its last
+    * checkpoint, so it runs no job after its rounds. `edges` is read as
+    * [[tryColor]] reads it: pass it materialized.
     */
   def minimalColors(
       spark: SparkSession,
@@ -438,8 +469,11 @@ object ColoringKernel {
 
       // The Δ+1 run's coloring already witnesses k = colors-actually-used —
       // no revalidation run needed, just relabel (first-fit never exceeds
-      // the palette it was given).
-      var k = usedColors(first.colors)
+      // the palette it was given). Jp observed that count on its last
+      // landing; the other kernels count it.
+      var k =
+        if (strategy == Strategy.Jp) first.state(ColorsUsed).toInt
+        else usedColors(first.colors)
       if (strategy == Strategy.Jp || strategy == Strategy.GraphX) {
         // Deterministic kernel: the Δ+1 trace is the proof (scaladoc above);
         // a k−1 attempt would replay it and fail.
@@ -464,7 +498,8 @@ object ColoringKernel {
     } finally if (ownsBase) graphxBase.foreach(_.unpersist(blocking = false))
   }
 
-  /** Number of distinct colors in a complete coloring. */
+  /** Number of distinct colors in a complete coloring (one job;
+    * [[minimalColors]] reads a Jp run's count off its state instead). */
   def usedColors(colors: DataFrame): Int =
     colors.filter(col("color") >= 0).select(col("color")).distinct().count().toInt
 
@@ -473,28 +508,35 @@ object ColoringKernel {
     * must be 0 for a valid coloring. */
   def validate(edges: DataFrame, colors: DataFrame): (Long, Long) = {
     // One aggregate gives the uncolored invariant AND the exact V that
-    // decides the broadcast below.
+    // decides the broadcast in conflictPairs.
     val head = colors.agg(
       count(lit(1)),
       sum(when(col("color") === -1, 1L).otherwise(0L))).head()
-    val v = head.getLong(0)
     val uncolored = if (head.isNullAt(1)) 0L else head.getLong(1)
-    // V-sized colors vs E-sized edges: broadcast both probes so the edge
-    // list streams through one map-side pass (a checkpointed colors DF has
-    // no useful stats, so AQE alone would plan sort-merge). Conditional on
-    // the exact V just counted: past the executor-memory broadcast bound
-    // (Broadcasts.maxRows, ~10^8 vertices) the hints drop and the same
-    // joins shuffle — one edges pass either way.
-    import graft.ops.Broadcasts.maybeBroadcast
-    // ONE broadcast probe, aliased for both endpoints: identical child
-    // plans let Spark reuse the broadcast exchange (ReusedExchange) instead
-    // of building and shipping the V-sized map twice.
+    (uncolored, conflictPairs(edges, colors, head.getLong(0)).count())
+  }
+
+  /** The edges whose two endpoints have the same color, for a `colors`
+    * frame of `v` rows.
+    *
+    * V-sized colors vs E-sized edges: both endpoints probe a broadcast, so
+    * the edge list streams through one map-side pass (a checkpointed colors
+    * DF has no useful stats, so AQE alone would plan sort-merge). The hint
+    * is conditional on the exact V: past the executor-memory broadcast
+    * bound (Broadcasts.maxRows, ~10^8 vertices) it drops and the same joins
+    * shuffle — one edges pass either way.
+    *
+    * ONE broadcast, keyed by id alone, serves both endpoints: identical
+    * child plans and keys let Spark reuse the exchange (ReusedExchange)
+    * instead of building and shipping the V-sized map twice. The
+    * same-color test runs after the probe, as an xor: written as an
+    * equality, Catalyst lifts it into the second join's key and builds a
+    * (color, id) map of its own ([[beaten]] does the same). */
+  private[graft] def conflictPairs(edges: DataFrame, colors: DataFrame, v: Long): DataFrame = {
     val probe = maybeBroadcast(colors.select(col("id"), col("color")), v)
-    val conflicts = edges.as("e")
+    edges.as("e")
       .join(probe.as("ca"), col("e.src") === col("ca.id"))
       .join(probe.as("cb"), col("e.dst") === col("cb.id"))
-      .filter(col("ca.color") === col("cb.color"))
-      .count()
-    (uncolored, conflicts)
+      .filter(col("ca.color").bitwiseXOR(col("cb.color")) === 0)
   }
 }

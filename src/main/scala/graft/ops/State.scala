@@ -1,9 +1,11 @@
 package graft.ops
 
+import java.util.UUID
+
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, GraftInternalRows, Observation}
+import org.apache.spark.sql.{Column, DataFrame, GraftInternalRows}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.functions.{count, lit}
@@ -18,9 +20,10 @@ import org.apache.spark.sql.functions.{count, lit}
   * [[State.loop]] or [[State.memo]], which share one body; round loops
   * land their states through [[State.iterate]]:
   *
-  *  - an `Observation` counts the rows, plus any extra metric columns the
-  *    caller passes, and rides the eager `localCheckpoint` job — loop
-  *    control reads its counts without a separate count job;
+  *  - an observation counts the rows, plus any extra metric columns the
+  *    caller passes, and rides the checkpoint's one job — loop control
+  *    reads its counts without a separate count job; a landing whose job
+  *    fails frees its checkpoint;
   *  - the checkpoint is coalesced to `max(1, ceil(rows / 65536))`
   *    partitions, capped at the parent's partition count (never widened).
   *    Loop state shrinks by orders of magnitude across rounds but keeps
@@ -101,8 +104,6 @@ object State {
       st
     }
 
-    private[graft] def landed: Seq[State] = held.toSeq
-
     private[graft] def release(): Unit = held.foreach(_.release())
   }
 
@@ -147,18 +148,30 @@ object State {
 
   private def materialize(df: DataFrame, metrics: Seq[Column])(
       layout: (DataFrame, RDD[InternalRow], Int) => DataFrame): State = {
-    val obs = new Observation()
-    val ck = df.observe(obs, count(lit(1)).as(RowsMetric), metrics: _*)
-      .localCheckpoint(true)
-    val observed = obs.get
-    val rows = observed(RowsMetric).asInstanceOf[Long]
+    // A lazy checkpoint marks and persists its RDD before any job of the
+    // final stage runs, so the RDD is in hand when that job fails and can
+    // be freed (an eager one persists it inside the action and, on failure,
+    // leaves it persisted with nothing holding it). The observation is
+    // read off the plan's own metric collector once the job has run.
+    val name = s"graft_state_${UUID.randomUUID()}"
+    val observed = df.observe(name, count(lit(1)).as(RowsMetric), metrics: _*)
+    val ck = observed.localCheckpoint(false)
     val rdd = ck.queryExecution.logical match {
       case l: LogicalRDD => l.rdd
       case other => throw new IllegalStateException(
         s"localCheckpoint planned ${other.getClass.getSimpleName}, not LogicalRDD")
     }
+    try rdd.count()
+    catch {
+      case t: Throwable =>
+        rdd.unpersist(blocking = false)
+        throw t
+    }
+    val row = observed.queryExecution.observedMetrics(name)
+    val values = row.getValuesMap[Any](row.schema.fieldNames.toSeq)
+    val rows = values(RowsMetric).asInstanceOf[Long]
     val parts = math.min(rdd.getNumPartitions.toLong,
       math.max(1L, (rows + RowsPerPartition - 1) / RowsPerPartition)).toInt
-    new State(layout(ck, rdd, parts), rows, observed, rdd)
+    new State(layout(ck, rdd, parts), rows, values, rdd)
   }
 }

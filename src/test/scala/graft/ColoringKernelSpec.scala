@@ -132,6 +132,23 @@ class ColoringKernelSpec extends AnyFunSuite {
     }
   }
 
+  test("Jp minimalColors reads k off its state: the colors used, on mask and regather rounds") {
+    // Δ = 6 keeps the palette on the 64-bit mask; Δ past 63 puts it on the
+    // collect_set regather. The extra vertices past the edge ids are
+    // isolated.
+    for ((n, d) <- Seq((2000L, 6), (300L, 80)); extra <- Seq(false, true)) {
+      val edges = RandomGraph.edges(spark, n, d, seed = 7)
+      val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0)
+      assert((maxDeg + 1 > 64) === (d > 64), s"n=$n: Δ = $maxDeg")
+      val vertices = if (extra) Some(spark.range(n + 20).toDF("id")) else None
+      val best = ColoringKernel.minimalColors(spark, edges, Strategy.Jp, vertices)
+      try assert(best.k === ColoringKernel.usedColors(best.colors), s"n=$n extra=$extra")
+      finally best.release()
+    }
+    val empty = ColoringKernel.minimalColors(spark, Seq.empty[(Long, Long)].toDF("src", "dst"))
+    try assert(empty.k === 0 && empty.colors.count() === 0) finally empty.release()
+  }
+
   test("minimalColors returns a valid coloring no worse than first-fit") {
     val edges = RandomGraph.edges(spark, 300, 5, seed = 3)
     val best = ColoringKernel.minimalColors(spark, edges, Strategy.Jp, maxAttempts = 3)

@@ -575,17 +575,31 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   /** One Jp mask round (k = 6) over `jpInput`, and its admit. A mask round
-    * runs its admit inside the job that lands its updates, so the admit is
-    * rebuilt here, with the round's broadcast side, on the candidates that
-    * round landed (the first frame it lands through `round`). */
+    * runs its admit inside the plan that lands its next state, so the admit
+    * is rebuilt here, with the round's broadcast side, on the round's
+    * candidates. */
   private def jpMaskRound(e: org.apache.spark.sql.DataFrame,
-      state: org.apache.spark.sql.DataFrame, frames: graft.ops.State.Round) = {
+      state: org.apache.spark.sql.DataFrame) = {
     import graft.color.ColoringKernel
-    val round = ColoringKernel.jpRoundMask(e, state, 6, frames, 200)
-    val cand = frames.landed.head.df
+    val round = ColoringKernel.jpRoundMask(e, state, 6, 200)
+    val cand = ColoringKernel.maskCandidates(state, 6)
     val side = graft.ops.Broadcasts.maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
     (round, ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side))
   }
+
+  /** Every operator of `df`'s executed plan, adaptive query stages
+    * included; a reused exchange is one leaf. */
+  private def executedOps(df: org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    df.collect()
+    new AdaptiveSparkPlanHelper {}.collect(df.queryExecution.executedPlan) { case p => p }
+  }
+
+  /** The key count of each BroadcastHashJoin among `ops`. */
+  private def broadcastJoinKeyCounts(ops: Seq[org.apache.spark.sql.execution.SparkPlan]): Seq[Int] =
+    ops.collect {
+      case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec => j.leftKeys.size
+    }
 
   test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
     import graft.color.ColoringKernel
@@ -596,7 +610,7 @@ class PlanShapeSpec extends AnyFunSuite {
       // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
       // (no hash buffer for a struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
-        "mask" -> jpMaskRound(e, state, frames)._2,
+        "mask" -> jpMaskRound(e, state)._2,
         "regather" -> ColoringKernel.jpRound(e, state, 70, frames))) {
         val p = plan(round)
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
@@ -608,16 +622,42 @@ class PlanShapeSpec extends AnyFunSuite {
 
   test("a Jp mask round plans no InMemoryRelation and no SortMergeJoin") {
     val (e, state) = jpInput()
-    val frames = new graft.ops.State.Round
+    val (round, admit) = jpMaskRound(e, state)
+    for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
+      val p = plan(df)
+      assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+        s"$name reads a columnar cache:\n$p")
+      assert(!p.contains("SortMergeJoin"), s"$name plans a sort-merge join:\n$p")
+    }
+  }
+
+  test("a Jp mask round and validate probe broadcasts on one key, and reuse each") {
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import graft.color.ColoringKernel
+    val (e, state) = jpInput()
+    // A landed state whose used masks differ, so the candidates do too
+    // (an all-zero mask folds every candidate to the constant 0).
+    val landed = graft.ops.State.loop(state.withColumn("used", pmod(col("id"), lit(4L))))
     try {
-      val (round, admit) = jpMaskRound(e, state, frames)
-      for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
-        val p = plan(df)
-        assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
-          s"$name reads a columnar cache:\n$p")
-        assert(!p.contains("SortMergeJoin"), s"$name plans a sort-merge join:\n$p")
+      val round = jpMaskRound(e, landed.df)._1
+      // A two-color labelling: about half the edges conflict.
+      val conflicts = ColoringKernel.conflictPairs(e,
+        state.select(col("id"), pmod(col("id"), lit(2)).cast("int").as("color")), 200L)
+      // Both endpoints probe one broadcast of the candidates (the colors),
+      // and the round's second read of its updates reuses the first.
+      for ((name, df, probed) <- Seq(("round", round, "cand"), ("validate", conflicts, "color"))) {
+        val ops = executedOps(df)
+        val keys = broadcastJoinKeyCounts(ops)
+        assert(keys.nonEmpty && keys.forall(_ == 1),
+          s"$name: broadcast join key counts $keys\n${df.queryExecution.executedPlan}")
+        val built = ops.collect {
+          case b: BroadcastExchangeExec if b.output.exists(_.name.endsWith(probed)) => b
+        }
+        assert(built.size === 1,
+          s"$name: $probed broadcast ${built.size} times\n${df.queryExecution.executedPlan}")
       }
-    } finally frames.release()
+    } finally landed.release()
   }
 
   test("Jp round 0 plans no join and one aggregate, with and without extra vertices") {
