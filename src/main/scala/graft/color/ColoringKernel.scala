@@ -83,10 +83,6 @@ object ColoringKernel {
     def release(): Unit = state.release()
   }
 
-  /** Distinct vertices of a symmetric edge list. */
-  private def verticesOf(edges: DataFrame): DataFrame =
-    edges.select(col("src").as("id")).distinct()
-
   /** Expected-rows-per-color-bucket bound for greedy requests. The
     * GreedyIS admit reduces each color bucket in ONE reducer — the merge is
     * inherently serial per bucket (the reference's own aggregateByKey
@@ -112,29 +108,18 @@ object ColoringKernel {
     * [[GreedyMaxBucketRowsKey]] — the documented skew ceiling of the ≤k-key
     * reduce, enforced in code rather than by caller choice. Otherwise it
     * runs on the deterministic Jp strategy. */
-  private[color] def greedyFits(spark: SparkSession, v: Long, k: Int): Boolean = {
+  private[color] def greedyFits(spark: SparkSession, v: => Long, k: Int): Boolean = {
     val maxBucket = spark.conf
       .get(GreedyMaxBucketRowsKey, DefaultGreedyMaxBucketRows.toString).toLong
     k <= 64 && v / math.max(k, 1) <= maxBucket
   }
 
-  /** Apply [[greedyFits]] to a GreedyRdd request; other strategies pass
-    * through. Two-tier size signal: the free Catalyst estimate (E rows
-    * upper-bound V at ~24 B per (src,dst) UnsafeRow) decides when it can;
-    * only when it reads "too big" — including the unknown-stats Long.Max
-    * default of RDD-backed inputs — is an exact vertex count worth one
-    * job, negligible next to the run it guards. */
+  /** Apply [[greedyFits]] to a GreedyRdd request over `v` vertices (read
+    * only when k fits the mask); other strategies pass through. */
   private[graft] def resolveStrategy(
-      spark: SparkSession, edges: DataFrame, requested: Strategy, k: Int): Strategy =
-    if (requested != Strategy.GreedyRdd) requested
-    else {
-      val sz = edges.queryExecution.optimizedPlan.stats.sizeInBytes
-      val estRows =
-        if (sz > BigInt(Long.MaxValue)) Long.MaxValue else (sz / 24).toLong max 1L
-      if (greedyFits(spark, estRows, k) ||
-        greedyFits(spark, verticesOf(edges).count(), k)) requested
-      else Strategy.Jp
-    }
+      spark: SparkSession, requested: Strategy, k: Int, v: => Long): Strategy =
+    if (requested == Strategy.GreedyRdd && !greedyFits(spark, v, k)) Strategy.Jp
+    else requested
 
   /** Attempt a k-coloring of `edges` (symmetric, irreflexive `(src,dst)`).
     * `init` optionally supplies extra vertices (isolated nodes never appear
@@ -147,6 +132,10 @@ object ColoringKernel {
     * as every engine caller does). A lazy plan is recomputed on every read,
     * and one whose rows are not deterministic would give each read a
     * different edge set.
+    *
+    * A GreedyRdd request is routed by [[greedyFits]] on the exact vertex
+    * count of `edges`: `vertices` when the caller holds it, else one
+    * count job.
     */
   def tryColor(
       spark: SparkSession,
@@ -155,7 +144,8 @@ object ColoringKernel {
       strategy: Strategy = Strategy.Jp,
       extraVertices: Option[DataFrame] = None,
       maxRounds: Int = 200,
-      preparedBase: Option[org.apache.spark.graphx.Graph[Int, Unit]] = None)
+      preparedBase: Option[org.apache.spark.graphx.Graph[Int, Unit]] = None,
+      vertices: Option[Long] = None)
       : Option[Colored] = {
 
     // A delegating kernel hands its final colors to `land` and frees its
@@ -170,7 +160,8 @@ object ColoringKernel {
         case None => GraphXKernel.tryColor(spark, edges, k, maxRounds)(land)
       })
     }
-    if (resolveStrategy(spark, edges, strategy, k) == Strategy.GreedyRdd) {
+    lazy val v = vertices.getOrElse(edges.select(col("src")).distinct().count())
+    if (resolveStrategy(spark, strategy, k, v) == Strategy.GreedyRdd) {
       return colored(GreedyRddKernel.tryColor(spark, edges, k, maxRounds)(land))
     }
     jp(spark, edges, _ => k, extraVertices, maxRounds)
@@ -429,7 +420,8 @@ object ColoringKernel {
     * partitioning (reference-faithful), so no single trace is a proof.
     *
     * Δ comes from the GraphX base for GraphX and from one degree aggregate
-    * for GreedyRdd (0 on an edge-free input). Jp reads it off its own
+    * for GreedyRdd (0 on an edge-free input), which also counts the V every
+    * greedy attempt is routed on. Jp reads it off its own
     * round-0 checkpoint, so its degree aggregate is the only pass over the
     * edges before round 1, and it reads the colors used off its last
     * checkpoint, so it runs no job after its rounds. `edges` is read as
@@ -454,8 +446,15 @@ object ColoringKernel {
       if (strategy == Strategy.GraphX)
         preparedBase.orElse(Some(GraphXKernel.prepare(spark, edges)))
       else None
+    // GreedyRdd's Δ and V, from one degree aggregate.
+    lazy val (maxDeg, v) = {
+      val r = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
+        .agg(coalesce(max(col("d")), lit(0L)), count(lit(1))).head()
+      (r.getLong(0).toInt, r.getLong(1))
+    }
     def attempt(k: Int): Option[Colored] =
-      tryColor(spark, edges, k, strategy, extraVertices, preparedBase = graphxBase)
+      tryColor(spark, edges, k, strategy, extraVertices, preparedBase = graphxBase,
+        vertices = if (strategy == Strategy.GreedyRdd) Some(v) else None)
 
     try {
       // Jp reads Δ off its own round-0 checkpoint; the others need it first.
@@ -463,8 +462,7 @@ object ColoringKernel {
         case Some(base) => attempt(GraphXKernel.maxDegree(base) + 1)
         case None if strategy == Strategy.Jp =>
           jp(spark, edges, _ + 1, extraVertices)
-        case None => attempt(edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-          .agg(coalesce(max(col("d")), lit(0L))).head().getLong(0).toInt + 1)
+        case None => attempt(maxDeg + 1)
       }).getOrElse(sys.error("k = Δ+1 must be colorable"))
 
       // The Δ+1 run's coloring already witnesses k = colors-actually-used —

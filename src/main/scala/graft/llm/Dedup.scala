@@ -390,9 +390,9 @@ object Dedup {
     if (minDupFrac > 1.0 || (dupFrac < minDupFrac && intraPairs <= nDocs)) {
       // DOC-LEVEL PATH: no arrays, no rep joins, no intra expansion —
       // identical-set doc pairs flow through the join and score exactly
-      // 1.0 on their own.
+      // 1.0 on their own. The census counted the base's nDocs rows.
       val sizes = graft.ops.Broadcasts.maybeBroadcast(
-        base.select(col("doc_id"), col("n_sh")))
+        base.select(col("doc_id"), col("n_sh")), nDocs)
       def scoreSlice(a: DataFrame): DataFrame = score(a.as("a")
         .join(idx.as("b"),
           col("a.shingle") === col("b.shingle") &&
@@ -428,13 +428,14 @@ object Dedup {
         .groupBy(col("sk1"), col("sk2"))
         .agg(min(struct(col("doc_id"), col("sh"))).as("r"))
         .select(col("sk1"), col("sk2"), col("r.doc_id").as("rep_id"),
-          col("r.sh").as("sh"))).df
-      val ridx = reps.select(col("rep_id"), explode(col("sh")).as("shingle"))
-      // Per-rep set sizes are ≤ |docs| rows — broadcast both verification
-      // joins conditionally (degrades to shuffle joins past the threshold).
+          col("r.sh").as("sh")))
+      val ridx = reps.df.select(col("rep_id"), explode(col("sh")).as("shingle"))
+      // Per-rep set sizes, one row per rep — broadcast both verification
+      // joins on the memo's observed rows (degrades to shuffle joins past
+      // the threshold).
       val sizes = graft.ops.Broadcasts.maybeBroadcast(
-        reps.select(col("rep_id"), size(col("sh")).cast("long").as("n_sh"),
-          col("sk1"), col("sk2")))
+        reps.df.select(col("rep_id"), size(col("sh")).cast("long").as("n_sh"),
+          col("sk1"), col("sk2")), reps.rows)
       def scoreSlice(a: DataFrame): DataFrame = score(a.as("a")
         .join(ridx.as("b"),
           col("a.shingle") === col("b.shingle") &&
@@ -466,7 +467,7 @@ object Dedup {
         // |repPairs| + Σ(m−1). reps are class-min doc_ids, so doc_a <
         // doc_b holds on both edge kinds and the union stays distinct
         // (the ccLabelsDf edge contract).
-        val repIds = reps.select(col("sk1"), col("sk2"), col("rep_id"))
+        val repIds = reps.df.select(col("sk1"), col("sk2"), col("rep_id"))
         val crossEdges = repPairs
           .join(repIds.select(col("sk1").as("ka1"), col("sk2").as("ka2"),
             col("rep_id").as("doc_a")), Seq("ka1", "ka2"))
@@ -746,7 +747,8 @@ object Dedup {
     * Scale shape: one shingle scan feeds both sides; the eval side
     * collapses to a DISTINCT gram-hash set (benchmark-sized — in a real
     * pipeline a few MB, here corpus-proportional so the broadcast is
-    * conditional), and the train side inner-joins it on the 8-byte hash —
+    * conditional, bounded by the index memo's observed rows), and the
+    * train side inner-joins it on the 8-byte hash —
     * an inverted-index probe, never gram strings and never all-pairs. The
     * per-doc distinct-count is a plain count(*) because the index is
     * already distinct per (doc, shingle). The DuckDB oracle replays it on
@@ -755,13 +757,13 @@ object Dedup {
   def qDecontaminate(spark: SparkSession, d: String): DataFrame = {
     // One materialized index serves the eval and train branches (else the
     // shingle hashing + explode runs twice).
-    val idx = State.memo(shingleIndex(spark, d, n = 5)).df
+    val idx = State.memo(shingleIndex(spark, d, n = 5))
     val isEval = pmod(
       conv(substring(md5(col("doc_id").cast("string")), 1, 8), 16, 10).cast("long"),
       lit(100L)) < 10
     val evalGrams = graft.ops.Broadcasts.maybeBroadcast(
-      idx.filter(isEval).select(col("shingle")).distinct())
-    idx.filter(!isEval)
+      idx.df.filter(isEval).select(col("shingle")).distinct(), idx.rows)
+    idx.df.filter(!isEval)
       .join(evalGrams, "shingle")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_shared"))

@@ -514,19 +514,18 @@ object TextStats {
     * Scale shape: one exploded-token hash-agg trains the LM (vocab-sized
     * output, partial-aggregated); T rides a 1-row broadcast cross join so
     * the plan stays one lazy pipeline (no driver-side scalar action); the
-    * scoring join probes the vocab table — conditional broadcast, the
-    * vocab is Heaps-law sublinear in the corpus — and the per-doc sum is a
-    * second partial hash-agg. The mean is exact-integer ÷ exact-integer in
-    * one IEEE division. */
+    * scoring join probes the vocab table — no count of it is held, so Spark
+    * decides its broadcast (the vocab is Heaps-law sublinear in the
+    * corpus) — and the per-doc sum is a second partial hash-agg. The mean
+    * is exact-integer ÷ exact-integer in one IEEE division. */
   def qLmScore(spark: SparkSession, d: String): DataFrame = {
     val tok = Tables.spread(Tables.documents(spark, d))
       .select(col("doc_id"), explode(tokens(col("text"))).as("tok"))
     val counts = tok.groupBy(col("tok")).agg(count(lit(1)).as("c"))
     val total = counts.agg(sum(col("c")).as("t"))
-    val vocabScores = graft.ops.Broadcasts.maybeBroadcast(
-      counts.crossJoin(broadcast(total))
-        .select(col("tok"),
-          (length(bin(col("t").cast("long") / col("c"))) - 1).cast("long").as("sp")))
+    val vocabScores = counts.crossJoin(broadcast(total))
+      .select(col("tok"),
+        (length(bin(col("t").cast("long") / col("c"))) - 1).cast("long").as("sp"))
     tok.join(vocabScores, "tok")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_tokens"), sum(col("sp")).as("total_surprisal"))
@@ -555,17 +554,18 @@ object TextStats {
     val tf = State.memo(docs
       .select(col("doc_id"), explode(tokens(col("text"))).as("term"))
       .groupBy(col("doc_id"), col("term"))
-      .agg(count(lit(1)).as("tf"))).df
+      .agg(count(lit(1)).as("tf")))
     // df table is vocabulary-sized (≪ tf) — broadcast the scoring join.
     // Vocabulary GROWS with the corpus (web-scale text → 10⁸+ terms), so
-    // the hint is conditional: past the size threshold it degrades to a
-    // shuffle join on term (graft.ops.Broadcasts scaladoc).
+    // the hint is conditional on tf's observed rows, an upper bound on the
+    // vocabulary: past the row threshold it degrades to a shuffle join on
+    // term (graft.ops.Broadcasts scaladoc).
     val dfreq = graft.ops.Broadcasts.maybeBroadcast(
-      tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
+      tf.df.groupBy(col("term")).agg(count(lit(1)).as("df")), tf.rows)
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     val w = Window.partitionBy(col("doc_id"))
       .orderBy(col("score").desc, col("term").asc)
-    tf.join(dfreq, "term")
+    tf.df.join(dfreq, "term")
       .crossJoin(broadcast(nDocs))
       .select(col("doc_id"), col("term"), col("tf"),
         (col("tf") * expr("(n_docs * 1000000) div df")).as("score"))
@@ -624,8 +624,9 @@ object TextStats {
     val tf = State.memo(bm25Hits(docs)
       .groupBy(col("doc_id"), col("dl"), col("term"))
       .agg(count(lit(1)).as("tf"))).df // feeds both the df agg and the scoring join
+    // One row per query term.
     val dfreq = graft.ops.Broadcasts.maybeBroadcast(
-      tf.groupBy(col("term")).agg(count(lit(1)).as("df")))
+      tf.groupBy(col("term")).agg(count(lit(1)).as("df")), BM25_TERMS.size)
     // The documented fixed-point headroom (scaladoc above: idf·tf·2200
     // < 2⁶³ to N ≈ 10¹⁰ docs) is enforced, not just documented: the assert
     // rides inside n_docs (NULL-on-success + coalesce, the triangle-key
@@ -949,8 +950,9 @@ object TextStats {
     * Scale shape: the one corpus-sized stage is the bigram explode into a
     * map-side-combined hash agg ([[qNgramLm]]'s shape); marginals are
     * bigram-table-sized aggs joined back (conditional broadcast — the
-    * marginal tables are vocabulary-sized); the top-k is map-side pruned
-    * before the single-partition rank. */
+    * marginal tables are vocabulary-sized, bounded by the bigram memo's
+    * observed rows); the top-k is map-side pruned before the
+    * single-partition rank. */
   def qPmi(spark: SparkSession, d: String): DataFrame = {
     val ts = regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0))
     val bg = Tables.spread(Tables.documents(spark, d))
@@ -963,13 +965,13 @@ object TextStats {
         .as("b"))
       .select(col("b.w1"), col("b.w2"))
     // c2 feeds both marginals and the scoring join.
-    val c2 = State.memo(bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))).df
+    val c2 = State.memo(bg.groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12")))
     val left = graft.ops.Broadcasts.maybeBroadcast(
-      c2.groupBy(col("w1")).agg(sum(col("c12")).as("c1")))
+      c2.df.groupBy(col("w1")).agg(sum(col("c12")).as("c1")), c2.rows)
     val right = graft.ops.Broadcasts.maybeBroadcast(
-      c2.groupBy(col("w2")).agg(sum(col("c12")).as("c2")))
-    val total = c2.agg(sum(col("c12")).as("n_bi"))
-    val scored = c2.filter(col("c12") >= PmiMinCount)
+      c2.df.groupBy(col("w2")).agg(sum(col("c12")).as("c2")), c2.rows)
+    val total = c2.df.agg(sum(col("c12")).as("n_bi"))
+    val scored = c2.df.filter(col("c12") >= PmiMinCount)
       .join(left, "w1").join(right, "w2")
       .crossJoin(broadcast(total))
       .select(col("w1"), col("w2"), col("c12"), col("c1"), col("c2"),

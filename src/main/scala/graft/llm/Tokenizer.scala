@@ -158,19 +158,19 @@ object Tokenizer {
         regexp_extract_all(lower(col("text")), lit("[a-z]+"), lit(0)))
         .as("word"))
       .groupBy(col("doc_id"), col("word"))
-      .agg(count(lit(1)).as("m"))).df // feeds the vocab build AND the length join
+      .agg(count(lit(1)).as("m"))) // feeds the vocab build AND the length join
     // Memo-cold training trains off THIS frame's word frequencies (r15):
     // Σ per-doc multiplicities per word IS the corpus word count, so the
     // rendering below is the identical (seq, f) relation [[wordFreq]]
     // builds — without a second regexp scan of the corpus. Memo-warm
     // (q_bpe_train already ran) skips training entirely.
-    def wfFromDw = dw.groupBy(col("word")).agg(sum(col("m")).as("f"))
+    def wfFromDw = dw.df.groupBy(col("word")).agg(sum(col("m")).as("f"))
       .select(
         concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("seq"),
         col("f"))
     val pairs = mergesCache.getOrElseUpdate(spark, d)(trainLoop(wfFromDw))
       .map(_._2)
-    val vocab0 = dw.select(col("word")).distinct()
+    val vocab0 = dw.df.select(col("word")).distinct()
       .select(col("word"),
         concat(lit(" "), regexp_replace(col("word"), "(.)", "$1 ")).as("seq"))
     val encoded = pairs.foldLeft(vocab0) { (v, pair) =>
@@ -181,7 +181,8 @@ object Tokenizer {
           .as("seq"))
     }.select(col("word"),
       size(split(trim(col("seq")), " ")).cast("long").as("ntok"))
-    dw.join(graft.ops.Broadcasts.maybeBroadcast(encoded), "word")
+    // The vocabulary is a distinct over dw, so dw's observed rows bound it.
+    dw.df.join(graft.ops.Broadcasts.maybeBroadcast(encoded, dw.rows), "word")
       .groupBy(col("doc_id"))
       .agg(sum(col("m")).as("n_words"),
         sum(col("m") * length(col("word"))).as("n_letter_chars"),

@@ -17,13 +17,13 @@ object ColorQueries {
   private def kernelBase(spark: SparkSession, d: String): Graph[Int, Unit] =
     GraphXKernel.prepareCached(spark, d, GraphOps.kernelEdges(spark, d))
 
-  /** Session-lifetime cache of the Δ+1 GraphX trace per sfDir — the same
+  /** Session-lifetime cache of the Δ+1 trace per sfDir — the same
     * materialized-view stance as [[GraphXKernel.prepareCached]] and the
     * persisted edge DFs: the kernel is deterministic, q_color_graph and
-    * q_minimal_colors both start from the identical Δ+1 run (the
-    * minimal-colors scaladoc proves that run already witnesses minimal k),
+    * q_minimal_colors both start from the identical Δ+1 run, which
+    * [[ColoringKernel.minimalColors]] proves already witnesses minimal k,
     * so the 13-round trace is computed once per session and both queries
-    * read the checkpointed result. */
+    * read the checkpointed result and its `k`, the colors used. */
   private val deltaTraceCache = new SessionCache[ColoringKernel.Colored]
 
   /** Strategy crossover for the Δ+1 trace, by kernel-graph edge count.
@@ -44,22 +44,13 @@ object ColorQueries {
       val (edges, nEdges) = GraphOps.kernelEdgesWithCount(spark, d)
       val graphxMax = spark.conf
         .get(GraphxMaxEdgesKey, DefaultGraphxMaxEdges.toString).toLong
-      if (nEdges <= graphxMax) {
-        val base = kernelBase(spark, d)
-        val k = GraphXKernel.maxDegree(base) + 1
-        ColoringKernel
-          .tryColor(spark, edges, k, Strategy.GraphX, preparedBase = Some(base))
-          .getOrElse(sys.error("Δ+1 coloring cannot fail"))
-      } else {
-        // Past the crossover: Δ from a one-pass degree agg (no GraphX base
-        // build), then the DataFrame Jp rounds.
-        val k = edges
-          .groupBy(col("src")).agg(count(lit(1)).as("deg"))
-          .agg(coalesce(max(col("deg")), lit(0L))).head().getLong(0).toInt + 1
-        ColoringKernel
-          .tryColor(spark, edges, k, Strategy.Jp)
-          .getOrElse(sys.error("Δ+1 coloring cannot fail"))
-      }
+      // Below the crossover GraphX runs on the session's kernel base; past
+      // it the DataFrame Jp rounds read Δ off their own round 0 (no GraphX
+      // base build).
+      if (nEdges <= graphxMax)
+        ColoringKernel.minimalColors(spark, edges, Strategy.GraphX,
+          preparedBase = Some(kernelBase(spark, d)))
+      else ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
     })
 
   /** Full first-fit coloring of the consecutive-co-purchase graph at
@@ -69,7 +60,7 @@ object ColorQueries {
   def qColorGraph(spark: SparkSession, d: String): DataFrame = {
     val result = deltaPlusOneTrace(spark, d)
     result.colors
-      .withColumn("n_colors", lit(ColoringKernel.usedColors(result.colors)))
+      .withColumn("n_colors", lit(result.k))
       .orderBy(col("id"))
   }
 
@@ -89,10 +80,12 @@ object ColorQueries {
     // their storage is freed.
     val ((uncolored, conflicts), rounds) = graft.color.GreedyRddKernel
       .colorDeltaPlusOne(spark, edges, eCount)(validate).getOrElse {
-      val maxDeg = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .agg(max(col("deg"))).head().getLong(0).toInt
+      // Δ and V from one aggregate; V routes the request.
+      val dv = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+        .agg(max(col("deg")), count(lit(1))).head()
       val r = ColoringKernel
-        .tryColor(spark, edges, maxDeg + 1, Strategy.GreedyRdd)
+        .tryColor(spark, edges, dv.getLong(0).toInt + 1, Strategy.GreedyRdd,
+          vertices = Some(dv.getLong(1)))
         .getOrElse(sys.error("Δ+1 coloring cannot fail"))
       try (validate(r.colors), r.rounds) finally r.release()
     }
@@ -105,14 +98,14 @@ object ColorQueries {
     * For the deterministic GraphX/Jp kernel the Δ+1 trace IS the minimal-k
     * witness (ColoringKernel.minimalColors scaladoc: a k−1 attempt replays
     * the identical rounds and fails), so this reads the shared session
-    * trace — minimal_k = distinct colors used — and revalidates it. */
+    * trace — minimal_k = its k, the distinct colors used — and revalidates
+    * it. */
   def qMinimalColors(spark: SparkSession, d: String): DataFrame = {
     val edges = GraphOps.kernelEdges(spark, d)
     val best = deltaPlusOneTrace(spark, d)
-    val minimalK = ColoringKernel.usedColors(best.colors)
     val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
     import spark.implicits._
-    Seq((minimalK.toLong, uncolored, conflicts))
+    Seq((best.k.toLong, uncolored, conflicts))
       .toDF("minimal_k", "uncolored", "conflicts")
   }
 

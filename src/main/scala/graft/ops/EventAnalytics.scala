@@ -131,8 +131,10 @@ object EventAnalytics {
     * Scale shape: the cohort map is one hash-agg over signup events
     * (≤ |users| rows) and rides the activity join's build side under AQE;
     * the distinct-user count per (cohort, k) cell is Spark's standard
-    * two-phase distinct aggregate (partial distinct map-side). Cell
-    * cardinality grows with calendar weeks², not event volume.
+    * two-phase distinct aggregate (partial distinct map-side); the
+    * per-cohort sizes (one row per signup week) join back with no hint, so
+    * Spark decides their broadcast. Cell cardinality grows with calendar
+    * weeks², not event volume.
     * Determinism: retention divides two exact BIGINTs in pinned order;
     * (cohort, k) is a unique sorted key. */
   def qRetention(spark: SparkSession, d: String): DataFrame = {
@@ -150,7 +152,7 @@ object EventAnalytics {
         col("user_id"))
       .groupBy(col("cohort"), col("k"))
       .agg(countDistinct(col("user_id")).as("n_active"))
-    active.join(Broadcasts.maybeBroadcast(sizes), "cohort")
+    active.join(sizes, "cohort")
       .select(col("cohort"), col("k"), col("n_active"), col("cohort_n"),
         (col("n_active").cast("double") / col("cohort_n").cast("double"))
           .as("retention"))
@@ -278,12 +280,12 @@ object EventAnalytics {
     // nested loop — |days|×|pairs| predicate evaluations — or, if the
     // aggregate's size estimate exceeds the byte cap, a CartesianProduct).
     // The semi join keeps only days that actually occur in the log, so the
-    // output contract is unchanged; the day list is exactly |days| rows.
+    // output contract is unchanged; the day list is exactly |days| rows, and
+    // Spark decides its broadcast (no count of it is held).
     val wau = pairs
       .select(explode(sequence(col("day"), date_add(col("day"), 6))).as("day"),
         col("user_id"))
-      .join(Broadcasts.maybeBroadcast(dau.select(col("day"))),
-        Seq("day"), "left_semi")
+      .join(dau.select(col("day")), Seq("day"), "left_semi")
       .groupBy(col("day"))
       .agg(countDistinct(col("user_id")).as("wau"))
     dau.join(wau, "day")
@@ -479,14 +481,16 @@ object EventAnalytics {
     * order in this schema — never corpus-quadratic, and never a self-join:
     * the old basket-key self-join re-paid Σ C(k,2) per REPLICA, 7.2× CPU
     * for 3.33× data at the 100× ScaleUp leg); item marginals are a
-    * part-domain-sized agg joined back under [[Broadcasts.maybeBroadcast]];
+    * part-domain-sized agg joined back under [[Broadcasts.maybeBroadcast]],
+    * bounded by the item count Σ|basket| the class memo observes;
     * the final rank is map-side pruned ([[Relational.localTopK]]) before
     * one [[AssocTopK]]-row window. */
   def qAssocRules(spark: SparkSession, d: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // Distinct basket classes: 128-bit set key (two salted xxhash64 passes
     // over the sorted array — the classPairsOf stance: key equality must
-    // imply set equality at 10⁹-basket scale) + multiplicity.
+    // imply set equality at 10⁹-basket scale) + multiplicity. Feeds N, the
+    // marginals AND the pair explode; observes Σ|pks|, which bounds c1.
     val cls = State.memo(Tables.lineitem(spark, d)
       .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk"))
       .groupBy(col("ok"))
@@ -495,16 +499,16 @@ object EventAnalytics {
         xxhash64(lit(0x9e3779b97f4a7c15L), col("pks")).as("bk2"))
       .groupBy(col("bk1"), col("bk2"))
       .agg(count(lit(1)).as("m"), min(col("pks")).as("pks"))
-      .select(col("m"), col("pks"))).df // feeds N, the marginals AND the pair explode
-    val nB = cls.agg(sum(col("m")).as("n_baskets"))
-    val c1 = cls.select(col("m"), explode(col("pks")).as("pk"))
+      .select(col("m"), col("pks")), sum(size(col("pks"))).as("n_items"))
+    val nB = cls.df.agg(sum(col("m")).as("n_baskets"))
+    val c1 = cls.df.select(col("m"), explode(col("pks")).as("pk"))
       .groupBy(col("pk")).agg(sum(col("m")).as("c"))
     // In-row ordered-pair generation: pks is sorted distinct, so the fused
     // graft_ordered_pairs expression yields exactly the a < b pairs in one
     // allocation (the composed transform/slice/flatten form spent more CPU
     // allocating intermediates than the whole rest of the query —
     // bench/NOTES r12).
-    val pairs = cls
+    val pairs = cls.df
       .select(col("m"),
         explode(call_function("graft_ordered_pairs", col("pks"))).as("p"))
       .groupBy(col("p.a").as("antecedent"), col("p.b").as("consequent"))
@@ -512,10 +516,10 @@ object EventAnalytics {
       .filter(col("support") >= AssocMinSup)
     val scored = pairs
       .join(Broadcasts.maybeBroadcast(
-        c1.select(col("pk").as("antecedent"), col("c").as("c_ant"))),
+        c1.select(col("pk").as("antecedent"), col("c").as("c_ant")), cls("n_items")),
         "antecedent")
       .join(Broadcasts.maybeBroadcast(
-        c1.select(col("pk").as("consequent"), col("c").as("c_cons"))),
+        c1.select(col("pk").as("consequent"), col("c").as("c_cons")), cls("n_items")),
         "consequent")
       .crossJoin(broadcast(nB))
       .select(col("antecedent"), col("consequent"), col("support"),

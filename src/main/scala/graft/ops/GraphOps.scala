@@ -485,9 +485,9 @@ object GraphOps {
     * < 2³³ by the adjacency's packed-key assert, so u+v+w < 2³⁵ is exact).
     * The adj broadcast carries Θ(|E|) longs across its arrays even at
     * ≤ |V| rows, so its gate takes BOTH signals: exact |V| rows AND the
-    * exact |E|-derived payload against maxBytes — past it the build
-    * degrades to a shuffle join instead of hitting Spark's 8 GB broadcast
-    * hard cap (r13 ADVICE). */
+    * exact |E|-derived payload against `Broadcasts.MaxBytes` — past it the
+    * build degrades to a shuffle join instead of hitting Spark's 8 GB
+    * broadcast hard cap (r13 ADVICE). */
   private[graft] def triangleTriplesPlan(adj: DataFrame, vCount: Long,
       adjPayloadBytes: Long): DataFrame = {
     val lo = least(col("u"), col("v"), col("w"))

@@ -65,16 +65,16 @@ object Relational {
         coalesce(dsum(col("o_totalprice")), lit(0.0)).as("total_spent"))
       .orderBy(col("c_custkey"))
 
-  /** O10/O11: the reference's broadcast color probe as an explicit
-    * broadcast-hint join (small dim `part` built side → BroadcastHashJoin).
-    * The hint is conditional — a dim table still grows with SF, and past
-    * the size threshold the same join degrades to sort-merge instead of
-    * OOMing the broadcast build (Broadcasts scaladoc); at every gate scale
-    * the hint applies and the plan stays the asserted BroadcastHashJoin. */
+  /** O10/O11: the reference's broadcast color probe as a broadcast join
+    * (small dim `part` built side → BroadcastHashJoin). Spark decides it
+    * from the `part` file size against `autoBroadcastJoinThreshold`: a dim
+    * table still grows with SF, and past the threshold the same join
+    * degrades to sort-merge instead of OOMing the broadcast build; at every
+    * gate scale the file is far under it and the plan stays the asserted
+    * BroadcastHashJoin. */
   def qJoinBroadcast(spark: SparkSession, d: String): DataFrame =
     Tables.lineitem(spark, d)
-      .join(Broadcasts.maybeBroadcast(Tables.part(spark, d)),
-        col("l_partkey") === col("p_partkey"))
+      .join(Tables.part(spark, d), col("l_partkey") === col("p_partkey"))
       .groupBy(col("p_brand"))
       .agg(
         dsum(col("l_extendedprice") * (lit(1.0) - col("l_discount"))).as("revenue"),
@@ -837,24 +837,25 @@ object Relational {
         floor(col("c_acctbal") / 1000).cast("long").as("bal_band"),
         col("c_acctbal").as("bal"))).df // feeds level 0 AND both residue re-joins
     val g0 = State.memo(rows.groupBy(col("nation"), col("segment"), col("bal_band"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))).df
-    val pub0 = g0.filter(col("n") >= KAnonK)
+      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div")))
+    val pub0 = g0.df.filter(col("n") >= KAnonK)
       .select(lit(0).as("level"), col("nation"), col("segment"),
         col("bal_band"), col("n"), col("l_div"))
     // Residue rows re-derive by joining the (QI-domain-bounded, broadcast)
     // small-group key table back onto the row stream — no per-group value
     // lists ever materialize, so a million-row published group costs
-    // nothing on the generalization path.
-    val small0 = Broadcasts.maybeBroadcast(g0.filter(col("n") < KAnonK)
-      .select(col("nation"), col("segment"), col("bal_band")))
+    // nothing on the generalization path. Each small-group table is bounded
+    // by its group memo's observed rows.
+    val small0 = Broadcasts.maybeBroadcast(g0.df.filter(col("n") < KAnonK)
+      .select(col("nation"), col("segment"), col("bal_band")), g0.rows)
     val g1 = State.memo(rows.join(small0, Seq("nation", "segment", "bal_band"), "left_semi")
       .groupBy(col("nation"), col("segment"))
-      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))).df
-    val pub1 = g1.filter(col("n") >= KAnonK)
+      .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div")))
+    val pub1 = g1.df.filter(col("n") >= KAnonK)
       .select(lit(1).as("level"), col("nation"), col("segment"),
         lit(-1L).as("bal_band"), col("n"), col("l_div"))
-    val small1 = Broadcasts.maybeBroadcast(g1.filter(col("n") < KAnonK)
-      .select(col("nation"), col("segment")))
+    val small1 = Broadcasts.maybeBroadcast(g1.df.filter(col("n") < KAnonK)
+      .select(col("nation"), col("segment")), g1.rows)
     val pub2 = rows.join(small0, Seq("nation", "segment", "bal_band"), "left_semi")
       .join(small1, Seq("nation", "segment"), "left_semi")
       .agg(count(lit(1)).as("n"), countDistinct(col("bal")).as("l_div"))

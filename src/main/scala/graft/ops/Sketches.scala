@@ -75,8 +75,9 @@ object Sketches {
       .join(broadcast(w1), expr("b1 div 63") === col("word1"), "left_outer")
       .join(broadcast(w2), expr("b2 div 63") === col("word2"), "left_outer")
       // The exact ground-truth key set grows with the corpus (unlike the
-      // fixed-geometry bloom words above) — conditional hint.
-      .join(Broadcasts.maybeBroadcast(keys.withColumn("in_keys", lit(true))),
+      // fixed-geometry bloom words above) and no count of it is held, so
+      // Spark decides its broadcast.
+      .join(keys.withColumn("in_keys", lit(true)),
         col("l_orderkey") === col("k"), "left_outer")
       .groupBy(col("l_returnflag"))
       .agg(

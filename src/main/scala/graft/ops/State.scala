@@ -83,12 +83,12 @@ object State {
         ck.schema)
     }
 
-  /** One-shot memo. The frame KEEPS the source plan's statistics, so the
-    * planner can still broadcast it (q_fuzzy_join's band joins, the
-    * similarity memos); a memo is built once, so its estimate cannot
-    * compound. */
-  def memo(df: DataFrame): State =
-    materialize(df, Nil) { (ck, rdd, parts) =>
+  /** One-shot memo, observing `metrics` as [[loop]] does. The frame KEEPS
+    * the source plan's statistics, so the planner can still broadcast it
+    * (q_fuzzy_join's band joins, the similarity memos); a memo is built
+    * once, so its estimate cannot compound. */
+  def memo(df: DataFrame, metrics: Column*): State =
+    materialize(df, metrics) { (ck, rdd, parts) =>
       if (parts < rdd.getNumPartitions) ck.coalesce(parts) else ck
     }
 

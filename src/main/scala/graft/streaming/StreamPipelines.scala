@@ -356,20 +356,19 @@ object StreamPipelines {
     * Spark broadcasts and reuses it): events join the customer dimension
     * on user_id, hop to nation, and aggregate value per nation name.
     *
-    * Scale posture: both build sides are conditional broadcasts — the
-    * customer dimension GROWS with the corpus, so past the threshold the
-    * hint drops and the per-batch join shuffles (on a stream that is the
-    * cue to pre-bucket the dimension instead); nation is fixed-size. The
-    * aggregate is the usual partial+final pair; in streaming it runs as
-    * an incremental stateful agg (Update/Complete), in batch one-shot. */
+    * Scale posture: Spark decides both build sides' broadcast from the
+    * static tables' file sizes — the customer dimension GROWS with the
+    * corpus, so past `autoBroadcastJoinThreshold` the per-batch join
+    * shuffles (on a stream that is the cue to pre-bucket the dimension
+    * instead); nation is fixed-size. The aggregate is the usual
+    * partial+final pair; in streaming it runs as an incremental stateful
+    * agg (Update/Complete), in batch one-shot. */
   def enrich(events: DataFrame, customers: DataFrame,
       nations: DataFrame): DataFrame =
     events
-      .join(graft.ops.Broadcasts.maybeBroadcast(
-        customers.select(col("c_custkey"), col("c_nationkey"))),
+      .join(customers.select(col("c_custkey"), col("c_nationkey")),
         col("user_id") === col("c_custkey"))
-      .join(graft.ops.Broadcasts.maybeBroadcast(
-        nations.select(col("n_nationkey"), col("n_name"))),
+      .join(nations.select(col("n_nationkey"), col("n_name")),
         col("c_nationkey") === col("n_nationkey"))
       .groupBy(col("n_name"))
       .agg(count(lit(1)).as("n_events"), dsum("value").as("sum_value"))

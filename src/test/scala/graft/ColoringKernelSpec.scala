@@ -39,9 +39,9 @@ class ColoringKernelSpec extends AnyFunSuite {
     // to the per-round regather with collect_set arrays — keep it covered.
     val edges = RandomGraph.edges(spark, 500L, 6, seed = 11)
     check(edges, 70, Strategy.Jp)
-    // A greedy request past the mask runs on the same Jp rounds.
-    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 70)
-      === Strategy.Jp)
+    // A greedy request past the mask runs on the same Jp rounds, whatever V.
+    assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 70,
+      fail("V read past the mask")) === Strategy.Jp)
     check(edges, 69, Strategy.GreedyRdd)
   }
 
@@ -64,19 +64,20 @@ class ColoringKernelSpec extends AnyFunSuite {
 
   test("greedy requests auto-route to Jp past the per-bucket scale bound") {
     val edges = RandomGraph.edges(spark, 200, 5, seed = 42)
+    val v = edges.select("src").distinct().count()
     // Defaults keep the requested strategy (V/k far under the bound)...
-    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 6)
+    assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 6, v)
       === Strategy.GreedyRdd)
-    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.Jp, 6)
+    assert(ColoringKernel.resolveStrategy(spark, Strategy.Jp, 6, v)
       === Strategy.Jp)
     // ...a palette past the 64-bit mask routes to Jp under any bound...
-    assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 65)
+    assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 65, v)
       === Strategy.Jp)
     // ...an injected tiny bound flips the greedy request to Jp, and an
     // end-to-end greedy request still yields a valid coloring via Jp rounds.
     spark.conf.set(ColoringKernel.GreedyMaxBucketRowsKey, "1")
     try {
-      assert(ColoringKernel.resolveStrategy(spark, edges, Strategy.GreedyRdd, 6)
+      assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 6, v)
         === Strategy.Jp)
       check(edges, 5, Strategy.GreedyRdd)
     } finally spark.conf.unset(ColoringKernel.GreedyMaxBucketRowsKey)

@@ -68,7 +68,7 @@ class PlanShapeSpec extends AnyFunSuite {
       s"scan reads unprojected columns:\n$readSchema")
   }
 
-  test("dimension join with broadcast hint plans a BroadcastHashJoin") {
+  test("dimension join plans a BroadcastHashJoin from the part file size") {
     val p = plan(Relational.qJoinBroadcast(spark, sf))
     assert(p.contains("BroadcastHashJoin"), s"no broadcast join:\n$p")
     assert(!p.contains("SortMergeJoin"), s"dim join fell back to SMJ:\n$p")
@@ -361,7 +361,7 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(!pp.contains("array_intersect"),
       s"per-row hash-set intersect crept back into the triple build:\n$pp")
     // The adjacency's byte signal is the SECOND gate (r13 ADVICE): at the
-    // same |V| row count, an |E|-derived payload past maxBytes must drop
+    // same |V| row count, an |E|-derived payload past MaxBytes must drop
     // the broadcast (degrade to a shuffle join) — adj rows carry Θ(|E|)
     // longs in their arrays, and a row-only gate would sail past Spark's
     // 8 GB broadcast hard cap and fail the job outright.
@@ -376,7 +376,7 @@ class PlanShapeSpec extends AnyFunSuite {
       }.size
     val okHints = nHints(graft.ops.GraphOps.triangleTriplesPlan(adj, nV, nV * 4L))
     val overHints = nHints(graft.ops.GraphOps.triangleTriplesPlan(
-      adj, nV, graft.ops.Broadcasts.DefaultMaxBytes + 1L))
+      adj, nV, graft.ops.Broadcasts.MaxBytes + 1L))
     assert(overHints == okHints - 1,
       s"oversized adjacency payload must drop exactly the build-side hint: " +
         s"ok=$okHints over=$overHints")
@@ -459,11 +459,25 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(joined(Broadcasts.maybeBroadcast(probe, 100)).contains("BroadcastHashJoin"))
     assert(!joined(Broadcasts.maybeBroadcast(probe, Broadcasts.DefaultMaxRows + 1))
       .contains("BroadcastHashJoin"))
-    // Plan-size signal: default cap keeps the hint, an injected 1-byte cap
-    // drops it.
-    assert(joined(Broadcasts.maybeBroadcast(probe)).contains("BroadcastHashJoin"))
-    s2.conf.set(Broadcasts.MaxBytesKey, "1")
-    assert(!joined(Broadcasts.maybeBroadcast(probe)).contains("BroadcastHashJoin"))
+  }
+
+  test("the hint follows observed rows, not a size estimate past 2 GiB") {
+    import org.apache.spark.sql.functions.col
+    import graft.ops.{Broadcasts, State}
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val big = s2.range(0, 1000).toDF("src")
+    // A loop state's statistics are reset, so Catalyst sizes its 100 rows
+    // at the defaultSizeInBytes sentinel.
+    val side = State.loop(s2.range(0, 100).toDF("vid"))
+    try {
+      val estimate = side.df.queryExecution.optimizedPlan.stats.sizeInBytes
+      assert(estimate > BigInt(2L << 30), s"estimate $estimate")
+      assert(side.rows === 100L)
+      val p = big.join(Broadcasts.maybeBroadcast(side.df, side.rows),
+        col("src") === col("vid")).queryExecution.executedPlan.toString
+      assert(p.contains("BroadcastHashJoin"), p)
+    } finally side.release()
   }
 
   test("qValidateColoring degrades V-sized probes to shuffle joins past the row cap") {
@@ -565,12 +579,16 @@ class PlanShapeSpec extends AnyFunSuite {
       s"marginals not broadcast at test scale:\n$p")
   }
 
-  /** A 200-vertex random graph's edges and an all-uncolored round state. */
+  /** A 200-vertex random graph's edges and a landed all-uncolored round
+    * state whose used masks differ, so the candidates do too (an all-zero
+    * mask folds every candidate to the constant 0). */
   private def jpInput() = {
-    import org.apache.spark.sql.functions.{col, count, lit}
+    import org.apache.spark.sql.functions.{col, count, lit, pmod}
     val e = graft.model.RandomGraph.edges(spark, 200, 5, seed = 42)
-    val state = e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
-      .select(col("id"), lit(-1).as("color"), col("deg"), lit(0L).as("used"))
+    val state = graft.ops.State.loop(
+      e.groupBy(col("src").as("id")).agg(count(lit(1)).cast("int").as("deg"))
+        .select(col("id"), lit(-1).as("color"), col("deg"),
+          pmod(col("id"), lit(4L)).as("used")))
     (e, state)
   }
 
@@ -610,25 +628,32 @@ class PlanShapeSpec extends AnyFunSuite {
       // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
       // (no hash buffer for a struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
-        "mask" -> jpMaskRound(e, state)._2,
-        "regather" -> ColoringKernel.jpRound(e, state, 70, frames))) {
+        "mask" -> jpMaskRound(e, state.df)._2,
+        "regather" -> ColoringKernel.jpRound(e, state.df, 70, frames))) {
         val p = plan(round)
+        assert(p.contains("a_cand"), s"$name round: no candidate test:\n$p")
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
           s"$name round: beaten ids not hash-aggregated:\n$p")
         assert(!p.contains("SortAggregate"), s"$name round sorts to aggregate:\n$p")
       }
-    } finally frames.release()
+    } finally {
+      frames.release()
+      state.release()
+    }
   }
 
   test("a Jp mask round plans no InMemoryRelation and no SortMergeJoin") {
     val (e, state) = jpInput()
-    val (round, admit) = jpMaskRound(e, state)
-    for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
-      val p = plan(df)
-      assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
-        s"$name reads a columnar cache:\n$p")
-      assert(!p.contains("SortMergeJoin"), s"$name plans a sort-merge join:\n$p")
-    }
+    try {
+      val (round, admit) = jpMaskRound(e, state.df)
+      for ((name, df) <- Seq("round" -> round, "admit" -> admit)) {
+        val p = plan(df)
+        assert(p.contains("a_cand"), s"$name: no candidate test:\n$p")
+        assert(!p.contains("InMemoryRelation") && !p.contains("InMemoryTableScan"),
+          s"$name reads a columnar cache:\n$p")
+        assert(!p.contains("SortMergeJoin"), s"$name plans a sort-merge join:\n$p")
+      }
+    } finally state.release()
   }
 
   test("a Jp mask round and validate probe broadcasts on one key, and reuse each") {
@@ -636,14 +661,11 @@ class PlanShapeSpec extends AnyFunSuite {
     import org.apache.spark.sql.functions.{col, lit, pmod}
     import graft.color.ColoringKernel
     val (e, state) = jpInput()
-    // A landed state whose used masks differ, so the candidates do too
-    // (an all-zero mask folds every candidate to the constant 0).
-    val landed = graft.ops.State.loop(state.withColumn("used", pmod(col("id"), lit(4L))))
     try {
-      val round = jpMaskRound(e, landed.df)._1
+      val round = jpMaskRound(e, state.df)._1
       // A two-color labelling: about half the edges conflict.
       val conflicts = ColoringKernel.conflictPairs(e,
-        state.select(col("id"), pmod(col("id"), lit(2)).cast("int").as("color")), 200L)
+        state.df.select(col("id"), pmod(col("id"), lit(2)).cast("int").as("color")), 200L)
       // Both endpoints probe one broadcast of the candidates (the colors),
       // and the round's second read of its updates reuses the first.
       for ((name, df, probed) <- Seq(("round", round, "cand"), ("validate", conflicts, "color"))) {
@@ -657,7 +679,7 @@ class PlanShapeSpec extends AnyFunSuite {
         assert(built.size === 1,
           s"$name: $probed broadcast ${built.size} times\n${df.queryExecution.executedPlan}")
       }
-    } finally landed.release()
+    } finally state.release()
   }
 
   test("Jp round 0 plans no join and one aggregate, with and without extra vertices") {

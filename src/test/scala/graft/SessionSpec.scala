@@ -25,6 +25,26 @@ class SessionSpec extends AnyFunSuite {
       Set("Session.scala", "Tables.scala", "ColoringKernel.scala"))
   }
 
+  test("the README's Scale knobs table lists exactly the graft conf keys src/main reads") {
+    import scala.jdk.CollectionConverters._
+    val readme = java.nio.file.Files.readAllLines(java.nio.file.Paths.get("README.md")).asScala
+    val row = "^\\| `(graft\\.[^`]+)` \\|".r
+    val documented = readme.dropWhile(!_.startsWith("## Scale knobs")).drop(1)
+      .takeWhile(!_.startsWith("## ")).flatMap(l => row.findFirstMatchIn(l).map(_.group(1))).toSet
+    val read = SourceScan.literals("graft\\.[A-Za-z0-9_.]+")
+    assert(read.nonEmpty)
+    assert(documented === read,
+      s"undocumented: ${read -- documented}; documented but unread: ${documented -- read}")
+  }
+
+  test("broadcast hints and greedy routing read no Catalyst size estimate") {
+    assert(SourceScan.callers("optimizedPlan.stats") === Set.empty)
+    val calls = SourceScan.argCounts("maybeBroadcast")
+    assert(calls.nonEmpty)
+    assert(calls.forall(_._2 == 2), s"maybeBroadcast calls without a row count: " +
+      calls.filter(_._2 != 2))
+  }
+
   test("a fresh session runs q_kmv_distinct (graft_kmv_kmin) with no register call") {
     val s2 = spark.newSession()
     assert(!has(s2, "graft_kmv_kmin"))
