@@ -19,9 +19,9 @@ import graft.ops.State
   *   --seed S                generate: RNG seed (default 42)
   *   --output-graph PATH     write the (generated) graph as JSON
   *   --output-coloring PATH  write the coloring as JSON
-  *   --strategy jp|greedy|graphx  kernel strategy (default jp); greedy
-  *                           runs the GreedyRdd rounds while the palette
-  *                           fits the 64-bit mask and the bucket bound
+  *   --strategy jp|greedy    kernel strategy (default jp); greedy runs
+  *                           the GreedyRdd rounds while the palette fits
+  *                           the 64-bit mask and the bucket bound
   *                           (`graft.greedy.maxBucketRows`), Jp otherwise
   */
 object Coloring {
@@ -39,6 +39,12 @@ object Coloring {
     * lifecycle so the test suite can drive the full flag surface on the
     * shared session without `spark.stop()` tearing it down. */
   private[graft] def run(spark: SparkSession, opts: Map[String, String]): Summary = {
+    val strategy = opts.get("strategy") match {
+      case None | Some("jp") => Strategy.Jp
+      case Some("greedy") => Strategy.GreedyRdd
+      case Some(other) =>
+        throw new IllegalArgumentException(s"--strategy is jp or greedy, not $other")
+    }
     val (edges, vertices, nodesOpt) = opts.get("input") match {
       case Some(path) =>
         val nodes = GraphIO.readNodes(spark, path)
@@ -54,11 +60,6 @@ object Coloring {
       GraphIO.writeGraph(nodes, p)
     }
 
-    val strategy = opts.get("strategy") match {
-      case Some("greedy") => Strategy.GreedyRdd
-      case Some("graphx") => Strategy.GraphX
-      case _ => Strategy.Jp
-    }
     // One edge memo serves the search and the validation, so neither
     // re-runs the generator or the JSON read.
     val e = State.memo(edges)

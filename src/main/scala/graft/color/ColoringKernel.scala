@@ -46,14 +46,13 @@ import graft.ops.State
   *     tables, never shuffled; a k ≤ 64 round shuffles only the beaten
   *     ids and the per-vertex changes, and no per-node adjacency arrays
   *     move.
-  *   - [[Strategy.GreedyRdd]] and [[Strategy.GraphX]] delegate their rounds
-  *     to [[GreedyRddKernel]] and [[GraphXKernel]].
+  *   - [[Strategy.GreedyRdd]] delegates its rounds to [[GreedyRddKernel]].
   *
   * The Jp rounds run on [[State.iterate]], the engine's one round loop —
-  * same stance as GraphX `Pregel` (SURVEY.md §4): only counts cross to the
-  * driver. Every round's state lands as a [[State]] (SURVEY.md §7 risk 4):
-  * the checkpoint truncates lineage, and its own action observes the
-  * counts the loop control reads. A k ≤ 64 round lands nothing else: its
+  * the `Pregel` stance (SURVEY.md §4): only counts cross to the driver.
+  * Every round's state lands as a [[State]] (SURVEY.md §7 risk 4): the
+  * checkpoint truncates lineage, and its own action observes the counts
+  * the loop control reads. A k ≤ 64 round lands nothing else: its
   * candidates are a projection of that checkpoint and its updates are read
   * inside the plan that lands the next state. A regather round (k > 64)
   * also lands its candidates, which sit behind an edges pass.
@@ -68,12 +67,6 @@ object ColoringKernel {
       * `aggregateByKey` loop over co-partitioned RDDs. A request runs here
       * only when [[greedyFits]] holds; otherwise it runs on Jp. */
     case object GreedyRdd extends Strategy
-    /** Delegate rounds to [[GraphXKernel]] (aggregateMessages message
-      * passing). Same speculative first-fit + priority-admit semantics;
-      * lowest per-round fixed cost (no Catalyst planning per round) — the
-      * corpus kernel queries take it below
-      * [[graft.ops.ColorQueries.GraphxMaxEdgesKey]]. */
-    case object GraphX extends Strategy
   }
 
   /** A k-coloring read off the checkpoint `state` holds; `release()` frees
@@ -144,34 +137,26 @@ object ColoringKernel {
       strategy: Strategy = Strategy.Jp,
       extraVertices: Option[DataFrame] = None,
       maxRounds: Int = 200,
-      preparedBase: Option[org.apache.spark.graphx.Graph[Int, Unit]] = None,
       vertices: Option[Long] = None)
       : Option[Colored] = {
-
-    // A delegating kernel hands its final colors to `land` and frees its
-    // last round once they are copied into a State. A one-shot land: the
-    // delegated rounds are RDD rounds, not State rounds.
-    def land(df: DataFrame): State = State.loop(appendIsolated(df, extraVertices))
-    def colored(result: Option[(State, Int)]): Option[Colored] =
-      result.map { case (st, rounds) => Colored(st, k, rounds) }
-    if (strategy == Strategy.GraphX) {
-      return colored(preparedBase match {
-        case Some(base) => GraphXKernel.tryColorOn(spark, base, k, maxRounds)(land)
-        case None => GraphXKernel.tryColor(spark, edges, k, maxRounds)(land)
-      })
-    }
     lazy val v = vertices.getOrElse(edges.select(col("src")).distinct().count())
-    if (resolveStrategy(spark, strategy, k, v) == Strategy.GreedyRdd) {
-      return colored(GreedyRddKernel.tryColor(spark, edges, k, maxRounds)(land))
-    }
-    jp(spark, edges, _ => k, extraVertices, maxRounds)
+    if (resolveStrategy(spark, strategy, k, v) == Strategy.GreedyRdd)
+      // The greedy kernel hands its final colors to this one-shot land (its
+      // rounds are RDD rounds, not State rounds) and frees its last round
+      // once they are copied into the State.
+      GreedyRddKernel.tryColor(spark, edges, k, maxRounds)(
+        df => State.loop(appendIsolated(df, extraVertices)))
+        .map { case (st, rounds) => Colored(st, k, rounds) }
+    else jp(spark, edges, _ => k, extraVertices, maxRounds)
   }
 
-  /** The metric every Jp state observes: `max(color) + 1`, 0 on no rows.
-    * First-fit gives a vertex color c only when colors 0..c-1 are all
-    * taken by its neighbors, so on a complete coloring the colors used
-    * are exactly {0..max} and this is their number. */
-  private val ColorsUsed = "colors_used"
+  /** The metric every Jp state and [[GraphXKernel.deltaPlusOne]]'s landing
+    * observe: `max(color) + 1`, 0 on no rows. First-fit gives a vertex
+    * color c only when colors 0..c-1 are all taken by its neighbors, so on
+    * a complete coloring the colors used are exactly {0..max} and this is
+    * their number. */
+  private[color] val ColorsUsed = "colors_used"
+  private[color] def colorsUsed: Column = (max(col("color")) + 1).as(ColorsUsed)
 
   /** The Jp DataFrame rounds. The palette is `palette(Δ)`, with Δ the max
     * degree observed on round 0's checkpoint, so a Δ+1 run needs no
@@ -193,7 +178,7 @@ object ColoringKernel {
     val progress = Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
       sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"),
-      (max(col("color")) + 1).as(ColorsUsed))
+      colorsUsed)
     // Round 0 lands once, with Δ for the palette.
     val zero = State.loop(roundZero(edges, extraVertices),
       progress :+ max(col("deg")).as("maxDeg"): _*)
@@ -405,95 +390,67 @@ object ColoringKernel {
     * from `distinct colors actually used`, which first-fit greedy makes a
     * far tighter upper bound; each success retries with k−1 until failure.
     *
-    * For the DETERMINISTIC strategies (Jp, GraphX) even the retries are
-    * redundant and are skipped: the per-round trace does not depend on k
-    * except through the palette-exhausted sentinel (first-fit picks the
-    * smallest free color regardless of k; priority admit is k-blind), so
-    * the k' < k attempt replays the identical rounds until the first round
-    * where the Δ+1 trace committed a color ≥ k' — at which point that
-    * vertex gets −3 and the attempt fails. Hence for this kernel family,
-    * tryColor(k') succeeds iff k' ≥ colors-used-at-Δ+1: one run at Δ+1
-    * already witnesses the kernel's minimal k (measured: 40 s → 14 s for
+    * For the DETERMINISTIC Jp rounds even the retries are redundant and
+    * are skipped: the per-round trace does not depend on k except through
+    * the palette-exhausted sentinel (first-fit picks the smallest free
+    * color regardless of k; priority admit is k-blind), so the k' < k
+    * attempt replays the identical rounds until the first round where the
+    * Δ+1 trace committed a color ≥ k' — at which point that vertex gets −3
+    * and the attempt fails. Hence for this kernel family, tryColor(k')
+    * succeeds iff k' ≥ colors-used-at-Δ+1: one run at Δ+1 already
+    * witnesses the kernel's minimal k (measured: 40 s → 14 s for
     * q_minimal_colors at sf0.1 — the k−1 probe replayed all 13 rounds with
     * bit-identical uncolored counts before failing on the last one).
     * GreedyRdd keeps the descending search: its admitted sets depend on
     * partitioning (reference-faithful), so no single trace is a proof.
     *
-    * Δ comes from the GraphX base for GraphX and from one degree aggregate
-    * for GreedyRdd (0 on an edge-free input), which also counts the V every
-    * greedy attempt is routed on. Jp reads it off its own
-    * round-0 checkpoint, so its degree aggregate is the only pass over the
-    * edges before round 1, and it reads the colors used off its last
-    * checkpoint, so it runs no job after its rounds. `edges` is read as
-    * [[tryColor]] reads it: pass it materialized.
+    * Δ comes from one degree aggregate for GreedyRdd (0 on an edge-free
+    * input), which also counts the V every greedy attempt is routed on.
+    * Jp reads it off its own round-0 checkpoint, so its degree aggregate is
+    * the only pass over the edges before round 1, and it reads the colors
+    * used off its last checkpoint, so it runs no job after its rounds.
+    * `edges` is read as [[tryColor]] reads it: pass it materialized.
     */
   def minimalColors(
       spark: SparkSession,
       edges: DataFrame,
       strategy: Strategy = Strategy.Jp,
       extraVertices: Option[DataFrame] = None,
-      maxAttempts: Int = 16,
-      preparedBase: Option[org.apache.spark.graphx.Graph[Int, Unit]] = None)
+      maxAttempts: Int = 16)
       : Colored = {
-
-    // GraphX attempts share one prepared base graph: the DF→RDD conversion,
-    // Graph.fromEdges shuffle, and degree join run once for the whole
-    // descending-k search instead of per attempt. A caller-provided base
-    // (ColorQueries shares one across the kernel queries) is not unpersisted
-    // here.
-    val ownsBase = strategy == Strategy.GraphX && preparedBase.isEmpty
-    val graphxBase =
-      if (strategy == Strategy.GraphX)
-        preparedBase.orElse(Some(GraphXKernel.prepare(spark, edges)))
-      else None
-    // GreedyRdd's Δ and V, from one degree aggregate.
-    lazy val (maxDeg, v) = {
+    // The Δ+1 run's coloring already witnesses k = colors-actually-used —
+    // no revalidation run needed, just relabel (first-fit never exceeds
+    // the palette it was given).
+    if (strategy == Strategy.Jp) {
+      // Jp observed that count on its last landing; the trace is the proof
+      // (scaladoc above), a k−1 attempt would replay it and fail.
+      val first = jp(spark, edges, _ + 1, extraVertices)
+        .getOrElse(sys.error("k = Δ+1 must be colorable"))
+      first.copy(k = first.state(ColorsUsed).toInt)
+    } else {
+      // GreedyRdd's Δ and V, from one degree aggregate.
       val r = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
         .agg(coalesce(max(col("d")), lit(0L)), count(lit(1))).head()
-      (r.getLong(0).toInt, r.getLong(1))
-    }
-    def attempt(k: Int): Option[Colored] =
-      tryColor(spark, edges, k, strategy, extraVertices, preparedBase = graphxBase,
-        vertices = if (strategy == Strategy.GreedyRdd) Some(v) else None)
-
-    try {
-      // Jp reads Δ off its own round-0 checkpoint; the others need it first.
-      val first = (graphxBase match {
-        case Some(base) => attempt(GraphXKernel.maxDegree(base) + 1)
-        case None if strategy == Strategy.Jp =>
-          jp(spark, edges, _ + 1, extraVertices)
-        case None => attempt(maxDeg + 1)
-      }).getOrElse(sys.error("k = Δ+1 must be colorable"))
-
-      // The Δ+1 run's coloring already witnesses k = colors-actually-used —
-      // no revalidation run needed, just relabel (first-fit never exceeds
-      // the palette it was given). Jp observed that count on its last
-      // landing; the other kernels count it.
-      var k =
-        if (strategy == Strategy.Jp) first.state(ColorsUsed).toInt
-        else usedColors(first.colors)
-      if (strategy == Strategy.Jp || strategy == Strategy.GraphX) {
-        // Deterministic kernel: the Δ+1 trace is the proof (scaladoc above);
-        // a k−1 attempt would replay it and fail.
-        first.copy(k = k)
-      } else {
-        var best = first.copy(k = k)
-        var attempts = 0
-        var done = false
-        while (!done && attempts < maxAttempts && k > 1) {
-          attempts += 1
-          attempt(k - 1) match {
-            case Some(c) =>
-              val prev = best
-              best = c
-              k = usedColors(c.colors)
-              prev.release()
-            case None => done = true
-          }
+      def attempt(k: Int): Option[Colored] =
+        tryColor(spark, edges, k, strategy, extraVertices, vertices = Some(r.getLong(1)))
+      var best = attempt(r.getLong(0).toInt + 1)
+        .getOrElse(sys.error("k = Δ+1 must be colorable"))
+      var k = usedColors(best.colors)
+      var attempts = 0
+      var done = false
+      while (!done && attempts < maxAttempts && k > 1) {
+        attempts += 1
+        attempt(k - 1) match {
+          case Some(c) =>
+            val prev = best
+            best = c
+            k = usedColors(c.colors)
+            prev.release()
+          case None => done = true
         }
-        best.copy(k = usedColors(best.colors))
       }
-    } finally if (ownsBase) graphxBase.foreach(_.unpersist(blocking = false))
+      best.copy(k = k)
+    }
   }
 
   /** Number of distinct colors in a complete coloring (one job;

@@ -16,8 +16,8 @@ import org.apache.spark.storage.StorageLevel
   * Why an RDD formulation exists next to [[ColoringKernel]]'s DataFrame
   * rounds: an iterative kernel's per-round cost at a fixed graph size is
   * dominated by planning + stage fixed cost, not data volume — the same
-  * reason [[GraphXKernel]] is the bench default for the deterministic
-  * strategy. Holding the state and adjacency as co-partitioned RDDs under
+  * reason [[GraphXKernel]] runs the deterministic Δ+1 trace below its
+  * crossover. Holding the state and adjacency as co-partitioned RDDs under
   * ONE `HashPartitioner` makes every per-round join narrow (candidates ⋈
   * adjacency, updates ⋈ adjacency, state cogroup); the only shuffles left
   * per round are the color-bucket `aggregateByKey` (key space ≤ k) and the
@@ -30,8 +30,8 @@ import org.apache.spark.storage.StorageLevel
   * the map-side partial greedy prunes what reaches that single reducer,
   * but a giant component still bottlenecks on it. That is the
   * `aggregateByKey` design being replayed faithfully; the deterministic
-  * Jp/GraphX strategies (pure per-edge messaging, no per-bucket fold) are
-  * the 100 TB path and the bench default for the corpus queries.
+  * Jp rounds and GraphX trace (pure per-edge messaging, no per-bucket
+  * fold) are the 100 TB path and the one the corpus queries take.
   *
   * Scale posture: partition count follows the same ~250k-edges/partition
   * rule as [[GraphXKernel.prepare]]; all per-vertex structures stay
@@ -100,8 +100,8 @@ object GreedyRddKernel {
     *
     * Returns None when `ColoringKernel.greedyFits` rejects the derived
     * palette for the EXACT V (the same rule the strategy router applies),
-    * or on a genuine stall past `maxRounds`; the caller then falls back to
-    * the strategy router. */
+    * or on a genuine stall past `maxRounds`; the caller then runs the Jp
+    * rounds. */
   def colorDeltaPlusOne[T](
       spark: SparkSession,
       edgesDf: DataFrame,

@@ -3,6 +3,7 @@ package graft.llm
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.color.GraphXKernel
 import graft.ops.State
 import graft.tables.Tables
 
@@ -987,26 +988,15 @@ object Dedup {
   /** q_dedup_cluster: the full dedup-pipeline shape — near-dup PAIRS are
     * not yet a dedup decision; transitively-connected docs must collapse to
     * one cluster with a canonical keeper (the RefinedWeb/SlimPajama
-    * pipeline step). Verified MinHash pairs become an undirected graph and
-    * GraphX `connectedComponents` labels every member with the minimum
-    * doc_id of its component — deterministic, and the scale path for a
-    * pair graph too big for driver-side union-find. Output: one row per
-    * clustered doc, (doc_id, cluster_rep). */
+    * pipeline step). Verified MinHash pairs become an undirected graph
+    * whose connected components ([[ccClusters]]) label every member with
+    * the minimum doc_id of its component — deterministic, and the scale
+    * path for a pair graph too big for driver-side union-find. Output: one
+    * row per clustered doc, (doc_id, cluster_rep). */
   def qDedupCluster(spark: SparkSession, d: String): DataFrame =
     clusterTable(spark, d).orderBy(col("doc_id"))
 
-  /** Unordered (doc_id, cluster_rep) table, computed once per session.
-    * `cluster_rep` = minimum doc_id of the pair-graph component under
-    * either execution. Strategy picks by verified-pair count, the same
-    * [[graft.ops.ColorQueries.GraphxMaxEdgesKey]] crossover as the graph
-    * family: GraphX `connectedComponents` below — lowest fixed cost for
-    * the usual case of a pair graph orders smaller than the corpus — and
-    * the declarative [[graft.ops.GraphOps.ccLabelsDf]] min-label rounds
-    * above, because at heavy dup density the pair graph grows with bucket
-    * dup-multiplicity² (the 10× ScaleUp leg measured ×92 candidate volume
-    * for ×10 docs) and GraphX's vertex-cut replication becomes the
-    * dominant shuffle term. The pair table is persisted for the decision
-    * count + the one pass that consumes it, then dropped. */
+  /** Unordered (doc_id, cluster_rep) table, computed once per session. */
   private def clusterTable(spark: SparkSession, d: String): DataFrame =
     clusterCache.getOrElseUpdate(spark, d)(
       ccClusters(spark, minhashVerifiedPairs(spark, d)))
@@ -1014,29 +1004,18 @@ object Dedup {
   /** Connected-component labels (doc_id, cluster_rep = min member id) of
     * an undirected (doc_a, doc_b) edge list — the shared clustering core
     * of [[qDedupCluster]]/[[qDedupCanonical]] (MinHash pairs) and
-    * [[qDedupNgram]] (the n-gram spanning edge set). Strategy picks by
-    * edge count, the same [[graft.ops.ColorQueries.GraphxMaxEdgesKey]]
-    * crossover as the graph family: GraphX below (lowest fixed cost for a
-    * pair graph orders smaller than the corpus), the declarative min-label
-    * rounds above (at heavy dup density GraphX's vertex-cut replication
-    * becomes the dominant shuffle term). */
+    * [[qDedupNgram]] (the n-gram spanning edge set). GraphX runs it below
+    * the [[GraphXKernel.runs]] crossover, by pair count, and the
+    * declarative [[graft.ops.GraphOps.ccLabelsDf]] min-label rounds above
+    * it. The pair table is memoized for the decision count and the one
+    * pass that consumes it, then dropped. */
   private[graft] def ccClusters(spark: SparkSession, edges: DataFrame): DataFrame = {
     val pairsState = State.memo(edges.select(col("doc_a"), col("doc_b")))
     val (pairs, nPairs) = (pairsState.df, pairsState.rows)
     try {
-      val graphxMax = spark.conf.get(graft.ops.ColorQueries.GraphxMaxEdgesKey,
-        graft.ops.ColorQueries.DefaultGraphxMaxEdges.toString).toLong
-      if (nPairs <= graphxMax) {
-        import org.apache.spark.graphx.{Edge, Graph}
-        import spark.implicits._
-        val es = pairs.as[(Long, Long)].rdd.map { case (a, b) => Edge(a, b, ()) }
-        val g = Graph.fromEdges(es, ())
-        val cc = g.connectedComponents()
-        try State.memo(cc.vertices.toDF("doc_id", "cluster_rep")).df
-        finally Seq(g, cc).foreach { x =>
-          x.unpersist(blocking = false)
-          x.edges.unpersist(blocking = false)
-        }
+      if (GraphXKernel.runs(spark, nPairs)) {
+        GraphXKernel.componentLabels(spark, pairs)
+          .select(col("id").as("doc_id"), col("lbl").as("cluster_rep"))
       } else {
         // Pairs carry doc_a < doc_b and are distinct, so the symmetric
         // union is duplicate-free — exactly the edge-list contract

@@ -1,11 +1,9 @@
 package graft.ops
 
-import org.apache.spark.graphx.Graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.color.{ColoringKernel, GraphXKernel}
-import graft.color.ColoringKernel.Strategy
 
 /** Driver-contract wrappers for the iterative coloring kernel
   * (q_color_graph / q_minimal_colors — SURVEY.md §2.3, no SQL oracle; the
@@ -14,11 +12,8 @@ import graft.color.ColoringKernel.Strategy
   */
 object ColorQueries {
 
-  private def kernelBase(spark: SparkSession, d: String): Graph[Int, Unit] =
-    GraphXKernel.prepareCached(spark, d, GraphOps.kernelEdges(spark, d))
-
   /** Session-lifetime cache of the Δ+1 trace per sfDir — the same
-    * materialized-view stance as [[GraphXKernel.prepareCached]] and the
+    * materialized-view stance as [[GraphXKernel.kernelBase]] and the
     * persisted edge DFs: the kernel is deterministic, q_color_graph and
     * q_minimal_colors both start from the identical Δ+1 run, which
     * [[ColoringKernel.minimalColors]] proves already witnesses minimal k,
@@ -26,37 +21,21 @@ object ColorQueries {
     * read the checkpointed result and its `k`, the colors used. */
   private val deltaTraceCache = new SessionCache[ColoringKernel.Colored]
 
-  /** Strategy crossover for the Δ+1 trace, by kernel-graph edge count.
-    * GraphX wins below it on per-round fixed cost (no Catalyst planning
-    * per round: 8.5 s vs 24.7 s at 5.9M edges); the DataFrame Jp rounds
-    * win above it because their per-round traffic has no vertex-cut
-    * replication term — GraphX message bytes grow ~2√P with the edge
-    * partition count while the Jp rounds' broadcast probes stay flat
-    * (41.0 s vs 60.8 s at 17.6M edges, measured on the 30× ScaleUp leg).
-    * Same deterministic coloring either side — the oracle replay is
-    * strategy-independent. Session-configurable so the spec can force the
-    * crossover on a small graph. */
-  val GraphxMaxEdgesKey = "graft.kernel.graphxMaxEdges"
-  val DefaultGraphxMaxEdges: Long = 10000000L
-
+  /** The Δ+1 trace on [[GraphXKernel]] below its crossover
+    * ([[GraphXKernel.runs]]), on the DataFrame Jp rounds above it; both
+    * give the identical coloring. */
   private def deltaPlusOneTrace(spark: SparkSession, d: String): ColoringKernel.Colored =
     deltaTraceCache.getOrElseUpdate(spark, d)({
       val (edges, nEdges) = GraphOps.kernelEdgesWithCount(spark, d)
-      val graphxMax = spark.conf
-        .get(GraphxMaxEdgesKey, DefaultGraphxMaxEdges.toString).toLong
-      // Below the crossover GraphX runs on the session's kernel base; past
-      // it the DataFrame Jp rounds read Δ off their own round 0 (no GraphX
-      // base build).
-      if (nEdges <= graphxMax)
-        ColoringKernel.minimalColors(spark, edges, Strategy.GraphX,
-          preparedBase = Some(kernelBase(spark, d)))
-      else ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
+      if (GraphXKernel.runs(spark, nEdges))
+        GraphXKernel.deltaPlusOne(spark, GraphXKernel.kernelBase(spark, d))
+      else ColoringKernel.minimalColors(spark, edges)
     })
 
   /** Full first-fit coloring of the consecutive-co-purchase graph at
     * k = Δ+1 (always feasible). Output `(id, color, n_colors)` ordered by
-    * id; deterministic (bench-selected GraphX strategy — same semantics as
-    * Jp, message-passing execution). */
+    * id; deterministic (the same coloring on either side of the
+    * [[GraphXKernel.runs]] crossover). */
   def qColorGraph(spark: SparkSession, d: String): DataFrame = {
     val result = deltaPlusOneTrace(spark, d)
     result.colors
@@ -73,20 +52,14 @@ object ColorQueries {
   def qColorGreedy(spark: SparkSession, d: String): DataFrame = {
     val (edges, eCount) = GraphOps.kernelEdgesWithCount(spark, d)
     def validate(colors: DataFrame) = ColoringKernel.validate(edges, colors)
-    // Fast path: the kernel derives k = Δ+1 from its own adjacency (one
-    // aggregate; no separate degree pass) and applies the greedy routing
-    // rule with the exact V. None → the strategy router (Jp past the mask
-    // or the bucket bound). Either way the colors are validated before
-    // their storage is freed.
+    // The kernel derives k = Δ+1 from its own adjacency (one aggregate; no
+    // separate degree pass) and applies the greedy routing rule with the
+    // exact V. None (past the mask or the bucket bound) → the Jp Δ+1 run,
+    // which reads Δ off its own round 0. Either way the colors are
+    // validated before their storage is freed.
     val ((uncolored, conflicts), rounds) = graft.color.GreedyRddKernel
       .colorDeltaPlusOne(spark, edges, eCount)(validate).getOrElse {
-      // Δ and V from one aggregate; V routes the request.
-      val dv = edges.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .agg(max(col("deg")), count(lit(1))).head()
-      val r = ColoringKernel
-        .tryColor(spark, edges, dv.getLong(0).toInt + 1, Strategy.GreedyRdd,
-          vertices = Some(dv.getLong(1)))
-        .getOrElse(sys.error("Δ+1 coloring cannot fail"))
+      val r = ColoringKernel.minimalColors(spark, edges)
       try (validate(r.colors), r.rounds) finally r.release()
     }
     import spark.implicits._
@@ -95,7 +68,7 @@ object ColorQueries {
   }
 
   /** Minimal-color search (O25) on the kernel graph; single summary row.
-    * For the deterministic GraphX/Jp kernel the Δ+1 trace IS the minimal-k
+    * For the deterministic Jp kernel the Δ+1 trace IS the minimal-k
     * witness (ColoringKernel.minimalColors scaladoc: a k−1 attempt replays
     * the identical rounds and fails), so this reads the shared session
     * trace — minimal_k = its k, the distinct colors used — and revalidates
@@ -129,7 +102,7 @@ object ColorQueries {
          |  CAST((SELECT count(DISTINCT color) FROM lab$rounds WHERE color >= 0) AS INT) AS n_colors
          |FROM lab$rounds l, guard g WHERE g.ok = 0 ORDER BY l.id""".stripMargin
 
-  /** DuckDB oracle for q_minimal_colors (GraphX/Jp strategy): the Δ+1 trace
+  /** DuckDB oracle for q_minimal_colors (the Jp rounds): the Δ+1 trace
     * IS the minimal-k witness (ColoringKernel.minimalColors scaladoc — a
     * k−1 attempt would replay the same deterministic rounds and fail), so
     * minimal_k = distinct colors of the same unrolled replay, and the

@@ -2,6 +2,8 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+
+import graft.color.GraphXKernel
 import graft.tables.Tables
 
 /** Graph-shaped queries over the corpus.
@@ -1294,37 +1296,23 @@ object GraphOps {
 
   /** q_connected_components: min-id label propagation to fixpoint over the
     * kernel graph; summary row (component count + largest size + vertex
-    * count) so the output is deterministic and small. Execution picks by
-    * kernel edge count (the [[ColorQueries.GraphxMaxEdgesKey]] crossover,
-    * same routing as [[qPagerank]] and the Δ+1 trace): GraphX
-    * `connectedComponents` below — lowest per-round fixed cost — and the
-    * declarative [[ccDfRounds]] above, whose per-round traffic has no
-    * vertex-cut replication term (the 30× probe measured GraphX message
-    * bytes growing ~2√P with edge partition count; GraphX CC was the
-    * worst scaler of the graph family at the 10× leg, ×29 CPU for ×10
-    * edges). Both converge to the identical labeling — the minimum vertex
-    * id per component — so the summary matches either side. */
+    * count) so the output is deterministic and small. GraphX
+    * `connectedComponents` runs it below the [[GraphXKernel.runs]]
+    * crossover and the declarative [[ccDfRounds]] above it; both converge
+    * to the identical labeling — the minimum vertex id per component — so
+    * the summary matches either side. */
   def qConnectedComponents(spark: SparkSession, sfDir: String): DataFrame = {
     val (e, nEdges) = kernelEdgesWithCount(spark, sfDir)
-    val graphxMax = spark.conf.get(ColorQueries.GraphxMaxEdgesKey,
-      ColorQueries.DefaultGraphxMaxEdges.toString).toLong
-    if (nEdges <= graphxMax) ccGraphX(spark, sfDir)
+    if (GraphXKernel.runs(spark, nEdges)) {
+      import spark.implicits._
+      val (nComp, maxSize, nVerts) =
+        GraphXKernel.componentSummary(GraphXKernel.kernelBase(spark, sfDir))
+      Seq((nComp, maxSize, nVerts)).toDF("n_components", "largest_component", "n_vertices")
+    }
     // Past the crossover the declarative rounds' V-sized label table is
     // bounded by the EXACT kernel |V| (the |E| proxy crosses the broadcast
     // cap ~two decades before |V| does — the r12 100× regime shift).
     else ccDfRounds(spark, e, kernelVertexCount(spark, sfDir))
-  }
-
-  /** The GraphX execution of [[qConnectedComponents]] (below the
-    * crossover): Pregel min-propagation on the shared prepared base. */
-  private def ccGraphX(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val base = graft.color.GraphXKernel
-      .prepareCached(spark, sfDir, kernelEdges(spark, sfDir))
-    val cc = base.connectedComponents().vertices
-    val sizes = cc.map { case (_, comp) => (comp, 1L) }.reduceByKey(_ + _)
-    val (nComp, maxSize, nVerts) = (sizes.count(), sizes.values.max(), cc.count())
-    Seq((nComp, maxSize, nVerts)).toDF("n_components", "largest_component", "n_vertices")
   }
 
   /** Past-crossover execution of [[qConnectedComponents]]: declarative
@@ -1539,10 +1527,10 @@ object GraphOps {
   /** Fixed-point rank scale of [[qPagerank]] and [[qPpr]]. */
   private val RANK_SCALE = 1000000000000L
 
-  /** q_pagerank: 10 PageRank iterations over the kernel graph via GraphX
-    * `aggregateMessages`, in INTEGER arithmetic — ranks are scaled by 1e12
-    * and contributions use truncating division, so every round is exact and
-    * order-independent (Long addition commutes, unlike the float sums of
+  /** q_pagerank: 10 PageRank iterations over the kernel graph, in INTEGER
+    * arithmetic — ranks are scaled by 1e12 and contributions use truncating
+    * division, so every round is exact and order-independent (Long
+    * addition commutes, unlike the float sums of
     * `staticPageRank` whose last-ulp depends on message arrival order).
     * That determinism is what makes the query DuckDB-oracle-checkable
     * ([[pagerankOracleSql]] replays the same recurrence as 10 chained CTEs).
@@ -1551,68 +1539,23 @@ object GraphOps {
     * incoming sum is bounded by the total mass ≈ V·SCALE (a star graph
     * attains it), so 85·V·SCALE must stay < 2⁶³ — V ≤ ~10⁵ at SCALE=1e12;
     * for larger graphs drop SCALE a decade per 10× vertices. Top-10 by
-    * (rank desc, id asc). Execution picks by kernel edge count (the
-    * [[ColorQueries.GraphxMaxEdgesKey]] crossover): GraphX below — lowest
-    * per-round fixed cost — and the declarative [[pagerankDfRounds]]
-    * above, whose per-round traffic has no vertex-cut replication term;
-    * both run the identical integer recurrence, so the result is
-    * bit-identical either side. */
+    * (rank desc, id asc). GraphX runs it below the [[GraphXKernel.runs]]
+    * crossover and the declarative [[pagerankDfRounds]] above it; both run
+    * the identical integer recurrence, so the result is bit-identical
+    * either side. */
   def qPagerank(spark: SparkSession, sfDir: String): DataFrame = {
     val (e, nEdges) = kernelEdgesWithCount(spark, sfDir)
-    val graphxMax = spark.conf.get(ColorQueries.GraphxMaxEdgesKey,
-      ColorQueries.DefaultGraphxMaxEdges.toString).toLong
-    if (nEdges <= graphxMax) pagerankGraphX(spark, sfDir)
+    if (GraphXKernel.runs(spark, nEdges))
+      GraphXKernel.pagerank(spark, GraphXKernel.kernelBase(spark, sfDir), RANK_SCALE)
     // Past the crossover the rank table is V-sized: bound it by the exact
     // kernel |V|, not |E| (the r12 100× broadcast-regime shift).
     else pagerankDfRounds(spark, e, kernelVertexCount(spark, sfDir))
   }
 
-  /** The GraphX execution of [[qPagerank]] (below the crossover: lowest
-    * per-round fixed cost — no Catalyst planning per round). */
-  private def pagerankGraphX(spark: SparkSession, sfDir: String): DataFrame = {
-    import spark.implicits._
-    val base = graft.color.GraphXKernel
-      .prepareCached(spark, sfDir, kernelEdges(spark, sfDir))
-    var g = base.outerJoinVertices(base.outDegrees)((_, _, d) =>
-      (d.getOrElse(0), RANK_SCALE)).cache()
-    val intermediates = scala.collection.mutable.ArrayBuffer(g)
-    var i = 0
-    while (i < 10) {
-      val contribs = g.aggregateMessages[Long](
-        t => t.sendToDst(t.srcAttr._2 / t.srcAttr._1), _ + _)
-      g = g.outerJoinVertices(contribs)((_, attr, c) =>
-        (attr._1, 15L * RANK_SCALE / 100 + 85L * c.getOrElse(0L) / 100)).cache()
-      intermediates += g
-      i += 1
-    }
-    // Fixed iteration count = no data-dependent control flow, so no
-    // per-round driver action: the single job below evaluates the whole
-    // 10-round chain (each round cached so aggregateMessages reads the
-    // previous round once, not its recursive lineage), then every
-    // intermediate is dropped. 10 cached V-sized vertex RDDs is the
-    // footprint trade for removing 10 job launches.
-    // Storage-level contract (r6 VERDICT item 5, measured): the derived
-    // rounds inherit the base graph's MEMORY_AND_DISK target level (GraphX
-    // propagates targetStorageLevel through outerJoinVertices; probed
-    // empirically — "StorageLevel(disk, memory, deserialized)"), NOT
-    // MEMORY_ONLY — so under memory pressure at 100× V the old rounds
-    // SPILL to disk instead of evicting into recompute churn, and each is
-    // read exactly once before its unpersist below. _SER was considered
-    // and rejected: GraphX's columnar partitions are compact already and a
-    // serialized level would charge per-round deserialization CPU for no
-    // additional spill safety.
-    val out = State.memo(g.vertices.map { case (id, (_, r)) => (id, r) }
-      .toDF("id", "rank_e12")
-      .orderBy(col("rank_e12").desc, col("id").asc)
-      .limit(10)).df
-    intermediates.foreach(_.unpersist(blocking = false))
-    out
-  }
-
   /** The SAME 10-round integer recurrence as declarative DataFrame rounds —
     * the past-crossover execution of [[qPagerank]]: [[rankRounds]] with
     * r₀ = SCALE and teleport 15·SCALE/100 on every vertex. Ranks are
-    * BIT-IDENTICAL to the GraphX path and the oracle replay. */
+    * BIT-IDENTICAL to [[GraphXKernel.pagerank]] and the oracle replay. */
   private[graft] def pagerankDfRounds(spark: SparkSession, e: DataFrame,
       vBound: Long): DataFrame =
     rankRounds(e, e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
@@ -1624,9 +1567,8 @@ object GraphOps {
     * initial `(id, r, deg, tele)` frame. Each round joins the V-sized rank
     * table into the edge memo (one [[State.memo]] with the row-count
     * layout) as a row-bound broadcast and aggregates the contributions per
-    * dst, so per-round traffic has NO vertex-cut replication term — the
-    * 30× probe measured GraphX message bytes growing ~2√P with edge
-    * partitions while this shape's stays flat. Truncating `div` and Long
+    * dst, so per-round traffic has no vertex-cut replication term (the
+    * [[GraphXKernel.runs]] crossover). Truncating `div` and Long
     * sums are order-independent, so every round is exact. Top-10 by
     * (rank desc, id). */
   private def rankRounds(e: DataFrame, init: DataFrame, vBound: Long): DataFrame = {

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions.{col, max, size}
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.color.GraphXKernel
 import graft.model.GraphIO
 
 /** Drives the CLI surface (O26 — same flag names as the reference's
@@ -89,7 +90,7 @@ class CliSpec extends AnyFunSuite {
     val c = dir.resolve("colors.json").toString
     val s = Coloring.run(spark, Map(
       "node-count" -> "30", "max-degree" -> "4", "seed" -> "7",
-      "output-graph" -> g, "output-coloring" -> c, "strategy" -> "graphx"))
+      "output-graph" -> g, "output-coloring" -> c, "strategy" -> "jp"))
     assert(s.uncolored === 0 && s.conflicts === 0)
     assert(s.k >= 1 && s.k <= 5) // first-fit never exceeds maxDeg+1
     // Round-trip: the written graph re-reads through GraphIO and re-colors
@@ -98,5 +99,14 @@ class CliSpec extends AnyFunSuite {
     assert(nodes.count() === 30)
     val s2 = Coloring.run(spark, Map("input" -> g))
     assert(s2.k === s.k && s2.uncolored === 0 && s2.conflicts === 0)
+    // The GraphX trace on the same graph observes the same k.
+    val base = GraphXKernel.prepare(spark, GraphIO.edges(nodes))
+    try {
+      val r = GraphXKernel.deltaPlusOne(spark, base)
+      try assert(r.k === s.k) finally r.release()
+    } finally GraphXKernel.free(base)
+    // GraphX is not a CLI strategy.
+    intercept[IllegalArgumentException](
+      Coloring.run(spark, Map("input" -> g, "strategy" -> "graphx")))
   }
 }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.{CandNode, ColoringKernel, GreedyIS}
+import graft.color.{CandNode, ColoringKernel, GraphXKernel, GreedyIS}
 import graft.color.ColoringKernel.Strategy
 import graft.model.{GraphIO, RandomGraph}
 
@@ -88,6 +88,16 @@ class ColoringKernelSpec extends AnyFunSuite {
     assert(20000L / 63 <= ColoringKernel.DefaultGreedyMaxBucketRows)
   }
 
+  test("q_color_greedy runs the Jp Δ+1 rounds when the greedy kernel declines") {
+    // A 1-row bucket bound makes every palette too coarse for the greedy
+    // kernel, so the query takes its fallback.
+    val s2 = spark.newSession()
+    s2.conf.set(ColoringKernel.GreedyMaxBucketRowsKey, "1")
+    val got = graft.ops.ColorQueries.qColorGreedy(s2, Corpus.dir("sf0.001")).collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
+    assert(got === Seq((0L, 0L, true)))
+  }
+
   test("Jp coloring is deterministic across partitionings") {
     val edges = RandomGraph.edges(spark, 500, 6, seed = 7)
     def run(parts: Int): Seq[(Long, Int)] = {
@@ -100,6 +110,16 @@ class ColoringKernelSpec extends AnyFunSuite {
     assert(run(2) === run(11))
   }
 
+  /** [[GraphXKernel]]'s Δ+1 trace on a base built from `edges`, which is
+    * freed once `use` returns. */
+  private def graphxTrace[T](edges: DataFrame)(use: ColoringKernel.Colored => T): T = {
+    val base = GraphXKernel.prepare(spark, edges)
+    try {
+      val r = GraphXKernel.deltaPlusOne(spark, base)
+      try use(r) finally r.release()
+    } finally GraphXKernel.free(base)
+  }
+
   test("Jp mask rounds, Jp regather rounds and GraphX give the same coloring") {
     // All three run the same first-fit + (degree, id) priority admit, so
     // the labels must match exactly. The tail-local solve is off so GraphX
@@ -108,28 +128,38 @@ class ColoringKernelSpec extends AnyFunSuite {
     try for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L))) {
       val edges = RandomGraph.edges(spark, n, d, seed)
       val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0).toInt
-      def labels(k: Int, strategy: Strategy): Set[(Long, Int)] = {
-        val r = ColoringKernel.tryColor(spark, edges, k, strategy)
+      def labels(k: Int): Set[(Long, Int)] = {
+        val r = ColoringKernel.tryColor(spark, edges, k, Strategy.Jp)
           .getOrElse(fail(s"k = $k must be colorable"))
         try r.colors.as[(Long, Int)].collect().toSet finally r.release()
       }
-      val mask = labels(maxDeg + 1, Strategy.Jp)
+      val mask = labels(maxDeg + 1)
       assert(mask.size === edges.select("src").distinct().count())
-      assert(labels(70, Strategy.Jp) === mask, s"n=$n: regather rounds differ")
-      assert(labels(maxDeg + 1, Strategy.GraphX) === mask, s"n=$n: GraphX differs")
+      assert(labels(70) === mask, s"n=$n: regather rounds differ")
+      val best = ColoringKernel.minimalColors(spark, edges)
+      val jpK = try best.k finally best.release()
+      graphxTrace(edges) { r =>
+        assert(r.colors.as[(Long, Int)].collect().toSet === mask, s"n=$n: GraphX differs")
+        assert(r.k === jpK, s"n=$n: GraphX observed another color count")
+      }
     } finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
   }
 
   test("an edge-free input colors every vertex 0 with k = 1 on every strategy") {
     val edges = Seq.empty[(Long, Long)].toDF("src", "dst")
     val vertices = spark.range(10).toDF("id")
-    for (strategy <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {
+    for (strategy <- Seq(Strategy.Jp, Strategy.GreedyRdd)) {
       val best = ColoringKernel.minimalColors(spark, edges, strategy, Some(vertices))
       try {
         assert(best.k === 1, s"$strategy")
         assert(best.colors.as[(Long, Int)].collect().toSet ===
           (0L until 10L).map(_ -> 0).toSet, s"$strategy")
       } finally best.release()
+    }
+    // GraphX builds its graph from the edges alone: nothing to color.
+    graphxTrace(edges) { r =>
+      assert(r.k === 0 && r.rounds === 0)
+      assert(r.colors.count() === 0L)
     }
   }
 

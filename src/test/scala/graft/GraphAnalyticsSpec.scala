@@ -143,26 +143,26 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     // same deterministic speculative first-fit + priority admit, so the
     // coloring must be IDENTICAL row for row.
     val s2 = spark.newSession()
-    s2.conf.set(graft.ops.ColorQueries.GraphxMaxEdgesKey, "1")
+    s2.conf.set(graft.color.GraphXKernel.MaxEdgesKey, "1")
     try {
       val viaJp = graft.ops.ColorQueries.qColorGraph(s2, sf)
         .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
       assert(viaJp === viaGraphX)
-    } finally s2.conf.unset(graft.ops.ColorQueries.GraphxMaxEdgesKey)
+    } finally s2.conf.unset(graft.color.GraphXKernel.MaxEdgesKey)
   }
 
   test("pagerank strategy crossover: DataFrame rounds bit-identical to GraphX") {
     val viaGraphX = GraphOps.qPagerank(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     val s2 = spark.newSession()
-    s2.conf.set(graft.ops.ColorQueries.GraphxMaxEdgesKey, "1")
+    s2.conf.set(graft.color.GraphXKernel.MaxEdgesKey, "1")
     try {
       val viaDf = GraphOps.qPagerank(s2, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
       // Same fixed-point integer recurrence on both sides — not just the
       // same top-10 ids, the same exact rank_e12 values.
       assert(viaDf === viaGraphX)
-    } finally s2.conf.unset(graft.ops.ColorQueries.GraphxMaxEdgesKey)
+    } finally s2.conf.unset(graft.color.GraphXKernel.MaxEdgesKey)
   }
 
   test("sssp: hop distances re-derived by driver-side BFS from the same edges") {
@@ -188,14 +188,14 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     val viaGraphX = GraphOps.qConnectedComponents(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
     val s2 = spark.newSession()
-    s2.conf.set(graft.ops.ColorQueries.GraphxMaxEdgesKey, "1")
+    s2.conf.set(graft.color.GraphXKernel.MaxEdgesKey, "1")
     try {
       val viaDf = GraphOps.qConnectedComponents(s2, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       // Both strategies converge to the identical labeling (component-min
       // vertex id), so the whole summary row must match exactly.
       assert(viaDf === viaGraphX)
-    } finally s2.conf.unset(graft.ops.ColorQueries.GraphxMaxEdgesKey)
+    } finally s2.conf.unset(graft.color.GraphXKernel.MaxEdgesKey)
   }
 
   test("cc DataFrame rounds: component-min labeling on a seeded random graph") {

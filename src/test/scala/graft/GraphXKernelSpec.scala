@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.color.{ColoringKernel, GraphXKernel}
@@ -10,11 +11,19 @@ import graft.model.RandomGraph
 class GraphXKernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
+  /** One attempt with palette `k` on a base built from `edges`, which is
+    * freed afterwards. */
+  private def attempt[T](edges: DataFrame, k: Int)(land: DataFrame => T): Option[T] = {
+    val base = GraphXKernel.prepare(spark, edges)
+    try GraphXKernel.tryColorOn(spark, base, _ => k)(land).map(_._1)
+    finally GraphXKernel.free(base)
+  }
+
   test("GraphX kernel produces a valid coloring (n=500, maxDeg=6)") {
     val edges = RandomGraph.edges(spark, 500, 6, seed = 21)
-    val ((uncolored, conflicts), used) = GraphXKernel.tryColor(spark, edges, k = 7) {
+    val ((uncolored, conflicts), used) = attempt(edges, 7) {
       colors => (ColoringKernel.validate(edges, colors), ColoringKernel.usedColors(colors))
-    }.getOrElse(fail("Δ+1 must succeed"))._1
+    }.getOrElse(fail("Δ+1 must succeed"))
     assert(uncolored === 0 && conflicts === 0)
     assert(used <= 7)
   }
@@ -26,9 +35,9 @@ class GraphXKernelSpec extends AnyFunSuite {
     // round 1's signals) and off, and require identical (id, color) sets.
     val edges = RandomGraph.edges(spark, 2000, 6, seed = 33)
     def labels(): Seq[(Long, Int)] =
-      GraphXKernel.tryColor(spark, edges, k = 7) {
+      attempt(edges, 7) {
         _.orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-      }.getOrElse(fail("Δ+1 must succeed"))._1
+      }.getOrElse(fail("Δ+1 must succeed"))
     val withTail = labels()
     spark.conf.set(graft.color.GreedyRddKernel.TailLocalSolveRowsKey, "0")
     val distributed = try labels()
@@ -42,7 +51,7 @@ class GraphXKernelSpec extends AnyFunSuite {
     // K4 needs 4 colors; k=3 must return None.
     val vs = Seq(0L, 1L, 2L, 3L)
     val edges = (for (a <- vs; b <- vs if a != b) yield (a, b)).toDF("src", "dst")
-    assert(GraphXKernel.tryColor(spark, edges, k = 3)(_.count()).isEmpty)
-    assert(GraphXKernel.tryColor(spark, edges, k = 4)(_.count()).isDefined)
+    assert(attempt(edges, 3)(_.count()).isEmpty)
+    assert(attempt(edges, 4)(_.count()).isDefined)
   }
 }

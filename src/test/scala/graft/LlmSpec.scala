@@ -537,12 +537,12 @@ class LlmSpec extends AnyFunSuite {
     // injected 1-pair bound forces the declarative CC rounds. Both label
     // components with the minimum doc_id, so rows must match exactly.
     val s2 = spark.newSession()
-    s2.conf.set(graft.ops.ColorQueries.GraphxMaxEdgesKey, "1")
+    s2.conf.set(graft.color.GraphXKernel.MaxEdgesKey, "1")
     try {
       val viaDf = Dedup.qDedupCluster(s2, sf).collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(viaDf === viaGraphX)
-    } finally s2.conf.unset(graft.ops.ColorQueries.GraphxMaxEdgesKey)
+    } finally s2.conf.unset(graft.color.GraphXKernel.MaxEdgesKey)
   }
 
   test("dedup-cluster: reps are component minima consistent with the pairs") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.ColoringKernel
+import graft.color.{ColoringKernel, GraphXKernel}
 import graft.color.ColoringKernel.Strategy
 import graft.ops.Sketches
 
@@ -43,6 +43,18 @@ class SessionSpec extends AnyFunSuite {
     assert(calls.nonEmpty)
     assert(calls.forall(_._2 == 2), s"maybeBroadcast calls without a row count: " +
       calls.filter(_._2 != 2))
+  }
+
+  test("GraphX is named in src/main only by GraphXKernel, which reads the crossover key in one function") {
+    assert(SourceScan.callers("org.apache.spark.graphx") === Set("GraphXKernel.scala"))
+    assert(SourceScan.callers("\"" + GraphXKernel.MaxEdgesKey + "\"") === Set("GraphXKernel.scala"))
+    // The key's definition and its one read.
+    assert(SourceScan.counts("MaxEdgesKey") === Map("GraphXKernel.scala" -> 2))
+    assert(SourceScan.counts("conf.get(MaxEdgesKey") === Map("GraphXKernel.scala" -> 1))
+    // ColoringKernel has no GraphX strategy and no base graph parameter.
+    assert(scala.util.Try(Class.forName("graft.color.ColoringKernel$Strategy$GraphX$")).isFailure)
+    assert(Class.forName("graft.color.ColoringKernel$Strategy$Jp$") != null)
+    assert(SourceScan.callers("preparedBase") === Set.empty)
   }
 
   test("a fresh session runs q_kmv_distinct (graft_kmv_kmin) with no register call") {

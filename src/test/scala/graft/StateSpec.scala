@@ -6,7 +6,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, sum, when}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.{ColoringKernel, GreedyRddKernel}
+import graft.color.{ColoringKernel, GraphXKernel, GreedyRddKernel}
 import graft.color.ColoringKernel.Strategy
 import graft.model.RandomGraph
 import graft.ops.State
@@ -78,9 +78,9 @@ class StateSpec extends AnyFunSuite {
         .toDF("doc_a", "doc_b")
       val before = persisted
       // 0 routes every pair graph to the DataFrame label rounds.
-      if (!graphx) spark.conf.set(graft.ops.ColorQueries.GraphxMaxEdgesKey, "0")
+      if (!graphx) spark.conf.set(GraphXKernel.MaxEdgesKey, "0")
       val cc = try graft.llm.Dedup.ccClusters(spark, edges)
-      finally spark.conf.unset(graft.ops.ColorQueries.GraphxMaxEdgesKey)
+      finally spark.conf.unset(GraphXKernel.MaxEdgesKey)
       val left = persisted -- before
       assert(left.size <= 1, s"ccClusters left persisted RDDs: $left")
       assert(cc.collect().map(r => (r.getLong(0), r.getLong(1))).toSet ===
@@ -176,9 +176,10 @@ class StateSpec extends AnyFunSuite {
     // GraphOps: the triangle support memo, the initial states of the
     // k-core, label-prop, CC and rank loops, and the loops that keep their
     // own states (truss 4, BFS 2, random walk 2, HITS 4). ColoringKernel:
-    // the delegating kernels' final land and Jp's round 0.
+    // the greedy kernel's final land and Jp's round 0. GraphXKernel: the
+    // Δ+1 trace's final land.
     assert(SourceScan.counts("State.loop(") ===
-      Map("GraphOps.scala" -> 17, "ColoringKernel.scala" -> 2))
+      Map("GraphOps.scala" -> 17, "ColoringKernel.scala" -> 2, "GraphXKernel.scala" -> 1))
   }
 
   test("localCheckpoint is called in src/main only by State and its two named exceptions") {
@@ -188,30 +189,63 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("persist and cache are called in src/main only by the named RDD and graph sites") {
-    // GraphOps: the triangle adjacency and the PageRank graphs; Similarity's
-    // one persisted frame; the GraphX and GreedyRdd kernels' RDD rounds.
+    // GraphOps: the triangle adjacency; Similarity's one persisted frame;
+    // the GraphX and GreedyRdd kernels' graphs and RDD rounds.
     val expected = Set("GraphOps.scala", "Similarity.scala", "GraphXKernel.scala",
       "GreedyRddKernel.scala")
     assert(SourceScan.callers(".persist(") ++ SourceScan.callers(".cache()") === expected)
   }
 
-  for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd, Strategy.GraphX)) {
+  /** Runs `color` on a 300-vertex graph with the tail-local solve off and
+    * checks that only the returned colors' own checkpoint is left persisted
+    * until they are released. */
+  private def freesEveryRound(color: DataFrame => ColoringKernel.Colored): Unit = {
+    val edges = RandomGraph.edges(spark, 300, 6, 5L)
+    val before = persisted
+    // The RDD and GraphX kernels would finish a graph this small in one
+    // tail-local round; switch that off so every round is a real one.
+    spark.conf.set(GreedyRddKernel.TailLocalSolveRowsKey, "0")
+    val r = try color(edges)
+    finally spark.conf.unset(GreedyRddKernel.TailLocalSolveRowsKey)
+    assert(r.rounds > 1)
+    val left = persisted -- before
+    assert(left.size <= 1, s"rounds left persisted RDDs: $left")
+    assert(ColoringKernel.validate(edges, r.colors) === ((0L, 0L)))
+    r.release()
+    assert((persisted -- before).isEmpty)
+  }
+
+  for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd)) {
     test(s"a $strat minimalColors run frees every round's storage") {
-      val edges = RandomGraph.edges(spark, 300, 6, 5L)
-      val before = persisted
-      // The delegating kernels would finish a graph this small in one
-      // tail-local round; switch that off so every round is a real one.
-      spark.conf.set(GreedyRddKernel.TailLocalSolveRowsKey, "0")
-      val r = try ColoringKernel.minimalColors(spark, edges, strat)
-      finally spark.conf.unset(GreedyRddKernel.TailLocalSolveRowsKey)
-      assert(r.rounds > 1)
-      // Only the returned colors' own checkpoint may remain.
-      val left = persisted -- before
-      assert(left.size <= 1, s"rounds left persisted RDDs: $left")
-      assert(ColoringKernel.validate(edges, r.colors) === ((0L, 0L)))
-      r.release()
-      assert((persisted -- before).isEmpty)
+      freesEveryRound(ColoringKernel.minimalColors(spark, _, strat))
     }
+  }
+
+  test("a GraphX minimalColors run frees every round's storage") {
+    // The Δ+1 trace on a base of its own, freed before the check.
+    freesEveryRound { edges =>
+      val base = GraphXKernel.prepare(spark, edges)
+      try GraphXKernel.deltaPlusOne(spark, base) finally GraphXKernel.free(base)
+    }
+  }
+
+  test("q_connected_components and q_pagerank leave only their returned checkpoint persisted") {
+    val s2 = spark.newSession()
+    val sf = Corpus.dir("sf0.001")
+    // The session's kernel edges and GraphX base, which both queries read.
+    val base = persisted
+    GraphXKernel.kernelBase(s2, sf)
+    val session = persisted -- base
+    assert(session.nonEmpty)
+    val before = persisted
+    graft.ops.GraphOps.qConnectedComponents(s2, sf).collect()
+    assert(persisted -- before === Set.empty, "connected components left storage")
+    assert(graft.ops.GraphOps.qPagerank(s2, sf).count() === 10L)
+    val left = persisted -- before
+    assert(left.size <= 1, s"pagerank left persisted RDDs: $left")
+    // An outer-joined graph can share an EdgeRDD with the graph it was
+    // built from: freeing the query's graphs must keep the session's base.
+    assert(session.subsetOf(persisted), s"freed session storage: ${session -- persisted}")
   }
 
   test("a Jp run leaves a caller's checkpointed edges persisted and frees only its own storage") {
