@@ -19,10 +19,13 @@ import graft.ops.State
   *   --seed S                generate: RNG seed (default 42)
   *   --output-graph PATH     write the (generated) graph as JSON
   *   --output-coloring PATH  write the coloring as JSON
-  *   --strategy jp|greedy    kernel strategy (default jp); greedy runs
-  *                           the GreedyRdd rounds while the palette fits
-  *                           the 64-bit mask and the bucket bound
-  *                           (`graft.greedy.maxBucketRows`), Jp otherwise
+  *   --strategy jp|greedy    kernel strategy (default jp); greedy is one
+  *                           GreedyRdd Δ+1 run, k the colors it used, and
+  *                           Jp past the 64-bit mask or the bucket bound
+  *                           (`graft.greedy.maxBucketRows`)
+  *
+  * An unknown flag, a flag without a value or a bare token throws
+  * `IllegalArgumentException` before any work.
   */
 object Coloring {
 
@@ -30,16 +33,35 @@ object Coloring {
     * on these; main prints them). */
   final case class Summary(k: Int, uncolored: Long, conflicts: Long)
 
-  private[graft] def parse(args: Array[String]): Map[String, String] =
-    args.sliding(2, 2).collect {
-      case Array(k, v) if k.startsWith("--") => k.drop(2) -> v
-    }.toMap
+  private val Flags =
+    Set("input", "node-count", "max-degree", "seed", "output-graph", "output-coloring", "strategy")
+
+  /** `opts`, once every key is a known flag. */
+  private def known(opts: Map[String, String]): Map[String, String] = {
+    (opts.keySet -- Flags).headOption.foreach(k =>
+      throw new IllegalArgumentException(s"unknown flag --$k"))
+    opts
+  }
+
+  private[graft] def parse(args: Array[String]): Map[String, String] = {
+    @annotation.tailrec
+    def pairs(rest: List[String], acc: Map[String, String]): Map[String, String] =
+      rest match {
+        case Nil => acc
+        case flag :: _ if !flag.startsWith("--") =>
+          throw new IllegalArgumentException(s"unexpected argument $flag")
+        case flag :: value :: tail if !value.startsWith("--") =>
+          pairs(tail, acc + (flag.drop(2) -> value))
+        case flag :: _ => throw new IllegalArgumentException(s"$flag expects a value")
+      }
+    known(pairs(args.toList, Map.empty))
+  }
 
   /** The CLI body on a caller-owned session — `main` wraps it with session
     * lifecycle so the test suite can drive the full flag surface on the
     * shared session without `spark.stop()` tearing it down. */
   private[graft] def run(spark: SparkSession, opts: Map[String, String]): Summary = {
-    val strategy = opts.get("strategy") match {
+    val strategy = known(opts).get("strategy") match {
       case None | Some("jp") => Strategy.Jp
       case Some("greedy") => Strategy.GreedyRdd
       case Some(other) =>
@@ -74,10 +96,11 @@ object Coloring {
   }
 
   def main(args: Array[String]): Unit = {
+    val opts = parse(args)
     val spark = Session.local()
     try {
       val t0 = System.nanoTime()
-      val s = run(spark, parse(args))
+      val s = run(spark, opts)
       println(s"Minimal colors found: ${s.k} (uncolored=${s.uncolored} conflicts=${s.conflicts})")
       println(f"Total execution time: ${(System.nanoTime() - t0) / 1e9}%.2f sec")
     } finally spark.stop()

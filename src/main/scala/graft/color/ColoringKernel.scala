@@ -10,13 +10,14 @@ import graft.ops.State
   * per-k fixpoint (`coloring.py:73-132`, `coloring_optimized.py:70-146`) and
   * outer minimal-color search (`coloring.py:212-231`), re-expressed as a
   * driver loop over declarative DataFrame rounds (SURVEY.md §3, §7 step 4).
+  * Every run colors with the palette k = Δ+1, where a vertex's first free
+  * color always exists: it has at most deg ≤ Δ used neighbor colors.
   *
-  * Per round (given palette size k):
+  * Per round:
   *   1. first-fit candidate per uncolored vertex (O13,
-  *      `coloring_optimized.py:150-166`; -3 ⇒ no free color ⇒ the
-  *      k-attempt fails, `coloring.py:104-108`). For k ≤ 64 it falls out
-  *      of the 64-bit used-color mask the state carries, map-side; past 64
-  *      the used neighbor colors are regathered — `edges ⋈ colors` +
+  *      `coloring_optimized.py:150-166`). For k ≤ 64 it falls out of the
+  *      64-bit used-color mask the state carries, map-side; past 64 the
+  *      used neighbor colors are regathered — `edges ⋈ colors` +
   *      `collect_set` (the reference's broadcast color probe O10/O11, kept
   *      fully distributed: no `collectAsMap` on the driver, SURVEY.md §7
   *      risk 5) — into the codegen expression `graft_first_fit(used, k)`
@@ -46,7 +47,7 @@ import graft.ops.State
   *     tables, never shuffled; a k ≤ 64 round shuffles only the beaten
   *     ids and the per-vertex changes, and no per-node adjacency arrays
   *     move.
-  *   - [[Strategy.GreedyRdd]] delegates its rounds to [[GreedyRddKernel]].
+  *   - [[Strategy.GreedyRdd]] runs [[GreedyRddKernel.colorDeltaPlusOne]].
   *
   * The Jp rounds run on [[State.iterate]], the engine's one round loop —
   * the `Pregel` stance (SURVEY.md §4): only counts cross to the driver.
@@ -62,10 +63,10 @@ object ColoringKernel {
   sealed trait Strategy
   object Strategy {
     case object Jp extends Strategy
-    /** Delegate rounds to [[GreedyRddKernel]] — the reference-shaped
-      * two-phase [[GreedyIS]] admit per color bucket, executed as a raw
-      * `aggregateByKey` loop over co-partitioned RDDs. A request runs here
-      * only when [[greedyFits]] holds; otherwise it runs on Jp. */
+    /** [[GreedyRddKernel]]'s reference-shaped rounds: the two-phase
+      * [[GreedyIS]] admit per color bucket, as a raw `aggregateByKey` loop
+      * over co-partitioned RDDs. When that kernel declines the graph, the
+      * run is the Jp one. */
     case object GreedyRdd extends Strategy
   }
 
@@ -76,81 +77,7 @@ object ColoringKernel {
     def release(): Unit = state.release()
   }
 
-  /** Expected-rows-per-color-bucket bound for greedy requests. The
-    * GreedyIS admit reduces each color bucket in ONE reducer — the merge is
-    * inherently serial per bucket (the reference's own aggregateByKey
-    * shape), so the scale ceiling is ~V/k rows through a single task.
-    * Session-configurable so a test can inject a tiny bound and observe
-    * the switch.
-    *
-    * Default = the MEASURED crossover (r13, paired A/Bs on the kernel
-    * graph, k = 63, canary-calm box): GreedyRdd vs Jp wall 3.9/28.3 s at
-    * V/k = 317 (sf0.1), 21.7/35.4 s at 3 175 (10×), 78.2/52.4 s at 9 524
-    * (30×), 567.9/110.3 s at 31 746 (100× — the serial merge was 9.7% of
-    * the whole r12 leg). The reference-parity strategy wins below ~5–6 k
-    * rows/bucket, Jp above; 2¹³ sits between the measured winners on the
-    * conservative (reference-parity) side, so 30×-and-larger runs
-    * auto-route to Jp while gate-scale corpora keep the aggregateByKey
-    * shape. The old 4 M default never fired before the merge dominated. */
-  val GreedyMaxBucketRowsKey = "graft.greedy.maxBucketRows"
-  val DefaultGreedyMaxBucketRows: Long = 8192L
-
-  /** The one routing rule for a greedy request over V vertices with
-    * palette k: it runs on GreedyRdd iff k fits the 64-bit used-color mask
-    * and the expected per-bucket size V/k is within
-    * [[GreedyMaxBucketRowsKey]] — the documented skew ceiling of the ≤k-key
-    * reduce, enforced in code rather than by caller choice. Otherwise it
-    * runs on the deterministic Jp strategy. */
-  private[color] def greedyFits(spark: SparkSession, v: => Long, k: Int): Boolean = {
-    val maxBucket = spark.conf
-      .get(GreedyMaxBucketRowsKey, DefaultGreedyMaxBucketRows.toString).toLong
-    k <= 64 && v / math.max(k, 1) <= maxBucket
-  }
-
-  /** Apply [[greedyFits]] to a GreedyRdd request over `v` vertices (read
-    * only when k fits the mask); other strategies pass through. */
-  private[graft] def resolveStrategy(
-      spark: SparkSession, requested: Strategy, k: Int, v: => Long): Strategy =
-    if (requested == Strategy.GreedyRdd && !greedyFits(spark, v, k)) Strategy.Jp
-    else requested
-
-  /** Attempt a k-coloring of `edges` (symmetric, irreflexive `(src,dst)`).
-    * `init` optionally supplies extra vertices (isolated nodes never appear
-    * in an edge list). Returns None when k colors are infeasible for the
-    * first-fit rule or progress stalls past `maxRounds` (SURVEY.md §7
-    * risk 6).
-    *
-    * Jp re-reads `edges` as given, twice a round, and keeps no copy: pass a
-    * materialized edge list (a [[State.memo]] frame or a local checkpoint,
-    * as every engine caller does). A lazy plan is recomputed on every read,
-    * and one whose rows are not deterministic would give each read a
-    * different edge set.
-    *
-    * A GreedyRdd request is routed by [[greedyFits]] on the exact vertex
-    * count of `edges`: `vertices` when the caller holds it, else one
-    * count job.
-    */
-  def tryColor(
-      spark: SparkSession,
-      edges: DataFrame,
-      k: Int,
-      strategy: Strategy = Strategy.Jp,
-      extraVertices: Option[DataFrame] = None,
-      maxRounds: Int = 200,
-      vertices: Option[Long] = None)
-      : Option[Colored] = {
-    lazy val v = vertices.getOrElse(edges.select(col("src")).distinct().count())
-    if (resolveStrategy(spark, strategy, k, v) == Strategy.GreedyRdd)
-      // The greedy kernel hands its final colors to this one-shot land (its
-      // rounds are RDD rounds, not State rounds) and frees its last round
-      // once they are copied into the State.
-      GreedyRddKernel.tryColor(spark, edges, k, maxRounds)(
-        df => State.loop(appendIsolated(df, extraVertices)))
-        .map { case (st, rounds) => Colored(st, k, rounds) }
-    else jp(spark, edges, _ => k, extraVertices, maxRounds)
-  }
-
-  /** The metric every Jp state and [[GraphXKernel.deltaPlusOne]]'s landing
+  /** The metric every Jp state and the GreedyRdd and GraphX landings
     * observe: `max(color) + 1`, 0 on no rows. First-fit gives a vertex
     * color c only when colors 0..c-1 are all taken by its neighbors, so on
     * a complete coloring the colors used are exactly {0..max} and this is
@@ -158,31 +85,33 @@ object ColoringKernel {
   private[color] val ColorsUsed = "colors_used"
   private[color] def colorsUsed: Column = (max(col("color")) + 1).as(ColorsUsed)
 
-  /** The Jp DataFrame rounds. The palette is `palette(Δ)`, with Δ the max
-    * degree observed on round 0's checkpoint, so a Δ+1 run needs no
-    * separate degree job. */
+  /** The Jp DataFrame rounds with the palette Δ+1, Δ the max degree
+    * observed on round 0's checkpoint, so the run needs no separate degree
+    * job. The returned `k` is the colors used.
+    *
+    * Jp re-reads `edges` as given, twice a round, and keeps no copy: pass a
+    * materialized edge list (a [[State.memo]] frame or a local checkpoint,
+    * as every engine caller does). A lazy plan is recomputed on every read,
+    * and one whose rows are not deterministic would give each read a
+    * different edge set. */
   private def jp(
       spark: SparkSession,
       edges: DataFrame,
-      palette: Int => Int,
       extraVertices: Option[DataFrame],
-      maxRounds: Int = 200): Option[Colored] = {
+      maxRounds: Int = 200): Colored = {
     // The caller's edges need not come through Tables, which registers
     // graft_first_fit for every corpus query.
     graft.functions.GraftFunctions.register(spark)
 
-    // Every state's checkpoint observes progress and feasibility together
-    // (-3 is the reference's infeasible sentinel, coloring.py:53-54), so
-    // the loop control runs no job of its own, and the color count
-    // minimalColors reads (ColorsUsed).
+    // Every state's checkpoint observes progress and the color count
+    // (ColorsUsed), so the loop control runs no job of its own.
     val progress = Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
-      sum(when(col("color") === -3, 1L).otherwise(0L)).as("infeasible"),
       colorsUsed)
     // Round 0 lands once, with Δ for the palette.
     val zero = State.loop(roundZero(edges, extraVertices),
       progress :+ max(col("deg")).as("maxDeg"): _*)
-    val k = palette(zero("maxDeg").toInt)
+    val k = zero("maxDeg").toInt + 1
 
     // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
     // mask, updated incrementally from each round's newly-colored delta
@@ -191,15 +120,19 @@ object ColoringKernel {
     val useMask = k <= 64
 
     // Jp colors the top-priority vertex of every uncolored component each
-    // round, so only an infeasible palette or the round cap (SURVEY.md §7
-    // risk 6) leaves vertices uncolored.
+    // round, so only the round cap (SURVEY.md §7 risk 6) leaves vertices
+    // uncolored.
     val (state, rounds) = State.iterate(zero, maxRounds, progress: _*)(
-        (st, _) => st("uncolored") == 0 || st("infeasible") > 0) { (st, _, round) =>
-      if (useMask) jpRoundMask(edges, st.df, k, st("uncolored"))
-      else jpRound(edges, st.df, k, round)
+        (st, _) => st("uncolored") == 0) { (st, _, round) =>
+      if (useMask) jpRoundMask(edges, st.df, st("uncolored"))
+      else jpRound(edges, st.df, round)
     }
-    if (state("uncolored") > 0 || state("infeasible") > 0) { state.release(); None }
-    else Some(Colored(state, k, rounds))
+    if (state("uncolored") > 0) {
+      state.release()
+      throw new IllegalStateException(
+        s"Jp left ${state("uncolored")} vertices uncolored after $maxRounds rounds")
+    }
+    Colored(state, state(ColorsUsed).toInt, rounds)
   }
 
   /** Round 0's state `(id, color, deg, used)` from ONE aggregate over a
@@ -236,9 +169,9 @@ object ColoringKernel {
     *
     * The edge list is symmetric, so the pass reads only `src < dst` and
     * settles each undirected edge once. Both endpoints probe ONE frame,
-    * the live candidates (`cand >= 0`; a -3 vertex is never beaten), keyed
-    * by id alone, so a broadcast `side` is built once and reused. The
-    * same-candidate test runs after the probe, as `a_cand ^ b_cand = 0`:
+    * the candidates, keyed by id alone, so a broadcast `side` is built
+    * once and reused. The same-candidate test runs after the probe, as
+    * `a_cand ^ b_cand = 0`:
     * written as an equality, Catalyst lifts it into the second join's key
     * and hashes (cand, id) on a build side of its own. The losers go
     * through a distinct over one long id, a HashAggregate, where
@@ -247,7 +180,7 @@ object ColoringKernel {
     * frame (a broadcast hint). */
   private[graft] def beaten(e: DataFrame, cand: DataFrame,
       side: DataFrame => DataFrame = identity): DataFrame = {
-    val live = side(cand.filter(col("cand") >= 0))
+    val live = side(cand)
     def end(p: String): DataFrame = live.select(col("id").as(s"${p}_id"),
       col("deg").as(s"${p}_deg"), col("cand").as(s"${p}_cand"))
     val aBeatsB = col("a_deg") > col("b_deg") ||
@@ -261,23 +194,21 @@ object ColoringKernel {
   }
 
   /** The admitted updates `(uid, new_color)`: every candidate vertex that
-    * is not [[beaten]] keeps its candidate — a color, or -3 when its
-    * palette is exhausted (a -3 vertex is never beaten). `side` wraps the
-    * beaten ids (a broadcast hint: they are a subset of `cand`). */
+    * is not [[beaten]] keeps its candidate color. `side` wraps the beaten
+    * ids (a broadcast hint: they are a subset of `cand`). */
   private[graft] def admit(cand: DataFrame, beaten: DataFrame,
       side: DataFrame => DataFrame = identity): DataFrame =
     cand.join(side(beaten), col("id") === col("a_id"), "left_anti")
       .select(col("id").as("uid"), col("cand").as("new_color"))
 
   /** First-fit over a 64-bit used-color mask, entirely from codegen'd
-    * builtins: lowbit(~m) isolates the smallest free color,
-    * `bit_count(lowbit−1)` is its index, ≥ k ⇒ the −3 infeasible sentinel
-    * (when all 64 bits are taken, lowbit = 0 and bit_count(−1) = 64 ≥ k).
-    * No join, no array allocation — the whole candidate step is map-side. */
-  private def maskFirstFit(used: Column, k: Int): Column = {
+    * builtins: lowbit(~m) isolates the smallest free color and
+    * `bit_count(lowbit−1)` is its index. A vertex has at most deg ≤ Δ ≤ 63
+    * used colors, so a free bit below Δ+1 always exists. No join, no array
+    * allocation — the whole candidate step is map-side. */
+  private def maskFirstFit(used: Column): Column = {
     val free = bitwise_not(used)
-    val idx = bit_count(free.bitwiseAND(-free) - 1)
-    when(idx < k, idx.cast("int")).otherwise(lit(-3))
+    bit_count(free.bitwiseAND(-free) - 1).cast("int")
   }
 
   /** Apply a round's updates and push each newly admitted color into the
@@ -303,7 +234,7 @@ object ColoringKernel {
     // Color changes and mask gains are both tiny relative to the state —
     // merge them first, in one union-aggregate (one exchange, combined
     // map-side), so the V-sized state meets ONE probe per round. `max`
-    // skips the gain rows' nulls, so an admitted -3 survives.
+    // skips the gain rows' nulls.
     val chg = updates.select(col("uid").as("cid"), col("new_color"), lit(0L).as("g"))
       .unionByName(gains)
       .groupBy(col("cid"))
@@ -317,9 +248,9 @@ object ColoringKernel {
 
   /** The mask round's candidates `(id, deg, cand)`: a narrow projection of
     * the state checkpoint, so a round re-reads them without landing them. */
-  private[graft] def maskCandidates(state: DataFrame, k: Int): DataFrame =
+  private[graft] def maskCandidates(state: DataFrame): DataFrame =
     state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used"), k).as("cand"))
+      .select(col("id"), col("deg"), maskFirstFit(col("used")).as("cand"))
 
   /** Mask-state speculative round (k ≤ 64): candidates fall out of the
     * carried mask map-side ([[maskCandidates]]); only the rival check
@@ -329,7 +260,7 @@ object ColoringKernel {
     * adaptive execution reuses the beaten-id shuffle and broadcast.
     * Semantics identical to [[jpRound]] — colors are permanent, so the
     * incrementally-grown mask always equals the regathered set. */
-  private[graft] def jpRoundMask(e: DataFrame, state: DataFrame, k: Int,
+  private[graft] def jpRoundMask(e: DataFrame, state: DataFrame,
       uncolored: Long): DataFrame = {
     // The candidate frame carries exactly `uncolored` rows, and the beaten
     // ids are a subset of it — row-bound broadcast hints keep the rival
@@ -337,7 +268,7 @@ object ColoringKernel {
     // applyWithMask's note; same ×42 shuffle signal) and the admit's
     // candidate side unshuffled.
     val side = maybeBroadcast(_: DataFrame, uncolored)
-    val cand = maskCandidates(state, k)
+    val cand = maskCandidates(state)
     applyWithMask(e, state, admit(cand, beaten(e, cand, side), side), uncolored)
   }
 
@@ -350,8 +281,9 @@ object ColoringKernel {
     * priority chains). Correctness: same-candidate adjacent vertices are
     * totally ordered, only the maximum keeps the color, so no conflict can
     * commit; every conflict component commits its top vertex, so progress
-    * is guaranteed. No free color in [0,k) → the -3 infeasible sentinel. */
-  private[graft] def jpRound(e: DataFrame, state: DataFrame, k: Int,
+    * is guaranteed. A vertex's first-fit search reads colors 0..deg, one
+    * of which its deg neighbors leave free. */
+  private[graft] def jpRound(e: DataFrame, state: DataFrame,
       round: State.Round): DataFrame = {
     // Pass A: first-fit candidate per uncolored vertex.
     val used = e
@@ -364,11 +296,11 @@ object ColoringKernel {
     // join sides + the final apply); without this the edges pass behind it
     // re-runs per reference (measured 13 s vs 2 s per round at sf0.1).
     // Custom codegen expression (graft.functions.FirstFitColor): one
-    // boolean[k] pass, no intermediate arrays; NULL used → 0, full → -3.
+    // boolean[deg + 1] pass, no intermediate arrays; NULL used → 0.
     val cand = state.filter(col("color") === -1)
       .join(used, col("id") === col("src"), "left_outer")
       .select(col("id"), col("deg"),
-        call_function("graft_first_fit", col("used_arr"), lit(k)).as("cand"))
+        call_function("graft_first_fit", col("used_arr"), col("deg") + 1).as("cand"))
     val candM = round.land(cand).df
 
     // Pass B: keep the candidate iff no same-candidate neighbor beats it.
@@ -380,83 +312,48 @@ object ColoringKernel {
         col("deg"), col("used"))
   }
 
-  /** Outer minimal-color search (O25, `coloring.py:212-231`), with the
-    * reference's failed-attempt-output bug fixed (SURVEY.md §5 bug 1): the
-    * returned coloring is always the last *successful* attempt.
+  /** Outer minimal-color search (O25, `coloring.py:212-231`): one run at
+    * k = Δ+1, which cannot fail, whose colors used are the returned `k`.
+    * The reference recolors from scratch at k = Δ+1, Δ, … until an attempt
+    * fails, and writes the failed attempt's output (SURVEY.md §5 bug 1);
+    * here there is no failed attempt to write.
     *
-    * Scale divergence from the reference (documented): instead of starting
-    * at Δ+1 and decrementing by 1 — O(Δ) full recolorings — the first
-    * attempt runs at k = Δ+1 (always succeeds for first-fit), then restarts
-    * from `distinct colors actually used`, which first-fit greedy makes a
-    * far tighter upper bound; each success retries with k−1 until failure.
+    * For the DETERMINISTIC Jp rounds (and [[GraphXKernel.deltaPlusOne]])
+    * one trace is the proof of the kernel's minimal k: the per-round trace
+    * does not depend on the palette except by running out of it
+    * (first-fit picks the smallest free color whatever the palette;
+    * priority admit is palette-blind), so a k' < colors-used attempt
+    * replays the identical rounds until the first round where the Δ+1
+    * trace committed a color ≥ k', and fails there. Hence the Δ+1 trace's
+    * colors used is the least palette this kernel colors with (measured:
+    * 40 s → 14 s for q_minimal_colors at sf0.1 — the k−1 probe replayed all
+    * 13 rounds with bit-identical uncolored counts before failing on the
+    * last one).
     *
-    * For the DETERMINISTIC Jp rounds even the retries are redundant and
-    * are skipped: the per-round trace does not depend on k except through
-    * the palette-exhausted sentinel (first-fit picks the smallest free
-    * color regardless of k; priority admit is k-blind), so the k' < k
-    * attempt replays the identical rounds until the first round where the
-    * Δ+1 trace committed a color ≥ k' — at which point that vertex gets −3
-    * and the attempt fails. Hence for this kernel family, tryColor(k')
-    * succeeds iff k' ≥ colors-used-at-Δ+1: one run at Δ+1 already
-    * witnesses the kernel's minimal k (measured: 40 s → 14 s for
-    * q_minimal_colors at sf0.1 — the k−1 probe replayed all 13 rounds with
-    * bit-identical uncolored counts before failing on the last one).
-    * GreedyRdd keeps the descending search: its admitted sets depend on
-    * partitioning (reference-faithful), so no single trace is a proof.
-    *
-    * Δ comes from one degree aggregate for GreedyRdd (0 on an edge-free
-    * input), which also counts the V every greedy attempt is routed on.
-    * Jp reads it off its own round-0 checkpoint, so its degree aggregate is
+    * Jp reads Δ off its own round-0 checkpoint, so its degree aggregate is
     * the only pass over the edges before round 1, and it reads the colors
-    * used off its last checkpoint, so it runs no job after its rounds.
-    * `edges` is read as [[tryColor]] reads it: pass it materialized.
+    * used off its last checkpoint, so it runs no job after its rounds; it
+    * re-reads `edges` as given, so pass it materialized. GreedyRdd counts
+    * the edges once for its partitioner and lands its colors through the
+    * same observation; when its kernel declines the graph (past the 64-bit
+    * mask or the bucket bound, [[GreedyRddKernel.greedyFits]]) the run is
+    * the Jp one.
     */
   def minimalColors(
       spark: SparkSession,
       edges: DataFrame,
       strategy: Strategy = Strategy.Jp,
-      extraVertices: Option[DataFrame] = None,
-      maxAttempts: Int = 16)
-      : Colored = {
-    // The Δ+1 run's coloring already witnesses k = colors-actually-used —
-    // no revalidation run needed, just relabel (first-fit never exceeds
-    // the palette it was given).
-    if (strategy == Strategy.Jp) {
-      // Jp observed that count on its last landing; the trace is the proof
-      // (scaladoc above), a k−1 attempt would replay it and fail.
-      val first = jp(spark, edges, _ + 1, extraVertices)
-        .getOrElse(sys.error("k = Δ+1 must be colorable"))
-      first.copy(k = first.state(ColorsUsed).toInt)
-    } else {
-      // GreedyRdd's Δ and V, from one degree aggregate.
-      val r = edges.groupBy(col("src")).agg(count(lit(1)).as("d"))
-        .agg(coalesce(max(col("d")), lit(0L)), count(lit(1))).head()
-      def attempt(k: Int): Option[Colored] =
-        tryColor(spark, edges, k, strategy, extraVertices, vertices = Some(r.getLong(1)))
-      var best = attempt(r.getLong(0).toInt + 1)
-        .getOrElse(sys.error("k = Δ+1 must be colorable"))
-      var k = usedColors(best.colors)
-      var attempts = 0
-      var done = false
-      while (!done && attempts < maxAttempts && k > 1) {
-        attempts += 1
-        attempt(k - 1) match {
-          case Some(c) =>
-            val prev = best
-            best = c
-            k = usedColors(c.colors)
-            prev.release()
-          case None => done = true
-        }
-      }
-      best.copy(k = k)
-    }
+      extraVertices: Option[DataFrame] = None)
+      : Colored = strategy match {
+    case Strategy.Jp => jp(spark, edges, extraVertices)
+    case Strategy.GreedyRdd =>
+      // The greedy kernel's rounds are RDD rounds; its final colors land
+      // here, and it frees its last round once they are copied.
+      GreedyRddKernel.colorDeltaPlusOne(spark, edges, edges.count())(
+          df => State.loop(appendIsolated(df, extraVertices), colorsUsed))
+        .map { case (st, rounds) => Colored(st, st(ColorsUsed).toInt, rounds) }
+        .getOrElse(jp(spark, edges, extraVertices))
   }
-
-  /** Number of distinct colors in a complete coloring (one job;
-    * [[minimalColors]] reads a Jp run's count off its state instead). */
-  def usedColors(colors: DataFrame): Int =
-    colors.filter(col("color") >= 0).select(col("color")).distinct().count().toInt
 
   /** O22 validation invariants (`validate_graph_coloring`,
     * `coloring.py:149-162`): (#uncolored, #conflicting edge pairs) — both

@@ -23,10 +23,10 @@ import graft.ops.{SessionCache, State}
   * no driver hop and no Catalyst planning per round — the trade is losing
   * whole-stage codegen for lower per-round fixed cost.
   *
-  * Used-color messages are a 64-bit bitmask when k ≤ 64 (one `Long` OR per
-  * edge instead of a `Set[Int]` allocation + union — the palette of the
-  * corpus kernel graph is Δ+1 = 63, so the queries always take this path);
-  * the set-based path remains for arbitrary k.
+  * Used-color messages are a 64-bit bitmask when k = Δ+1 ≤ 64 (one `Long`
+  * OR per edge instead of a `Set[Int]` allocation + union — the palette of
+  * the corpus kernel graph is Δ+1 = 63, so the queries always take this
+  * path); the set-based path serves a graph with Δ ≥ 64.
   *
   * Determinism: identical priority order (degree desc, id asc) to the
   * DataFrame kernel, so both produce the identical coloring;
@@ -51,6 +51,9 @@ object GraphXKernel {
   /** Whether a graph of `nEdges` edges runs here ([[MaxEdgesKey]]). */
   def runs(spark: SparkSession, nEdges: Long): Boolean =
     nEdges <= spark.conf.get(MaxEdgesKey, DefaultMaxEdges.toString).toLong
+
+  /** The Δ+1 trace's round cap (SURVEY.md §7 risk 6). */
+  private val MaxRounds = 200
 
   /** color ∈ {-1 uncolored, 0.. assigned}; deg static. */
   private final case class V(color: Int, deg: Int)
@@ -110,29 +113,15 @@ object GraphXKernel {
     base
   }
 
-  /** The Δ+1 color trace on a prepared base: one attempt at k = Δ+1,
-    * which cannot fail, whose colors land in a [[State]] that observes
-    * the colors used, as the Jp rounds do. That count is the minimal k of
-    * this deterministic kernel ([[ColoringKernel.minimalColors]] gives the
-    * proof), and the returned `k`. */
-  def deltaPlusOne(spark: SparkSession, base: Graph[Int, Unit]): ColoringKernel.Colored =
-    tryColorOn(spark, base, _ + 1)(State.loop(_, ColoringKernel.colorsUsed))
-      .map { case (st, rounds) =>
-        ColoringKernel.Colored(st, st(ColoringKernel.ColorsUsed).toInt, rounds)
-      }
-      .getOrElse(sys.error("k = Δ+1 must be colorable"))
-
-  /** Attempt a coloring of a prepared base graph with the palette
-    * `palette(Δ)`, Δ read off the first aggregate. On success the (id,
-    * color) DataFrame is handed to `land`, and the result is
-    * `(land(colors), rounds)`. The last round's graph is freed once
-    * `land` returns, so `land` must copy or fully consume the colors
-    * ([[deltaPlusOne]] copies them into a `State`). */
-  def tryColorOn[T](
-      spark: SparkSession,
-      base: Graph[Int, Unit],
-      palette: Int => Int,
-      maxRounds: Int = 200)(land: DataFrame => T): Option[(T, Int)] = {
+  /** The Δ+1 color trace on a prepared base: one run with the palette
+    * k = Δ+1, Δ read off the first aggregate, which cannot fail for lack of
+    * colors (a vertex has at most deg ≤ Δ used colors). Its colors land in
+    * a [[State]] that observes the colors used, as the Jp rounds do; that
+    * count is the minimal k of this deterministic kernel
+    * ([[ColoringKernel.minimalColors]] gives the proof), and the returned
+    * `k`. Every round's graph is freed, the last once the colors have
+    * landed; a run that hits [[MaxRounds]] throws. */
+  def deltaPlusOne(spark: SparkSession, base: Graph[Int, Unit]): ColoringKernel.Colored = {
     import spark.implicits._
 
     var graph = base.mapVertices((_, d) => V(-1, d)).cache()
@@ -145,142 +134,118 @@ object GraphXKernel {
       .get(GreedyRddKernel.TailLocalSolveRowsKey,
         GreedyRddKernel.DefaultTailLocalSolveRows.toString).toLong
 
-    var rounds = 0
-    // One aggregate seeds the palette and BOTH loop signals: every vertex
-    // starts uncolored, so it gives Δ, the uncolored count and the
-    // uncolored degree sum that guards the tail-local task's payload.
-    val (maxDeg, n0, deg0) = graph.vertices
-      .map { case (_, v) => (v.deg, 1L, v.deg.toLong) }
-      .fold((0, 0L, 0L))((a, b) => (math.max(a._1, b._1), a._2 + b._2, a._3 + b._3))
-    val k = palette(maxDeg)
-    var (uncolored, uncoloredDeg) = (n0, deg0)
-    var failed = false
+    try {
+      var rounds = 0
+      // One aggregate seeds the palette and BOTH loop signals: every vertex
+      // starts uncolored, so it gives Δ, the uncolored count and the
+      // uncolored degree sum that guards the tail-local task's payload.
+      val (maxDeg, n0, deg0) = graph.vertices
+        .map { case (_, v) => (v.deg, 1L, v.deg.toLong) }
+        .fold((0, 0L, 0L))((a, b) => (math.max(a._1, b._1), a._2 + b._2, a._3 + b._3))
+      val mask = maxDeg < 64
+      var (uncolored, uncoloredDeg) = (n0, deg0)
 
-    while (uncolored > 0 && !failed) {
-      rounds += 1
-      if (rounds > maxRounds) failed = true
-      else if (k <= 64 && uncolored <= tailRows &&
-        uncoloredDeg <= GreedyRddKernel.TailLocalSolveMaxEdges) {
-        // Tail-local replay (same stance as GreedyRddKernel's tail-local
-        // solve, but STRICTER: these rounds are deterministic and the
-        // DuckDB oracle replays them, so the local fixpoint must reproduce
-        // the distributed rounds EXACTLY). It does, by construction: the
-        // synchronous Jp round is a deterministic function of (uncolored
-        // ids, degrees, used-color masks, uncolored-uncolored adjacency) —
-        // all of which ship into the one task — and colored vertices never
-        // change, so replaying candidate/admit/apply sequentially until
-        // the fixpoint yields the identical labeling the remaining
-        // scheduled rounds would. The win is the same: past this point
-        // every distributed round moved < tailRows vertices through two
-        // aggregateMessages stages of mostly scheduling latency (r7 at
-        // sf0.1: rounds 5-13, each ~0.33 s). An executor task, not a
-        // driver collect; payload bounded by the degree-sum guard.
-        val used = graph.aggregateMessages[Long](
-          t => if (t.srcAttr.color == -1 && t.dstAttr.color >= 0 &&
-            t.dstAttr.color < 64) t.sendToSrc(1L << t.dstAttr.color),
-          _ | _)
-        val tailAdj = graph.aggregateMessages[Array[VertexId]](
-          t => if (t.srcAttr.color == -1 && t.dstAttr.color == -1)
-            t.sendToSrc(Array(t.dstId)),
-          _ ++ _)
-        val solved = graph.vertices.filter(_._2.color == -1)
-          .leftOuterJoin(used).leftOuterJoin(tailAdj)
-          .map { case (id, ((v, u), a)) =>
-            (id, v.deg, u.getOrElse(0L), a.getOrElse(Array.empty[VertexId]))
-          }
-          .coalesce(1, shuffle = true)
-          .mapPartitions(it => jpLocalReplay(it, k))
-        val next = graph.outerJoinVertices(solved) { (_, v, s) =>
-          s.map(c => V(c, v.deg)).getOrElse(v)
-        }.cache()
-        val counts = next.vertices
-          .map { case (_, v) => (
-            if (v.color == -1) 1L else 0L,
-            if (v.color == -3) 1L else 0L,
-            if (v.color == -1) v.deg.toLong else 0L) }
-          .fold((0L, 0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-        if (counts._2 > 0) failed = true
-        else if (counts._1 >= uncolored) failed = rounds >= maxRounds
-        free(graph)
-        graph = next
-        uncolored = counts._1
-        uncoloredDeg = counts._3
-      }
-      else {
-        // Pass A: gather used neighbor colors, pick first-fit candidate
-        // (O11 + O13). Bitmask fast path for k ≤ 64.
-        val withCand =
-          if (k <= 64) {
+      while (uncolored > 0) {
+        rounds += 1
+        if (rounds > MaxRounds) throw new IllegalStateException(
+          s"GraphX left $uncolored vertices uncolored after $MaxRounds rounds")
+        val (next, withCand) =
+          if (mask && uncolored <= tailRows &&
+            uncoloredDeg <= GreedyRddKernel.TailLocalSolveMaxEdges) {
+            // Tail-local replay (same stance as GreedyRddKernel's tail-local
+            // solve, but STRICTER: these rounds are deterministic and the
+            // DuckDB oracle replays them, so the local fixpoint must
+            // reproduce the distributed rounds EXACTLY). It does, by
+            // construction: the synchronous Jp round is a deterministic
+            // function of (uncolored ids, degrees, used-color masks,
+            // uncolored-uncolored adjacency) — all of which ship into the
+            // one task — and colored vertices never change, so replaying
+            // candidate/admit/apply sequentially until the fixpoint yields
+            // the identical labeling the remaining scheduled rounds would.
+            // The win is the same: past this point every distributed round
+            // moved < tailRows vertices through two aggregateMessages stages
+            // of mostly scheduling latency (r7 at sf0.1: rounds 5-13, each
+            // ~0.33 s). An executor task, not a driver collect; payload
+            // bounded by the degree-sum guard.
             val used = graph.aggregateMessages[Long](
-              t => if (t.dstAttr.color >= 0 && t.dstAttr.color < 64)
+              t => if (t.srcAttr.color == -1 && t.dstAttr.color >= 0)
                 t.sendToSrc(1L << t.dstAttr.color),
               _ | _)
-            graph.outerJoinVertices(used) { (_, v, usedOpt) =>
-              val cand =
-                if (v.color != -1) Int.MinValue // already colored: no candidate
-                else {
-                  val free = java.lang.Long.numberOfTrailingZeros(~usedOpt.getOrElse(0L))
-                  if (free < k) free else -3
-                }
-              (v, cand)
-            }
-          } else {
-            val used = graph.aggregateMessages[Set[Int]](
-              t => if (t.dstAttr.color >= 0) t.sendToSrc(Set(t.dstAttr.color)),
+            val tailAdj = graph.aggregateMessages[Array[VertexId]](
+              t => if (t.srcAttr.color == -1 && t.dstAttr.color == -1)
+                t.sendToSrc(Array(t.dstId)),
               _ ++ _)
-            graph.outerJoinVertices(used) { (_, v, usedOpt) =>
-              val cand =
-                if (v.color != -1) Int.MinValue
-                else {
-                  val u = usedOpt.getOrElse(Set.empty[Int])
-                  (0 until k).find(c => !u.contains(c)).getOrElse(-3)
+            val solved = graph.vertices.filter(_._2.color == -1)
+              .leftOuterJoin(used).leftOuterJoin(tailAdj)
+              .map { case (id, ((v, u), a)) =>
+                (id, v.deg, u.getOrElse(0L), a.getOrElse(Array.empty[VertexId]))
+              }
+              .coalesce(1, shuffle = true)
+              .mapPartitions(jpLocalReplay)
+            (graph.outerJoinVertices(solved) { (_, v, s) =>
+              s.map(c => V(c, v.deg)).getOrElse(v)
+            }.cache(), None)
+          } else {
+            // Pass A: gather used neighbor colors, pick first-fit candidate
+            // (O11 + O13). Bitmask fast path for Δ < 64.
+            val withCand =
+              if (mask) {
+                val used = graph.aggregateMessages[Long](
+                  t => if (t.dstAttr.color >= 0) t.sendToSrc(1L << t.dstAttr.color),
+                  _ | _)
+                graph.outerJoinVertices(used) { (_, v, usedOpt) =>
+                  val cand =
+                    if (v.color != -1) Int.MinValue // already colored: no candidate
+                    else java.lang.Long.numberOfTrailingZeros(~usedOpt.getOrElse(0L))
+                  (v, cand)
                 }
-              (v, cand)
-            }
+              } else {
+                val used = graph.aggregateMessages[Set[Int]](
+                  t => if (t.dstAttr.color >= 0) t.sendToSrc(Set(t.dstAttr.color)),
+                  _ ++ _)
+                graph.outerJoinVertices(used) { (_, v, usedOpt) =>
+                  val cand =
+                    if (v.color != -1) Int.MinValue
+                    else {
+                      val u = usedOpt.getOrElse(Set.empty[Int])
+                      Iterator.from(0).find(c => !u.contains(c)).get
+                    }
+                  (v, cand)
+                }
+              }
+            withCand.cache()
+
+            // Pass B: highest rival priority among same-candidate neighbors.
+            val rival = withCand.aggregateMessages[(Int, Long)](
+              t =>
+                if (t.srcAttr._2 >= 0 && t.srcAttr._2 == t.dstAttr._2)
+                  t.sendToSrc(prio(t.dstId, t.dstAttr._1.deg)),
+              ord.max)
+            (withCand.outerJoinVertices(rival) { (id, vc, rivalOpt) =>
+              val (v, cand) = vc
+              if (v.color == -1 && rivalOpt.forall(r => ord.gt(prio(id, v.deg), r)))
+                V(cand, v.deg)
+              else v
+            }.cache(), Some(withCand))
           }
-        withCand.cache()
 
-        // Pass B: highest rival priority among same-candidate neighbors.
-        val rival = withCand.aggregateMessages[(Int, Long)](
-          t =>
-            if (t.srcAttr._2 >= 0 && t.srcAttr._2 == t.dstAttr._2)
-              t.sendToSrc(prio(t.dstId, t.dstAttr._1.deg)),
-          ord.max)
-        val next = withCand.outerJoinVertices(rival) { (id, vc, rivalOpt) =>
-          val (v, cand) = vc
-          if (v.color != -1) v
-          else if (cand == -3) V(-3, v.deg)
-          else if (rivalOpt.forall(r => ord.gt(prio(id, v.deg), r)))
-            V(cand, v.deg)
-          else v
-        }.cache()
-
-        val counts = next.vertices
-          .map { case (_, v) => (
-            if (v.color == -1) 1L else 0L,
-            if (v.color == -3) 1L else 0L,
-            if (v.color == -1) v.deg.toLong else 0L) }
-          .fold((0L, 0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2, a._3 + b._3))
-        if (counts._2 > 0) failed = true
-        else if (counts._1 >= uncolored) failed = rounds >= maxRounds
+        val (nextUncolored, nextDeg) = next.vertices
+          .map { case (_, v) => if (v.color == -1) (1L, v.deg.toLong) else (0L, 0L) }
+          .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
         free(graph)
-        free(withCand)
-        graph = next
-        uncolored = counts._1
-        uncoloredDeg = counts._3
+        withCand.foreach(free)
         // GraphX checkpointing analog: lineage stays bounded because each
         // round's vertices RDD is cached and the previous is dropped; edge
         // RDDs are reused (same partitioning) across rounds.
+        graph = next
+        uncolored = nextUncolored
+        uncoloredDeg = nextDeg
       }
-    }
 
-    try
-      if (failed) None
-      else {
-        val colors = graph.vertices.map { case (id, v) => (id, v.color) }.toDF("id", "color")
-        Some((land(colors), rounds))
-      }
-    finally free(graph)
+      val colors = graph.vertices.map { case (id, v) => (id, v.color) }.toDF("id", "color")
+      val st = State.loop(colors, ColoringKernel.colorsUsed)
+      ColoringKernel.Colored(st, st(ColoringKernel.ColorsUsed).toInt, rounds)
+    } finally free(graph)
   }
 
   /** The one connected-components body: GraphX `connectedComponents`
@@ -374,14 +339,10 @@ object GraphXKernel {
     * from its used mask, admits iff its (deg desc, id asc) priority beats
     * every same-candidate uncolored neighbor, and admitted colors OR into
     * the neighbors' masks — bit-identical to the distributed
-    * aggregateMessages rounds (ties impossible: ids are unique). A full
-    * mask yields −3 and the replay stops after that round, exactly like
-    * the distributed loop's infeasible abort; the outer counts then fail
-    * the attempt. Runs until fixpoint, k ≤ 64 masks only (the caller
-    * gates). */
+    * aggregateMessages rounds (ties impossible: ids are unique). Runs until
+    * fixpoint, masks only (the caller gates on Δ < 64). */
   private def jpLocalReplay(
-      it: Iterator[(VertexId, Int, Long, Array[VertexId])],
-      k: Int): Iterator[(VertexId, Int)] = {
+      it: Iterator[(VertexId, Int, Long, Array[VertexId])]): Iterator[(VertexId, Int)] = {
     val nodes = it.toArray
     val n = nodes.length
     val idx = new java.util.HashMap[VertexId, Int](n * 2)
@@ -394,25 +355,20 @@ object GraphXKernel {
     def beats(a: Int, b: Int): Boolean = // prio(a) > prio(b), (deg, -id)
       deg(a) > deg(b) || (deg(a) == deg(b) && nodes(a)._1 < nodes(b)._1)
     var remaining = n
-    var sawInfeasible = false
     var progress = true
-    while (remaining > 0 && progress && !sawInfeasible) {
+    while (remaining > 0 && progress) {
       val cand = new Array[Int](n)
       i = 0
       while (i < n) {
         cand(i) =
           if (color(i) != -1) Int.MinValue
-          else {
-            val free = java.lang.Long.numberOfTrailingZeros(~mask(i))
-            if (free < k) free else -3
-          }
-        if (cand(i) == -3) sawInfeasible = true
+          else java.lang.Long.numberOfTrailingZeros(~mask(i))
         i += 1
       }
       val admitted = scala.collection.mutable.ArrayBuffer.empty[Int]
       i = 0
       while (i < n) {
-        if (color(i) == -1 && cand(i) >= 0) {
+        if (color(i) == -1) {
           var ok = true
           var j = 0
           val a = adj(i)
@@ -424,15 +380,6 @@ object GraphXKernel {
           if (ok) admitted += i
         }
         i += 1
-      }
-      // Apply -3 the way the distributed round does: it becomes the
-      // vertex's color this round and the attempt aborts after it.
-      if (sawInfeasible) {
-        i = 0
-        while (i < n) {
-          if (color(i) == -1 && cand(i) == -3) { color(i) = -3; remaining -= 1 }
-          i += 1
-        }
       }
       progress = admitted.nonEmpty
       admitted.foreach { v =>
@@ -447,9 +394,8 @@ object GraphXKernel {
         }
       }
     }
-    // Uncolored leftovers (stall, or the infeasible abort) stay -1: the
-    // outer loop's counts see them and apply the same failure rules as the
-    // distributed rounds.
+    // Uncolored leftovers (a stall, impossible with unique ids) stay -1:
+    // the outer loop's counts see them.
     Iterator.tabulate(n)(i => (nodes(i)._1, color(i))).filter(_._2 != -1)
   }
 }

@@ -91,9 +91,9 @@ object ColorQueries {
     *    converges in 13 (measured); extra rounds are no-ops at the fixpoint,
     *    so 16 is margin, not semantics.
     *  - The first-fit search only probes colors `0..deg(v)` (some color in
-    *    that range is always free, and k = Δ+1 > deg(v) caps nothing), so
-    *    the unrolled SQL never needs the infeasible (−3) branch; `series`
-    *    just bounds the probe table and must exceed Δ (61 at sf0.01).
+    *    that range is always free, as in the kernel's regather rounds);
+    *    `series` just bounds the probe table and must exceed Δ (61 at
+    *    sf0.01).
     */
   def colorGraphOracleSql(rounds: Int = 16, series: Int = 128): String =
     coloringCtes(rounds, series) +

@@ -3,8 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.{ColoringKernel, GreedyRddKernel}
-import graft.color.ColoringKernel.Strategy
 import graft.llm.TextStats
 import graft.ops.{Broadcasts, GraphOps}
 
@@ -19,13 +17,14 @@ import graft.ops.{Broadcasts, GraphOps}
   *    session-configurable and the default IS the documented 9.2e18);
   *  - q_bm25 fixed-point idf headroom (conf-injected, same reasoning —
   *    the real bound is N ≈ 10¹⁰ docs);
-  *  - GreedyRdd 64-bit color mask: k ≤ 64 (require);
   *  - broadcast row threshold: the hint must actually disappear past the
   *    bound (the PlanShapeSpec pins the full-plan version; this is the
   *    unit case on the helper itself).
   *
   * The GraphIO single-file ceiling (graft.io.maxCollectRows) is covered by
-  * CliSpec's oversize-routing cases.
+  * CliSpec's oversize-routing cases; the GreedyRdd 64-bit color mask by
+  * ColoringKernelSpec's collect_set case, where the greedy kernel declines
+  * a Δ+1 past 64 and the run is the Jp one.
   */
 class BoundsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
@@ -104,23 +103,6 @@ class BoundsSpec extends AnyFunSuite {
         .map(r => (r.getLong(0), r.getLong(1))).toSeq
       assert(wide === narrow)
     } finally spark.conf.unset(graft.llm.Similarity.PcaMaxVecsKey)
-  }
-
-  test("greedy mask kernel rejects k > 64 loudly") {
-    import spark.implicits._
-    val e = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
-    val ex = intercept[IllegalArgumentException] {
-      GreedyRddKernel.tryColor(spark, e, k = 65)(_.count())
-    }
-    assert(ex.getMessage.contains("64"))
-    // The strategy router, not the caller, owns the fallback: a greedy
-    // REQUEST past the mask still colors via the Jp rounds.
-    val r = ColoringKernel.tryColor(spark, e, 65, Strategy.GreedyRdd)
-    assert(r.isDefined)
-    r.foreach { c =>
-      assert(ColoringKernel.validate(e, c.colors) === ((0L, 0L)))
-      c.release()
-    }
   }
 
   test("broadcast hint disappears past the row threshold") {

@@ -21,6 +21,28 @@ class CliSpec extends AnyFunSuite {
       "input" -> "g.json", "output-coloring" -> "c.json", "strategy" -> "greedy"))
   }
 
+  /** The message of the IllegalArgumentException `parse(args)` throws. */
+  private def rejected(args: String*): String =
+    intercept[IllegalArgumentException](Coloring.parse(args.toArray)).getMessage
+
+  test("an unknown flag is rejected before any work") {
+    assert(rejected("--node-cout", "5").contains("--node-cout"))
+    // run checks the keys it is handed first, too.
+    val ex = intercept[IllegalArgumentException](
+      Coloring.run(spark, Map("node-cout" -> "5")))
+    assert(ex.getMessage.contains("--node-cout"))
+  }
+
+  test("a flag without a value is rejected") {
+    assert(rejected("--seed", "3", "--input").contains("--input"))
+    assert(rejected("--input", "--seed", "3").contains("--input"))
+  }
+
+  test("a bare token is rejected") {
+    assert(rejected("--seed", "3", "stray").contains("stray"))
+    assert(rejected("graph.json").contains("graph.json"))
+  }
+
   test("reference fixture in, coloring JSON out (the reference's main flow)") {
     val dir = java.nio.file.Files.createTempDirectory("graft_cli")
     val out = dir.resolve("colors.json").toString

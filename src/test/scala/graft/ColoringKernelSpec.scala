@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.{CandNode, ColoringKernel, GraphXKernel, GreedyIS}
+import graft.color.{CandNode, ColoringKernel, GraphXKernel, GreedyIS, GreedyRddKernel}
 import graft.color.ColoringKernel.Strategy
 import graft.model.{GraphIO, RandomGraph}
 
@@ -17,14 +17,21 @@ class ColoringKernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
   import spark.implicits._
 
+  /** Number of distinct colors in a complete coloring. */
+  private def usedColors(colors: DataFrame): Int =
+    colors.filter(col("color") >= 0).select(col("color")).distinct().count().toInt
+
+  /** A `strategy` run on `edges` of max degree `maxDeg` is a valid coloring
+    * whose k, the colors it used, is at most Δ+1. */
   private def check(edges: DataFrame, maxDeg: Int, strategy: Strategy): Unit = {
-    val result = ColoringKernel.tryColor(spark, edges, maxDeg + 1, strategy)
-      .getOrElse(fail("Δ+1 coloring must succeed"))
-    val (uncolored, conflicts) = ColoringKernel.validate(edges, result.colors)
-    assert(uncolored === 0, "all nodes colored")
-    assert(conflicts === 0, "no adjacent equal colors")
-    assert(ColoringKernel.usedColors(result.colors) <= maxDeg + 1)
-    result.release()
+    val result = ColoringKernel.minimalColors(spark, edges, strategy)
+    try {
+      val (uncolored, conflicts) = ColoringKernel.validate(edges, result.colors)
+      assert(uncolored === 0, "all nodes colored")
+      assert(conflicts === 0, "no adjacent equal colors")
+      assert(result.k === usedColors(result.colors))
+      assert(result.k <= maxDeg + 1)
+    } finally result.release()
   }
 
   for (n <- Seq(10L, 200L, 2000L);
@@ -35,14 +42,20 @@ class ColoringKernelSpec extends AnyFunSuite {
   }
 
   test("legacy collect_set path (k > 64) still colors validly") {
-    // k <= 64 rounds ride the 64-bit used mask; palettes past 64 fall back
-    // to the per-round regather with collect_set arrays — keep it covered.
-    val edges = RandomGraph.edges(spark, 500L, 6, seed = 11)
-    check(edges, 70, Strategy.Jp)
-    // A greedy request past the mask runs on the same Jp rounds, whatever V.
-    assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 70,
-      fail("V read past the mask")) === Strategy.Jp)
-    check(edges, 69, Strategy.GreedyRdd)
+    // Δ+1 <= 64 rounds ride the 64-bit used mask; past 64 they fall back to
+    // the per-round regather with collect_set arrays — keep it covered.
+    val edges = RandomGraph.edges(spark, 300L, 80, seed = 7)
+    val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0).toInt
+    assert(maxDeg + 1 > 64, s"Δ = $maxDeg")
+    check(edges, maxDeg, Strategy.Jp)
+    // The greedy kernel declines a palette past the mask, and a greedy
+    // request colors via the same Jp rounds.
+    check(edges, maxDeg, Strategy.GreedyRdd)
+    def labels(strategy: Strategy): Set[(Long, Int)] = {
+      val r = ColoringKernel.minimalColors(spark, edges, strategy)
+      try r.colors.as[(Long, Int)].collect().toSet finally r.release()
+    }
+    assert(labels(Strategy.GreedyRdd) === labels(Strategy.Jp))
   }
 
   test("GreedyRdd distributed rounds stay valid with the tail-local solve off") {
@@ -54,45 +67,33 @@ class ColoringKernelSpec extends AnyFunSuite {
     finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
   }
 
-  test("GreedyRdd reports palette exhaustion as None (-3 sentinel path)") {
-    // A triangle needs 3 colors; k=2 must fail loudly, not stall.
-    val edges = Seq((0L, 1L), (1L, 0L), (1L, 2L), (2L, 1L), (0L, 2L), (2L, 0L))
-      .toDF("src", "dst")
-    assert(ColoringKernel.tryColor(spark, edges, 2, Strategy.GreedyRdd).isEmpty)
-    assert(ColoringKernel.tryColor(spark, edges, 3, Strategy.GreedyRdd).isDefined)
-  }
-
   test("greedy requests auto-route to Jp past the per-bucket scale bound") {
     val edges = RandomGraph.edges(spark, 200, 5, seed = 42)
     val v = edges.select("src").distinct().count()
-    // Defaults keep the requested strategy (V/k far under the bound)...
-    assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 6, v)
-      === Strategy.GreedyRdd)
-    assert(ColoringKernel.resolveStrategy(spark, Strategy.Jp, 6, v)
-      === Strategy.Jp)
-    // ...a palette past the 64-bit mask routes to Jp under any bound...
-    assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 65, v)
-      === Strategy.Jp)
-    // ...an injected tiny bound flips the greedy request to Jp, and an
-    // end-to-end greedy request still yields a valid coloring via Jp rounds.
-    spark.conf.set(ColoringKernel.GreedyMaxBucketRowsKey, "1")
+    // The default bound fits this graph (V/k far under it)...
+    assert(GreedyRddKernel.greedyFits(spark, v, 6))
+    // ...a palette past the 64-bit mask never fits...
+    assert(!GreedyRddKernel.greedyFits(spark, v, 65))
+    // ...an injected tiny bound makes the kernel decline, and an end-to-end
+    // greedy request still yields a valid coloring via Jp rounds.
+    spark.conf.set(GreedyRddKernel.MaxBucketRowsKey, "1")
     try {
-      assert(ColoringKernel.resolveStrategy(spark, Strategy.GreedyRdd, 6, v)
-        === Strategy.Jp)
+      assert(!GreedyRddKernel.greedyFits(spark, v, 6))
+      assert(GreedyRddKernel.colorDeltaPlusOne(spark, edges, edges.count())(_.count()).isEmpty)
       check(edges, 5, Strategy.GreedyRdd)
-    } finally spark.conf.unset(ColoringKernel.GreedyMaxBucketRowsKey)
+    } finally spark.conf.unset(GreedyRddKernel.MaxBucketRowsKey)
     // The DEFAULT bound (2^13, the r13 measured crossover) must fire at
     // the 100x ScaleUp shape — kernel graph V = 2e6, k = 63 → V/k =
     // 31 746 > 8192 — and must NOT fire at gate scale (V = 2e4 → 317).
-    assert(2000000L / 63 > ColoringKernel.DefaultGreedyMaxBucketRows)
-    assert(20000L / 63 <= ColoringKernel.DefaultGreedyMaxBucketRows)
+    assert(2000000L / 63 > GreedyRddKernel.DefaultMaxBucketRows)
+    assert(20000L / 63 <= GreedyRddKernel.DefaultMaxBucketRows)
   }
 
   test("q_color_greedy runs the Jp Δ+1 rounds when the greedy kernel declines") {
     // A 1-row bucket bound makes every palette too coarse for the greedy
     // kernel, so the query takes its fallback.
     val s2 = spark.newSession()
-    s2.conf.set(ColoringKernel.GreedyMaxBucketRowsKey, "1")
+    s2.conf.set(GreedyRddKernel.MaxBucketRowsKey, "1")
     val got = graft.ops.ColorQueries.qColorGreedy(s2, Corpus.dir("sf0.001")).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2))).toSeq
     assert(got === Seq((0L, 0L, true)))
@@ -101,11 +102,8 @@ class ColoringKernelSpec extends AnyFunSuite {
   test("Jp coloring is deterministic across partitionings") {
     val edges = RandomGraph.edges(spark, 500, 6, seed = 7)
     def run(parts: Int): Seq[(Long, Int)] = {
-      val r = ColoringKernel
-        .tryColor(spark, edges.repartition(parts), 7, Strategy.Jp).get
-      val out = r.colors.orderBy("id").as[(Long, Int)].collect().toSeq
-      r.release()
-      out
+      val r = ColoringKernel.minimalColors(spark, edges.repartition(parts))
+      try r.colors.orderBy("id").as[(Long, Int)].collect().toSeq finally r.release()
     }
     assert(run(2) === run(11))
   }
@@ -122,24 +120,19 @@ class ColoringKernelSpec extends AnyFunSuite {
 
   test("Jp mask rounds, Jp regather rounds and GraphX give the same coloring") {
     // All three run the same first-fit + (degree, id) priority admit, so
-    // the labels must match exactly. The tail-local solve is off so GraphX
-    // runs its real rounds; k = 70 puts Jp on the collect_set regather.
+    // the labels and k must match exactly. The tail-local solve is off so
+    // GraphX runs its real rounds. Δ ≥ 64 on the last graph puts Jp on the
+    // collect_set regather and GraphX on its set messages; the others run
+    // both on masks.
     spark.conf.set(graft.color.GreedyRddKernel.TailLocalSolveRowsKey, "0")
-    try for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L))) {
+    try for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L), (300L, 80, 7L))) {
       val edges = RandomGraph.edges(spark, n, d, seed)
-      val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0).toInt
-      def labels(k: Int): Set[(Long, Int)] = {
-        val r = ColoringKernel.tryColor(spark, edges, k, Strategy.Jp)
-          .getOrElse(fail(s"k = $k must be colorable"))
-        try r.colors.as[(Long, Int)].collect().toSet finally r.release()
-      }
-      val mask = labels(maxDeg + 1)
-      assert(mask.size === edges.select("src").distinct().count())
-      assert(labels(70) === mask, s"n=$n: regather rounds differ")
       val best = ColoringKernel.minimalColors(spark, edges)
-      val jpK = try best.k finally best.release()
+      val (jp, jpK) =
+        try (best.colors.as[(Long, Int)].collect().toSet, best.k) finally best.release()
+      assert(jp.size === edges.select("src").distinct().count())
       graphxTrace(edges) { r =>
-        assert(r.colors.as[(Long, Int)].collect().toSet === mask, s"n=$n: GraphX differs")
+        assert(r.colors.as[(Long, Int)].collect().toSet === jp, s"n=$n: GraphX differs")
         assert(r.k === jpK, s"n=$n: GraphX observed another color count")
       }
     } finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
@@ -173,7 +166,7 @@ class ColoringKernelSpec extends AnyFunSuite {
       assert((maxDeg + 1 > 64) === (d > 64), s"n=$n: Δ = $maxDeg")
       val vertices = if (extra) Some(spark.range(n + 20).toDF("id")) else None
       val best = ColoringKernel.minimalColors(spark, edges, Strategy.Jp, vertices)
-      try assert(best.k === ColoringKernel.usedColors(best.colors), s"n=$n extra=$extra")
+      try assert(best.k === usedColors(best.colors), s"n=$n extra=$extra")
       finally best.release()
     }
     val empty = ColoringKernel.minimalColors(spark, Seq.empty[(Long, Long)].toDF("src", "dst"))
@@ -182,7 +175,7 @@ class ColoringKernelSpec extends AnyFunSuite {
 
   test("minimalColors returns a valid coloring no worse than first-fit") {
     val edges = RandomGraph.edges(spark, 300, 5, seed = 3)
-    val best = ColoringKernel.minimalColors(spark, edges, Strategy.Jp, maxAttempts = 3)
+    val best = ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
     val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
     assert(uncolored === 0 && conflicts === 0)
     assert(best.k <= 6)
@@ -191,11 +184,11 @@ class ColoringKernelSpec extends AnyFunSuite {
   test("isolated vertices get color 0 (O6 init rule)") {
     val edges = Seq((0L, 1L), (1L, 0L)).toDF("src", "dst")
     val vertices = Seq(0L, 1L, 2L, 3L).toDF("id")
-    val r = ColoringKernel.tryColor(spark, edges, 2, Strategy.Jp, Some(vertices)).get
-    val m = r.colors.as[(Long, Int)].collect().toMap
+    val r = ColoringKernel.minimalColors(spark, edges, Strategy.Jp, Some(vertices))
+    val m = try r.colors.as[(Long, Int)].collect().toMap finally r.release()
     assert(m(2) === 0 && m(3) === 0)
     assert(m(0) !== m(1))
-    r.release()
+    assert(r.k === 2)
   }
 
   test("GreedyIS admits a maximal independent set within a bucket") {
@@ -233,7 +226,7 @@ class ColoringKernelSpec extends AnyFunSuite {
       .except(edges.select($"dst".as("src"), $"src".as("dst")))
     assert(asym.isEmpty)
     val best = ColoringKernel.minimalColors(
-      spark, edges, Strategy.Jp, Some(nodes.select("id")), maxAttempts = 4)
+      spark, edges, Strategy.Jp, Some(nodes.select("id")))
     val (uncolored, conflicts) = ColoringKernel.validate(edges, best.colors)
     assert(uncolored === 0 && conflicts === 0)
     // The 10-node fixture is 3-colorable in practice (SURVEY.md §5).

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.color.{ColoringKernel, GraphXKernel}
@@ -11,21 +12,25 @@ import graft.model.RandomGraph
 class GraphXKernelSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get
 
-  /** One attempt with palette `k` on a base built from `edges`, which is
-    * freed afterwards. */
-  private def attempt[T](edges: DataFrame, k: Int)(land: DataFrame => T): Option[T] = {
+  /** `use` of the Δ+1 trace on a base built from `edges`; the trace and the
+    * base are freed afterwards. */
+  private def trace[T](edges: DataFrame)(use: ColoringKernel.Colored => T): T = {
     val base = GraphXKernel.prepare(spark, edges)
-    try GraphXKernel.tryColorOn(spark, base, _ => k)(land).map(_._1)
-    finally GraphXKernel.free(base)
+    try {
+      val r = GraphXKernel.deltaPlusOne(spark, base)
+      try use(r) finally r.release()
+    } finally GraphXKernel.free(base)
   }
 
   test("GraphX kernel produces a valid coloring (n=500, maxDeg=6)") {
     val edges = RandomGraph.edges(spark, 500, 6, seed = 21)
-    val ((uncolored, conflicts), used) = attempt(edges, 7) {
-      colors => (ColoringKernel.validate(edges, colors), ColoringKernel.usedColors(colors))
-    }.getOrElse(fail("Δ+1 must succeed"))
+    val ((uncolored, conflicts), k, used) = trace(edges) { r =>
+      (ColoringKernel.validate(edges, r.colors), r.k,
+        r.colors.select(col("color")).distinct().count())
+    }
     assert(uncolored === 0 && conflicts === 0)
-    assert(used <= 7)
+    assert(k === used)
+    assert(k <= 7)
   }
 
   test("tail-local replay is bit-identical to the distributed rounds") {
@@ -35,23 +40,14 @@ class GraphXKernelSpec extends AnyFunSuite {
     // round 1's signals) and off, and require identical (id, color) sets.
     val edges = RandomGraph.edges(spark, 2000, 6, seed = 33)
     def labels(): Seq[(Long, Int)] =
-      attempt(edges, 7) {
-        _.orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-      }.getOrElse(fail("Δ+1 must succeed"))
+      trace(edges) {
+        _.colors.orderBy("id").collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+      }
     val withTail = labels()
     spark.conf.set(graft.color.GreedyRddKernel.TailLocalSolveRowsKey, "0")
     val distributed = try labels()
     finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
     assert(withTail === distributed,
       "tail-local replay diverged from the distributed Jp rounds")
-  }
-
-  test("GraphX kernel fails cleanly when k is infeasible") {
-    import spark.implicits._
-    // K4 needs 4 colors; k=3 must return None.
-    val vs = Seq(0L, 1L, 2L, 3L)
-    val edges = (for (a <- vs; b <- vs if a != b) yield (a, b)).toDF("src", "dst")
-    assert(attempt(edges, 3)(_.count()).isEmpty)
-    assert(attempt(edges, 4)(_.count()).isDefined)
   }
 }

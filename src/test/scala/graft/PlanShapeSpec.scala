@@ -592,15 +592,15 @@ class PlanShapeSpec extends AnyFunSuite {
     (e, state)
   }
 
-  /** One Jp mask round (k = 6) over `jpInput`, and its admit. A mask round
+  /** One Jp mask round over `jpInput`, and its admit. A mask round
     * runs its admit inside the plan that lands its next state, so the admit
     * is rebuilt here, with the round's broadcast side, on the round's
     * candidates. */
   private def jpMaskRound(e: org.apache.spark.sql.DataFrame,
       state: org.apache.spark.sql.DataFrame) = {
     import graft.color.ColoringKernel
-    val round = ColoringKernel.jpRoundMask(e, state, 6, 200)
-    val cand = ColoringKernel.maskCandidates(state, 6)
+    val round = ColoringKernel.jpRoundMask(e, state, 200)
+    val cand = ColoringKernel.maskCandidates(state)
     val side = graft.ops.Broadcasts.maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
     (round, ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side))
   }
@@ -624,12 +624,12 @@ class PlanShapeSpec extends AnyFunSuite {
     val (e, state) = jpInput()
     val frames = new graft.ops.State.Round
     try {
-      // The mask round's admit (k ≤ 64) and one regather round (k > 64). A
+      // The mask round's admit (Δ < 64) and one regather round (Δ ≥ 64). A
       // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
       // (no hash buffer for a struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
         "mask" -> jpMaskRound(e, state.df)._2,
-        "regather" -> ColoringKernel.jpRound(e, state.df, 70, frames))) {
+        "regather" -> ColoringKernel.jpRound(e, state.df, frames))) {
         val p = plan(round)
         assert(p.contains("a_cand"), s"$name round: no candidate test:\n$p")
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,

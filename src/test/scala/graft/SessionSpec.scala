@@ -57,6 +57,16 @@ class SessionSpec extends AnyFunSuite {
     assert(SourceScan.callers("preparedBase") === Set.empty)
   }
 
+  test("every colouring run is one Δ+1 run: no palette attempt, no -3 sentinel") {
+    val color = "src/main/scala/graft/color"
+    assert(SourceScan.callers("-3", color) === Set.empty)
+    for (token <- Seq("tryColor", "resolveStrategy", "maxAttempts"))
+      assert(SourceScan.callers(token, color) === Set.empty, token)
+    // The greedy bucket bound is read only by the kernel it bounds.
+    assert(SourceScan.callers("\"graft.greedy.maxBucketRows\"") === Set("GreedyRddKernel.scala"))
+    assert(SourceScan.callers("MaxBucketRowsKey") === Set("GreedyRddKernel.scala"))
+  }
+
   test("a fresh session runs q_kmv_distinct (graft_kmv_kmin) with no register call") {
     val s2 = spark.newSession()
     assert(!has(s2, "graft_kmv_kmin"))

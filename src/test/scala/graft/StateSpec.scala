@@ -229,6 +229,24 @@ class StateSpec extends AnyFunSuite {
     }
   }
 
+  test("a GreedyRdd run whose edge job throws leaves nothing persisted") {
+    import org.apache.spark.sql.functions.udf
+    val boom = udf { (id: Long) =>
+      if (id >= 0) throw new IllegalStateException("boom")
+      id
+    }
+    val edges = RandomGraph.edges(spark, 300, 6, 5L)
+    val n = edges.count()
+    val before = persisted
+    // The first job over the edges is the kernel's own, after it has
+    // persisted its adjacency and round-0 state.
+    intercept[Exception] {
+      GreedyRddKernel.colorDeltaPlusOne(spark,
+        edges.select(boom(col("src")).as("src"), col("dst")), knownEdges = n)(_.count())
+    }
+    assert((persisted -- before).isEmpty, s"left persisted: ${persisted -- before}")
+  }
+
   test("q_connected_components and q_pagerank leave only their returned checkpoint persisted") {
     val s2 = spark.newSession()
     val sf = Corpus.dir("sf0.001")
