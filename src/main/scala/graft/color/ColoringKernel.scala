@@ -56,7 +56,9 @@ import graft.ops.State
   * the loop control reads. A k ≤ 64 round lands nothing else: its
   * candidates are a projection of that checkpoint and its updates are read
   * inside the plan that lands the next state. A regather round (k > 64)
-  * also lands its candidates, which sit behind an edges pass.
+  * also lands its candidates, which sit behind an edges pass. Once the
+  * uncolored set passes [[tailFits]], a k ≤ 64 run finishes in one round
+  * that replays the remaining mask rounds in one task ([[jpTail]]).
   */
 object ColoringKernel {
 
@@ -77,13 +79,35 @@ object ColoringKernel {
     def release(): Unit = state.release()
   }
 
-  /** The metric every Jp state and the GreedyRdd and GraphX landings
-    * observe: `max(color) + 1`, 0 on no rows. First-fit gives a vertex
-    * color c only when colors 0..c-1 are all taken by its neighbors, so on
-    * a complete coloring the colors used are exactly {0..max} and this is
-    * their number. */
-  private[color] val ColorsUsed = "colors_used"
-  private[color] def colorsUsed: Column = (max(col("color")) + 1).as(ColorsUsed)
+  /** The metric every Jp state and the GreedyRdd landing observe:
+    * `max(color) + 1`, 0 on no rows. First-fit gives a vertex color c only
+    * when colors 0..c-1 are all taken by its neighbors, so on a complete
+    * coloring the colors used are exactly {0..max} and this is their
+    * number. */
+  private val ColorsUsed = "colors_used"
+  private def colorsUsed: Column = (max(col("color")) + 1).as(ColorsUsed)
+
+  /** Uncolored-set size at or below which a coloring round loop finishes
+    * in one task instead of paying a scheduled round per few vertices: the
+    * Jp mask rounds replay their remaining rounds exactly ([[jpTail]]),
+    * the greedy rounds fold their tail sequentially
+    * ([[GreedyRddKernel.colorDeltaPlusOne]]). Session-configurable; 0
+    * disables the switch. The default admits tens of thousands of
+    * vertices — milliseconds of sequential CPU. */
+  val TailLocalSolveRowsKey = "graft.kernel.tailLocalSolveRows"
+  val DefaultTailLocalSolveRows: Long = 16384L
+
+  /** Hard edge-volume bound for the tail task (Σ deg over the uncolored
+    * set), so a skew hub never drags an oversized adjacency into it:
+    * ~8 MB of neighbor ids at most. */
+  val TailLocalSolveMaxEdges: Long = 1L << 20
+
+  /** The one tail rule: `uncolored` vertices whose degrees sum to
+    * `uncoloredDeg` finish in one task ([[TailLocalSolveRowsKey]],
+    * [[TailLocalSolveMaxEdges]]). */
+  private[color] def tailFits(spark: SparkSession, uncolored: Long, uncoloredDeg: Long): Boolean =
+    uncolored <= spark.conf.get(TailLocalSolveRowsKey, DefaultTailLocalSolveRows.toString).toLong &&
+      uncoloredDeg <= TailLocalSolveMaxEdges
 
   /** The Jp DataFrame rounds with the palette Δ+1, Δ the max degree
     * observed on round 0's checkpoint, so the run needs no separate degree
@@ -103,10 +127,12 @@ object ColoringKernel {
     // graft_first_fit for every corpus query.
     graft.functions.GraftFunctions.register(spark)
 
-    // Every state's checkpoint observes progress and the color count
-    // (ColorsUsed), so the loop control runs no job of its own.
+    // Every state's checkpoint observes progress, the uncolored degree
+    // sum the tail rule bounds, and the color count (ColorsUsed), so the
+    // loop control runs no job of its own.
     val progress = Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
+      sum(when(col("color") === -1, col("deg").cast("long")).otherwise(0L)).as("uncoloredDeg"),
       colorsUsed)
     // Round 0 lands once, with Δ for the palette.
     val zero = State.loop(roundZero(edges, extraVertices),
@@ -124,8 +150,10 @@ object ColoringKernel {
     // uncolored.
     val (state, rounds) = State.iterate(zero, maxRounds, progress: _*)(
         (st, _) => st("uncolored") == 0) { (st, _, round) =>
-      if (useMask) jpRoundMask(edges, st.df, st("uncolored"))
-      else jpRound(edges, st.df, round)
+      if (!useMask) jpRound(edges, st.df, round)
+      else if (tailFits(spark, st("uncolored"), st("uncoloredDeg")))
+        jpTail(edges, st.df, st("uncolored"))
+      else jpRoundMask(edges, st.df, st("uncolored"))
     }
     if (state("uncolored") > 0) {
       state.release()
@@ -272,6 +300,94 @@ object ColoringKernel {
     applyWithMask(e, state, admit(cand, beaten(e, cand, side), side), uncolored)
   }
 
+  /** The last Jp mask round (k ≤ 64, [[tailFits]]): the `uncolored`
+    * vertices ship to one task, which replays the remaining mask rounds
+    * there ([[jpLocalReplay]]), and their colors apply to the state. The
+    * task gets a row `(id, deg, used, None)` per uncolored vertex and
+    * `(src, 0, 0, Some(dst))` per edge between two of them; a round's
+    * outcome depends on nothing else, since colors are permanent and
+    * `used` already holds every colored neighbor. So the replay gives the
+    * labels the scheduled rounds would, in one round instead of one per
+    * few vertices (the sf0.1 kernel graph colors in 5 rounds, where
+    * scheduled rounds alone take 13). The edges probe
+    * one broadcast of the uncolored ids at both ends; the colors apply
+    * through a row-bound broadcast, as [[applyWithMask]]'s do. Masks are
+    * not updated: no vertex is left to read them. */
+  private[graft] def jpTail(e: DataFrame, state: DataFrame, uncolored: Long): DataFrame = {
+    val spark = state.sparkSession
+    import spark.implicits._
+    val tail = state.filter(col("color") === -1)
+    val ids = maybeBroadcast(tail.select(col("id")), uncolored)
+    val links = e
+      .join(ids.select(col("id").as("a")), col("src") === col("a"), "left_semi")
+      .join(ids.select(col("id").as("b")), col("dst") === col("b"), "left_semi")
+    val solved = tail.select(col("id"), col("deg"), col("used"), lit(null).cast("long").as("nbr"))
+      .unionByName(links.select(col("src").as("id"), lit(0).as("deg"), lit(0L).as("used"),
+        col("dst").as("nbr")))
+      .repartition(1)
+      .as[(Long, Int, Long, Option[Long])]
+      .mapPartitions(jpLocalReplay)
+      .toDF("sid", "new_color")
+    state.join(maybeBroadcast(solved, uncolored), col("id") === col("sid"), "left_outer")
+      .select(col("id"),
+        coalesce(col("new_color"), col("color")).cast("int").as("color"),
+        col("deg"), col("used"))
+  }
+
+  /** Sequential replay of the synchronous Jp mask rounds over [[jpTail]]'s
+    * rows: per round, every uncolored vertex takes the first free color of
+    * its mask, keeps it iff its (deg desc, id asc) priority beats every
+    * same-candidate uncolored neighbor (ids are unique, so there are no
+    * ties), and the kept colors OR into the neighbors' masks. Runs to the
+    * fixpoint and returns `(id, color)` of the vertices it colored; a
+    * stall (impossible with unique ids) leaves the rest uncolored, for the
+    * loop's counts to see. */
+  private def jpLocalReplay(
+      rows: Iterator[(Long, Int, Long, Option[Long])]): Iterator[(Long, Int)] = {
+    val ids = Array.newBuilder[Long]
+    val degs = Array.newBuilder[Int]
+    val masks = Array.newBuilder[Long]
+    val srcs = Array.newBuilder[Long]
+    val dsts = Array.newBuilder[Long]
+    rows.foreach {
+      case (v, d, u, None) => ids += v; degs += d; masks += u
+      case (src, _, _, Some(dst)) => srcs += src; dsts += dst
+    }
+    val id = ids.result()
+    val deg = degs.result()
+    val mask = masks.result()
+    val n = id.length
+    val idx = new java.util.HashMap[Long, Int](n * 2)
+    var i = 0
+    while (i < n) { idx.put(id(i), i); i += 1 }
+    // Neighbor indexes per vertex; every link's ends are tail vertices.
+    val adjB = Array.fill(n)(Array.newBuilder[Int])
+    val (src, dst) = (srcs.result(), dsts.result())
+    i = 0
+    while (i < src.length) { adjB(idx.get(src(i))) += idx.get(dst(i)); i += 1 }
+    val adj = adjB.map(_.result())
+    val color = Array.fill(n)(-1)
+    val cand = new Array[Int](n)
+    def beats(a: Int, b: Int): Boolean =
+      deg(a) > deg(b) || (deg(a) == deg(b) && id(a) < id(b))
+    var progress = true
+    while (progress) {
+      i = 0
+      while (i < n) {
+        if (color(i) == -1) cand(i) = java.lang.Long.numberOfTrailingZeros(~mask(i))
+        i += 1
+      }
+      val kept = (0 until n).filter(v => color(v) == -1 &&
+        !adj(v).exists(nb => color(nb) == -1 && cand(nb) == cand(v) && beats(nb, v)))
+      progress = kept.nonEmpty
+      kept.foreach { v =>
+        color(v) = cand(v)
+        adj(v).foreach(nb => if (color(nb) == -1) mask(nb) |= 1L << cand(v))
+      }
+    }
+    Iterator.range(0, n).filter(color(_) != -1).map(v => (id(v), color(v)))
+  }
+
   /** One speculative-coloring round (k > 64): every uncolored
     * vertex picks its first-fit candidate (O13), then keeps it iff no
     * adjacent vertex chose the same candidate with higher (degree, id)
@@ -318,10 +434,10 @@ object ColoringKernel {
     * fails, and writes the failed attempt's output (SURVEY.md §5 bug 1);
     * here there is no failed attempt to write.
     *
-    * For the DETERMINISTIC Jp rounds (and [[GraphXKernel.deltaPlusOne]])
-    * one trace is the proof of the kernel's minimal k: the per-round trace
-    * does not depend on the palette except by running out of it
-    * (first-fit picks the smallest free color whatever the palette;
+    * For the DETERMINISTIC Jp rounds one trace is the proof of the
+    * kernel's minimal k: the per-round trace does not depend on the
+    * palette except by running out of it (first-fit picks the smallest
+    * free color whatever the palette;
     * priority admit is palette-blind), so a k' < colors-used attempt
     * replays the identical rounds until the first round where the Δ+1
     * trace committed a color ≥ k', and fails there. Hence the Δ+1 trace's

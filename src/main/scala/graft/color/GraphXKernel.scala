@@ -10,41 +10,23 @@ import org.apache.spark.storage.StorageLevel
 
 import graft.ops.{SessionCache, State}
 
-/** The engine's GraphX executions, and the one rule that picks them: the
-  * Δ+1 color trace, connected components and PageRank run here, as
-  * message passing over a partitioned `Graph`, on graphs within [[runs]]'s
-  * crossover, and as DataFrame round loops past it. No other module
-  * names GraphX.
-  *
-  * The color trace (SURVEY.md §7 step 4: the `aggregateMessages` variant)
-  * has the same speculative first-fit + priority-admit semantics as
-  * [[ColoringKernel]]'s Jp rounds. Neighbor color gathering (the
-  * reference's broadcast probe O10/O11) becomes `aggregateMessages`, with
-  * no driver hop and no Catalyst planning per round — the trade is losing
-  * whole-stage codegen for lower per-round fixed cost.
-  *
-  * Used-color messages are a 64-bit bitmask when k = Δ+1 ≤ 64 (one `Long`
-  * OR per edge instead of a `Set[Int]` allocation + union — the palette of
-  * the corpus kernel graph is Δ+1 = 63, so the queries always take this
-  * path); the set-based path serves a graph with Δ ≥ 64.
-  *
-  * Determinism: identical priority order (degree desc, id asc) to the
-  * DataFrame kernel, so both produce the identical coloring;
-  * ColoringKernelSpec compares them on the same graphs.
+/** The engine's GraphX executions, and the one rule that picks them:
+  * connected components and PageRank run here, as message passing over a
+  * partitioned `Graph`, on graphs within [[runs]]'s crossover, and as
+  * DataFrame round loops past it. No other module names GraphX. The Δ+1
+  * color trace has one execution, [[ColoringKernel]]'s Jp rounds.
   */
 object GraphXKernel {
 
   /** The crossover between the executions here and the DataFrame round
     * loops, by edge count: a graph with at most this many edges runs here.
     * Below it GraphX wins on fixed cost per round, since its rounds plan no
-    * Catalyst query (the Δ+1 trace: 8.5 s against 24.7 s at 5.9M edges).
-    * Above it the DataFrame rounds win, because GraphX's message bytes grow
-    * with the vertex-cut replication, ~2√P in the edge partition count,
-    * while the rounds' broadcast probes stay flat (the Δ+1 trace: 41.0 s
-    * against 60.8 s at 17.6M edges, on the 30× ScaleUp leg; at the 10× leg
-    * GraphX CC took ×29 CPU for ×10 edges). Both sides give identical
-    * outputs. Session-configurable so a spec can force the DataFrame side
-    * on a small graph. */
+    * Catalyst query. Above it the DataFrame rounds win, because GraphX's
+    * message bytes grow with the vertex-cut replication, ~2√P in the edge
+    * partition count, while the rounds' broadcast probes stay flat (at the
+    * 10× ScaleUp leg GraphX CC took ×29 CPU for ×10 edges). Both sides give
+    * identical outputs. Session-configurable so a spec can force the
+    * DataFrame side on a small graph. */
   val MaxEdgesKey = "graft.kernel.graphxMaxEdges"
   val DefaultMaxEdges: Long = 10000000L
 
@@ -52,17 +34,11 @@ object GraphXKernel {
   def runs(spark: SparkSession, nEdges: Long): Boolean =
     nEdges <= spark.conf.get(MaxEdgesKey, DefaultMaxEdges.toString).toLong
 
-  /** The Δ+1 trace's round cap (SURVEY.md §7 risk 6). */
-  private val MaxRounds = 200
-
-  /** color ∈ {-1 uncolored, 0.. assigned}; deg static. */
-  private final case class V(color: Int, deg: Int)
-
   /** Session-lifetime prepared base per sfDir — the same
-    * CacheManager-substitution stance as the persisted edge DFs: the Δ+1
-    * trace, PageRank and connected components start from the identical
-    * built graph, so the DF→RDD conversion + `Graph.fromEdges` shuffle +
-    * degree join run once per session per sfDir. */
+    * CacheManager-substitution stance as the persisted edge DFs: PageRank
+    * and connected components start from the identical built graph, so
+    * the DF→RDD conversion + `Graph.fromEdges` shuffle + degree join run
+    * once per session per sfDir. */
   private val prepCache = new SessionCache[Graph[Int, Unit]]
 
   /** The session's prepared base of the corpus kernel graph at `sfDir`
@@ -104,148 +80,13 @@ object GraphXKernel {
     val base = g0.outerJoinVertices(g0.outDegrees)((_, _, d) => d.getOrElse(0))
       .cache()
     // One job materializes base's vertices and edges (the edge pass ships
-    // the vertices), before attempts start mutating views. From then on
+    // the vertices), before the consumers start deriving views. From then on
     // only base's own blocks are read, so the loaded and partitioned copies
     // the build went through are freed.
     base.edges.count()
     loaded.unpersist(blocking = false)
     g0.unpersist(blocking = false)
     base
-  }
-
-  /** The Δ+1 color trace on a prepared base: one run with the palette
-    * k = Δ+1, Δ read off the first aggregate, which cannot fail for lack of
-    * colors (a vertex has at most deg ≤ Δ used colors). Its colors land in
-    * a [[State]] that observes the colors used, as the Jp rounds do; that
-    * count is the minimal k of this deterministic kernel
-    * ([[ColoringKernel.minimalColors]] gives the proof), and the returned
-    * `k`. Every round's graph is freed, the last once the colors have
-    * landed; a run that hits [[MaxRounds]] throws. */
-  def deltaPlusOne(spark: SparkSession, base: Graph[Int, Unit]): ColoringKernel.Colored = {
-    import spark.implicits._
-
-    var graph = base.mapVertices((_, d) => V(-1, d)).cache()
-
-    // (deg desc, id asc) priority as an ordered pair; compare lexicographic.
-    def prio(id: VertexId, deg: Int): (Int, Long) = (deg, -id)
-    val ord = Ordering.Tuple2[Int, Long]
-
-    val tailRows = spark.conf
-      .get(GreedyRddKernel.TailLocalSolveRowsKey,
-        GreedyRddKernel.DefaultTailLocalSolveRows.toString).toLong
-
-    try {
-      var rounds = 0
-      // One aggregate seeds the palette and BOTH loop signals: every vertex
-      // starts uncolored, so it gives Δ, the uncolored count and the
-      // uncolored degree sum that guards the tail-local task's payload.
-      val (maxDeg, n0, deg0) = graph.vertices
-        .map { case (_, v) => (v.deg, 1L, v.deg.toLong) }
-        .fold((0, 0L, 0L))((a, b) => (math.max(a._1, b._1), a._2 + b._2, a._3 + b._3))
-      val mask = maxDeg < 64
-      var (uncolored, uncoloredDeg) = (n0, deg0)
-
-      while (uncolored > 0) {
-        rounds += 1
-        if (rounds > MaxRounds) throw new IllegalStateException(
-          s"GraphX left $uncolored vertices uncolored after $MaxRounds rounds")
-        val (next, withCand) =
-          if (mask && uncolored <= tailRows &&
-            uncoloredDeg <= GreedyRddKernel.TailLocalSolveMaxEdges) {
-            // Tail-local replay (same stance as GreedyRddKernel's tail-local
-            // solve, but STRICTER: these rounds are deterministic and the
-            // DuckDB oracle replays them, so the local fixpoint must
-            // reproduce the distributed rounds EXACTLY). It does, by
-            // construction: the synchronous Jp round is a deterministic
-            // function of (uncolored ids, degrees, used-color masks,
-            // uncolored-uncolored adjacency) — all of which ship into the
-            // one task — and colored vertices never change, so replaying
-            // candidate/admit/apply sequentially until the fixpoint yields
-            // the identical labeling the remaining scheduled rounds would.
-            // The win is the same: past this point every distributed round
-            // moved < tailRows vertices through two aggregateMessages stages
-            // of mostly scheduling latency (r7 at sf0.1: rounds 5-13, each
-            // ~0.33 s). An executor task, not a driver collect; payload
-            // bounded by the degree-sum guard.
-            val used = graph.aggregateMessages[Long](
-              t => if (t.srcAttr.color == -1 && t.dstAttr.color >= 0)
-                t.sendToSrc(1L << t.dstAttr.color),
-              _ | _)
-            val tailAdj = graph.aggregateMessages[Array[VertexId]](
-              t => if (t.srcAttr.color == -1 && t.dstAttr.color == -1)
-                t.sendToSrc(Array(t.dstId)),
-              _ ++ _)
-            val solved = graph.vertices.filter(_._2.color == -1)
-              .leftOuterJoin(used).leftOuterJoin(tailAdj)
-              .map { case (id, ((v, u), a)) =>
-                (id, v.deg, u.getOrElse(0L), a.getOrElse(Array.empty[VertexId]))
-              }
-              .coalesce(1, shuffle = true)
-              .mapPartitions(jpLocalReplay)
-            (graph.outerJoinVertices(solved) { (_, v, s) =>
-              s.map(c => V(c, v.deg)).getOrElse(v)
-            }.cache(), None)
-          } else {
-            // Pass A: gather used neighbor colors, pick first-fit candidate
-            // (O11 + O13). Bitmask fast path for Δ < 64.
-            val withCand =
-              if (mask) {
-                val used = graph.aggregateMessages[Long](
-                  t => if (t.dstAttr.color >= 0) t.sendToSrc(1L << t.dstAttr.color),
-                  _ | _)
-                graph.outerJoinVertices(used) { (_, v, usedOpt) =>
-                  val cand =
-                    if (v.color != -1) Int.MinValue // already colored: no candidate
-                    else java.lang.Long.numberOfTrailingZeros(~usedOpt.getOrElse(0L))
-                  (v, cand)
-                }
-              } else {
-                val used = graph.aggregateMessages[Set[Int]](
-                  t => if (t.dstAttr.color >= 0) t.sendToSrc(Set(t.dstAttr.color)),
-                  _ ++ _)
-                graph.outerJoinVertices(used) { (_, v, usedOpt) =>
-                  val cand =
-                    if (v.color != -1) Int.MinValue
-                    else {
-                      val u = usedOpt.getOrElse(Set.empty[Int])
-                      Iterator.from(0).find(c => !u.contains(c)).get
-                    }
-                  (v, cand)
-                }
-              }
-            withCand.cache()
-
-            // Pass B: highest rival priority among same-candidate neighbors.
-            val rival = withCand.aggregateMessages[(Int, Long)](
-              t =>
-                if (t.srcAttr._2 >= 0 && t.srcAttr._2 == t.dstAttr._2)
-                  t.sendToSrc(prio(t.dstId, t.dstAttr._1.deg)),
-              ord.max)
-            (withCand.outerJoinVertices(rival) { (id, vc, rivalOpt) =>
-              val (v, cand) = vc
-              if (v.color == -1 && rivalOpt.forall(r => ord.gt(prio(id, v.deg), r)))
-                V(cand, v.deg)
-              else v
-            }.cache(), Some(withCand))
-          }
-
-        val (nextUncolored, nextDeg) = next.vertices
-          .map { case (_, v) => if (v.color == -1) (1L, v.deg.toLong) else (0L, 0L) }
-          .fold((0L, 0L))((a, b) => (a._1 + b._1, a._2 + b._2))
-        free(graph)
-        withCand.foreach(free)
-        // GraphX checkpointing analog: lineage stays bounded because each
-        // round's vertices RDD is cached and the previous is dropped; edge
-        // RDDs are reused (same partitioning) across rounds.
-        graph = next
-        uncolored = nextUncolored
-        uncoloredDeg = nextDeg
-      }
-
-      val colors = graph.vertices.map { case (id, v) => (id, v.color) }.toDF("id", "color")
-      val st = State.loop(colors, ColoringKernel.colorsUsed)
-      ColoringKernel.Colored(st, st(ColoringKernel.ColorsUsed).toInt, rounds)
-    } finally free(graph)
   }
 
   /** The one connected-components body: GraphX `connectedComponents`
@@ -332,70 +173,5 @@ object GraphXKernel {
   private[graft] def free(g: Graph[_, _]): Unit = {
     g.vertices.unpersist(blocking = false)
     g.edges.unpersist(blocking = false)
-  }
-
-  /** Sequential replay of the synchronous Jp rounds over the collected
-    * tail: per round, every uncolored vertex takes the first-fit candidate
-    * from its used mask, admits iff its (deg desc, id asc) priority beats
-    * every same-candidate uncolored neighbor, and admitted colors OR into
-    * the neighbors' masks — bit-identical to the distributed
-    * aggregateMessages rounds (ties impossible: ids are unique). Runs until
-    * fixpoint, masks only (the caller gates on Δ < 64). */
-  private def jpLocalReplay(
-      it: Iterator[(VertexId, Int, Long, Array[VertexId])]): Iterator[(VertexId, Int)] = {
-    val nodes = it.toArray
-    val n = nodes.length
-    val idx = new java.util.HashMap[VertexId, Int](n * 2)
-    var i = 0
-    while (i < n) { idx.put(nodes(i)._1, i); i += 1 }
-    val deg = nodes.map(_._2)
-    val mask = nodes.map(_._3)
-    val adj = nodes.map(_._4)
-    val color = Array.fill(n)(-1)
-    def beats(a: Int, b: Int): Boolean = // prio(a) > prio(b), (deg, -id)
-      deg(a) > deg(b) || (deg(a) == deg(b) && nodes(a)._1 < nodes(b)._1)
-    var remaining = n
-    var progress = true
-    while (remaining > 0 && progress) {
-      val cand = new Array[Int](n)
-      i = 0
-      while (i < n) {
-        cand(i) =
-          if (color(i) != -1) Int.MinValue
-          else java.lang.Long.numberOfTrailingZeros(~mask(i))
-        i += 1
-      }
-      val admitted = scala.collection.mutable.ArrayBuffer.empty[Int]
-      i = 0
-      while (i < n) {
-        if (color(i) == -1) {
-          var ok = true
-          var j = 0
-          val a = adj(i)
-          while (ok && j < a.length) {
-            val nb = idx.get(a(j))
-            if (color(nb) == -1 && cand(nb) == cand(i) && beats(nb, i)) ok = false
-            j += 1
-          }
-          if (ok) admitted += i
-        }
-        i += 1
-      }
-      progress = admitted.nonEmpty
-      admitted.foreach { v =>
-        color(v) = cand(v)
-        remaining -= 1
-        val a = adj(v)
-        var j = 0
-        while (j < a.length) {
-          val nb = idx.get(a(j))
-          if (color(nb) == -1) mask(nb) |= 1L << cand(v)
-          j += 1
-        }
-      }
-    }
-    // Uncolored leftovers (a stall, impossible with unique ids) stay -1:
-    // the outer loop's counts see them.
-    Iterator.tabulate(n)(i => (nodes(i)._1, color(i))).filter(_._2 != -1)
   }
 }

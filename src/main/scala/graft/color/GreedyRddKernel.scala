@@ -15,10 +15,9 @@ import org.apache.spark.storage.StorageLevel
   *
   * Why an RDD formulation exists next to [[ColoringKernel]]'s DataFrame
   * rounds: an iterative kernel's per-round cost at a fixed graph size is
-  * dominated by planning + stage fixed cost, not data volume — the same
-  * reason [[GraphXKernel]] runs the deterministic Δ+1 trace below its
-  * crossover. Holding the state and adjacency as co-partitioned RDDs under
-  * ONE `HashPartitioner` makes every per-round join narrow (candidates ⋈
+  * dominated by planning + stage fixed cost, not data volume. Holding
+  * the state and adjacency as co-partitioned RDDs under ONE
+  * `HashPartitioner` makes every per-round join narrow (candidates ⋈
   * adjacency, updates ⋈ adjacency, state cogroup); the only shuffles left
   * per round are the color-bucket `aggregateByKey` (key space ≤ k) and the
   * two small delta repartitions — measured ~0.35 s/round vs ~1.5 s/round
@@ -30,8 +29,8 @@ import org.apache.spark.storage.StorageLevel
   * the map-side partial greedy prunes what reaches that single reducer,
   * but a giant component still bottlenecks on it. That is the
   * `aggregateByKey` design being replayed faithfully; the deterministic
-  * Jp rounds and GraphX trace (pure per-edge messaging, no per-bucket
-  * fold) are the 100 TB path and the one the corpus queries take.
+  * Jp rounds (pure per-edge probes, no per-bucket fold) are the 100 TB
+  * path and the one q_color_graph and q_minimal_colors take.
   *
   * Scale posture: partition count follows the same ~250k-edges/partition
   * rule as [[GraphXKernel.prepare]]; all per-vertex structures stay
@@ -47,7 +46,8 @@ import org.apache.spark.storage.StorageLevel
   * a 64-bit mask updated from each round's newly-colored delta — O(E)
   * total gather across ALL rounds, see `ColoringKernel.applyWithMask`. A
   * vertex has at most deg ≤ Δ used colors, so its first free color is
-  * always below k. [[greedyFits]] decides whether a graph runs here.
+  * always below k. [[greedyFits]] decides whether a graph runs here, and
+  * [[ColoringKernel.tailFits]] when its rounds hand the rest to one task.
   *
   * [[colorDeltaPlusOne]] hands the final colors to a caller's `land`
   * function and unpersists the last round's state once it returns, so
@@ -87,23 +87,6 @@ object GreedyRddKernel {
     val maxBucket = spark.conf.get(MaxBucketRowsKey, DefaultMaxBucketRows.toString).toLong
     k <= 64 && v / math.max(k, 1) <= maxBucket
   }
-
-  /** Uncolored-set size at or below which a kernel round loop switches to
-    * the tail-local solve (one task finishes the residual subproblem — see
-    * the loop comment here and in [[GraphXKernel.deltaPlusOne]], which shares
-    * this knob). Session-configurable; 0 disables the switch. The
-    * default admits tens of thousands of vertices — milliseconds of
-    * sequential CPU — and the switch additionally requires the tail's
-    * DEGREE SUM under [[TailLocalSolveMaxEdges]] (tracked exactly by the
-    * per-round aggregate), so a skew hub can never drag an oversized
-    * adjacency into the single task: worst-case task payload is
-    * ~maxEdges · 8 B of neighbor ids. */
-  val TailLocalSolveRowsKey = "graft.kernel.tailLocalSolveRows"
-  val DefaultTailLocalSolveRows: Long = 16384L
-
-  /** Hard edge-volume bound for the tail-local solve (Σ deg over the
-    * uncolored tail); ~8 MB of neighbor ids at the default. */
-  val TailLocalSolveMaxEdges: Long = 1L << 20
 
   /** The Δ+1 run: k = Δ+1 comes from the kernel's OWN adjacency instead
     * of a separate DataFrame degree pass, with the vertex count and max
@@ -179,9 +162,6 @@ object GreedyRddKernel {
       // decline before any round so the caller reroutes.
       if (!greedyFits(spark, v, k)) return None
 
-      val tailRows = spark.conf
-        .get(TailLocalSolveRowsKey, DefaultTailLocalSolveRows.toString).toLong
-
       var rounds = 0
       var uncolored = v
       // Σ deg over the uncolored set: initially every vertex is uncolored,
@@ -195,10 +175,10 @@ object GreedyRddKernel {
           s"GreedyRdd left $uncolored vertices uncolored after $maxRounds rounds")
         // This round's updates and next state: (updates, next).
         val (updates, next) =
-          if (uncolored <= tailRows && uncoloredDeg <= TailLocalSolveMaxEdges) {
+          if (ColoringKernel.tailFits(spark, uncolored, uncoloredDeg)) {
             // Tail-local solve: once the uncolored set fits one task,
             // finishing it with scheduled cluster rounds is pure overhead —
-            // each remaining round moves < tailRows vertices through 3
+            // each remaining round moves a tail-sized set through 3
             // shuffles (r7 at sf0.1: rounds 5-15 each carried < 10k
             // vertices for ~0.25 s of mostly stage latency). Shuffle the
             // residual subproblem — (id, deg, mask, nbrs) for every
@@ -208,8 +188,8 @@ object GreedyRddKernel {
             // declared partitioning-dependent, GreedyIS scaladoc, so
             // collapsing the tail to one partition is within the contract;
             // every output remains a valid coloring). An executor task, NOT
-            // a driver collect — memory is bounded by Σ deg(tail) ≤
-            // tailRows · Δ.
+            // a driver collect — memory is bounded by the tail rule's
+            // degree sum (ColoringKernel.TailLocalSolveMaxEdges).
             val solved: RDD[(Long, Int)] = state
               .filter(_._2.color == -1)
               .join(adj)

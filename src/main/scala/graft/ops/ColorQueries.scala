@@ -3,7 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.color.{ColoringKernel, GraphXKernel}
+import graft.color.ColoringKernel
 
 /** Driver-contract wrappers for the iterative coloring kernel
   * (q_color_graph / q_minimal_colors — SURVEY.md §2.3, no SQL oracle; the
@@ -13,29 +13,22 @@ import graft.color.{ColoringKernel, GraphXKernel}
 object ColorQueries {
 
   /** Session-lifetime cache of the Δ+1 trace per sfDir — the same
-    * materialized-view stance as [[GraphXKernel.kernelBase]] and the
-    * persisted edge DFs: the kernel is deterministic, q_color_graph and
-    * q_minimal_colors both start from the identical Δ+1 run, which
-    * [[ColoringKernel.minimalColors]] proves already witnesses minimal k,
-    * so the 13-round trace is computed once per session and both queries
-    * read the checkpointed result and its `k`, the colors used. */
+    * materialized-view stance as the persisted edge DFs: the kernel is
+    * deterministic, q_color_graph and q_minimal_colors both start from the
+    * identical Δ+1 run, which [[ColoringKernel.minimalColors]] proves
+    * already witnesses minimal k, so the trace is computed once per
+    * session and both queries read the checkpointed result and its `k`,
+    * the colors used. */
   private val deltaTraceCache = new SessionCache[ColoringKernel.Colored]
 
-  /** The Δ+1 trace on [[GraphXKernel]] below its crossover
-    * ([[GraphXKernel.runs]]), on the DataFrame Jp rounds above it; both
-    * give the identical coloring. */
+  /** The Δ+1 trace: the Jp rounds on the kernel graph. */
   private def deltaPlusOneTrace(spark: SparkSession, d: String): ColoringKernel.Colored =
-    deltaTraceCache.getOrElseUpdate(spark, d)({
-      val (edges, nEdges) = GraphOps.kernelEdgesWithCount(spark, d)
-      if (GraphXKernel.runs(spark, nEdges))
-        GraphXKernel.deltaPlusOne(spark, GraphXKernel.kernelBase(spark, d))
-      else ColoringKernel.minimalColors(spark, edges)
-    })
+    deltaTraceCache.getOrElseUpdate(spark, d)(
+      ColoringKernel.minimalColors(spark, GraphOps.kernelEdges(spark, d)))
 
   /** Full first-fit coloring of the consecutive-co-purchase graph at
     * k = Δ+1 (always feasible). Output `(id, color, n_colors)` ordered by
-    * id; deterministic (the same coloring on either side of the
-    * [[GraphXKernel.runs]] crossover). */
+    * id; deterministic (the Jp rounds' coloring under any partitioning). */
   def qColorGraph(spark: SparkSession, d: String): DataFrame = {
     val result = deltaPlusOneTrace(spark, d)
     result.colors

@@ -462,13 +462,18 @@ object GraphOps {
   private[graft] def triangleTriplesWithCount(
       spark: SparkSession, sfDir: String): (DataFrame, Long) =
     triTriplesCache.getOrElseUpdate(spark, sfDir) {
-      import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
       val (e, eCount) = edgesWithCount(spark, sfDir)
       val (_, vCount) = degreesWithCount(spark, sfDir)
-      val adj = triangleAdjacency(e, vCount).persist(MEMORY_AND_DISK)
-      // Materialized now so the adjacency build can be freed.
-      val tri = State.memo(triangleTriplesPlan(adj, vCount, eCount / 2 * 8L))
-      adj.unpersist(blocking = false)
+      // The triple plan reads the adjacency twice (the exploded side and
+      // the probed side): landed once, and freed once the triples land.
+      // The landing keeps one partition per 64 Ki rows, but a row carries
+      // a neighbor array, so the plan reads it through one hash shuffle on
+      // `u` that adaptive execution sizes by bytes and both reads reuse:
+      // the intersect keeps its width (one task at sf0.1 otherwise).
+      val adj = State.memo(triangleAdjacency(e, vCount))
+      val tri = try State.memo(triangleTriplesPlan(
+        adj.df.repartition(col("u")), vCount, eCount / 2 * 8L))
+      finally adj.release()
       (tri.df, tri.rows)
     }
 

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions.{col, max, size}
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.GraphXKernel
 import graft.model.GraphIO
 
 /** Drives the CLI surface (O26 — same flag names as the reference's
@@ -121,12 +120,6 @@ class CliSpec extends AnyFunSuite {
     assert(nodes.count() === 30)
     val s2 = Coloring.run(spark, Map("input" -> g))
     assert(s2.k === s.k && s2.uncolored === 0 && s2.conflicts === 0)
-    // The GraphX trace on the same graph observes the same k.
-    val base = GraphXKernel.prepare(spark, GraphIO.edges(nodes))
-    try {
-      val r = GraphXKernel.deltaPlusOne(spark, base)
-      try assert(r.k === s.k) finally r.release()
-    } finally GraphXKernel.free(base)
     // GraphX is not a CLI strategy.
     intercept[IllegalArgumentException](
       Coloring.run(spark, Map("input" -> g, "strategy" -> "graphx")))

@@ -4,7 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.color.{CandNode, ColoringKernel, GraphXKernel, GreedyIS, GreedyRddKernel}
+import graft.color.{CandNode, ColoringKernel, GreedyIS, GreedyRddKernel}
 import graft.color.ColoringKernel.Strategy
 import graft.model.{GraphIO, RandomGraph}
 
@@ -62,9 +62,9 @@ class ColoringKernelSpec extends AnyFunSuite {
     // Every small-graph case above now finishes in the tail-local task
     // (V ≤ the 16384 default), so this case pins the distributed round loop
     // itself: disable the switch and re-check the invariants end-to-end.
-    spark.conf.set(graft.color.GreedyRddKernel.TailLocalSolveRowsKey, "0")
+    spark.conf.set(ColoringKernel.TailLocalSolveRowsKey, "0")
     try check(RandomGraph.edges(spark, 2000L, 5, seed = 42), 5, Strategy.GreedyRdd)
-    finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
+    finally spark.conf.unset(ColoringKernel.TailLocalSolveRowsKey)
   }
 
   test("greedy requests auto-route to Jp past the per-bucket scale bound") {
@@ -108,34 +108,85 @@ class ColoringKernelSpec extends AnyFunSuite {
     assert(run(2) === run(11))
   }
 
-  /** [[GraphXKernel]]'s Δ+1 trace on a base built from `edges`, which is
-    * freed once `use` returns. */
-  private def graphxTrace[T](edges: DataFrame)(use: ColoringKernel.Colored => T): T = {
-    val base = GraphXKernel.prepare(spark, edges)
-    try {
-      val r = GraphXKernel.deltaPlusOne(spark, base)
-      try use(r) finally r.release()
-    } finally GraphXKernel.free(base)
+  /** A sequential replay of the synchronous Jp rounds over neighbor color
+    * sets, independent of the kernel's masks, broadcasts and tail task and
+    * valid at any Δ: per round every uncolored vertex takes its first free
+    * color and keeps it iff no uncolored neighbor with the same candidate
+    * has a higher (degree, id asc) priority. Degree counts edge rows, as
+    * the kernel's round 0 does. */
+  private def jpReplay(edges: DataFrame): Map[Long, Int] = {
+    val rows = edges.as[(Long, Long)].collect()
+    val deg = rows.groupMapReduce(_._1)(_ => 1)(_ + _)
+    val nbrs = rows.groupMap(_._1)(_._2).view.mapValues(_.distinct).toMap
+    def beats(a: Long, b: Long) = deg(a) > deg(b) || (deg(a) == deg(b) && a < b)
+    var color = Map.empty[Long, Int]
+    var uncolored = deg.keySet
+    while (uncolored.nonEmpty) {
+      val cand = uncolored.iterator.map { v =>
+        val used = nbrs(v).flatMap(color.get).toSet
+        v -> Iterator.from(0).find(c => !used.contains(c)).get
+      }.toMap
+      val kept = cand.filter { case (v, c) =>
+        !nbrs(v).exists(u => cand.get(u).contains(c) && beats(u, v))
+      }
+      assert(kept.nonEmpty, "the replay stalled")
+      color ++= kept
+      uncolored --= kept.keys
+    }
+    color
   }
 
-  test("Jp mask rounds, Jp regather rounds and GraphX give the same coloring") {
-    // All three run the same first-fit + (degree, id) priority admit, so
-    // the labels and k must match exactly. The tail-local solve is off so
-    // GraphX runs its real rounds. Δ ≥ 64 on the last graph puts Jp on the
-    // collect_set regather and GraphX on its set messages; the others run
-    // both on masks.
-    spark.conf.set(graft.color.GreedyRddKernel.TailLocalSolveRowsKey, "0")
-    try for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L), (300L, 80, 7L))) {
+  /** The Jp labels and k on `edges`, with the tail-local round's row bound
+    * at `tailRows` (None: the default). */
+  private def jpLabels(edges: DataFrame, tailRows: Option[String] = None)
+      : (Map[Long, Int], Int, Int) = {
+    tailRows.foreach(spark.conf.set(ColoringKernel.TailLocalSolveRowsKey, _))
+    try {
+      val r = ColoringKernel.minimalColors(spark, edges)
+      try (r.colors.as[(Long, Int)].collect().toMap, r.k, r.rounds) finally r.release()
+    } finally spark.conf.unset(ColoringKernel.TailLocalSolveRowsKey)
+  }
+
+  test("Jp mask, regather and tail rounds give a sequential Jp replay's coloring") {
+    // Δ ≥ 64 on the last graph puts Jp on the collect_set regather; the
+    // others ride the mask, once with every round scheduled (tail off) and
+    // once at the default bound, where these graphs finish in one tail task.
+    for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L), (300L, 80, 7L))) {
       val edges = RandomGraph.edges(spark, n, d, seed)
-      val best = ColoringKernel.minimalColors(spark, edges)
-      val (jp, jpK) =
-        try (best.colors.as[(Long, Int)].collect().toSet, best.k) finally best.release()
-      assert(jp.size === edges.select("src").distinct().count())
-      graphxTrace(edges) { r =>
-        assert(r.colors.as[(Long, Int)].collect().toSet === jp, s"n=$n: GraphX differs")
-        assert(r.k === jpK, s"n=$n: GraphX observed another color count")
+      val expected = jpReplay(edges)
+      for (tail <- Seq(Some("0"), None)) {
+        val (labels, k, _) = jpLabels(edges, tail)
+        assert(labels === expected, s"n=$n tail=$tail: labels differ")
+        assert(k === expected.values.max + 1, s"n=$n tail=$tail")
       }
-    } finally spark.conf.unset(graft.color.GreedyRddKernel.TailLocalSolveRowsKey)
+    }
+  }
+
+  test("Jp tail-local round produces a valid coloring (n=500, maxDeg=6)") {
+    // The whole graph fits the default tail bound: round 1 is the tail.
+    val edges = RandomGraph.edges(spark, 500, 6, seed = 21)
+    val r = ColoringKernel.minimalColors(spark, edges)
+    try {
+      assert(r.rounds === 1)
+      assert(ColoringKernel.validate(edges, r.colors) === ((0L, 0L)))
+      assert(r.k === usedColors(r.colors))
+      assert(r.k <= 7)
+    } finally r.release()
+  }
+
+  test("Jp tail-local replay is bit-identical to the distributed mask rounds") {
+    // The Jp rounds are deterministic and oracle-replayed, so the tail task
+    // may not change a single label: from round 1 (the default bound), from
+    // a state with masks already set (a bound the first rounds pass), and
+    // never (0).
+    val edges = RandomGraph.edges(spark, 2000, 6, seed = 33)
+    val (whole, k1, r1) = jpLabels(edges)
+    val (late, k2, r2) = jpLabels(edges, Some("500"))
+    val (distributed, k3, r3) = jpLabels(edges, Some("0"))
+    assert(whole === distributed && late === distributed,
+      "tail-local replay diverged from the distributed Jp rounds")
+    assert(k1 === k3 && k2 === k3)
+    assert(r1 === 1 && r1 < r2 && r2 < r3, s"rounds $r1, $r2, $r3")
   }
 
   test("an edge-free input colors every vertex 0 with k = 1 on every strategy") {
@@ -148,11 +199,6 @@ class ColoringKernelSpec extends AnyFunSuite {
         assert(best.colors.as[(Long, Int)].collect().toSet ===
           (0L until 10L).map(_ -> 0).toSet, s"$strategy")
       } finally best.release()
-    }
-    // GraphX builds its graph from the edges alone: nothing to color.
-    graphxTrace(edges) { r =>
-      assert(r.k === 0 && r.rounds === 0)
-      assert(r.colors.count() === 0L)
     }
   }
 

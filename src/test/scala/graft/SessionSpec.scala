@@ -57,6 +57,18 @@ class SessionSpec extends AnyFunSuite {
     assert(SourceScan.callers("preparedBase") === Set.empty)
   }
 
+  test("the Δ+1 colour trace has one execution, and the tail rule one conf read") {
+    // GraphX holds no colouring code, and the colouring queries run the Jp
+    // rounds without naming it.
+    for (token <- Seq("deltaPlusOne", "jpLocalReplay"))
+      assert(!SourceScan.callers(token).contains("GraphXKernel.scala"), token)
+    assert(!SourceScan.callers("GraphXKernel").contains("ColorQueries.scala"))
+    // The key's definition and its one read, in ColoringKernel.tailFits.
+    assert(SourceScan.callers("\"graft.kernel.tailLocalSolveRows\"") === Set("ColoringKernel.scala"))
+    assert(SourceScan.counts("TailLocalSolveRowsKey") === Map("ColoringKernel.scala" -> 2))
+    assert(SourceScan.counts("conf.get(TailLocalSolveRowsKey") === Map("ColoringKernel.scala" -> 1))
+  }
+
   test("every colouring run is one Δ+1 run: no palette attempt, no -3 sentinel") {
     val color = "src/main/scala/graft/color"
     assert(SourceScan.callers("-3", color) === Set.empty)

@@ -176,10 +176,9 @@ class StateSpec extends AnyFunSuite {
     // GraphOps: the triangle support memo, the initial states of the
     // k-core, label-prop, CC and rank loops, and the loops that keep their
     // own states (truss 4, BFS 2, random walk 2, HITS 4). ColoringKernel:
-    // the greedy kernel's final land and Jp's round 0. GraphXKernel: the
-    // Δ+1 trace's final land.
+    // the greedy kernel's final land and Jp's round 0.
     assert(SourceScan.counts("State.loop(") ===
-      Map("GraphOps.scala" -> 17, "ColoringKernel.scala" -> 2, "GraphXKernel.scala" -> 1))
+      Map("GraphOps.scala" -> 17, "ColoringKernel.scala" -> 2))
   }
 
   test("localCheckpoint is called in src/main only by State and its two named exceptions") {
@@ -189,44 +188,44 @@ class StateSpec extends AnyFunSuite {
   }
 
   test("persist and cache are called in src/main only by the named RDD and graph sites") {
-    // GraphOps: the triangle adjacency; Similarity's one persisted frame;
-    // the GraphX and GreedyRdd kernels' graphs and RDD rounds.
-    val expected = Set("GraphOps.scala", "Similarity.scala", "GraphXKernel.scala",
-      "GreedyRddKernel.scala")
+    // Similarity's one persisted frame; the GraphX and GreedyRdd kernels'
+    // graphs and RDD rounds.
+    val expected = Set("Similarity.scala", "GraphXKernel.scala", "GreedyRddKernel.scala")
     assert(SourceScan.callers(".persist(") ++ SourceScan.callers(".cache()") === expected)
   }
 
-  /** Runs `color` on a 300-vertex graph with the tail-local solve off and
-    * checks that only the returned colors' own checkpoint is left persisted
-    * until they are released. */
-  private def freesEveryRound(color: DataFrame => ColoringKernel.Colored): Unit = {
+  /** Runs `color` on a 300-vertex graph with the tail-local row bound at
+    * `tailRows` and checks that only the returned colors' own checkpoint is
+    * left persisted until they are released; returns the rounds run. */
+  private def freesEveryRound(tailRows: String)(
+      color: DataFrame => ColoringKernel.Colored): Int = {
     val edges = RandomGraph.edges(spark, 300, 6, 5L)
     val before = persisted
-    // The RDD and GraphX kernels would finish a graph this small in one
-    // tail-local round; switch that off so every round is a real one.
-    spark.conf.set(GreedyRddKernel.TailLocalSolveRowsKey, "0")
+    spark.conf.set(ColoringKernel.TailLocalSolveRowsKey, tailRows)
     val r = try color(edges)
-    finally spark.conf.unset(GreedyRddKernel.TailLocalSolveRowsKey)
+    finally spark.conf.unset(ColoringKernel.TailLocalSolveRowsKey)
     assert(r.rounds > 1)
     val left = persisted -- before
     assert(left.size <= 1, s"rounds left persisted RDDs: $left")
     assert(ColoringKernel.validate(edges, r.colors) === ((0L, 0L)))
     r.release()
     assert((persisted -- before).isEmpty)
+    r.rounds
   }
 
   for (strat <- Seq(Strategy.Jp, Strategy.GreedyRdd)) {
     test(s"a $strat minimalColors run frees every round's storage") {
-      freesEveryRound(ColoringKernel.minimalColors(spark, _, strat))
+      // The kernels would finish a graph this small in one tail-local
+      // round; switch that off so every round is a scheduled one.
+      freesEveryRound("0")(ColoringKernel.minimalColors(spark, _, strat))
     }
   }
 
-  test("a GraphX minimalColors run frees every round's storage") {
-    // The Δ+1 trace on a base of its own, freed before the check.
-    freesEveryRound { edges =>
-      val base = GraphXKernel.prepare(spark, edges)
-      try GraphXKernel.deltaPlusOne(spark, base) finally GraphXKernel.free(base)
-    }
+  test("a Jp minimalColors run with the tail-local round frees every round's storage") {
+    // A bound under the vertex count: mask rounds first, then the tail,
+    // which ends the run in fewer rounds than the scheduled rounds take.
+    val jp = ColoringKernel.minimalColors(spark, _: DataFrame, Strategy.Jp)
+    assert(freesEveryRound("150")(jp) < freesEveryRound("0")(jp))
   }
 
   test("a GreedyRdd run whose edge job throws leaves nothing persisted") {
@@ -271,6 +270,9 @@ class StateSpec extends AnyFunSuite {
     val edges = RandomGraph.edges(spark, 300, 6, 5L).localCheckpoint()
     val caller = persisted -- base
     assert(caller.size === 1)
+    // A tail bound under the vertex count: mask rounds and the tail round
+    // both read the caller's edges.
+    spark.conf.set(ColoringKernel.TailLocalSolveRowsKey, "150")
     try {
       val r = ColoringKernel.minimalColors(spark, edges, Strategy.Jp)
       assert(r.rounds > 1)
@@ -278,7 +280,10 @@ class StateSpec extends AnyFunSuite {
       assert((persisted -- base -- caller).size <= 1)
       r.release()
       assert(persisted -- base === caller, "the caller's checkpoint must stay persisted")
-    } finally caller.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+    } finally {
+      spark.conf.unset(ColoringKernel.TailLocalSolveRowsKey)
+      caller.foreach(id => spark.sparkContext.getPersistentRDDs(id).unpersist())
+    }
   }
 }
 
