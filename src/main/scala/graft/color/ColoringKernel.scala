@@ -15,13 +15,10 @@ import graft.ops.State
   *
   * Per round:
   *   1. first-fit candidate per uncolored vertex (O13,
-  *      `coloring_optimized.py:150-166`). For k ≤ 64 it falls out of the
-  *      64-bit used-color mask the state carries, map-side; past 64 the
-  *      used neighbor colors are regathered — `edges ⋈ colors` +
-  *      `collect_set` (the reference's broadcast color probe O10/O11, kept
-  *      fully distributed: no `collectAsMap` on the driver, SURVEY.md §7
-  *      risk 5) — into the codegen expression `graft_first_fit(used, k)`
-  *      ([[graft.functions.FirstFitColor]]);
+  *      `coloring_optimized.py:150-166`): the lowest clear bit of the
+  *      used-color mask the state carries, map-side. The mask is ⌊c/64⌋ + 1
+  *      long words (`used`, `used1`, …) for the c colors used so far: a
+  *      first-fit candidate is at most c, so its bit is always in range;
   *   2. same-color conflict resolution between adjacent candidates
   *      (O15-O17): of two same-candidate neighbors the one with lower
   *      (degree, id) priority is beaten, settled once per undirected edge
@@ -29,12 +26,12 @@ import graft.ops.State
   *      every vertex not among the beaten ids (one hash distinct) keeps its
   *      candidate;
   *   3. apply the admitted colors — left join + `coalesce`
-  *      (O20, `coloring.py:121-127`), and for k ≤ 64 OR each new color
-  *      into the neighbors' masks; the color changes and mask gains merge
-  *      in one union-aggregate first.
+  *      (O20, `coloring.py:121-127`) — and OR each new color into its word
+  *      of the neighbors' masks; the color changes and mask gains merge in
+  *      one union-aggregate first.
   *
   * Round 0 builds the state from one union-aggregate — the edges' degree
-  * counts plus the extra vertices — and observes Δ on its checkpoint.
+  * counts plus the extra vertices — with a one-word mask.
   *
   * Strategies:
   *   - [[Strategy.Jp]] (default, the DataFrame rounds here):
@@ -44,21 +41,19 @@ import graft.ops.State
   *     partitioning**, guaranteed progress (every conflict component admits
   *     its max-priority node), and the natural 100 TB formulation: the
   *     edge stream is only probed against broadcast candidate and delta
-  *     tables, never shuffled; a k ≤ 64 round shuffles only the beaten
-  *     ids and the per-vertex changes, and no per-node adjacency arrays
-  *     move.
+  *     tables, never shuffled; a round shuffles only the beaten ids and the
+  *     per-vertex changes, and no per-node adjacency arrays move.
   *   - [[Strategy.GreedyRdd]] runs [[GreedyRddKernel.colorDeltaPlusOne]].
   *
   * The Jp rounds run on [[State.iterate]], the engine's one round loop —
   * the `Pregel` stance (SURVEY.md §4): only counts cross to the driver.
   * Every round's state lands as a [[State]] (SURVEY.md §7 risk 4): the
   * checkpoint truncates lineage, and its own action observes the counts
-  * the loop control reads. A k ≤ 64 round lands nothing else: its
-  * candidates are a projection of that checkpoint and its updates are read
-  * inside the plan that lands the next state. A regather round (k > 64)
-  * also lands its candidates, which sit behind an edges pass. Once the
-  * uncolored set passes [[tailFits]], a k ≤ 64 run finishes in one round
-  * that replays the remaining mask rounds in one task ([[jpTail]]).
+  * the loop control reads. A round lands nothing else: its candidates are
+  * a projection of that checkpoint and its updates are read inside the
+  * plan that lands the next state. Once the uncolored set passes
+  * [[tailFits]], the run finishes in one round that replays the remaining
+  * rounds in one task ([[jpTail]]).
   */
 object ColoringKernel {
 
@@ -89,7 +84,7 @@ object ColoringKernel {
 
   /** Uncolored-set size at or below which a coloring round loop finishes
     * in one task instead of paying a scheduled round per few vertices: the
-    * Jp mask rounds replay their remaining rounds exactly ([[jpTail]]),
+    * Jp rounds replay their remaining rounds exactly ([[jpTail]]),
     * the greedy rounds fold their tail sequentially
     * ([[GreedyRddKernel.colorDeltaPlusOne]]). Session-configurable; 0
     * disables the switch. The default admits tens of thousands of
@@ -109,9 +104,9 @@ object ColoringKernel {
     uncolored <= spark.conf.get(TailLocalSolveRowsKey, DefaultTailLocalSolveRows.toString).toLong &&
       uncoloredDeg <= TailLocalSolveMaxEdges
 
-  /** The Jp DataFrame rounds with the palette Δ+1, Δ the max degree
-    * observed on round 0's checkpoint, so the run needs no separate degree
-    * job. The returned `k` is the colors used.
+  /** The Jp DataFrame rounds. No vertex runs out of colors (one with deg
+    * neighbors finds a free color among 0..deg), so the palette is Δ+1
+    * without reading Δ; the returned `k` is the colors used.
     *
     * Jp re-reads `edges` as given, twice a round, and keeps no copy: pass a
     * materialized edge list (a [[State.memo]] frame or a local checkpoint,
@@ -123,37 +118,24 @@ object ColoringKernel {
       edges: DataFrame,
       extraVertices: Option[DataFrame],
       maxRounds: Int = 200): Colored = {
-    // The caller's edges need not come through Tables, which registers
-    // graft_first_fit for every corpus query.
-    graft.functions.GraftFunctions.register(spark)
-
     // Every state's checkpoint observes progress, the uncolored degree
-    // sum the tail rule bounds, and the color count (ColorsUsed), so the
-    // loop control runs no job of its own.
+    // sum the tail rule bounds, and the color count (ColorsUsed), which
+    // sizes the next round's mask, so the loop control runs no job of its
+    // own.
     val progress = Seq(
       sum(when(col("color") === -1, 1L).otherwise(0L)).as("uncolored"),
       sum(when(col("color") === -1, col("deg").cast("long")).otherwise(0L)).as("uncoloredDeg"),
       colorsUsed)
-    // Round 0 lands once, with Δ for the palette.
-    val zero = State.loop(roundZero(edges, extraVertices),
-      progress :+ max(col("deg")).as("maxDeg"): _*)
-    val k = zero("maxDeg").toInt + 1
-
-    // k ≤ 64 ⇒ the per-vertex used-color set rides the state as a 64-bit
-    // mask, updated incrementally from each round's newly-colored delta
-    // (see applyWithMask); larger palettes fall back to the per-round
-    // full regather with collect_set arrays.
-    val useMask = k <= 64
+    val zero = State.loop(roundZero(edges, extraVertices), progress: _*)
 
     // Jp colors the top-priority vertex of every uncolored component each
     // round, so only the round cap (SURVEY.md §7 risk 6) leaves vertices
     // uncolored.
     val (state, rounds) = State.iterate(zero, maxRounds, progress: _*)(
-        (st, _) => st("uncolored") == 0) { (st, _, round) =>
-      if (!useMask) jpRound(edges, st.df, round)
-      else if (tailFits(spark, st("uncolored"), st("uncoloredDeg")))
+        (st, _) => st("uncolored") == 0) { (st, _, _) =>
+      if (tailFits(spark, st("uncolored"), st("uncoloredDeg")))
         jpTail(edges, st.df, st("uncolored"))
-      else jpRoundMask(edges, st.df, st("uncolored"))
+      else jpRoundMask(edges, st.df, st("uncolored"), st(ColorsUsed))
     }
     if (state("uncolored") > 0) {
       state.release()
@@ -229,90 +211,133 @@ object ColoringKernel {
     cand.join(side(beaten), col("id") === col("a_id"), "left_anti")
       .select(col("id").as("uid"), col("cand").as("new_color"))
 
-  /** First-fit over a 64-bit used-color mask, entirely from codegen'd
-    * builtins: lowbit(~m) isolates the smallest free color and
-    * `bit_count(lowbit−1)` is its index. A vertex has at most deg ≤ Δ ≤ 63
-    * used colors, so a free bit below Δ+1 always exists. No join, no array
-    * allocation — the whole candidate step is map-side. */
+  /** Mask word `i` of the state: bit b is color 64·i + b. */
+  private def word(i: Int): String = if (i == 0) "used" else s"used$i"
+
+  /** The number of mask words `state` carries. */
+  private def maskWidth(state: DataFrame): Int = state.columns.count(_.startsWith("used"))
+
+  /** First free color of one 64-bit mask word, from codegen'd builtins
+    * alone: `used & ~(used + 1)` keeps the trailing ones, and their count
+    * is the lowest clear bit (64 on a full word). The one add overflows
+    * only at `Long.MaxValue`, where it wraps to `Long.MinValue`, so ANSI
+    * arithmetic never throws. No join, no array allocation — the whole
+    * candidate step is map-side. */
   private def maskFirstFit(used: Column): Column = {
-    val free = bitwise_not(used)
-    bit_count(free.bitwiseAND(-free) - 1).cast("int")
+    val next = coalesce(try_add(used, lit(1L)), lit(Long.MinValue))
+    bit_count(used.bitwiseAND(bitwise_not(next))).cast("int")
   }
 
-  /** Apply a round's updates and push each newly admitted color into the
-    * adjacent used masks — the incremental (delta) formulation of the
-    * per-round neighbor-color gather: an edge contributes to its src's mask
-    * exactly once over the whole run (the round its dst is colored), so
-    * total gather work is O(E) summed over ALL rounds. The full regather it
-    * replaces joined every edge against the entire colored state every
-    * round — measured flat ~1 s/round at sf0.1 even with 3 uncolored
-    * vertices left. `updates` is (uid, new_color). */
+  /** `state` with its mask widened, by zero words, to the ⌊c/64⌋ + 1 words
+    * that `colorsUsed` = c colors need: a first-fit candidate is at most
+    * c, the largest color used plus one. */
+  private def widen(state: DataFrame, colorsUsed: Long): DataFrame = {
+    val (have, need) = (maskWidth(state), (colorsUsed / 64).toInt + 1)
+    if (have >= need) state
+    else state.select(state.columns.toSeq.map(col) ++ (have until need).map(i => lit(0L).as(word(i))): _*)
+  }
+
+  /** Apply a round's updates and push each newly admitted color into its
+    * word of the adjacent used masks — the incremental (delta) formulation
+    * of the per-round neighbor-color gather: an edge contributes to its
+    * src's mask exactly once over the whole run (the round its dst is
+    * colored), so total gather work is O(E) summed over ALL rounds. The
+    * full regather it replaces joined every edge against the entire
+    * colored state every round — measured flat ~1 s/round at sf0.1 even
+    * with 3 uncolored vertices left. `updates` is (uid, new_color), each
+    * color within `state`'s mask words. */
   private def applyWithMask(e: DataFrame, state: DataFrame, updates: DataFrame,
       updBound: Long): DataFrame = {
+    val width = maskWidth(state)
     val delta = updates.filter(col("new_color") >= 0)
       .select(col("uid").as("nid"), col("new_color").as("ncolor"))
+    // Word i's gain from a new neighbor color: its bit, or null when the
+    // color sits in another word (bit_or skips nulls).
+    def gain(i: Int): Column = {
+      val bit = call_function("shiftleft", lit(1L),
+        if (i == 0) col("ncolor") else col("ncolor") - 64 * i)
+      (if (width == 1) bit else when(shiftright(col("ncolor"), 6) === i, bit)).as(s"g$i")
+    }
     // Row-bound broadcast (the exact uncolored count): AQE's byte
     // threshold flips this probe to an E-shuffling SMJ right around the
     // 10× leg's state size (measured: the minimal-colors run's shuffle
     // grew ×42 for ×10 edges); the explicit hint keeps every round's edge
     // probe map-side until the row policy says stop.
     val gains = e.join(maybeBroadcast(delta, updBound), col("dst") === col("nid"))
-      .select(col("src").as("cid"), lit(null).cast("int").as("new_color"),
-        call_function("shiftleft", lit(1L), col("ncolor")).as("g"))
+      .select(col("src").as("cid") +: lit(null).cast("int").as("new_color") +:
+        (0 until width).map(gain): _*)
     // Color changes and mask gains are both tiny relative to the state —
     // merge them first, in one union-aggregate (one exchange, combined
     // map-side), so the V-sized state meets ONE probe per round. `max`
     // skips the gain rows' nulls.
-    val chg = updates.select(col("uid").as("cid"), col("new_color"), lit(0L).as("g"))
+    val chg = updates.select(col("uid").as("cid") +: col("new_color") +:
+        (0 until width).map(i => lit(0L).as(s"g$i")): _*)
       .unionByName(gains)
       .groupBy(col("cid"))
-      .agg(max(col("new_color")).as("new_color"), bit_or(col("g")).as("gained"))
+      .agg(max(col("new_color")).as("new_color"),
+        (0 until width).map(i => bit_or(col(s"g$i")).as(s"gained$i")): _*)
     state.join(maybeBroadcast(chg, 2L * updBound), col("id") === col("cid"), "left_outer")
-      .select(col("id"),
-        coalesce(col("new_color"), col("color")).cast("int").as("color"),
-        col("deg"),
-        col("used").bitwiseOR(coalesce(col("gained"), lit(0L))).as("used"))
+      .select(col("id") +:
+        coalesce(col("new_color"), col("color")).cast("int").as("color") +:
+        col("deg") +:
+        (0 until width).map(i =>
+          col(word(i)).bitwiseOR(coalesce(col(s"gained$i"), lit(0L))).as(word(i))): _*)
   }
 
-  /** The mask round's candidates `(id, deg, cand)`: a narrow projection of
-    * the state checkpoint, so a round re-reads them without landing them. */
-  private[graft] def maskCandidates(state: DataFrame): DataFrame =
-    state.filter(col("color") === -1)
-      .select(col("id"), col("deg"), maskFirstFit(col("used")).as("cand"))
+  /** A round's candidates `(id, deg, cand)`: the first clear bit of the
+    * first mask word that is not full, a narrow projection of the state
+    * checkpoint, so a round re-reads them without landing them. */
+  private[graft] def maskCandidates(state: DataFrame): DataFrame = {
+    def at(i: Int): Column = {
+      val ff = maskFirstFit(col(word(i)))
+      if (i == 0) ff else ff + 64 * i
+    }
+    val last = maskWidth(state) - 1
+    val cand = (0 until last).foldRight(at(last)) { (i, later) =>
+      when(col(word(i)) =!= -1L, at(i)).otherwise(later)
+    }
+    state.filter(col("color") === -1).select(col("id"), col("deg"), cand.as("cand"))
+  }
 
-  /** Mask-state speculative round (k ≤ 64): candidates fall out of the
-    * carried mask map-side ([[maskCandidates]]); only the rival check
-    * still touches the edge list, and the used-mask update is
-    * delta-driven ([[applyWithMask]]). The round lands nothing but its
-    * next state: the updates are read twice inside that one plan, where
-    * adaptive execution reuses the beaten-id shuffle and broadcast.
-    * Semantics identical to [[jpRound]] — colors are permanent, so the
-    * incrementally-grown mask always equals the regathered set. */
+  /** One speculative round: candidates fall out of the carried mask
+    * map-side ([[maskCandidates]]) after the mask widens to what
+    * `colorsUsed` needs ([[widen]]); only the rival check touches the edge
+    * list, and the used-mask update is delta-driven ([[applyWithMask]]).
+    * The round lands nothing but its next state: the updates are read
+    * twice inside that one plan, where adaptive execution reuses the
+    * beaten-id shuffle and broadcast. Colors are permanent, so the
+    * incrementally grown mask always equals the neighbors' colors.
+    * Correctness: same-candidate adjacent vertices are totally ordered and
+    * only the maximum keeps the color, so no conflict commits; every
+    * conflict component commits its top vertex, so every round progresses
+    * (measured 13 rounds on the sf0.1 kernel graph vs 78+ for classic
+    * local-maximum Jones–Plassmann, which serializes on priority chains). */
   private[graft] def jpRoundMask(e: DataFrame, state: DataFrame,
-      uncolored: Long): DataFrame = {
+      uncolored: Long, colorsUsed: Long): DataFrame = {
     // The candidate frame carries exactly `uncolored` rows, and the beaten
     // ids are a subset of it — row-bound broadcast hints keep the rival
     // probe exchange-free on the E side past AQE's byte threshold (see
     // applyWithMask's note; same ×42 shuffle signal) and the admit's
     // candidate side unshuffled.
     val side = maybeBroadcast(_: DataFrame, uncolored)
-    val cand = maskCandidates(state)
-    applyWithMask(e, state, admit(cand, beaten(e, cand, side), side), uncolored)
+    val wide = widen(state, colorsUsed)
+    val cand = maskCandidates(wide)
+    applyWithMask(e, wide, admit(cand, beaten(e, cand, side), side), uncolored)
   }
 
-  /** The last Jp mask round (k ≤ 64, [[tailFits]]): the `uncolored`
-    * vertices ship to one task, which replays the remaining mask rounds
-    * there ([[jpLocalReplay]]), and their colors apply to the state. The
-    * task gets a row `(id, deg, used, None)` per uncolored vertex and
-    * `(src, 0, 0, Some(dst))` per edge between two of them; a round's
-    * outcome depends on nothing else, since colors are permanent and
-    * `used` already holds every colored neighbor. So the replay gives the
-    * labels the scheduled rounds would, in one round instead of one per
-    * few vertices (the sf0.1 kernel graph colors in 5 rounds, where
-    * scheduled rounds alone take 13). The edges probe
-    * one broadcast of the uncolored ids at both ends; the colors apply
-    * through a row-bound broadcast, as [[applyWithMask]]'s do. Masks are
-    * not updated: no vertex is left to read them. */
+  /** The last Jp round ([[tailFits]]): the `uncolored` vertices ship to
+    * one task, which replays the remaining rounds there
+    * ([[jpLocalReplay]]), and their colors apply to the state. The task
+    * gets a row `(id, deg, words, None)` per uncolored vertex and
+    * `(src, 0, null, Some(dst))` per edge between two of them; a round's
+    * outcome depends on nothing else, since colors are permanent and the
+    * mask words already hold every colored neighbor. So the replay gives
+    * the labels the scheduled rounds would, in one round instead of one
+    * per few vertices (the sf0.1 kernel graph colors in 5 rounds, where
+    * scheduled rounds alone take 13). The edges probe one broadcast of
+    * the uncolored ids at both ends; the colors apply through a row-bound
+    * broadcast, as [[applyWithMask]]'s do. Masks are not updated: no
+    * vertex is left to read them. */
   private[graft] def jpTail(e: DataFrame, state: DataFrame, uncolored: Long): DataFrame = {
     val spark = state.sparkSession
     import spark.implicits._
@@ -321,36 +346,40 @@ object ColoringKernel {
     val links = e
       .join(ids.select(col("id").as("a")), col("src") === col("a"), "left_semi")
       .join(ids.select(col("id").as("b")), col("dst") === col("b"), "left_semi")
-    val solved = tail.select(col("id"), col("deg"), col("used"), lit(null).cast("long").as("nbr"))
-      .unionByName(links.select(col("src").as("id"), lit(0).as("deg"), lit(0L).as("used"),
-        col("dst").as("nbr")))
+    val words = array((0 until maskWidth(state)).map(i => col(word(i))): _*)
+    val solved = tail.select(col("id"), col("deg"), words.as("used"),
+        lit(null).cast("long").as("nbr"))
+      .unionByName(links.select(col("src").as("id"), lit(0).as("deg"),
+        lit(null).cast("array<bigint>").as("used"), col("dst").as("nbr")))
       .repartition(1)
-      .as[(Long, Int, Long, Option[Long])]
+      .as[(Long, Int, Array[Long], Option[Long])]
       .mapPartitions(jpLocalReplay)
       .toDF("sid", "new_color")
     state.join(maybeBroadcast(solved, uncolored), col("id") === col("sid"), "left_outer")
-      .select(col("id"),
-        coalesce(col("new_color"), col("color")).cast("int").as("color"),
-        col("deg"), col("used"))
+      .select(state.columns.toSeq.map {
+        case "color" => coalesce(col("new_color"), col("color")).cast("int").as("color")
+        case c => col(c)
+      }: _*)
   }
 
-  /** Sequential replay of the synchronous Jp mask rounds over [[jpTail]]'s
-    * rows: per round, every uncolored vertex takes the first free color of
-    * its mask, keeps it iff its (deg desc, id asc) priority beats every
-    * same-candidate uncolored neighbor (ids are unique, so there are no
-    * ties), and the kept colors OR into the neighbors' masks. Runs to the
-    * fixpoint and returns `(id, color)` of the vertices it colored; a
-    * stall (impossible with unique ids) leaves the rest uncolored, for the
-    * loop's counts to see. */
+  /** Sequential replay of the synchronous Jp rounds over [[jpTail]]'s
+    * rows, on one `BitSet` of used colors per vertex: per round, every
+    * uncolored vertex takes its first clear bit, keeps it iff its
+    * (deg desc, id asc) priority beats every same-candidate uncolored
+    * neighbor (ids are unique, so there are no ties), and the kept colors
+    * set their bits in the neighbors' sets. Runs to the fixpoint and
+    * returns `(id, color)` of the vertices it colored; a stall (impossible
+    * with unique ids) leaves the rest uncolored, for the loop's counts to
+    * see. */
   private def jpLocalReplay(
-      rows: Iterator[(Long, Int, Long, Option[Long])]): Iterator[(Long, Int)] = {
+      rows: Iterator[(Long, Int, Array[Long], Option[Long])]): Iterator[(Long, Int)] = {
     val ids = Array.newBuilder[Long]
     val degs = Array.newBuilder[Int]
-    val masks = Array.newBuilder[Long]
+    val masks = Array.newBuilder[java.util.BitSet]
     val srcs = Array.newBuilder[Long]
     val dsts = Array.newBuilder[Long]
     rows.foreach {
-      case (v, d, u, None) => ids += v; degs += d; masks += u
+      case (v, d, u, None) => ids += v; degs += d; masks += java.util.BitSet.valueOf(u)
       case (src, _, _, Some(dst)) => srcs += src; dsts += dst
     }
     val id = ids.result()
@@ -374,7 +403,7 @@ object ColoringKernel {
     while (progress) {
       i = 0
       while (i < n) {
-        if (color(i) == -1) cand(i) = java.lang.Long.numberOfTrailingZeros(~mask(i))
+        if (color(i) == -1) cand(i) = mask(i).nextClearBit(0)
         i += 1
       }
       val kept = (0 until n).filter(v => color(v) == -1 &&
@@ -382,50 +411,10 @@ object ColoringKernel {
       progress = kept.nonEmpty
       kept.foreach { v =>
         color(v) = cand(v)
-        adj(v).foreach(nb => if (color(nb) == -1) mask(nb) |= 1L << cand(v))
+        adj(v).foreach(nb => if (color(nb) == -1) mask(nb).set(cand(v)))
       }
     }
     Iterator.range(0, n).filter(color(_) != -1).map(v => (id(v), color(v)))
-  }
-
-  /** One speculative-coloring round (k > 64): every uncolored
-    * vertex picks its first-fit candidate (O13), then keeps it iff no
-    * adjacent vertex chose the same candidate with higher (degree, id)
-    * priority. Two edges passes — candidate gather + rival check — converge
-    * in ~O(chromatic) rounds (measured 13 rounds on the sf0.1 kernel graph
-    * vs 78+ for classic local-maximum Jones–Plassmann, which serializes on
-    * priority chains). Correctness: same-candidate adjacent vertices are
-    * totally ordered, only the maximum keeps the color, so no conflict can
-    * commit; every conflict component commits its top vertex, so progress
-    * is guaranteed. A vertex's first-fit search reads colors 0..deg, one
-    * of which its deg neighbors leave free. */
-  private[graft] def jpRound(e: DataFrame, state: DataFrame,
-      round: State.Round): DataFrame = {
-    // Pass A: first-fit candidate per uncolored vertex.
-    val used = e
-      .join(state.filter(col("color") >= 0)
-        .select(col("id").as("nid"), col("color").as("ncolor")),
-        col("dst") === col("nid"))
-      .groupBy(col("src"))
-      .agg(collect_set(col("ncolor")).as("used_arr"))
-    // Materialized: Pass B references the candidate set three times (both
-    // join sides + the final apply); without this the edges pass behind it
-    // re-runs per reference (measured 13 s vs 2 s per round at sf0.1).
-    // Custom codegen expression (graft.functions.FirstFitColor): one
-    // boolean[deg + 1] pass, no intermediate arrays; NULL used → 0.
-    val cand = state.filter(col("color") === -1)
-      .join(used, col("id") === col("src"), "left_outer")
-      .select(col("id"), col("deg"),
-        call_function("graft_first_fit", col("used_arr"), col("deg") + 1).as("cand"))
-    val candM = round.land(cand).df
-
-    // Pass B: keep the candidate iff no same-candidate neighbor beats it.
-    val updates = admit(candM, beaten(e, candM))
-
-    state.join(updates, col("id") === col("uid"), "left_outer")
-      .select(col("id"),
-        coalesce(col("new_color"), col("color")).cast("int").as("color"),
-        col("deg"), col("used"))
   }
 
   /** Outer minimal-color search (O25, `coloring.py:212-231`): one run at
@@ -446,10 +435,10 @@ object ColoringKernel {
     * 13 rounds with bit-identical uncolored counts before failing on the
     * last one).
     *
-    * Jp reads Δ off its own round-0 checkpoint, so its degree aggregate is
-    * the only pass over the edges before round 1, and it reads the colors
-    * used off its last checkpoint, so it runs no job after its rounds; it
-    * re-reads `edges` as given, so pass it materialized. GreedyRdd counts
+    * Jp's degree aggregate is its only pass over the edges before round 1,
+    * and it reads the colors used off each checkpoint, to size the next
+    * round's mask and, off the last, as `k`, so it runs no job after its
+    * rounds; it re-reads `edges` as given, so pass it materialized. GreedyRdd counts
     * the edges once for its partitioner and lands its colors through the
     * same observation; when its kernel declines the graph (past the 64-bit
     * mask or the bucket bound, [[GreedyRddKernel.greedyFits]]) the run is

@@ -48,8 +48,9 @@ object GraphIO {
   /** Write nodes back in the reference's pretty-printed array-of-objects
     * format. Driver-side single-file write — format parity only, for graphs
     * that fit the reference's own use (its sink is a driver `json.dump`,
-    * `coloring.py:240-241`). Past [[MaxCollectRowsKey]] rows it routes to
-    * [[writeGraphDistributed]] automatically, like [[writeColoring]].
+    * `coloring.py:240-241`). Past [[MaxCollectRowsKey]] rows it writes
+    * the same records as a directory of JSON-lines parts instead, like
+    * [[writeColoring]].
     */
   def writeGraph(nodes: DataFrame, path: String): Unit = {
     // Materialized for the routing decision: the row count and the write
@@ -72,11 +73,6 @@ object GraphIO {
       }
     } finally slim.release()
   }
-
-  /** Scale path: distributed JSON-lines write of the full node records. */
-  def writeGraphDistributed(nodes: DataFrame, path: String): Unit =
-    nodes.select(col("id"), col("neighbors"), col("color"))
-      .write.mode("overwrite").json(path)
 
   /** Row-count ceiling for the driver-collect single-file writers; above it
     * [[writeColoring]] routes to the distributed JSON-lines layout
@@ -103,10 +99,10 @@ object GraphIO {
 
   /** Write a coloring `(id, color)` as the reference's output JSON array —
     * the reference's one-file driver-side contract (`coloring.py:240-241`)
-    * for graphs within [[MaxCollectRowsKey]]; ABOVE the ceiling the write
-    * routes to [[writeColoringDistributed]] instead of collecting V rows
-    * onto the driver (the path then holds a directory of JSON-lines parts,
-    * same records). The row count rides the memo's own checkpoint job. */
+    * for graphs within [[MaxCollectRowsKey]]; ABOVE the ceiling it writes
+    * a distributed directory of JSON-lines parts (same records) instead of
+    * collecting V rows onto the driver. The row count rides the memo's own
+    * checkpoint job. */
   def writeColoring(colors: DataFrame, path: String): Unit = {
     // Materialized for the same two-reads reason as [[writeGraph]] — the
     // kernel happens to hand over checkpointed colors today, but this
@@ -127,8 +123,4 @@ object GraphIO {
       }
     } finally slim.release()
   }
-
-  /** Scale path: distributed JSON-lines write of the same records. */
-  def writeColoringDistributed(colors: DataFrame, path: String): Unit =
-    colors.select(col("id"), col("color")).write.mode("overwrite").json(path)
 }

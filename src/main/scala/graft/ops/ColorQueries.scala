@@ -84,7 +84,7 @@ object ColorQueries {
     *    converges in 13 (measured); extra rounds are no-ops at the fixpoint,
     *    so 16 is margin, not semantics.
     *  - The first-fit search only probes colors `0..deg(v)` (some color in
-    *    that range is always free, as in the kernel's regather rounds);
+    *    that range is always free: v has deg(v) neighbors);
     *    `series` just bounds the probe table and must exceed Δ (61 at
     *    sf0.01).
     */

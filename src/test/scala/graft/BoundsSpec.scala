@@ -23,8 +23,8 @@ import graft.ops.{Broadcasts, GraphOps}
   *
   * The GraphIO single-file ceiling (graft.io.maxCollectRows) is covered by
   * CliSpec's oversize-routing cases; the GreedyRdd 64-bit color mask by
-  * ColoringKernelSpec's collect_set case, where the greedy kernel declines
-  * a Δ+1 past 64 and the run is the Jp one.
+  * ColoringKernelSpec's Δ = 80 case, where the greedy kernel declines a
+  * Δ+1 past 64 and the run is the Jp one.
   */
 class BoundsSpec extends AnyFunSuite {
   private lazy val spark = SparkTestSession.get

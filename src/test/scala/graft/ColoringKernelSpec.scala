@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.color.{CandNode, ColoringKernel, GreedyIS, GreedyRddKernel}
 import graft.color.ColoringKernel.Strategy
 import graft.model.{GraphIO, RandomGraph}
+import graft.ops.State
 
 /** Invariant-based tests for the iterative kernel (SURVEY.md §5): a valid
   * coloring has zero uncolored nodes, zero adjacent-equal-color pairs, and
@@ -41,9 +42,9 @@ class ColoringKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy collect_set path (k > 64) still colors validly") {
-    // Δ+1 <= 64 rounds ride the 64-bit used mask; past 64 they fall back to
-    // the per-round regather with collect_set arrays — keep it covered.
+  test("Jp colors a palette past 64 validly, and a greedy request runs the same Jp rounds") {
+    // Δ = 80: the palette passes one 64-bit mask word, which the greedy
+    // kernel declines.
     val edges = RandomGraph.edges(spark, 300L, 80, seed = 7)
     val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0).toInt
     assert(maxDeg + 1 > 64, s"Δ = $maxDeg")
@@ -136,30 +137,64 @@ class ColoringKernelSpec extends AnyFunSuite {
     color
   }
 
-  /** The Jp labels and k on `edges`, with the tail-local round's row bound
-    * at `tailRows` (None: the default). */
+  /** The Jp labels, k, rounds and final mask words on `edges`, with the
+    * tail-local round's row bound at `tailRows` (None: the default). */
   private def jpLabels(edges: DataFrame, tailRows: Option[String] = None)
-      : (Map[Long, Int], Int, Int) = {
+      : (Map[Long, Int], Int, Int, Int) = {
     tailRows.foreach(spark.conf.set(ColoringKernel.TailLocalSolveRowsKey, _))
     try {
       val r = ColoringKernel.minimalColors(spark, edges)
-      try (r.colors.as[(Long, Int)].collect().toMap, r.k, r.rounds) finally r.release()
+      try (r.colors.as[(Long, Int)].collect().toMap, r.k, r.rounds,
+        r.state.df.columns.count(_.startsWith("used")))
+      finally r.release()
     } finally spark.conf.unset(ColoringKernel.TailLocalSolveRowsKey)
   }
 
-  test("Jp mask, regather and tail rounds give a sequential Jp replay's coloring") {
-    // Δ ≥ 64 on the last graph puts Jp on the collect_set regather; the
-    // others ride the mask, once with every round scheduled (tail off) and
-    // once at the default bound, where these graphs finish in one tail task.
-    for ((n, d, seed) <- Seq((2000L, 6, 33L), (500L, 40, 5L), (300L, 80, 7L))) {
-      val edges = RandomGraph.edges(spark, n, d, seed)
+  /** The symmetric edges of an `m`-clique on ids `from` until `from + m`. */
+  private def clique(m: Long, from: Long = 0L): DataFrame =
+    spark.range(from, from + m).select(col("id").as("src"))
+      .crossJoin(spark.range(from, from + m).select(col("id").as("dst")))
+      .filter(col("src") =!= col("dst"))
+
+  test("Jp scheduled and tail rounds give a sequential Jp replay's coloring at any degree") {
+    // The 300-vertex graph has Δ ≥ 64 (and colors with fewer than 64); in
+    // the 64-clique the last vertex's first free color is 63, the top bit
+    // of its one mask word. Each runs once with every round scheduled (tail
+    // off) and once at the default bound, where these graphs finish in one
+    // tail task.
+    for ((name, edges) <- Seq(
+        "n=2000" -> RandomGraph.edges(spark, 2000L, 6, 33L),
+        "n=500" -> RandomGraph.edges(spark, 500L, 40, 5L),
+        "n=300" -> RandomGraph.edges(spark, 300L, 80, 7L),
+        "64-clique" -> clique(64))) {
       val expected = jpReplay(edges)
       for (tail <- Seq(Some("0"), None)) {
-        val (labels, k, _) = jpLabels(edges, tail)
-        assert(labels === expected, s"n=$n tail=$tail: labels differ")
-        assert(k === expected.values.max + 1, s"n=$n tail=$tail")
+        val (labels, k, _, _) = jpLabels(edges, tail)
+        assert(labels === expected, s"$name tail=$tail: labels differ")
+        assert(k === expected.values.max + 1, s"$name tail=$tail")
       }
     }
+  }
+
+  test("the Jp mask widens with the colors used, never with Δ") {
+    // A 5,000-leaf star (Δ = 5,000) needs two colors and one mask word.
+    val leaves = spark.range(1, 5001).select(lit(0L).as("a"), col("id").as("b"))
+    val star = leaves.select(col("a").as("src"), col("b").as("dst"))
+      .union(leaves.select(col("b").as("src"), col("a").as("dst")))
+    for (tail <- Seq(Some("0"), None)) {
+      val (_, k, _, words) = jpLabels(star, tail)
+      assert(k === 2 && words === 1, s"tail=$tail: k=$k on $words words")
+    }
+    // A 130-clique beside a random graph needs 130 colors: its scheduled
+    // rounds reach three words and still replay sequential Jp.
+    val edges = State.memo(
+      RandomGraph.edges(spark, 20000L, 10, 1L).unionByName(clique(130, 20000L)))
+    try {
+      val expected = jpReplay(edges.df)
+      val (labels, k, _, words) = jpLabels(edges.df, Some("0"))
+      assert(k === 130 && words === 3, s"k=$k on $words words")
+      assert(labels === expected)
+    } finally edges.release()
   }
 
   test("Jp tail-local round produces a valid coloring (n=500, maxDeg=6)") {
@@ -180,9 +215,9 @@ class ColoringKernelSpec extends AnyFunSuite {
     // a state with masks already set (a bound the first rounds pass), and
     // never (0).
     val edges = RandomGraph.edges(spark, 2000, 6, seed = 33)
-    val (whole, k1, r1) = jpLabels(edges)
-    val (late, k2, r2) = jpLabels(edges, Some("500"))
-    val (distributed, k3, r3) = jpLabels(edges, Some("0"))
+    val (whole, k1, r1, _) = jpLabels(edges)
+    val (late, k2, r2, _) = jpLabels(edges, Some("500"))
+    val (distributed, k3, r3, _) = jpLabels(edges, Some("0"))
     assert(whole === distributed && late === distributed,
       "tail-local replay diverged from the distributed Jp rounds")
     assert(k1 === k3 && k2 === k3)
@@ -202,10 +237,9 @@ class ColoringKernelSpec extends AnyFunSuite {
     }
   }
 
-  test("Jp minimalColors reads k off its state: the colors used, on mask and regather rounds") {
-    // Δ = 6 keeps the palette on the 64-bit mask; Δ past 63 puts it on the
-    // collect_set regather. The extra vertices past the edge ids are
-    // isolated.
+  test("Jp minimalColors reads k off its state: the colors used, at max degree below and past 64") {
+    // Δ = 6 keeps the palette within one 64-bit mask word; Δ past 63 lets
+    // it pass one. The extra vertices past the edge ids are isolated.
     for ((n, d) <- Seq((2000L, 6), (300L, 80)); extra <- Seq(false, true)) {
       val edges = RandomGraph.edges(spark, n, d, seed = 7)
       val maxDeg = edges.groupBy("src").count().agg(max("count")).head().getLong(0)

@@ -133,22 +133,14 @@ class GraphAnalyticsSpec extends AnyFunSuite {
     assert(t1b === t1, "deterministic pipeline: same data, same total")
   }
 
-  test("delta-trace strategy crossover: Jp past the edge bound, same coloring") {
-    import org.apache.spark.sql.functions._
-    // Default (GraphX side of the crossover at this scale).
-    val viaGraphX = graft.ops.ColorQueries.qColorGraph(spark, sf)
+  test("q_color_graph: a fresh session recomputes the identical coloring") {
+    val first = graft.ops.ColorQueries.qColorGraph(spark, sf)
       .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-    // A fresh session recomputes the session-cached trace; the injected
-    // 1-edge bound forces the DataFrame Jp rounds. Both strategies run the
-    // same deterministic speculative first-fit + priority admit, so the
-    // coloring must be IDENTICAL row for row.
-    val s2 = spark.newSession()
-    s2.conf.set(graft.color.GraphXKernel.MaxEdgesKey, "1")
-    try {
-      val viaJp = graft.ops.ColorQueries.qColorGraph(s2, sf)
-        .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
-      assert(viaJp === viaGraphX)
-    } finally s2.conf.unset(graft.color.GraphXKernel.MaxEdgesKey)
+    // A fresh session recomputes the session-cached trace. The Jp rounds
+    // are deterministic, so the coloring must be IDENTICAL row for row.
+    val again = graft.ops.ColorQueries.qColorGraph(spark.newSession(), sf)
+      .collect().map(r => (r.getLong(0), r.getInt(1))).toSeq
+    assert(again === first)
   }
 
   test("pagerank strategy crossover: DataFrame rounds bit-identical to GraphX") {

@@ -599,7 +599,7 @@ class PlanShapeSpec extends AnyFunSuite {
   private def jpMaskRound(e: org.apache.spark.sql.DataFrame,
       state: org.apache.spark.sql.DataFrame) = {
     import graft.color.ColoringKernel
-    val round = ColoringKernel.jpRoundMask(e, state, 200)
+    val round = ColoringKernel.jpRoundMask(e, state, 200, 0)
     val cand = ColoringKernel.maskCandidates(state)
     val side = graft.ops.Broadcasts.maybeBroadcast(_: org.apache.spark.sql.DataFrame, 200L)
     (round, ColoringKernel.admit(cand, ColoringKernel.beaten(e, cand, side), side))
@@ -622,24 +622,23 @@ class PlanShapeSpec extends AnyFunSuite {
   test("Jp rounds admit by a hash-aggregated beaten test, never a SortAggregate") {
     import graft.color.ColoringKernel
     val (e, state) = jpInput()
-    val frames = new graft.ops.State.Round
     try {
-      // The mask round's admit (Δ < 64) and one regather round (Δ ≥ 64). A
-      // max(struct(deg, -id)) admit plans a sorting SortAggregate per round
-      // (no hash buffer for a struct); the beaten-id distinct must not.
+      // A one-word mask round's admit, and a whole round whose 64 colors
+      // used widen the mask to two words. A max(struct(deg, -id)) admit
+      // plans a sorting SortAggregate per round (no hash buffer for a
+      // struct); the beaten-id distinct must not.
       for ((name, round) <- Seq(
-        "mask" -> jpMaskRound(e, state.df)._2,
-        "regather" -> ColoringKernel.jpRound(e, state.df, frames))) {
+        "one-word" -> jpMaskRound(e, state.df)._2,
+        "two-word" -> ColoringKernel.jpRoundMask(e, state.df, 200, 64))) {
         val p = plan(round)
         assert(p.contains("a_cand"), s"$name round: no candidate test:\n$p")
         assert("HashAggregate\\(keys=\\[a_id".r.findFirstIn(p).isDefined,
           s"$name round: beaten ids not hash-aggregated:\n$p")
         assert(!p.contains("SortAggregate"), s"$name round sorts to aggregate:\n$p")
       }
-    } finally {
-      frames.release()
-      state.release()
-    }
+      assert(ColoringKernel.jpRoundMask(e, state.df, 200, 64).columns.toSeq ===
+        Seq("id", "color", "deg", "used", "used1"))
+    } finally state.release()
   }
 
   test("a Jp mask round plans no InMemoryRelation and no SortMergeJoin") {

@@ -5,6 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.color.{ColoringKernel, GraphXKernel}
 import graft.color.ColoringKernel.Strategy
+import graft.functions.GraftFunctions
 import graft.ops.Sketches
 
 /** One session builder, and the graft functions registered where queries
@@ -21,8 +22,15 @@ class SessionSpec extends AnyFunSuite {
   }
 
   test("GraftFunctions.register is called in src/main only where sessions and queries start") {
-    assert(SourceScan.callers("GraftFunctions.register(") ===
-      Set("Session.scala", "Tables.scala", "ColoringKernel.scala"))
+    assert(SourceScan.callers("GraftFunctions.register(") === Set("Session.scala", "Tables.scala"))
+  }
+
+  test("registration is idempotent") {
+    val s = spark.newSession()
+    GraftFunctions.register(s)
+    GraftFunctions.register(s)
+    val d = s.sql("SELECT graft_sqdist_long(array(1L, 5L), array(4L, 1L))").head().getLong(0)
+    assert(d === 25L)
   }
 
   test("the README's Scale knobs table lists exactly the graft conf keys src/main reads") {
@@ -79,6 +87,13 @@ class SessionSpec extends AnyFunSuite {
     assert(SourceScan.callers("MaxBucketRowsKey") === Set("GreedyRddKernel.scala"))
   }
 
+  test("Jp has one round body: no regather, collect_set or graft_first_fit") {
+    val color = "src/main/scala/graft/color"
+    for (token <- Seq("graft_first_fit", "collect_set", "jpRound(", "useMask"))
+      assert(SourceScan.callers(token, color) === Set.empty, token)
+    assert(SourceScan.callers("FirstFitColor") === Set.empty)
+  }
+
   test("a fresh session runs q_kmv_distinct (graft_kmv_kmin) with no register call") {
     val s2 = spark.newSession()
     assert(!has(s2, "graft_kmv_kmin"))
@@ -87,12 +102,13 @@ class SessionSpec extends AnyFunSuite {
     assert(got === Sketches.qKmvDistinct(spark, Corpus.dir("sf0.001")).collect())
   }
 
-  test("a fresh session runs a Jp search past the 64-color mask (graft_first_fit)") {
+  test("a fresh session runs a Jp search with a palette past 64 and registers no graft function") {
     import org.apache.spark.sql.functions.{col, lit}
     val s2 = spark.newSession()
-    assert(!has(s2, "graft_first_fit"))
-    // A 70-leaf star: Δ + 1 = 71 colors, so the rounds regather with
-    // graft_first_fit instead of the 64-bit mask.
+    def graftFunctions = s2.sessionState.functionRegistry.listFunction()
+      .map(_.funcName).filter(_.startsWith("graft_"))
+    assert(graftFunctions.isEmpty)
+    // A 70-leaf star: a Δ + 1 = 71 palette, past one 64-bit mask word.
     val leaves = s2.range(1, 71).select(lit(0L).as("a"), col("id").as("b"))
     val edges = leaves.select(col("a").as("src"), col("b").as("dst"))
       .union(leaves.select(col("b").as("src"), col("a").as("dst")))
@@ -101,5 +117,6 @@ class SessionSpec extends AnyFunSuite {
       assert(best.k === 2)
       assert(ColoringKernel.validate(edges, best.colors) === ((0L, 0L)))
     } finally best.release()
+    assert(graftFunctions.isEmpty)
   }
 }

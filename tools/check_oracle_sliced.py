@@ -43,37 +43,15 @@ MinHash family tables are shared between minhash and canonical, so
 """
 import gc
 import json
-import math
-import os
-import re
 import sys
 import time
 from pathlib import Path
 
 import duckdb
 
-# Same normalization as tools/check_oracle.py — the values compared must
+# The gate's own normalization and memory limit: the values compared must
 # be the values the driver's gate compares.
-def norm(v):
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "NaN"
-        return repr(v)
-    if isinstance(v, list):
-        return "[" + ",".join(norm(x) for x in v) + "]"
-    return repr(v)
-
-
-def duck_mem_limit():
-    env = os.environ.get("GRAFT_DUCK_MEM")
-    if env:
-        return env
-    try:
-        txt = Path("/proc/meminfo").read_text()
-        kb = int(re.search(r"MemAvailable:\s+(\d+) kB", txt).group(1))
-        return f"{min(48, max(1, int(kb * 0.8 / 1048576)))}GB"
-    except Exception:
-        return "48GB"
+from check_oracle import duck_mem_limit, norm
 
 
 # ---------------------------------------------------------------------------
